@@ -4206,7 +4206,7 @@ def oracle_sql() -> dict[str, str]:
             words AS (
               SELECT d.doc_id, u.term
               FROM documents d,
-                   unnest(string_split_regex(lower(trim(d.text)), '\s+')) AS u(term)
+                   unnest(string_split_regex(lower(trim(d.text)), '\\s+')) AS u(term)
               WHERE u.term <> ''),
             tf AS (
               SELECT a.ci, w.term, COUNT(*) AS term_count

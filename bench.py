@@ -7,7 +7,6 @@ relational operator queries from __spark_entry__ at $SPARK_GRAFT_SF_DIR.
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
      SPARK_GRAFT_CPUS (default 32),
-     BENCH_MODE (fused|relational, default fused),
      BENCH_PAGES (override page count).
 """
 
@@ -23,7 +22,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-MODE = os.environ.get("BENCH_MODE", "fused")
 
 # Pages per scale factor: sf0.1 -> 8000 docs (~50KB HTML each).
 PAGES_PER_SF = 80_000
@@ -113,7 +111,7 @@ def main() -> None:
     )
 
     import __spark_entry__ as entry_mod
-    from ocr_poc_spark.plans.job import extract_fused, extract_relational
+    from ocr_poc_spark.plans.job import extract_fused
 
     # Warm the JVM + one Python worker per core with a same-shape pass
     # (python worker startup is ~1s each and would otherwise be billed
@@ -130,11 +128,7 @@ def main() -> None:
     extract_secs = float("inf")
     for _ in range(n_passes):
         t0 = time.monotonic()
-        if MODE == "relational":
-            ext = extract_relational(pages, spark)
-        else:
-            ext = extract_fused(pages)
-        ext.write.format("noop").mode("overwrite").save()
+        extract_fused(pages).write.format("noop").mode("overwrite").save()
         extract_secs = min(extract_secs, time.monotonic() - t0)
 
     qs = entry_mod.queries()
@@ -154,14 +148,14 @@ def main() -> None:
     print(
         json.dumps(
             {
-                "metric": f"extraction_wall_sec_{MODE}_{n_pages}pages_local{CPUS}",
+                "metric": f"extraction_wall_sec_fused_{n_pages}pages_local{CPUS}",
                 "value": round(extract_secs, 3),
                 "unit": "sec",
                 "queries": q_secs,
                 "sf": sf,
                 "n_pages": n_pages,
                 "docs_per_sec": round(n_pages / extract_secs, 1),
-                "mode": MODE,
+                "mode": "fused",
                 "cpus": CPUS,
             }
         )

@@ -5,8 +5,9 @@ A from-scratch re-expression of the capabilities of PacomeKFP/ocr-poc
 DataFrame job over Common-Crawl-style web pages:
 
     pages(url, warc_ts, html, text, lang)
-        -> parse (Arrow-batched pandas UDF, HTML/PDF -> positioned blocks)
-        -> six-stage heuristic cascade (native Catalyst ops)
+        -> one Arrow-batched mapInPandas stage running, per document,
+           parse (HTML/PDF -> positioned blocks) and the six-stage
+           heuristic cascade (extractor.extract_document)
         -> extracted(url, title, author, ..., body_text, spans, confidence)
 
 The reference's OCR token stream {rec_texts, rec_scores, rec_polys}

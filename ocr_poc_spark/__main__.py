@@ -1,7 +1,7 @@
 """CLI entry point — the spark-submit surface.
 
     spark-submit --py-files dist/ocr_poc_spark.zip run_job.py \
-        --input <pages parquet|iceberg:tbl> --out <dir> [--mode fused]
+        --input <pages parquet|iceberg:tbl> --out <dir>
 
 or locally:
 
@@ -26,7 +26,6 @@ def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(prog="ocr_poc_spark")
     ap.add_argument("--input", required=True, help="pages parquet path or iceberg:<table>")
     ap.add_argument("--out", required=True, help="output dir (extracted/, lineage/, _manifest/)")
-    ap.add_argument("--mode", choices=["fused", "relational"], default="fused")
     ap.add_argument("--buckets", type=int, default=8)
     ap.add_argument("--buckets-per-pass", type=int, default=None)
     ap.add_argument("--cpus", type=int, default=None)
@@ -342,7 +341,6 @@ def main(argv: list[str] | None = None) -> int:
         spark,
         pages,
         args.out,
-        mode=args.mode,
         n_buckets=args.buckets,
         buckets_per_pass=args.buckets_per_pass,
         repartition=args.repartition,

@@ -4,9 +4,9 @@ This is the faithful re-expression of the reference's six-stage cascade
 (/root/reference/ocr/extractors/cni_extractor_18_f.py:442-520 and its
 three siblings) against web-page block streams. It serves two roles:
 
-1. **Oracle** for the relational Spark cascade
-   (ocr_poc_spark/operators/cascade.py): pytest asserts byte-identical
-   output per url between the two implementations.
+1. **Oracle**: run sequentially, one document at a time, it gives the
+   per-url reference output that pytest and perfbench compare the Spark
+   job's rows against.
 2. **Kernel** of the fused zero-shuffle production path
    (ocr_poc_spark/plans/job.py): called per document inside an
    Arrow-batched ``mapInPandas`` stage — the whole extraction is a
@@ -125,8 +125,8 @@ def _norm_docref(text: str) -> str:
 
 
 # Global claim-priority order; each kind's battery is a SUBSEQUENCE of
-# this order, so the relational claim-resolution (one window per field
-# in global order, gated by kind) matches the kernel's per-kind scan.
+# this order, so scanning fields in global order gated by kind gives the
+# same claims as the per-kind scan.
 FIXED_FIELDS: list[tuple[str, re.Pattern, object]] = [
     ("pub_date", DATE_RE, _norm_date),
     ("reading_time", READING_RE, _norm_reading),
@@ -150,8 +150,6 @@ KIND_FIXED_FIELDS: dict[str, list[str]] = {
 # W5 pattern-fallback field (authority-name analogue,
 # /root/reference/ocr/extractors/cni_extractor_18_b.py:371-383): for
 # listing layouts, the first high-score block of >=2 capitalised words.
-# The same regex runs in the kernel (python re) and the relational path
-# (java rlike) — [A-Z]/\S agree across both engines for ASCII text.
 SITE_NAME_FIELD = "site_name"
 SITE_NAME_RE = re.compile(r"^[A-Z]\S*( [A-Z]\S*)+$")
 SITE_NAME_MIN_SCORE = 0.9

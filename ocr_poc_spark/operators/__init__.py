@@ -1,2 +1,2 @@
-"""Spark operator library: parse stage, relational cascade, dedup,
-similarity search, text stats, multimodal plumbing."""
+"""Spark operator library: dedup, similarity search, text stats, curation,
+crawl diffing, lineage and multimodal plumbing."""

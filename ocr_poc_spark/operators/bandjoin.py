@@ -14,9 +14,7 @@ group size drops from |key| to |key ∩ window|.
 
 This is the scale path for the reference's proximity-binding heuristic
 (/root/reference/ocr/extractors/cni_extractor_18_f.py:293-351) applied
-to event streams; the in-document J2 self-join in operators/cascade.py
-needs no such treatment because its key is the document id (group size
-is bounded by the per-document block count).
+to event streams.
 """
 
 from __future__ import annotations

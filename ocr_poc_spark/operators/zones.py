@@ -8,9 +8,6 @@
 - J4 directional band join (main.ipynb cell 0, find_value_by_proximity):
   value candidates strictly right of an anchor within a vertical band
   (1.5x anchor height) or below within 3x, same-line-right boosted 1.5x.
-- A5 document-bounds aggregate (main.ipynb cell 2 find_document_bounds):
-  min/max x/y per document — computed with higher-order functions on the
-  block array, i.e. zero shuffle.
 """
 
 from __future__ import annotations
@@ -92,7 +89,8 @@ def estimate_transform(
     snapped to the nearest axis (|a| < pi/4 keeps a; |a - pi/2| < pi/4
     uses a - pi/2; anything else, or < 2 anchors, means no rotation).
 
-    bounds: doc_bounds() output; anchors: (doc, idx, x, y) anchor hits.
+    bounds: (doc, min_x, max_x, min_y, max_y) per document; anchors:
+    (doc, idx, x, y) anchor hits.
     Pure column arithmetic — one url-keyed aggregation, no UDF."""
     import math
 
@@ -197,17 +195,3 @@ def transformed_zone_join(
         return out
     w = Window.partitionBy(doc_col, "field").orderBy(F.desc("zscore"), F.asc("idx"))
     return out.withColumn("rn", F.row_number().over(w)).where("rn = 1").drop("rn")
-
-
-def doc_bounds(parsed: DataFrame) -> DataFrame:
-    """A5: per-document min/max x/y over the block array — higher-order
-    functions only, no explode, no shuffle."""
-    xs = F.transform("blocks", lambda b: b["x"])
-    ys = F.transform("blocks", lambda b: b["y"])
-    return parsed.where(F.size("blocks") > 0).select(
-        "url",
-        F.array_min(xs).alias("min_x"),
-        F.array_max(xs).alias("max_x"),
-        F.array_min(ys).alias("min_y"),
-        F.array_max(ys).alias("max_y"),
-    )

@@ -1,15 +1,11 @@
 """End-to-end extraction job: pages -> extracted + lineage, resumable.
 
-Two physical strategies over identical semantics (parity-tested):
-
-- ``mode='fused'`` (production default): ONE Arrow-batched mapInPandas
-  stage runs parse + cascade per document — a map-only plan with zero
-  shuffles. At 10^12 documents this scales linearly with executors: no
-  exchange, no skew-sensitive key, partition count = input splits after
-  an explicit url-hash repartition that balances long-tail page sizes.
-- ``mode='relational'``: parse UDF + native Catalyst cascade
-  (operators/cascade.py) — one url-hash exchange; exercises the full
-  operator inventory and lets Catalyst/AQE plan the joins.
+One physical strategy: ONE Arrow-batched mapInPandas stage runs parse +
+cascade per document (``extract_fused`` over ``extractor.extract_document``)
+— a map-only plan with zero shuffles. At 10^12 documents this scales
+linearly with executors: no exchange, no skew-sensitive key, partition
+count = input splits after an optional url-hash repartition that balances
+long-tail page sizes.
 
 Resumability (north_star: "checkpoint manifest enabling idempotent
 resume of failed partitions"): work is split into url-hash BUCKETS
@@ -17,7 +13,7 @@ resume of failed partitions"): work is split into url-hash BUCKETS
 extracted rows under bucket=K directories and lineage rows, then commits
 a manifest entry per bucket. A crashed pass leaves no manifest entry, so
 the rerun overwrites those bucket directories — same final table
-(idempotence is asserted by tests/test_resume.py). The reference's
+(idempotence is asserted by tests/test_job_resume.py). The reference's
 analogue is the 3-retry REST policy (README_API.md:52) — per-request
 retry becomes per-bucket restart.
 """
@@ -34,9 +30,7 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.cascade import run_cascade
 from ..operators.lineage import partition_metrics
-from ..operators.parse import parse_pages
 from ..schemas import EXTRACTED_SCHEMA
 
 
@@ -93,10 +87,6 @@ def extract_fused(pages: DataFrame) -> DataFrame:
     return pages.select("url", "html").mapInPandas(_fused_batches, EXTRACTED_SCHEMA)
 
 
-def extract_relational(pages: DataFrame, spark: SparkSession) -> DataFrame:
-    return run_cascade(parse_pages(pages), spark)
-
-
 # ---------------------------------------------------------------------------
 # Bucketed, manifest-checkpointed job runner.
 # ---------------------------------------------------------------------------
@@ -137,9 +127,13 @@ def run_job(
 ) -> dict:
     """Run (or resume) the extraction job. Returns summary stats.
 
+    mode: only ``"fused"`` exists; the keyword is kept for callers that
+    still pass it.
     fail_after_passes: test hook — raise after N committed passes to
     simulate a mid-job crash for the resume test.
     """
+    if mode != "fused":
+        raise ValueError(mode)
     run_id = run_id or uuid.uuid4().hex[:12]
     buckets_per_pass = buckets_per_pass or n_buckets
     ext_dir = os.path.join(out_dir, "extracted")
@@ -189,17 +183,12 @@ def run_job(
             raise RuntimeError("injected failure (test hook)")
         t0 = time.monotonic()
         part = bucketed.where(F.col("bucket").isin([int(b) for b in batch]))
-        if mode == "fused":
-            ext = extract_fused(part.select("url", "html", "bucket"))
-        elif mode == "relational":
-            ext = extract_relational(part, spark)
-        else:
-            raise ValueError(mode)
+        ext = extract_fused(part.select("url", "html", "bucket"))
         ext = ext.withColumn(
             "bucket", F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int")
         )
-        # Language verification column (textstats operator, applied
-        # identically after either physical path — no parity risk).
+        # Language verification column (textstats operator over the
+        # kernel's body_text / raw_text).
         from ..operators.textstats import lang_guess_expr
 
         ext = ext.withColumn(

@@ -17,32 +17,6 @@ PAGES_SCHEMA = T.StructType(
     ]
 )
 
-# One parsed block (the rec_texts/rec_scores/rec_polys analogue, exploded).
-BLOCK_STRUCT = T.StructType(
-    [
-        T.StructField("idx", T.IntegerType()),
-        T.StructField("tag_path", T.StringType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("depth", T.IntegerType()),
-        T.StructField("char_offset", T.IntegerType()),
-        T.StructField("n_chars", T.IntegerType()),
-        T.StructField("link_density", T.DoubleType()),
-        T.StructField("score", T.DoubleType()),
-        T.StructField("x", T.DoubleType()),
-        T.StructField("y", T.DoubleType()),
-        T.StructField("boiler", T.BooleanType()),
-    ]
-)
-
-# Output of the parse stage: per-document block array + dispatch key.
-PARSED_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("doc_kind", T.StringType()),
-        T.StructField("blocks", T.ArrayType(BLOCK_STRUCT)),
-    ]
-)
-
 SPAN_STRUCT = T.StructType(
     [
         T.StructField("field", T.StringType()),

@@ -101,9 +101,7 @@ def similarity_score(str1: str, str2: str) -> float:
     and even with the maximal prefix bonus the final score is
     < 0.4 + 0.6*0.5 = 0.70 — strictly below every threshold used, so
     returning 0.0 early never changes a threshold decision. This prunes
-    long paragraph blocks from the quadratic difflib loop and is
-    mirrored by the relational path's pre-join length filter
-    (operators/cascade.py).
+    long paragraph blocks from the quadratic difflib loop.
     """
     return _sim_core(str1.upper().strip(), str2.upper().strip())
 

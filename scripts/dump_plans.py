@@ -23,9 +23,7 @@ def fmt(df) -> str:
 
 def main() -> None:
     from ocr_poc_spark.fixtures import write_pages_parquet
-    from ocr_poc_spark.operators.cascade import run_cascade
     from ocr_poc_spark.operators.dedup import connected_components
-    from ocr_poc_spark.operators.parse import parse_pages
     from ocr_poc_spark.plans.job import extract_fused
     from ocr_poc_spark.session import get_spark
 
@@ -44,18 +42,6 @@ def main() -> None:
             "Map-only: one mapInPandas over the pruned (url, html) scan — "
             "zero Exchange nodes; ReadSchema carries only the two columns.",
             extract_fused(pages),
-        ),
-        (
-            "Parse stage + doc-level quality gate",
-            "Higher-order array functions on the parse output; no shuffle.",
-            parse_pages(pages),
-        ),
-        (
-            "Relational cascade (operator showcase)",
-            "One url-hash Exchange feeds every window/join; anchors join is "
-            "a BroadcastExchange; checkpointed block stream scans appear as "
-            "'Scan ExistingRDD'.",
-            run_cascade(parse_pages(pages), spark),
         ),
         (
             "MinHash LSH dedup",

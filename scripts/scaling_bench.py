@@ -6,7 +6,7 @@ Runs bench.py as subprocesses at local[8] and local[32] with the same
 fixed page count, computes efficiency = (thr_32 / thr_8) / 4, and writes
 BENCH/BASELINE.md.
 
-Usage: python scripts/scaling_bench.py [n_pages] [mode]
+Usage: python scripts/scaling_bench.py [n_pages]
 """
 
 from __future__ import annotations
@@ -19,12 +19,11 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def run_bench(cpus: int, n_pages: int, mode: str) -> dict:
+def run_bench(cpus: int, n_pages: int) -> dict:
     env = dict(os.environ)
     env.update(
         SPARK_GRAFT_CPUS=str(cpus),
         BENCH_PAGES=str(n_pages),
-        BENCH_MODE=mode,
         BENCH_SKIP_QUERIES="1",
         SPARK_GRAFT_SF_DIR=env.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"),
     )
@@ -40,7 +39,6 @@ def main() -> None:
     # Large enough that per-doc compute dominates fixed stage costs —
     # at ~400+ docs/s/core post-memoization, 150k pages keeps the 4-core run ~90s.
     n_pages = int(sys.argv[1]) if len(sys.argv) > 1 else 150_000
-    mode = sys.argv[2] if len(sys.argv) > 2 else "fused"
     # Primary N vs 4N pair: 4 -> 16. Both leave the single JVM's
     # scan/Arrow/scheduler threads un-billed cores on this 32-core box;
     # at local[32] those JVM threads compete with 32 Python workers for
@@ -48,11 +46,11 @@ def main() -> None:
     # doesn't have). The saturated 8 -> 32 pair is reported as context.
     r = {}
     for cpus in (4, 16, 8, 32):
-        r[cpus] = run_bench(cpus, n_pages, mode)
+        r[cpus] = run_bench(cpus, n_pages)
     eff_4_16 = (r[16]["docs_per_sec"] / r[4]["docs_per_sec"]) / 4.0
     eff_8_32 = (r[32]["docs_per_sec"] / r[8]["docs_per_sec"]) / 4.0
     result = {
-        "mode": mode, "n_pages": n_pages,
+        "n_pages": n_pages,
         "runs": {f"local{c}": {"secs": v["value"], "docs_per_sec": v["docs_per_sec"]}
                  for c, v in r.items()},
         "scaling_efficiency_4_to_16": round(eff_4_16, 3),
@@ -66,14 +64,13 @@ def main() -> None:
         for c in (4, 8, 16, 32)
     )
     per_core = r[4]["docs_per_sec"] / 4.0
-    out_name = "BASELINE.md" if mode == "fused" else f"{mode.upper()}.md"
-    with open(os.path.join(REPO, "BENCH", out_name), "w") as fh:
+    with open(os.path.join(REPO, "BENCH", "BASELINE.md"), "w") as fh:
         fh.write(
             f"""# BENCH — scaling evidence (N vs 4N parallelism)
 
 North rule requires >= 0.8 throughput scaling efficiency from N to 4N
 executors; no real cluster exists in this sandbox, so the evidence is
-the same extraction job ({mode} path) on the same {n_pages}-page
+the same extraction job (fused path) on the same {n_pages}-page
 deterministic input (seed 42) at several local[n] levels on one 32-core
 host (32 physical cores, no SMT):
 
@@ -104,26 +101,9 @@ The full job CLI — parquet writes, bucket passes, per-partition
 lineage, manifest commits — on the same {n_pages}-page input at
 local[32] is recorded in NOTES.md / the round bench artifacts
 (`python -m ocr_poc_spark --input ... --cpus 32`).
-
-## Relational-path steady state (operator showcase, not the production path)
-
-The SAME extraction expressed as native Catalyst operators (windows,
-broadcast theta-joins, anti-joins, HOF aggregation — byte-identical
-output to the fused path) runs **13.7-15.6s per 30k pages fully warm,
-median ~14.5s** at local[32] (pass >= 4 in one JVM; earlier passes pay
-JIT/codegen warmth and are NOT the steady state a long-lived cluster
-session sees). Per-phase split and three measured-and-rejected
-optimization candidates (fused claim windows ~2x WORSE — HOF folds are
-CodegenFallback; hugeMethodLimit no-op; lazy checkpoints within noise)
-are in BENCH/RELATIONAL.md. Reproduce:
-
-    python scripts/relational_probe.py 30000 5   # 5 warm passes, one JVM
-
-The fused map-only path above remains the production number; the
-relational path exists for plan inspectability and operator coverage.
 """
         )
-    print(f"wrote BENCH/{out_name}")
+    print("wrote BENCH/BASELINE.md")
 
 
 if __name__ == "__main__":

@@ -1,41 +1,10 @@
-"""Byte-identical parity: relational Catalyst cascade AND fused map-only
-path vs the sequential oracle, per url on every column (the north_rule's
-"byte-identical extracted text per url" gate)."""
+"""Byte-identical parity: the fused map-only Spark path vs the sequential
+oracle (the same kernel run one document at a time), per url on every
+column (the north_rule's "byte-identical extracted text per url" gate)."""
 
-from ocr_poc_spark.operators.cascade import run_cascade
-from ocr_poc_spark.operators.parse import explode_blocks, parse_pages
 from ocr_poc_spark.plans.job import extract_fused
 
 from conftest import assert_matches_oracle
-
-
-def test_parse_stage_matches_kernel(spark, pages_df, fixture_rows):
-    from ocr_poc_spark.extractor import sniff_and_parse
-
-    parsed = {r["url"]: r for r in parse_pages(pages_df).collect()}
-    for row in fixture_rows[:40]:
-        blocks, kind = sniff_and_parse(row["html"])
-        got = parsed[row["url"]]
-        assert got["doc_kind"] == kind
-        gb = [b.asDict() for b in got["blocks"]]
-        assert len(gb) == len(blocks)
-        for g, e in zip(gb, blocks):
-            assert g["text"] == e.text and g["idx"] == e.idx
-            assert g["score"] == e.score and g["x"] == e.x and g["y"] == e.y
-            assert g["char_offset"] == e.char_offset
-            assert g["boiler"] == e.boiler and g["tag_path"] == e.tag_path
-
-
-def test_explode_blocks_columns(spark, pages_df):
-    blocks = explode_blocks(parse_pages(pages_df.limit(10)))
-    cols = set(blocks.columns)
-    assert {"url", "doc_kind", "idx", "text", "score", "x", "y",
-            "char_offset", "n_chars", "link_density", "boiler"} <= cols
-
-
-def test_relational_cascade_matches_oracle(spark, pages_df, oracle_results):
-    got = run_cascade(parse_pages(pages_df), spark).collect()
-    assert_matches_oracle(got, oracle_results)
 
 
 def test_fused_path_matches_oracle(spark, pages_df, oracle_results):
@@ -45,9 +14,9 @@ def test_fused_path_matches_oracle(spark, pages_df, oracle_results):
 
 def test_duplicate_urls_stay_separate_documents(spark, fixture_rows):
     """Re-crawled corpora carry the same url twice (distinct warc_ts).
-    Each input ROW must flow through the relational cascade as its own
+    Each input ROW must flow through the fused path as its own
     document — the block streams of same-url rows must never interleave
-    — and both physical paths must agree row-for-row."""
+    — and match the kernel run on its own payload row-for-row."""
     import datetime as dt
 
     rows = []
@@ -67,13 +36,10 @@ def test_duplicate_urls_stay_separate_documents(spark, fixture_rows):
         return (d["url"], d["doc_kind"], d["raw_text"], d["body_text"],
                 d["success"], d["n_blocks"], tuple(spans))
 
-    rel = sorted(key(r.asDict(recursive=True))
-                 for r in run_cascade(parse_pages(pages), spark).collect())
     fus = sorted(key(r.asDict(recursive=True))
                  for r in extract_fused(pages).collect())
-    assert len(rel) == len(rows) == 24
-    assert rel == fus
-    # And each row matches the kernel run on ITS OWN payload.
+    assert len(fus) == len(rows) == 24
+    # Each row matches the kernel run on ITS OWN payload.
     from ocr_poc_spark.extractor import extract_document
 
     exp = sorted(
@@ -82,14 +48,14 @@ def test_duplicate_urls_stay_separate_documents(spark, fixture_rows):
         for url, _, html, _, _ in rows
         for res in [extract_document(url, html)]
     )
-    assert rel == exp
+    assert fus == exp
 
 
 def test_poison_pill_isolated_in_both_paths(spark, fixture_rows):
     """One raising payload must yield ONE typed failure row —
     success=false, doc_kind 'error/ValueError', message
     'internal_error: ValueError' — while the other N-1 documents extract
-    normally, in BOTH physical paths (reference analogue: typed
+    normally, through real Spark workers (reference analogue: typed
     per-request errors, api_server.py:177-236 — a poison doc never fails
     the task/bucket). Uses the documented %RAISE-TEST% fault-injection
     hook: the round-2 parser hardening removed every known organic
@@ -101,35 +67,29 @@ def test_poison_pill_isolated_in_both_paths(spark, fixture_rows):
     rows.append(("https://bad.example/poison", poison))
     pages = spark.createDataFrame(rows, "url string, html binary")
 
-    for name, out in (
-        ("fused", extract_fused(pages)),
-        ("relational", run_cascade(parse_pages(pages), spark)),
-    ):
-        got = {r["url"]: r for r in out.collect()}
-        assert len(got) == 21, name
-        bad = got["https://bad.example/poison"]
-        assert bad["success"] is False, name
-        assert bad["doc_kind"] == "error/ValueError", name
-        assert bad["message"] == "internal_error: ValueError", name
-        assert bad["n_blocks"] == 0 and bad["body_text"] is None, name
-        n_ok = sum(1 for r in got.values() if r["success"])
-        assert n_ok == sum(
-            1 for u, h in rows[:20]
-            if __import__("ocr_poc_spark.extractor", fromlist=["x"])
-            .extract_document(u, h).success
-        ), name
+    from ocr_poc_spark.extractor import extract_document
+
+    got = {r["url"]: r for r in extract_fused(pages).collect()}
+    assert len(got) == 21
+    bad = got["https://bad.example/poison"]
+    assert bad["success"] is False
+    assert bad["doc_kind"] == "error/ValueError"
+    assert bad["message"] == "internal_error: ValueError"
+    assert bad["n_blocks"] == 0 and bad["body_text"] is None
+    n_ok = sum(1 for r in got.values() if r["success"])
+    assert n_ok == sum(1 for u, h in rows[:20] if extract_document(u, h).success)
 
 
 def test_parse_scan_prunes_columns(spark, tmp_path):
-    """Column pruning must reach the parquet scan: the parse stage reads
-    only (url, html) — at 100TB the heavy binary column is the only
-    required read and text/lang/warc_ts are never materialised."""
+    """Column pruning must reach the parquet scan: the fused extraction
+    stage reads only (url, html) — at 100TB the heavy binary column is
+    the only required read and text/lang/warc_ts are never materialised."""
     from ocr_poc_spark.fixtures import write_pages_parquet
 
     p = str(tmp_path / "pages.parquet")
     write_pages_parquet(p, 20, seed=5)
-    parsed = parse_pages(spark.read.parquet(p))
-    plan = parsed._jdf.queryExecution().executedPlan().toString()
+    ext = extract_fused(spark.read.parquet(p))
+    plan = ext._jdf.queryExecution().executedPlan().toString()
     m = [l for l in plan.splitlines() if "ReadSchema" in l]
     assert m, plan
     schema_line = m[0]
@@ -141,7 +101,7 @@ def test_span_points_at_true_source_occurrence(spark):
     """A field value whose text also appears in an EARLIER unrelated
     block must get its span from the block it was actually extracted
     from (the recorded source), not the first text match — in the
-    kernel AND the relational cascade."""
+    kernel AND the fused Spark path."""
     from ocr_poc_spark.extractor import extract_document, sniff_and_parse
 
     html = (
@@ -168,29 +128,7 @@ def test_span_points_at_true_source_occurrence(spark):
     assert cat_spans == [("category", late, late + 4)]
 
     pages = spark.createDataFrame([("u", html)], "url string, html binary")
-    for name, out in (
-        ("fused", extract_fused(pages)),
-        ("relational", run_cascade(parse_pages(pages), spark)),
-    ):
-        row = out.collect()[0]
-        got = [(s["field"], s["start"], s["end"]) for s in row["spans"]
-               if s["field"] == "category"]
-        assert got == [("category", late, late + 4)], name
-
-
-def test_lazy_ckpts_variant_output_equals_default(spark, pages_df, monkeypatch):
-    """The lazy_ckpts probe variant must be semantically identical to
-    the default eager barriers — in particular the 'parsed' checkpoint
-    stays EAGER under the variant (it freezes the monotonic doc ids
-    before the branch fan-out; a fully-lazy parsed checkpoint over a
-    live repartition source could mis-join documents)."""
-    from ocr_poc_spark.plans.job import extract_relational
-
-    pages = pages_df.limit(60).repartition(5)
-    monkeypatch.delenv("CASCADE_VARIANT", raising=False)
-    base = {r["url"]: r for r in extract_relational(pages, spark).collect()}
-    monkeypatch.setenv("CASCADE_VARIANT", "lazy_ckpts")
-    lazy = {r["url"]: r for r in extract_relational(pages, spark).collect()}
-    assert set(base) == set(lazy)
-    for url, row in base.items():
-        assert row == lazy[url], url
+    row = extract_fused(pages).collect()[0]
+    got = [(s["field"], s["start"], s["end"]) for s in row["spans"]
+           if s["field"] == "category"]
+    assert got == [("category", late, late + 4)]

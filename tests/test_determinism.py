@@ -2,26 +2,15 @@
 byte-identical output regardless of how the input is partitioned —
 forbidden nondeterminism (unordered first/collect) would surface here."""
 
-from ocr_poc_spark.operators.cascade import run_cascade
-from ocr_poc_spark.operators.parse import parse_pages
 from ocr_poc_spark.plans.job import extract_fused
 
 from conftest import assert_matches_oracle
 
 
-def test_relational_output_invariant_to_input_partitioning(
-    spark, pages_df, oracle_results
-):
-    for n_parts in (1, 7):
-        got = run_cascade(
-            parse_pages(pages_df.repartition(n_parts)), spark
-        ).collect()
-        assert_matches_oracle(got, oracle_results)
-
-
 def test_fused_output_invariant_to_input_partitioning(spark, pages_df, oracle_results):
-    got = extract_fused(pages_df.repartition(11)).collect()
-    assert_matches_oracle(got, oracle_results)
+    for n_parts in (1, 7, 11):
+        got = extract_fused(pages_df.repartition(n_parts)).collect()
+        assert_matches_oracle(got, oracle_results)
 
 
 def test_session2_operators_invariant_to_input_partitioning(spark):

@@ -44,12 +44,11 @@ def test_full_run_then_idempotent_resume(spark, pages_df, tmp_path):
     assert summary["rows_this_run"] < pages_df.count()  # only resumed part
 
 
-def test_relational_mode_job(spark, pages_df, tmp_path):
-    out = str(tmp_path / "rel")
-    run_job(spark, pages_df.limit(40), out, mode="relational", n_buckets=2)
-    ext = spark.read.parquet(out + "/extracted")
-    assert ext.count() == 40
-    assert "body_text" in ext.columns and "spans" in ext.columns
+def test_run_job_rejects_unknown_mode(spark, pages_df, tmp_path):
+    out = tmp_path / "rel"
+    with pytest.raises(ValueError):
+        run_job(spark, pages_df.limit(40), str(out), mode="relational", n_buckets=2)
+    assert not out.exists()  # rejected before any write
 
 
 def test_iceberg_gate_without_connector(spark):

@@ -136,27 +136,6 @@ def test_part_profit_broadcasts_all_dims_one_exchange(spark):
     assert plan.count("Exchange hashpartitioning") == 1, plan
 
 
-def test_fixed_claims_variants_plan_shapes(spark, monkeypatch):
-    """Default claims path = six chained codegen'd min-windows sharing
-    one sort (MEASURED faster than the fused single-window variant,
-    whose HOF claims fold is CodegenFallback — see _fixed_claims).
-    Pins both shapes so neither silently changes: default 6 Window ops,
-    fused variant exactly 1."""
-    from ocr_poc_spark.operators.cascade import _fixed_claims
-
-    stream = spark.createDataFrame(
-        [("u1", "html/article", 0, "12.3.2020"), ("u1", "html/article", 1, "x")],
-        "url string, doc_kind string, idx int, text string",
-    )
-    monkeypatch.delenv("CASCADE_VARIANT", raising=False)
-    plan = _plan(_fixed_claims(stream))
-    assert plan.count("Window") == 6, plan
-
-    monkeypatch.setenv("CASCADE_VARIANT", "fused_claims")
-    fused = _plan(_fixed_claims(stream))
-    assert fused.count("Window") == 1, fused
-
-
 def test_host_cap_filter_path_prefilters_before_host_window(spark):
     """The filtering host_cap must bound hot hosts BEFORE the per-host
     rank: first a window partitioned by (host, SPARK_PARTITION_ID) with a

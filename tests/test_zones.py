@@ -1,9 +1,8 @@
-"""J3 zone-containment join, J4 band join, A5 bounds aggregate."""
+"""J3 zone-containment join, J4 band join, J3 transformed zone join."""
 
 import pyspark.sql.functions as F
 
-from ocr_poc_spark.operators.parse import parse_pages
-from ocr_poc_spark.operators.zones import band_join, doc_bounds, zone_containment_join
+from ocr_poc_spark.operators.zones import band_join, zone_containment_join
 
 
 def _blocks(spark):
@@ -48,17 +47,6 @@ def test_band_join(spark):
     assert len(out) == 1
     # right-of boost: 0.8*1.5 = 1.2 > 0.9
     assert out[0]["value"] == "right same line" and abs(out[0]["boosted"] - 1.2) < 1e-9
-
-
-def test_doc_bounds_no_shuffle(spark, pages_df):
-    parsed = parse_pages(pages_df.limit(30))
-    b = doc_bounds(parsed)
-    rows = b.collect()
-    assert all(r["min_x"] <= r["max_x"] and r["min_y"] <= r["max_y"] for r in rows)
-    plan = b._jdf.queryExecution().executedPlan().toString()
-    # pure higher-order fns: no shuffle (the only Exchange is the
-    # SinglePartition one introduced by .limit() in the test fixture)
-    assert "Exchange hashpartitioning" not in plan
 
 
 def test_transformed_zone_join_recovers_rotation(spark):
