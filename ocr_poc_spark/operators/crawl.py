@@ -6,8 +6,8 @@ pages whose CONTENT changed since the last snapshot. `crawl_diff`
 classifies every url across two snapshots as added / deleted / changed
 / unchanged from content digests, and `changed_slice` is the
 ready-to-process frame (new rows needing work) an incremental run
-feeds to the job — the batch complement of the streaming
-minhash-incremental path (streaming/stream_job.py).
+feeds to `plans.job.run_job`, whose manifest resume makes the recrawl
+incremental.
 
 Scale notes (100 TB): both sides project to (id, 64-hex sha2 digest)
 BEFORE the full-outer join, so the shuffle carries ~80 bytes per url,

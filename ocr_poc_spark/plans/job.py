@@ -134,6 +134,15 @@ def run_job(
     """
     if mode != "fused":
         raise ValueError(mode)
+    # Checked before anything is written: a bad n_buckets pinned in
+    # meta.json would make every later correct run on out_dir refuse.
+    for name, value in (
+        ("n_buckets", n_buckets),
+        ("buckets_per_pass", buckets_per_pass),
+        ("repartition", repartition),
+    ):
+        if value is not None and value < 1:
+            raise ValueError(f"{name} must be >= 1, got {value}")
     run_id = run_id or uuid.uuid4().hex[:12]
     buckets_per_pass = buckets_per_pass or n_buckets
     ext_dir = os.path.join(out_dir, "extracted")

@@ -44,10 +44,23 @@ def test_full_run_then_idempotent_resume(spark, pages_df, tmp_path):
     assert summary["rows_this_run"] < pages_df.count()  # only resumed part
 
 
-def test_run_job_rejects_unknown_mode(spark, pages_df, tmp_path):
+@pytest.mark.parametrize(
+    "kwargs",
+    [
+        {"mode": "relational"},
+        {"n_buckets": 0},
+        {"n_buckets": -2},
+        {"buckets_per_pass": 0},
+        {"buckets_per_pass": -1},
+        {"repartition": 0},
+        {"repartition": -1},
+    ],
+    ids=lambda kw: "-".join(f"{k}={v}" for k, v in kw.items()),
+)
+def test_run_job_rejects_unknown_mode(spark, pages_df, tmp_path, kwargs):
     out = tmp_path / "rel"
     with pytest.raises(ValueError):
-        run_job(spark, pages_df.limit(40), str(out), mode="relational", n_buckets=2)
+        run_job(spark, pages_df.limit(40), str(out), **{"n_buckets": 2, **kwargs})
     assert not out.exists()  # rejected before any write
 
 
