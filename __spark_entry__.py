@@ -163,40 +163,6 @@ def q_fuzzy_anchor_join(spark, sf_dir):  # J1: broadcast theta-join, edit distan
     )
 
 
-def q_proximity_binding(spark, sf_dir):  # J2/W2: bind nearest scored event
-    e = _t(spark, sf_dir, "events")
-    clicks = e.where(F.col("event_type") == "click").select(
-        F.col("event_id").alias("click_id"),
-        "user_id",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("c_us"),
-    )
-    buys = e.where(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"),
-        "user_id",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("p_us"),
-        F.col("value").alias("p_value"),
-    )
-    # Skew-bounded: equi-key is (user_id, coarse hour bucket), not
-    # user_id alone — a hot user no longer funnels through one reducer.
-    # Output provably identical to the plain key join (operators/bandjoin).
-    from ocr_poc_spark.operators.bandjoin import time_banded_join
-
-    pairs = time_banded_join(
-        clicks, buys, key="user_id", left_us="c_us", right_us="p_us",
-        band_us=3600_000_000,
-    )
-    score = F.round(
-        F.col("p_value") / (F.lit(1.0) + (F.col("p_us") - F.col("c_us")) / F.lit(1e6)), 6
-    )
-    w = Window.partitionBy("click_id").orderBy(F.desc("score"), F.asc("purchase_id"))
-    return (
-        pairs.withColumn("score", score)
-        .withColumn("rn", F.row_number().over(w))
-        .where("rn = 1")
-        .select("click_id", "purchase_id", "score")
-    )
-
-
 def q_sessionization(spark, sf_dir):  # W: lag + gap cumsum (stream analog)
     e = _t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
@@ -833,114 +799,6 @@ def q_range_join(spark, sf_dir):  # J3: zone-containment (range) join
     )
 
 
-def q_band_join(spark, sf_dir):  # J4: directional band binding w/ boost
-    e = _t(spark, sf_dir, "events")
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    errs = e.where(F.col("event_type") == "error").select(
-        F.col("event_id").alias("err_id"), "user_id", us.alias("e_us")
-    )
-    views = e.where(F.col("event_type") == "view").select(
-        F.col("event_id").alias("view_id"), "user_id", us.alias("v_us"),
-        F.col("value").alias("v_value"),
-    )
-    # Skew-bounded two-sided band join: equi-key (user, 5-min bucket),
-    # identical output to the plain user_id join + abs filter; measured
-    # contrast in BENCH/SCALE10X.md "Skew stress" (the plain-key
-    # baseline concentrates a 10%-hot user's rows 4.6x median on one
-    # task; this path stays ~1x).
-    from ocr_poc_spark.operators.bandjoin import abs_banded_join
-
-    j = abs_banded_join(
-        errs, views, key="user_id", left_us="e_us", right_us="v_us",
-        band_us=300_000_000,
-    )
-    boosted = F.round(
-        F.when(F.col("v_us") > F.col("e_us"), F.col("v_value") * 1.5)
-        .otherwise(F.col("v_value")), 6,
-    )
-    w = Window.partitionBy("err_id").orderBy(F.desc("boosted"), F.asc("view_id"))
-    return (
-        j.withColumn("boosted", boosted)
-        .withColumn("rn", F.row_number().over(w))
-        .where("rn = 1")
-        .select("err_id", "view_id", "boosted")
-    )
-
-
-
-def q_multimodal_decode(spark, sf_dir):  # opaque-binary media decode plumbing
-    """Multimodal column plumbing checked end-to-end: media payloads are
-    synthesised NATIVELY (binary header + body built from documents), the
-    Arrow-batched decode UDF parses them, and the DuckDB oracle re-derives
-    every output (dims, byte stats feature vector, unsupported fallback)
-    from the same arithmetic — documents are ASCII so char counts == byte
-    counts on both engines."""
-    from ocr_poc_spark.operators.multimodal import decode_media
-
-    d = _t(spark, sf_dir, "documents")
-    did = F.col("doc_id")
-    w = (did % 100 + 1).cast("int")
-    h = (did % 50 + 1).cast("int")
-    nf = (did % 10 + 1).cast("int")
-    kch = F.element_at(F.array(F.lit("I"), F.lit("A"), F.lit("V")), (did % 3 + 1).cast("int"))
-    kind = F.element_at(
-        F.array(F.lit("image"), F.lit("audio"), F.lit("video")), (did % 3 + 1).cast("int")
-    )
-    z = F.char(F.lit(0))
-    hdr = F.concat(F.lit("FAKE"), kch, F.char(w), z, F.char(h), z, F.char(nf), z)
-    payload = F.when(did % 7 == 0, F.col("text")).otherwise(
-        F.concat(hdr, F.col("text"))
-    ).cast("binary")
-    media = d.select(did.alias("media_id"), kind.alias("kind"), payload.alias("payload"))
-    dec = decode_media(media)
-    return dec.select(
-        "media_id", "kind", "status", "width", "height", "n_frames", "n_bytes",
-        F.get("feature", 0).alias("f_len"),
-        F.round(F.get("feature", 1), 6).alias("f_mean"),
-        F.get("feature", 2).alias("f_min"),
-        F.get("feature", 3).alias("f_max"),
-    )
-
-
-def q_zone_transform(spark, sf_dir):  # J3+: zone join after estimated rotation
-    """Template zones bound after per-document transform estimation
-    (rotation from first two anchor points, offset/scale from bounds) —
-    the notebook's estimate_transformation/extract_from_zone semantics
-    over synthetic positioned points derived from the events table."""
-    from ocr_poc_spark.operators.zones import (
-        estimate_transform,
-        transformed_zone_join,
-    )
-
-    e = _t(spark, sf_dir, "events", spread=True)
-    blocks = e.select(
-        F.concat(F.lit("u"), F.col("user_id")).alias("url"),
-        F.col("event_id").cast("int").alias("idx"),
-        F.col("event_type").alias("text"),
-        ((F.col("event_id") % 37) * F.lit(10.0)).alias("x"),
-        ((F.col("event_id") % 23) * F.lit(12.0)).alias("y"),
-        ((F.col("event_id") % 13 + 1) / F.lit(13.0)).alias("score"),
-    )
-    # Three consumers (bounds agg, anchor window, the zone join) — one
-    # materialized pass over the events scan instead of three.
-    blocks = blocks.localCheckpoint(eager=True)
-    bounds = blocks.groupBy("url").agg(
-        F.min("x").alias("min_x"), F.max("x").alias("max_x"),
-        F.min("y").alias("min_y"), F.max("y").alias("max_y"),
-    )
-    tr = estimate_transform(bounds, blocks)
-    zones = spark.createDataFrame(
-        [("hot", 0.0, 0.0, 0.5, 0.5, ["click"]),
-         ("cold", 0.5, 0.5, 0.5, 0.5, [])],
-        "field string, zx double, zy double, zw double, zh double, "
-        "anchors array<string>",
-    )
-    out = transformed_zone_join(blocks, zones, tr, score_col="score")
-    return out.select(
-        "url", "field", "idx", "text", F.round("zscore", 6).alias("zscore")
-    )
-
-
 def q_json_props(spark, sf_dir):  # semi-structured metadata extraction
     e = _t(spark, sf_dir, "events")
     k = F.get_json_object("props", "$.k").cast("int")
@@ -1016,16 +874,6 @@ def q_benchmark_coverage(spark, sf_dir):
     )
     corpus = d.where(F.col("doc_id") % 23 != 0)
     return benchmark_coverage(corpus, bench, n=8)
-
-
-def q_corpus_grep(spark, sf_dir):
-    """Corpus grep (search.find_text): exact char positions of the
-    literal 'table' across the corpus — the leak-localization tool
-    downstream of benchmark_coverage. The oracle replays the split +
-    cumulative-length offsets with a per-doc window."""
-    from ocr_poc_spark.operators.search import find_text
-
-    return find_text(_t(spark, sf_dir, "documents", spread=True), "table")
 
 
 def q_stratified_sample(spark, sf_dir):  # deterministic corpus-mixing sampler
@@ -1330,37 +1178,6 @@ def q_pack_sequences(spark, sf_dir):  # training-sequence packing
     return pack_sequences(chunks, seq_len=100)
 
 
-def q_bm25_search(spark, sf_dir):
-    """Keyword retrieval over the corpus: Okapi BM25 top-20 for a fixed
-    query (operators/search.py). Integer tf/df witnesses are exact; the
-    ln-based score rides the 4-decimal rounding margin and BOTH engines
-    cut the top-k on the rounded score with an id tie-break."""
-    from ocr_poc_spark.operators.search import bm25_topk
-
-    return bm25_topk(
-        _t(spark, sf_dir, "documents", spread=True),
-        "spark hash join window table",
-        top_n=20,
-    )
-
-
-def q_hybrid_search(spark, sf_dir):
-    """Hybrid retrieval (operators/search.hybrid_topk): BM25 sparse leg
-    + hashing-trick-embedding cosine dense leg fused by Reciprocal
-    Rank Fusion. Cross-engine exactness: the sparse leg ranks on the
-    ROUNDED-4 BM25 score, the dense leg on the UNROUNDED cosine of
-    INTEGER feature-hash vectors (exact dots), and 1/(60+rank) is one
-    IEEE division summed in a fixed order — the oracle replays both
-    legs, both rank windows, and the fusion join in SQL."""
-    from ocr_poc_spark.operators.search import hybrid_topk
-
-    return hybrid_topk(
-        _t(spark, sf_dir, "documents", spread=True),
-        "spark hash join window table",
-        pool=20, top_n=10,
-    )
-
-
 def q_semantic_dedup(spark, sf_dir):
     """SemDeDup-style cluster-then-dedup (similarity.semantic_dedup):
     integer hashing-trick embeddings assigned to the 8 shared integer
@@ -1420,8 +1237,8 @@ def q_crawl_frontier(spark, sf_dir):
     """Politeness-aware crawl scheduling (operators/crawl.crawl_frontier):
     synthesized frontier urls (one per document, the robots_filter url
     recipe), per-host priority = the host's document count (the
-    "recrawl big hosts first" baseline signal; pagerank/churn slot in
-    the same way), per_host=2 waves. The oracle replays the url
+    "recrawl big hosts first" baseline signal; churn or any host score
+    slots in the same way), per_host=2 waves. The oracle replays the url
     synthesis, host regex, priority join, and the hash-ordered
     partitioned window in SQL."""
     from ocr_poc_spark.operators.crawl import crawl_frontier
@@ -1629,119 +1446,6 @@ def q_dsir_resample(spark, sf_dir):
     return dsir_resample(docs, target, top_n=40, seed="ep0")
 
 
-def _link_pages(spark, sf_dir):
-    """Deterministic linked-page synthesis shared by the webgraph
-    queries: each doc's page lives on '<source>.example' and links to
-    hosts derived from its id (absolute, plus a root-relative self link
-    for even ids and a scheme-relative link for ids % 5 == 0) — the
-    same construction the SQL oracles replay arithmetically."""
-    docs = _t(spark, sf_dir, "documents", spread=True)
-    did = F.col("doc_id")
-    t1 = F.concat(F.lit("src"), ((did * 7) % 20).cast("string"), F.lit(".example"))
-    t2 = F.concat(F.lit("src"), ((did * 3) % 20).cast("string"), F.lit(".example"))
-    html = F.concat(
-        F.lit('<a href="https://'), t1, F.lit('/p">x</a>'),
-        F.when(did % 2 == 0, F.lit('<a href="/self">s</a>')).otherwise(F.lit("")),
-        F.when(did % 5 == 0,
-               F.concat(F.lit('<a href="//'), t2, F.lit('/q">y</a>'))
-               ).otherwise(F.lit("")),
-    )
-    return docs.select(
-        F.concat(
-            F.lit("https://"), F.col("source"), F.lit(".example/doc/"),
-            did.cast("string"),
-        ).alias("url"),
-        html.alias("html"),
-    )
-
-
-def q_anchor_texts(spark, sf_dir):
-    """Anchor-text corpus (webgraph.extract_anchor_texts): aligned
-    href/inner-text regexp extraction over the synthesized linked
-    pages, resolved like extract_links — the classic target-page
-    relevance signal. Oracle replays the synthesis arithmetically."""
-    from ocr_poc_spark.operators.webgraph import extract_anchor_texts
-
-    return extract_anchor_texts(_link_pages(spark, sf_dir))
-
-
-def _anchor_profile_pages(spark, sf_dir):
-    """Linked-page synthesis for the anchor-PROFILE query: unlike
-    _link_pages (one fixed anchor letter per link form), every target
-    collects SEVERAL competing anchor phrases with different counts —
-    kw{doc_id % 3} from every linker, plus a 'hub' phrase from the
-    doc_id % 4 == 0 linkers — so the per-dst top-k ranking, the
-    (count desc, anchor asc) tie-break and the n_links total all have
-    real work. Page urls live on hosts t0..t19, link targets on hosts
-    t0..t24: targets t20+ exercise the in_corpus=false leg of the
-    corpus join. The SQL oracle replays the arithmetic."""
-    docs = _t(spark, sf_dir, "documents", spread=True)
-    did = F.col("doc_id")
-    t = F.concat(
-        F.lit("https://t"), (did % 25).cast("string"), F.lit(".example/page")
-    )
-    html = F.concat(
-        F.lit('<a href="'), t, F.lit('">kw'), (did % 3).cast("string"),
-        F.lit("</a>"),
-        F.when(
-            did % 4 == 0,
-            F.concat(F.lit('<a href="'), t, F.lit('">hub</a>')),
-        ).otherwise(F.lit("")),
-    )
-    url = F.concat(
-        F.lit("https://t"), (did % 20).cast("string"), F.lit(".example/d/"),
-        did.cast("string"),
-    )
-    return docs.select(url.alias("url"), html.alias("html"))
-
-
-def q_anchor_profile(spark, sf_dir):
-    """Per-target anchor profile (webgraph.anchor_profile): the raw
-    anchor-text corpus aggregated to each dst's top-2 phrases with
-    counts + total inbound links, host-joined back to the corpus
-    (in_corpus). The heavy reduction is the partially-aggregable
-    (dst, anchor) groupBy; the rank window sees only already-collapsed
-    distinct-phrase rows — no global window. Exact integer counts;
-    (n desc, anchor asc) rank deterministic."""
-    from ocr_poc_spark.operators.webgraph import (
-        anchor_profile,
-        extract_anchor_texts,
-    )
-
-    pages = _anchor_profile_pages(spark, sf_dir)
-    return anchor_profile(
-        extract_anchor_texts(pages), top_k=2, docs=pages
-    )
-
-
-def q_host_graph(spark, sf_dir):
-    """Host-level link graph (webgraph.extract_links + host_graph) over
-    deterministically synthesized pages: href regexp extraction,
-    absolute/scheme-relative/root-relative resolution, per-(src, dst)
-    host counts. Map-only until the one uniform-host-key aggregation."""
-    from ocr_poc_spark.operators.webgraph import extract_links, host_graph
-
-    return host_graph(extract_links(_link_pages(spark, sf_dir)))
-
-
-def q_host_pagerank(spark, sf_dir):
-    """Fixed-3-iteration weighted PageRank over the host graph (self
-    loops excluded) — the crawl-prioritization score. Deterministic by
-    construction; the oracle replays all three iterations as chained
-    CTEs; round-6 rides cross-engine summation-order ulps."""
-    from ocr_poc_spark.operators.webgraph import (
-        extract_links,
-        host_graph,
-        pagerank,
-    )
-
-    g = host_graph(extract_links(_link_pages(spark, sf_dir))).where(
-        F.col("src_host") != F.col("dst_host")
-    )
-    pr = pagerank(g, n_iter=3, weight="n_links")
-    return pr.select("host", F.round("rank", 6).alias("rank"))
-
-
 def q_clean_text(spark, sf_dir):
     """Unicode cleanup pass (textstats.clean_text) over a
     deterministically dirtied corpus: every doc gets a control char,
@@ -1842,65 +1546,6 @@ def q_crawl_diff(spark, sf_dir):
     return crawl_diff(docs, new, id_col="doc_id", content_col="text")
 
 
-def q_asof_join(spark, sf_dir):
-    """Backward as-of join (operators/timeseries.py): for every click
-    event, the user's latest prior-or-same-instant view — the canonical
-    time-series join Spark lacks natively, formulated as union +
-    carry-forward window (one exchange, one sort, NO join node, output
-    exactly |L| rows). Oracle = DuckDB's NATIVE ASOF LEFT JOIN — a
-    fully independent implementation of the same semantics. Timestamps
-    compare as integer microseconds."""
-    from ocr_poc_spark.operators.timeseries import asof_join
-
-    e = _t(spark, sf_dir, "events")
-    clicks = e.where(F.col("event_type") == "click").select(
-        "event_id", "user_id", "ts"
-    )
-    views = e.where(F.col("event_type") == "view").select(
-        "user_id", "ts", "event_id", "value"
-    )
-    out = asof_join(
-        clicks, views, on="user_id", ts_col="ts", tie_col="event_id"
-    )
-    return out.select(
-        "event_id",
-        "user_id",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-        F.unix_micros(F.col("ts_asof").cast("timestamp")).alias("view_ts_us"),
-        F.col("event_id_asof").alias("view_event_id"),
-        F.round("value_asof", 6).alias("view_value"),
-    )
-
-
-def q_asof_forward(spark, sf_dir):
-    """Forward as-of with tolerance: for every click, the user's NEXT
-    view within one hour — reverse-time carry-forward scan, matches
-    farther than the tolerance nulled (merge_asof semantics, never
-    next-nearest). Oracle = DuckDB ASOF LEFT JOIN with the inequality
-    flipped (l.ts <= r.ts) and a post-join tolerance CASE."""
-    from ocr_poc_spark.operators.timeseries import asof_join
-
-    e = _t(spark, sf_dir, "events")
-    clicks = e.where(F.col("event_type") == "click").select(
-        "event_id", "user_id", "ts"
-    )
-    views = e.where(F.col("event_type") == "view").select(
-        "user_id", "ts", "event_id", "value"
-    )
-    out = asof_join(
-        clicks, views, on="user_id", ts_col="ts", tie_col="event_id",
-        direction="forward", tolerance=3600.0,
-    )
-    return out.select(
-        "event_id",
-        "user_id",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-        F.unix_micros(F.col("ts_asof").cast("timestamp")).alias("view_ts_us"),
-        F.col("event_id_asof").alias("view_event_id"),
-        F.round("value_asof", 6).alias("view_value"),
-    )
-
-
 def q_crawl_churn(spark, sf_dir):
     """Per-host churn rollup (crawl.crawl_churn_stats) — the recrawl-
     scheduling signal. Documents become urls 'https://<source>/doc/<id>'
@@ -1955,26 +1600,6 @@ def q_corpus_quantiles(spark, sf_dir):
         "lang", "n", F.round("mean", 6).alias("mean"),
         F.round("p25", 6).alias("p25"), F.round("p50", 6).alias("p50"),
         F.round("p90", 6).alias("p90"), F.round("p99", 6).alias("p99"),
-    )
-
-
-def q_bm25_serve(spark, sf_dir):
-    """Serving-mode BM25: build the persistable inverted file
-    (search.bm25_index — (term, doc_id, tf, dl) rows, never text) and
-    answer a query from it alone, the index-once/query-many shape of
-    minhash_band_index and IVF serving. Corpus stats (N, avg length)
-    come from the index's distinct (doc_id, dl) pairs, i.e. documents
-    with >= 1 token; the oracle recomputes BM25 under exactly those
-    serving semantics."""
-    from ocr_poc_spark.operators.search import bm25_index, bm25_topk
-
-    docs = _t(spark, sf_dir, "documents", spread=True)
-    # Materialized like the persisted artifact it models: the serving
-    # query reads the index twice (corpus stats + term lookup) and
-    # would otherwise re-tokenize the corpus per reference.
-    idx = bm25_index(docs).localCheckpoint(eager=True)
-    return bm25_topk(
-        docs, "stream filter merge vector", top_n=20, index=idx
     )
 
 
@@ -2038,15 +1663,17 @@ def q_host_cap(spark, sf_dir):  # domain-balance cap, stable hash order
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # REGISTRY ORDER IS LOAD-BEARING: the driver's correctness gate
-    # verifies the FIRST 50 entries only.  Round-5 rotation (VERDICT r4
-    # item 1): the first block keeps one architecturally load-bearing,
-    # already-driver-green representative per family; the second block
-    # promotes every query that had no driver-verified row in
-    # CORRECTNESS_r01..r04 (the round-4 suite) plus the new round-5
-    # queries.  The tail holds near-duplicate variants of families whose
-    # representative is (or was, in r01-r04) driver-green — they remain
-    # fully oracle-checked by scripts/oracle_check.py and pytest; see
-    # README "Correctness evidence map".
+    # verifies the FIRST 50 of these 87 entries only.  Round-5 rotation
+    # (VERDICT r4 item 1): the first block keeps one architecturally
+    # load-bearing, already-driver-green representative per family; the
+    # second block promotes every query that had no driver-verified row
+    # in CORRECTNESS_r01..r04 (the round-4 suite) plus the new round-5
+    # queries.  The two blocks hold 41 entries, so the first 9 tail
+    # entries (semantic_dedup .. ann_lsh) also sit inside the window.
+    # The rest of the tail holds near-duplicate variants of families
+    # whose representative is (or was, in r01-r04) driver-green — they
+    # remain fully oracle-checked by scripts/oracle_check.py and pytest;
+    # see README "Correctness evidence map".
     return {
         # -- block 1: driver-green representatives kept in the window --
         "corpus_pipeline": q_corpus_pipeline,
@@ -2060,20 +1687,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "strip_boilerplate": q_strip_boilerplate,
         "decontaminate_spans": q_decontaminate_spans,
         "benchmark_coverage": q_benchmark_coverage,
-        "corpus_grep": q_corpus_grep,
         "fuzzy_anchor_join": q_fuzzy_anchor_join,
-        "proximity_binding": q_proximity_binding,
-        "band_join": q_band_join,
         # -- block 2: promoted (no driver row before r5) + new in r5 --
         "extract_pipeline": q_extract_pipeline,
         "pack_subword": q_pack_subword,
         "bpe_merges": q_bpe_merges,
         "chunk_bpe": q_chunk_bpe,
-        "bm25_serve": q_bm25_serve,
-        "hybrid_search": q_hybrid_search,
-        "anchor_profile": q_anchor_profile,
-        "host_graph": q_host_graph,
-        "host_pagerank": q_host_pagerank,
         "clean_text": q_clean_text,
         "gopher_rules": q_gopher_rules,
         "url_blocklist": q_url_blocklist,
@@ -2086,7 +1705,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dsir_weights": q_dsir_weights,
         "dsir_resample": q_dsir_resample,
         "semantic_dedup_bcast": q_semantic_dedup_bcast,
-        "asof_join": q_asof_join,
         "corpus_quantiles": q_corpus_quantiles,
         "ccnet_buckets": q_ccnet_buckets,
         "kn_perplexity": q_kn_perplexity,
@@ -2110,17 +1728,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "vocab_topk": q_vocab_topk,
         "crawl_churn": q_crawl_churn,
         "chunk_documents": q_chunk_documents,
-        "bm25_search": q_bm25_search,
         "text_dedup_e2e": q_text_dedup_e2e,
         "ann_lsh": q_ann_lsh,
-        "anchor_texts": q_anchor_texts,
+        # -- position 50: entries below sit outside the driver window --
         "stratified_sample": q_stratified_sample,
         "host_cap": q_host_cap,
         "salted_agg": q_salted_agg,
         "dedup_exact": q_dedup_exact,
         "normalize_urls": q_normalize_urls,
         "decontaminate": q_decontaminate,
-        "asof_forward": q_asof_forward,
         "embedding_near_dup": q_embedding_near_dup,
         "embedding_topk": q_embedding_topk,
         "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
@@ -2148,8 +1764,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "tpch_top_orders": q_tpch_top_orders,
         "region_rollup": q_region_rollup,
         "range_join": q_range_join,
-        "zone_transform": q_zone_transform,
-        "multimodal_decode": q_multimodal_decode,
         "json_props": q_json_props,
         "set_ops": q_set_ops,
         "boilerplate_shingles": q_boilerplate_shingles,
@@ -2499,24 +2113,6 @@ def oracle_sql() -> dict[str, str]:
             WHERE levenshtein(d.source, a.anchor) <= 1
             GROUP BY a.anchor
         """,
-        "proximity_binding": """
-            WITH clicks AS (
-                SELECT event_id AS click_id, user_id, epoch_us(ts) AS c_us
-                FROM events WHERE event_type = 'click'),
-            buys AS (
-                SELECT event_id AS purchase_id, user_id, epoch_us(ts) AS p_us,
-                       value AS p_value
-                FROM events WHERE event_type = 'purchase'),
-            pairs AS (
-                SELECT click_id, purchase_id,
-                       ROUND(p_value / (1.0 + (p_us - c_us) / 1e6), 6) AS score
-                FROM clicks JOIN buys USING (user_id)
-                WHERE p_us > c_us AND p_us <= c_us + 3600000000)
-            SELECT click_id, purchase_id, score FROM (
-                SELECT *, ROW_NUMBER() OVER (PARTITION BY click_id
-                         ORDER BY score DESC, purchase_id ASC) AS rn FROM pairs)
-            WHERE rn = 1
-        """,
         "sessionization": """
             SELECT user_id, CAST(SUM(new_sess) AS BIGINT) AS n_sessions, COUNT(*) AS n_events FROM (
                 SELECT user_id,
@@ -2784,22 +2380,6 @@ def oracle_sql() -> dict[str, str]:
             WHERE e.value >= z.lo AND e.value < z.hi
             GROUP BY z.zone
         """,
-        "band_join": """
-            WITH errs AS (SELECT event_id AS err_id, user_id, epoch_us(ts) AS e_us
-                          FROM events WHERE event_type = 'error'),
-            views AS (SELECT event_id AS view_id, user_id, epoch_us(ts) AS v_us,
-                             value AS v_value
-                      FROM events WHERE event_type = 'view'),
-            j AS (SELECT err_id, view_id,
-                         ROUND(CASE WHEN v_us > e_us THEN v_value * 1.5
-                                    ELSE v_value END, 6) AS boosted
-                  FROM errs JOIN views USING (user_id)
-                  WHERE abs(v_us - e_us) <= 300000000)
-            SELECT err_id, view_id, boosted FROM (
-                SELECT *, ROW_NUMBER() OVER (PARTITION BY err_id
-                         ORDER BY boosted DESC, view_id ASC) AS rn FROM j)
-            WHERE rn = 1
-        """,
         "region_rollup": """
             SELECT r.r_name, COUNT(*) AS n_items,
                    CAST(SUM(CAST(l.l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
@@ -2809,105 +2389,6 @@ def oracle_sql() -> dict[str, str]:
             JOIN nation n ON c.c_nationkey = n.n_nationkey
             JOIN region r ON n.n_regionkey = r.r_regionkey
             GROUP BY r.r_name
-        """,
-        "multimodal_decode": """
-            WITH m AS (
-              SELECT doc_id AS media_id,
-                     ['image','audio','video'][CAST(doc_id % 3 AS INT) + 1] AS kind,
-                     (doc_id % 7 = 0) AS raw,
-                     CAST(doc_id % 100 + 1 AS INT) AS w,
-                     CAST(doc_id % 50 + 1 AS INT) AS h,
-                     CAST(doc_id % 10 + 1 AS INT) AS nf,
-                     text,
-                     list_transform(range(1, length(text) + 1),
-                                    i -> ascii(text[i])) AS codes
-              FROM documents)
-            SELECT media_id, kind,
-                   CASE WHEN raw THEN 'unsupported' ELSE 'ok' END AS status,
-                   CASE WHEN raw THEN NULL ELSE w END AS width,
-                   CASE WHEN raw THEN NULL ELSE h END AS height,
-                   CASE WHEN raw THEN NULL ELSE nf END AS n_frames,
-                   CAST(CASE WHEN raw THEN length(text)
-                             ELSE length(text) + 11 END AS BIGINT) AS n_bytes,
-                   CASE WHEN raw THEN NULL
-                        ELSE CAST(length(text) AS DOUBLE) END AS f_len,
-                   CASE WHEN raw THEN NULL
-                        ELSE ROUND(COALESCE(list_sum(codes), 0)::DOUBLE
-                                   / greatest(length(text), 1), 6) END AS f_mean,
-                   CASE WHEN raw THEN NULL
-                        ELSE CAST(COALESCE(list_min(codes), 0) AS DOUBLE) END AS f_min,
-                   CASE WHEN raw THEN NULL
-                        ELSE CAST(COALESCE(list_max(codes), 0) AS DOUBLE) END AS f_max
-            FROM m
-        """,
-        "zone_transform": """
-            WITH b AS (
-              SELECT 'u' || user_id AS url, CAST(event_id AS INT) AS idx,
-                     event_type AS text,
-                     (event_id % 37) * 10.0 AS x, (event_id % 23) * 12.0 AS y
-              FROM events),
-            bounds AS (SELECT url, MIN(x) AS min_x, MAX(x) AS max_x,
-                              MIN(y) AS min_y, MAX(y) AS max_y
-                       FROM b GROUP BY url),
-            a2 AS (SELECT * FROM (
-                     SELECT url, x, y,
-                            ROW_NUMBER() OVER (PARTITION BY url ORDER BY idx ASC) AS rn
-                     FROM b) WHERE rn <= 2),
-            piv AS (SELECT url,
-                           MIN(CASE WHEN rn=1 THEN x END) AS p1x,
-                           MIN(CASE WHEN rn=1 THEN y END) AS p1y,
-                           MIN(CASE WHEN rn=2 THEN x END) AS p2x,
-                           MIN(CASE WHEN rn=2 THEN y END) AS p2y,
-                           COUNT(*) AS n_anchors
-                    FROM a2 GROUP BY url),
-            tr AS (SELECT bounds.url, min_x AS offset_x, min_y AS offset_y,
-                          max_x - min_x AS width, max_y - min_y AS height,
-                          COALESCE(CASE
-                            WHEN n_anchors < 2 THEN 0.0
-                            WHEN abs(atan2(p2y-p1y, p2x-p1x)) < pi()/4
-                                 THEN atan2(p2y-p1y, p2x-p1x)
-                            WHEN abs(atan2(p2y-p1y, p2x-p1x) - pi()/2) < pi()/4
-                                 THEN atan2(p2y-p1y, p2x-p1x) - pi()/2
-                            ELSE 0.0 END, 0.0) AS rotation
-                   FROM bounds LEFT JOIN piv ON bounds.url = piv.url),
-            g AS (SELECT b.url, z.field, b.idx, b.text, b.x, b.y,
-                         (b.idx % 13 + 1) / 13.0 AS score, z.anchors,
-                         offset_x + width/2 AS cx, offset_y + height/2 AS cy,
-                         cos(-rotation) AS cr, sin(-rotation) AS sr,
-                         z.zx*width + offset_x AS xa1, z.zy*height + offset_y AS ya1,
-                         (z.zx+z.zw)*width + offset_x AS xa2,
-                         (z.zy+z.zh)*height + offset_y AS ya2
-                  FROM b JOIN tr ON b.url = tr.url
-                  CROSS JOIN (VALUES ('hot',0.0,0.0,0.5,0.5,['click']),
-                                     ('cold',0.5,0.5,0.5,0.5,[]))
-                       z(field, zx, zy, zw, zh, anchors)),
-            r AS (SELECT url, field, idx, text, x, y, score, anchors,
-                         cr*(xa1-cx) - sr*(ya1-cy) + cx AS x1r,
-                         sr*(xa1-cx) + cr*(ya1-cy) + cy AS y1r,
-                         cr*(xa2-cx) - sr*(ya2-cy) + cx AS x2r,
-                         sr*(xa2-cx) + cr*(ya2-cy) + cy AS y2r
-                  FROM g),
-            zz AS (SELECT url, field, idx, text, x, y, score, anchors,
-                          least(x1r,x2r) - (greatest(x1r,x2r)-least(x1r,x2r))*0.2 AS x1,
-                          greatest(x1r,x2r) + (greatest(x1r,x2r)-least(x1r,x2r))*0.2 AS x2,
-                          least(y1r,y2r) - (greatest(y1r,y2r)-least(y1r,y2r))*0.2 AS y1,
-                          greatest(y1r,y2r) + (greatest(y1r,y2r)-least(y1r,y2r))*0.2 AS y2
-                   FROM r),
-            cand AS (SELECT url, field, idx, text,
-                            score * (CASE WHEN sqrt(power(x2-x1,2)+power(y2-y1,2)) > 0
-                                     THEN 1.0 - sqrt(power(x-(x1+x2)/2, 2)
-                                                     + power(y-(y1+y2)/2, 2))
-                                          / sqrt(power(x2-x1,2)+power(y2-y1,2))
-                                     ELSE 1.0 END) AS zscore
-                     FROM zz
-                     WHERE length(trim(text)) > 0
-                       AND x >= x1 AND x <= x2 AND y >= y1 AND y <= y2
-                       AND len(list_filter(anchors,
-                               a -> position(upper(a) IN upper(text)) > 0)) = 0)
-            SELECT url, field, idx, text, ROUND(zscore, 6) AS zscore FROM (
-                SELECT *, ROW_NUMBER() OVER (PARTITION BY url, field
-                         ORDER BY zscore DESC, idx ASC) AS rn FROM cand)
-            WHERE rn = 1
         """,
         # MinHash+LSH oracle: the EXACT all-pairs shingle Jaccard — fully
         # independent of the Spark hash path. The LSH banding's recall on
@@ -3371,25 +2852,6 @@ def oracle_sql() -> dict[str, str]:
                         THEN ROUND(COALESCE(per.n_found, 0)
                                    / per.n_ngrams, 6) END AS coverage
             FROM bench b LEFT JOIN per USING (bench_id)
-        """,
-        "corpus_grep": """
-            WITH parts AS (
-              SELECT doc_id, string_split(text, 'table') AS p
-              FROM documents WHERE text IS NOT NULL),
-            hit AS (SELECT doc_id, p FROM parts WHERE len(p) > 1),
-            r AS (
-              SELECT doc_id, CAST(i AS INTEGER) AS idx, p[i+1] AS part,
-                     len(p) AS np
-              FROM hit, unnest(range(0, len(p))) AS u(i)),
-            cum AS (
-              SELECT doc_id, idx, np,
-                     SUM(len(part)) OVER (
-                       PARTITION BY doc_id ORDER BY idx
-                       ROWS UNBOUNDED PRECEDING) AS cl
-              FROM r)
-            SELECT doc_id, CAST(idx AS INTEGER) AS occ_idx,
-                   CAST(cl + idx * 5 AS BIGINT) AS pos
-            FROM cum WHERE idx < np - 1
         """,
         "stratified_sample": """
             SELECT doc_id, lang, source FROM documents
@@ -3964,98 +3426,6 @@ def oracle_sql() -> dict[str, str]:
                    ROUND(cosine, 6) AS cosine
             FROM read_parquet('/root/repo/dist/golden/ann_ivf_sf001.parquet')
         """,
-        # BM25: tokenize, tf for query terms only, df over those,
-        # Lucene idf, length-normalized tf, rounded-score top-k. Same
-        # (round-4, id) cut as the Spark side.
-        "bm25_search": f"""
-            WITH ws AS (SELECT doc_id, {_WORDS_SQL} AS w FROM documents),
-            st AS (SELECT COUNT(*)::DOUBLE AS n_docs, AVG(len(w)) AS avg_len FROM ws),
-            q(t) AS (VALUES ('hash'), ('join'), ('spark'), ('table'), ('window')),
-            tf AS (
-              SELECT doc_id, len(w) AS dl, u.t, COUNT(*) AS tf
-              FROM ws, unnest(w) AS u(t)
-              WHERE u.t IN (SELECT t FROM q)
-              GROUP BY doc_id, len(w), u.t),
-            dfreq AS (SELECT t, COUNT(*)::DOUBLE AS df FROM tf GROUP BY t),
-            scored AS (
-              SELECT tf.doc_id,
-                     COUNT(*) AS n_hit_terms,
-                     SUM(ln((st.n_docs - d.df + 0.5) / (d.df + 0.5) + 1.0)
-                         * (tf.tf * (1.2 + 1.0))
-                         / (tf.tf + 1.2 * (1.0 - 0.75 + 0.75 * tf.dl / st.avg_len))
-                     ) AS s
-              FROM tf JOIN dfreq d ON tf.t = d.t CROSS JOIN st
-              GROUP BY tf.doc_id)
-            SELECT doc_id, CAST(n_hit_terms AS BIGINT) AS n_hit_terms,
-                   ROUND(s, 4) AS score
-            FROM scored
-            ORDER BY ROUND(s, 4) DESC, doc_id ASC
-            LIMIT 20
-        """,
-        "hybrid_search": f"""
-            WITH ws AS (SELECT doc_id, {_WORDS_SQL} AS w FROM documents),
-            st AS (SELECT COUNT(*)::DOUBLE AS n_docs, AVG(len(w)) AS avg_len FROM ws),
-            q(t) AS (VALUES ('hash'), ('join'), ('spark'), ('table'), ('window')),
-            tf AS (
-              SELECT doc_id, len(w) AS dl, u.t, COUNT(*) AS tf
-              FROM ws, unnest(w) AS u(t)
-              WHERE u.t IN (SELECT t FROM q)
-              GROUP BY doc_id, len(w), u.t),
-            dfreq AS (SELECT t, COUNT(*)::DOUBLE AS df FROM tf GROUP BY t),
-            scored AS (
-              SELECT tf.doc_id,
-                     SUM(ln((st.n_docs - d.df + 0.5) / (d.df + 0.5) + 1.0)
-                         * (tf.tf * (1.2 + 1.0))
-                         / (tf.tf + 1.2 * (1.0 - 0.75 + 0.75 * tf.dl / st.avg_len))
-                     ) AS s
-              FROM tf JOIN dfreq d ON tf.t = d.t CROSS JOIN st
-              GROUP BY tf.doc_id),
-            sparse AS (
-              SELECT doc_id, rn AS bm25_rank FROM (
-                SELECT doc_id,
-                       ROW_NUMBER() OVER (ORDER BY ROUND(s, 4) DESC, doc_id ASC) AS rn
-                FROM scored)
-              WHERE rn <= 20),
-            {_EMBED_VEC_SQL},
-            qtok AS (
-              SELECT ('0x' || substr(md5(w.w), 1, 15))::BIGINT AS h
-              FROM unnest(string_split_regex(lower(trim('spark hash join window table')), '\\s+')) AS w(w)
-              WHERE len(w.w) > 0),
-            qcell AS (
-              SELECT h & 15 AS pos,
-                     SUM(CASE WHEN (h >> 4) & 1 = 1 THEN -1 ELSE 1 END) AS s
-              FROM qtok GROUP BY pos),
-            qvec AS (
-              SELECT list(val ORDER BY pos) AS v FROM (
-                SELECT p.pos, CAST(COALESCE(c.s, 0) AS DOUBLE) AS val
-                FROM (SELECT unnest(range(16)) AS pos) p
-                LEFT JOIN qcell c ON c.pos = p.pos)),
-            dcos AS (
-              SELECT v.doc_id,
-                     list_dot_product(v.v, q.v)
-                       / NULLIF(sqrt(list_dot_product(v.v, v.v))
-                                * sqrt(list_dot_product(q.v, q.v)), 0) AS cosr
-              FROM vec v CROSS JOIN qvec q),
-            dense AS (
-              SELECT doc_id, rn AS cos_rank FROM (
-                SELECT doc_id,
-                       ROW_NUMBER() OVER (ORDER BY cosr DESC, doc_id ASC) AS rn
-                FROM dcos WHERE cosr IS NOT NULL)
-              WHERE rn <= 20),
-            fused AS (
-              SELECT COALESCE(sp.doc_id, de.doc_id) AS doc_id,
-                     sp.bm25_rank, de.cos_rank,
-                     COALESCE(1.0 / (60 + sp.bm25_rank), 0)
-                       + COALESCE(1.0 / (60 + de.cos_rank), 0) AS rrf
-              FROM sparse sp FULL OUTER JOIN dense de ON sp.doc_id = de.doc_id)
-            SELECT doc_id,
-                   CAST(bm25_rank AS INTEGER) AS bm25_rank,
-                   CAST(cos_rank AS INTEGER) AS cos_rank,
-                   ROUND(rrf, 6) AS rrf_score
-            FROM fused
-            ORDER BY ROUND(rrf, 6) DESC, doc_id ASC
-            LIMIT 10
-        """,
         "crawl_frontier": """
             WITH u AS (
               SELECT DISTINCT
@@ -4304,131 +3674,6 @@ def oracle_sql() -> dict[str, str]:
         "semantic_dedup_bcast": _semantic_dedup_oracle(
             _semantic_bcast_centroids()
         ),
-        # Anchor profile: the _anchor_profile_pages synthesis replayed
-        # arithmetically — (dst, anchor) counts, per-dst rank window
-        # ((n desc, anchor asc)), windowed total, host-level corpus
-        # join (page hosts t0..t19, targets t0..t24).
-        "anchor_profile": """
-            WITH links AS (
-              SELECT CAST(doc_id % 25 AS VARCHAR) AS k,
-                     'https://t' || CAST(doc_id % 25 AS VARCHAR)
-                       || '.example/page' AS dst,
-                     'kw' || CAST(doc_id % 3 AS VARCHAR) AS anchor
-              FROM documents
-              UNION ALL
-              SELECT CAST(doc_id % 25 AS VARCHAR),
-                     'https://t' || CAST(doc_id % 25 AS VARCHAR)
-                       || '.example/page',
-                     'hub'
-              FROM documents WHERE doc_id % 4 = 0),
-            counts AS (
-              SELECT k, dst, anchor, COUNT(*) AS n_anchor
-              FROM links GROUP BY k, dst, anchor),
-            ranked AS (
-              SELECT k, dst, anchor, n_anchor,
-                     ROW_NUMBER() OVER (
-                       PARTITION BY dst
-                       ORDER BY n_anchor DESC, anchor) AS rank,
-                     SUM(n_anchor) OVER (PARTITION BY dst) AS n_links
-              FROM counts),
-            hosts AS (
-              SELECT DISTINCT CAST(doc_id % 20 AS VARCHAR) AS hk
-              FROM documents)
-            SELECT dst, CAST(rank AS INTEGER) AS rank, anchor,
-                   CAST(n_anchor AS BIGINT) AS n_anchor,
-                   CAST(n_links AS BIGINT) AS n_links,
-                   (hk IS NOT NULL) AS in_corpus
-            FROM ranked LEFT JOIN hosts ON ranked.k = hosts.hk
-            WHERE rank <= 2
-        """,
-        # Anchor texts: the _link_pages synthesis replayed — absolute
-        # link anchor 'x', root-relative '}s' (the regexp captures up
-        # to the next '<': the '>' that closes the a-tag of the
-        # FOLLOWING match never appears because matches are
-        # non-overlapping left-to-right; here anchors are literal).
-        "anchor_texts": """
-            WITH docs AS (
-              SELECT doc_id,
-                     'https://src' || CAST(doc_id % 20 AS VARCHAR)
-                       || '.example/doc/' || CAST(doc_id AS VARCHAR) AS src,
-                     'src' || CAST(doc_id % 20 AS VARCHAR) || '.example' AS src_host,
-                     'src' || CAST((doc_id * 7) % 20 AS VARCHAR) || '.example' AS t1,
-                     'src' || CAST((doc_id * 3) % 20 AS VARCHAR) || '.example' AS t2
-              FROM documents)
-            SELECT src, 'https://' || t1 || '/p' AS dst, 'x' AS anchor FROM docs
-            UNION ALL
-            SELECT src, 'https://' || src_host || '/self', 's'
-            FROM docs WHERE doc_id % 2 = 0
-            UNION ALL
-            SELECT src, 'https://' || t2 || '/q', 'y'
-            FROM docs WHERE doc_id % 5 = 0
-        """,
-        # Webgraph: the synthesis rule replayed arithmetically (the
-        # Spark side actually regex-extracts from the html it built).
-        "host_graph": """
-            WITH links AS (
-              SELECT 'src' || CAST(doc_id % 20 AS VARCHAR) || '.example' AS src_host,
-                     'src' || CAST((doc_id * 7) % 20 AS VARCHAR) || '.example' AS dst_host
-              FROM documents
-              UNION ALL
-              SELECT 'src' || CAST(doc_id % 20 AS VARCHAR) || '.example',
-                     'src' || CAST(doc_id % 20 AS VARCHAR) || '.example'
-              FROM documents WHERE doc_id % 2 = 0
-              UNION ALL
-              SELECT 'src' || CAST(doc_id % 20 AS VARCHAR) || '.example',
-                     'src' || CAST((doc_id * 3) % 20 AS VARCHAR) || '.example'
-              FROM documents WHERE doc_id % 5 = 0)
-            SELECT src_host, dst_host, COUNT(*) AS n_links
-            FROM links GROUP BY src_host, dst_host
-        """,
-        # PageRank: three chained iterations, identical arithmetic
-        # (rank*w/outw inflow sums, base + d*inflow), round-6 output.
-        "host_pagerank": """
-            WITH links AS (
-              SELECT 'src' || CAST(doc_id % 20 AS VARCHAR) || '.example' AS sh,
-                     'src' || CAST((doc_id * 7) % 20 AS VARCHAR) || '.example' AS dh
-              FROM documents
-              UNION ALL
-              SELECT 'src' || CAST(doc_id % 20 AS VARCHAR) || '.example',
-                     'src' || CAST(doc_id % 20 AS VARCHAR) || '.example'
-              FROM documents WHERE doc_id % 2 = 0
-              UNION ALL
-              SELECT 'src' || CAST(doc_id % 20 AS VARCHAR) || '.example',
-                     'src' || CAST((doc_id * 3) % 20 AS VARCHAR) || '.example'
-              FROM documents WHERE doc_id % 5 = 0),
-            e AS (
-              SELECT sh AS u, dh AS v, COUNT(*)::DOUBLE AS w
-              FROM links WHERE sh <> dh GROUP BY sh, dh),
-            outd AS (SELECT u, SUM(w) AS outw FROM e GROUP BY u),
-            nodes AS (SELECT DISTINCT u FROM (SELECT u FROM e UNION ALL SELECT v FROM e)),
-            nn AS (SELECT COUNT(*)::DOUBLE AS n FROM nodes),
-            r0 AS (SELECT u, 1.0 / (SELECT n FROM nn) AS rank FROM nodes),
-            i1 AS (
-              SELECT nodes.u,
-                     (0.15 / (SELECT n FROM nn))
-                       + 0.85 * COALESCE(s.infl, 0.0) AS rank
-              FROM nodes LEFT JOIN (
-                SELECT e.v AS u, SUM(r0.rank * e.w / outd.outw) AS infl
-                FROM e JOIN r0 ON r0.u = e.u JOIN outd ON outd.u = e.u
-                GROUP BY e.v) s ON s.u = nodes.u),
-            i2 AS (
-              SELECT nodes.u,
-                     (0.15 / (SELECT n FROM nn))
-                       + 0.85 * COALESCE(s.infl, 0.0) AS rank
-              FROM nodes LEFT JOIN (
-                SELECT e.v AS u, SUM(i1.rank * e.w / outd.outw) AS infl
-                FROM e JOIN i1 ON i1.u = e.u JOIN outd ON outd.u = e.u
-                GROUP BY e.v) s ON s.u = nodes.u),
-            i3 AS (
-              SELECT nodes.u,
-                     (0.15 / (SELECT n FROM nn))
-                       + 0.85 * COALESCE(s.infl, 0.0) AS rank
-              FROM nodes LEFT JOIN (
-                SELECT e.v AS u, SUM(i2.rank * e.w / outd.outw) AS infl
-                FROM e JOIN i2 ON i2.u = e.u JOIN outd ON outd.u = e.u
-                GROUP BY e.v) s ON s.u = nodes.u)
-            SELECT u AS host, ROUND(rank, 6) AS rank FROM i3
-        """,
         # clean_text: same dirt injection, then the full normalization
         # chain in RE2 (note the 'g' flags) + translate + trim. The
         # translate to-chars are built from chr() to dodge quoting.
@@ -4575,52 +3820,6 @@ def oracle_sql() -> dict[str, str]:
                    o.old_digest, n.new_digest
             FROM o FULL OUTER JOIN n ON o.doc_id = n.doc_id
         """,
-        # As-of oracle: DuckDB's NATIVE ASOF LEFT JOIN — an independent
-        # engine implementation of backward-inclusive as-of semantics.
-        # Right side pre-collapsed to one row per (user, ts) by max
-        # event_id, mirroring tie_col; epoch_us for integer comparison.
-        "asof_join": """
-            WITH l AS (SELECT event_id, user_id, ts FROM events
-                       WHERE event_type = 'click'),
-            r0 AS (SELECT user_id, ts, event_id, value FROM events
-                   WHERE event_type = 'view' AND ts IS NOT NULL),
-            r AS (SELECT user_id, ts,
-                         arg_max(event_id, event_id) AS event_id,
-                         arg_max(value, event_id) AS value
-                  FROM r0 GROUP BY user_id, ts)
-            SELECT l.event_id, l.user_id, epoch_us(l.ts) AS ts_us,
-                   epoch_us(r.ts) AS view_ts_us,
-                   r.event_id AS view_event_id,
-                   ROUND(r.value, 6) AS view_value
-            FROM l ASOF LEFT JOIN r
-              ON l.user_id = r.user_id AND l.ts >= r.ts
-        """,
-        # Forward-with-tolerance oracle: ASOF with l.ts <= r.ts picks
-        # the nearest later view; the tolerance CASE nulls the whole
-        # match (id, ts, value together) beyond one hour. max_by tie
-        # collapse as in asof_join. epoch() diff is in seconds.
-        "asof_forward": """
-            WITH l AS (SELECT event_id, user_id, ts FROM events
-                       WHERE event_type = 'click'),
-            r0 AS (SELECT user_id, ts, event_id, value FROM events
-                   WHERE event_type = 'view' AND ts IS NOT NULL),
-            r AS (SELECT user_id, ts,
-                         arg_max(event_id, event_id) AS event_id,
-                         arg_max(value, event_id) AS value
-                  FROM r0 GROUP BY user_id, ts),
-            j AS (
-              SELECT l.event_id, l.user_id, l.ts AS lts, r.ts AS rts,
-                     r.event_id AS rid, r.value AS rv,
-                     (r.ts IS NOT NULL
-                      AND abs(epoch(l.ts) - epoch(r.ts)) <= 3600.0) AS ok
-              FROM l ASOF LEFT JOIN r
-                ON l.user_id = r.user_id AND l.ts <= r.ts)
-            SELECT event_id, user_id, epoch_us(lts) AS ts_us,
-                   CASE WHEN ok THEN epoch_us(rts) END AS view_ts_us,
-                   CASE WHEN ok THEN rid END AS view_event_id,
-                   CASE WHEN ok THEN ROUND(rv, 6) END AS view_value
-            FROM j
-        """,
         # Churn rollup: same synthesis as crawl_diff but over
         # 'https://<source>/doc/<id>' urls; host = regexp of the url;
         # counts exact, churn round-6.
@@ -4667,37 +3866,6 @@ def oracle_sql() -> dict[str, str]:
                    ROUND(quantile_cont(n_chars, 0.9), 6) AS p90,
                    ROUND(quantile_cont(n_chars, 0.99), 6) AS p99
             FROM documents GROUP BY lang
-        """,
-        # Serving-mode BM25: identical scoring, but corpus stats (N,
-        # avg length) are those the inverted file can see — documents
-        # with at least one non-empty token (an all-whitespace doc has
-        # no index rows). Same rounded-score/id cut as the Spark side.
-        "bm25_serve": f"""
-            WITH ws0 AS (SELECT doc_id, {_WORDS_SQL} AS w FROM documents),
-            ws AS (SELECT doc_id, w FROM ws0
-                   WHERE len(list_filter(w, x -> x <> '')) > 0),
-            st AS (SELECT COUNT(*)::DOUBLE AS n_docs, AVG(len(w)) AS avg_len FROM ws),
-            q(t) AS (VALUES ('filter'), ('merge'), ('stream'), ('vector')),
-            tf AS (
-              SELECT doc_id, len(w) AS dl, u.t, COUNT(*) AS tf
-              FROM ws, unnest(w) AS u(t)
-              WHERE u.t IN (SELECT t FROM q)
-              GROUP BY doc_id, len(w), u.t),
-            dfreq AS (SELECT t, COUNT(*)::DOUBLE AS df FROM tf GROUP BY t),
-            scored AS (
-              SELECT tf.doc_id,
-                     COUNT(*) AS n_hit_terms,
-                     SUM(ln((st.n_docs - d.df + 0.5) / (d.df + 0.5) + 1.0)
-                         * (tf.tf * (1.2 + 1.0))
-                         / (tf.tf + 1.2 * (1.0 - 0.75 + 0.75 * tf.dl / st.avg_len))
-                     ) AS s
-              FROM tf JOIN dfreq d ON tf.t = d.t CROSS JOIN st
-              GROUP BY tf.doc_id)
-            SELECT doc_id, CAST(n_hit_terms AS BIGINT) AS n_hit_terms,
-                   ROUND(s, 4) AS score
-            FROM scored
-            ORDER BY ROUND(s, 4) DESC, doc_id ASC
-            LIMIT 20
         """,
         # BPE merge learning: iterative argmax loop — not single-SQL
         # expressible; golden from the integer-exact pure-Python mirror

@@ -63,23 +63,22 @@ BENCH_QUERIES = [
     "dedup_ngram_jaccard", "dedup_minhash", "dedup_simhash",
     "dedup_components", "dedup_incremental",
     "embedding_topk", "ann_lsh", "ann_ivf", "tpch_part_profit",
-    "proximity_binding", "sessionization", "lang_id", "fingerprint",
-    "zone_transform", "multimodal_decode",
+    "sessionization", "lang_id", "fingerprint",
     "boilerplate_shingles", "decontaminate",
-    "band_join", "corpus_pipeline", "pack_subword",
+    "corpus_pipeline", "pack_subword",
     "lm_perplexity", "strip_boilerplate",
-    "bm25_serve", "dsir_weights", "semantic_dedup", "crawl_diff",
-    "asof_join", "gopher_rules", "clean_text", "host_pagerank",
+    "dsir_weights", "semantic_dedup", "crawl_diff",
+    "gopher_rules", "clean_text",
     "url_blocklist",
     # round-4 families previously correctness-only (VERDICT r4 #8):
-    "bm25_search", "anchor_texts", "host_graph", "corpus_split",
-    "crawl_churn", "corpus_quantiles", "chunk_bpe", "asof_forward",
+    "corpus_split",
+    "crawl_churn", "corpus_quantiles", "chunk_bpe",
     # round-5 additions:
-    "span_dedup", "semantic_dedup_bcast", "anchor_profile",
-    "decontaminate_spans", "hybrid_search", "crawl_frontier",
+    "span_dedup", "semantic_dedup_bcast",
+    "decontaminate_spans", "crawl_frontier",
     "ann_quantized", "ann_recall", "ccnet_buckets", "kn_perplexity",
     "bitext_url", "tokenizer_fertility", "winnow_fingerprints",
-    "components_incremental", "repeat_line_dedup", "benchmark_coverage", "corpus_grep",
+    "components_incremental", "repeat_line_dedup", "benchmark_coverage",
     "dsir_resample",
     "temperature_sample", "shuffle_shards", "quality_classifier",
     "robots_filter",

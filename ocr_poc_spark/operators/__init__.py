@@ -1,2 +1,2 @@
 """Spark operator library: dedup, similarity search, text stats, curation,
-crawl diffing, lineage and multimodal plumbing."""
+crawl diffing and lineage."""

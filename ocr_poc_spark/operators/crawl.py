@@ -238,9 +238,9 @@ def crawl_frontier(
     ``slot`` is that 1-based position: wave = (slot - 1) div per_host.
 
     ``priority`` (optional): per-host score frame (host, priority) —
-    host PageRank (webgraph.pagerank joined to its host), churn ratio
-    (crawl_churn_stats), or any custom signal; it rides along as a
-    column so the fetcher can order hosts WITHIN a wave by value.
+    churn ratio (crawl_churn_stats), a host rank, or any custom
+    signal; it rides along as a column so the fetcher can order hosts
+    WITHIN a wave by value.
     Unknown hosts get priority 0.0, urls with no extractable host get
     host '' (one politeness bucket for hostless junk — they throttle
     each other, never a real host).

@@ -174,7 +174,7 @@ def dsir_select(
 ) -> DataFrame:
     """The selection cut: top_n raw documents by importance weight,
     deterministic (rounded logw desc, id asc) — the same distributed
-    TakeOrderedAndProject top-k discipline as bm25_topk, never a
+    TakeOrderedAndProject top-k discipline as vocab_topk, never a
     single-partition window."""
     w = importance_weights(
         raw, target, id_col=id_col, text_col=text_col,

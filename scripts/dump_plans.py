@@ -158,41 +158,6 @@ def main() -> None:
             em.queries()["crawl_diff"](spark, sf),
         ),
         (
-            "Backward as-of join (union + carry-forward window)",
-            "No Join node anywhere (plan-guarded): both sides union "
-            "after projecting to (key, ts, payload-struct), one hash "
-            "exchange on the key, one sort, one partitioned WindowExec "
-            "carrying last(payload, ignorenulls) — output is exactly "
-            "|L| rows. The theta-join formulation this replaces would "
-            "explode |L|x|R| per key before pruning.",
-            em.queries()["asof_join"](spark, sf),
-        ),
-        (
-            "Host graph (link extraction + host aggregation)",
-            "Map-only regexp href extraction and resolution feeding ONE "
-            "hash aggregation on the uniform host-pair key (partial "
-            "combine collapses each page's links map-side); page bytes "
-            "never cross the exchange.",
-            em.queries()["host_graph"](spark, sf),
-        ),
-        (
-            "Host PageRank (final iteration's plan)",
-            "Each fixed iteration reads the previous ranks from a "
-            "localCheckpoint (Scan ExistingRDD), joins the (host, "
-            "double) edge/outdeg frames and aggregates inflow per host "
-            "— no vector or page data anywhere; plan size constant "
-            "across iterations.",
-            em.queries()["host_pagerank"](spark, sf),
-        ),
-        (
-            "BM25 serving mode (inverted-file scoring)",
-            "The query-term filter prunes the index scan; per-term df "
-            "and corpus stats are tiny broadcast aggregates; the top-k "
-            "is TakeOrderedAndProject (per-partition heaps), never a "
-            "global window.",
-            em.queries()["bm25_serve"](spark, sf),
-        ),
-        (
             "Training-order shuffle + shards (two-phase prefix sums)",
             "Exactly ONE non-broadcast Exchange: the prefix-sum window's "
             "bucket exchange on the deterministic key-space slice of the "
@@ -237,14 +202,6 @@ def main() -> None:
             "into the start-array aggregate; strictly fewer exchanges "
             "than dedup_spans (no corpus-wide hash groupBy).",
             em.queries()["decontaminate_spans"](spark, sf),
-        ),
-        (
-            "Hybrid retrieval (BM25 + dense, RRF)",
-            "Each leg ends in TakeOrderedAndProject (per-partition "
-            "heaps); the rank windows and the full-outer fusion join "
-            "run on the <= pool-row leg results — the documented "
-            "bounded-input exception to the no-global-window rule.",
-            em.queries()["hybrid_search"](spark, sf),
         ),
         (
             "Crawl frontier (politeness waves)",

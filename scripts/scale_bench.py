@@ -275,7 +275,6 @@ def main() -> None:
         "pack_subword",
         # round 4, session 2: selection / incremental-crawl suite
         "dsir_weights",
-        "bm25_serve",
         "crawl_diff",
         "semantic_dedup_sqrtk",
         "gopher_rules",
@@ -286,11 +285,10 @@ def main() -> None:
         "temperature_sample",
         "quality_classifier",
         "bitext_ann",
-        # round 5, session 3: surgical decon + hybrid serving + frontier
+        # round 5, session 3: surgical decon + frontier
         "decontaminate_spans",
-        "hybrid_search",
         "crawl_frontier",
-        # round 5, session 3 late: LM upgrades + audits + grep
+        # round 5, session 3 late: LM upgrades + audits
         "kn_perplexity",
         "ccnet_buckets",
         "tokenizer_fertility",
@@ -298,7 +296,6 @@ def main() -> None:
         "bitext_url",
         "repeat_line_dedup",
         "benchmark_coverage",
-        "corpus_grep",
     ]
 
     spark = get_spark(
@@ -439,14 +436,12 @@ def main() -> None:
         "count joins, line-hash anti-joins and the two-phase packing "
         "prefix sum all key on uniform hashes or range-partitioned ids; "
         "linear is the expected shape.",
-        f"- dsir_weights / bm25_serve / crawl_diff: "
+        f"- dsir_weights / crawl_diff: "
         f"{summary['dsir_weights']['shuffle_ratio']}x / "
-        f"{summary['bm25_serve']['shuffle_ratio']}x / "
         f"{summary['crawl_diff']['shuffle_ratio']}x shuffle for {m}x "
         "rows — the DSIR bucket-count table is capped at n_buckets rows "
-        "(broadcast), BM25 ships (term, id, tf, dl) index rows, and the "
-        "crawl diff ships (id, digest) projections; all linear by "
-        "construction.",
+        "(broadcast) and the crawl diff ships (id, digest) projections; "
+        "both linear by construction.",
         f"- semantic_dedup_sqrtk (k ~ sqrt(n), learned in-query): "
         f"{summary['semantic_dedup_sqrtk']['wall_ratio']}x wall / "
         f"{summary['semantic_dedup_sqrtk']['shuffle_ratio']}x shuffle — "
@@ -497,18 +492,8 @@ def main() -> None:
         "planted predecessor-mutation near-dups.",
         "",
     ]
-    new_doc = "\n".join(lines)
-    # preserve the skew-stress section scripts/skew_bench.py maintains
-    try:
-        with open("BENCH/SCALE10X.md") as f:
-            old = f.read()
-        if "<!-- SKEW_BEGIN -->" in old:
-            skew = old.split("<!-- SKEW_BEGIN -->")[1].split("<!-- SKEW_END -->")[0]
-            new_doc += "\n<!-- SKEW_BEGIN -->" + skew + "<!-- SKEW_END -->\n"
-    except FileNotFoundError:
-        pass
     with open("BENCH/SCALE10X.md", "w") as f:
-        f.write(new_doc)
+        f.write("\n".join(lines))
     print(json.dumps({"mult": m, "results": results, "ratios": summary}))
 
 

@@ -15,9 +15,9 @@ def test_fused_output_invariant_to_input_partitioning(spark, pages_df, oracle_re
 
 def test_session2_operators_invariant_to_input_partitioning(spark):
     """The session-2 operators (DSIR weights, semantic dedup, crawl
-    diff, as-of join, corpus splits) must produce identical sorted
-    results at 1/7/11-way input partitioning — unordered first()/
-    collect-order dependence would surface here."""
+    diff, corpus splits) must produce identical sorted results at
+    1/7/11-way input partitioning — unordered first()/collect-order
+    dependence would surface here."""
     import pyspark.sql.functions as F
 
     from ocr_poc_spark.operators.crawl import crawl_diff
@@ -25,7 +25,6 @@ def test_session2_operators_invariant_to_input_partitioning(spark):
     from ocr_poc_spark.operators.dsir import importance_weights
     from ocr_poc_spark.operators.similarity import semantic_dedup
     from ocr_poc_spark.operators.textstats import hash_embedding
-    from ocr_poc_spark.operators.timeseries import asof_join
 
     docs = spark.createDataFrame(
         [
@@ -40,10 +39,6 @@ def test_session2_operators_invariant_to_input_partitioning(spark):
         "doc_id",
         F.when(F.col("doc_id") % 4 == 0, F.concat("text", F.lit(" v2")))
         .otherwise(F.col("text")).alias("text"),
-    )
-    ev = spark.createDataFrame(
-        [(i, i % 11, (i * 7) % 100, float(i)) for i in range(200)],
-        "event_id long, k long, ts long, value double",
     )
     target = docs.where(F.col("doc_id") % 10 == 0).select("doc_id", "text")
     cents = [[float((i * 5 + j) % 7 - 3) for j in range(16)] for i in range(4)]
@@ -66,11 +61,6 @@ def test_session2_operators_invariant_to_input_partitioning(spark):
         "semantic": lambda n: semantic_dedup(
             hash_embedding(docs.repartition(n), dim=16),
             cents, id_col="doc_id", cosine_threshold=0.97,
-        ),
-        "asof": lambda n: asof_join(
-            ev.where("event_id % 2 = 0").repartition(n),
-            ev.where("event_id % 2 = 1").repartition(max(1, n - 2)),
-            on="k", tie_col="event_id",
         ),
     }.items():
         a, b, c = runs(build)

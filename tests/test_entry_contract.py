@@ -50,6 +50,9 @@ def test_queries_oracle_keys_consistent():
     os_ = entry_mod.oracle_sql()
     assert set(os_) <= set(qs)
     assert len(qs) >= 20 and len(os_) >= 15
+    import bench
+
+    assert set(bench.BENCH_QUERIES) <= set(qs)
 
 
 @pytest.mark.parametrize("name", SUBSET)

@@ -1,4 +1,4 @@
-"""Unit tests for dedup / similarity / textstats / multimodal operators."""
+"""Unit tests for dedup / similarity / textstats operators."""
 
 import pyspark.sql.functions as F
 
@@ -7,11 +7,6 @@ from ocr_poc_spark.operators.dedup import (
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
     simhash_near_pairs,
-)
-from ocr_poc_spark.operators.multimodal import (
-    decode_media,
-    make_fake_payload,
-    sample_frames,
 )
 from ocr_poc_spark.operators.similarity import cosine_topk, lsh_ann_topk
 from ocr_poc_spark.operators.textstats import fingerprint, lang_id, token_stats
@@ -116,22 +111,6 @@ def test_lang_id(spark):
     assert out[1] == "en" and out[5] == "fr"
 
 
-def test_multimodal_decode_and_frames(spark):
-    rows = [
-        (1, "image", make_fake_payload("I", 640, 480, 1, b"\x10" * 32)),
-        (2, "video", make_fake_payload("V", 320, 240, 6, bytes(range(96)))),
-        (3, "image", b"\x89PNG not a fake payload"),
-    ]
-    media = spark.createDataFrame(rows, "media_id long, kind string, payload binary")
-    dec = {r["media_id"]: r for r in decode_media(media).collect()}
-    assert dec[1]["status"] == "ok" and dec[1]["width"] == 640
-    assert dec[2]["n_frames"] == 6
-    assert dec[3]["status"] == "unsupported"  # graceful, not a crash
-    frames = sample_frames(media, every_n=2, frame_bytes=16).collect()
-    assert [f["frame_no"] for f in frames if f["media_id"] == 2] == [0, 2, 4]
-    assert all(len(f["frame"]) == 16 for f in frames)
-
-
 def test_host_stats_salted_equals_direct(spark, pages_df):
     import pyspark.sql.functions as F
 
@@ -149,32 +128,6 @@ def test_host_stats_salted_equals_direct(spark, pages_df):
     # fixture hosts are genuinely skewed: top host owns > 15% of pages
     total = sum(n for n, _ in direct.values())
     assert max(n for n, _ in direct.values()) > 0.15 * total
-
-
-def test_time_banded_join_equals_plain_join_on_hot_key(spark):
-    """Skew fixture: user 0 owns ~10% of all events. The bucketed band
-    join must return EXACTLY the rows of the plain key join + band
-    filter, while keying the shuffle on (user, hour-bucket)."""
-    from ocr_poc_spark.operators.bandjoin import time_banded_join
-
-    BAND = 3600_000_000
-    rows_l, rows_r = [], []
-    for i in range(400):
-        user = 0 if i % 10 == 0 else i % 37          # hot user 0
-        ts = (i * 977_000_003) % (50 * BAND)         # spread over 50 hours
-        rows_l.append((i, user, ts))
-        rows_r.append((10_000 + i, user, (ts + (i % 3) * BAND // 2) % (50 * BAND), float(i)))
-    left = spark.createDataFrame(rows_l, "click_id long, user_id long, c_us long")
-    right = spark.createDataFrame(rows_r, "purchase_id long, user_id long, p_us long, p_value double")
-
-    banded = time_banded_join(left, right, "user_id", "c_us", "p_us", BAND)
-    plain = left.join(right, "user_id").where(
-        (F.col("p_us") > F.col("c_us")) & (F.col("p_us") <= F.col("c_us") + BAND)
-    )
-    cols = ["click_id", "purchase_id"]
-    b = sorted(tuple(r) for r in banded.select(cols).collect())
-    p = sorted(tuple(r) for r in plain.select(cols).collect())
-    assert b == p and len(b) > 0
 
 
 def test_simhash_banding_recall_is_exact(spark):
@@ -249,23 +202,6 @@ def test_scrub_pii_and_repetition_stats(spark):
     assert r[1]["dup_trigram_ratio"] == 0.0
     assert r[2]["alpha_word_ratio"] == 1.0
     assert r[3]["n_words"] == 1 and r[3]["max_word_len"] == 0  # split('')=['']
-
-
-def test_multimodal_robust_to_garbage_payloads(spark):
-    """Null / truncated / header-only payloads degrade to
-    status='unsupported' (decode) or are skipped (frames) — never a
-    failed task."""
-    rows = [
-        (1, "image", None),
-        (2, "image", b"FAKE"),          # truncated after magic
-        (3, "video", b"FAKEV"),         # truncated header
-        (4, "video", make_fake_payload("V", 10, 10, 4, bytes(range(64)))),
-    ]
-    media = spark.createDataFrame(rows, "media_id long, kind string, payload binary")
-    dec = {r["media_id"]: r["status"] for r in decode_media(media).collect()}
-    assert dec == {1: "unsupported", 2: "unsupported", 3: "unsupported", 4: "ok"}
-    frames = sample_frames(media, every_n=2, frame_bytes=16).collect()
-    assert {f["media_id"] for f in frames} == {4}
 
 
 def test_lsh_bucket_dim_mismatch_raises(spark):
@@ -801,37 +737,6 @@ def test_incremental_dedup_rejects_mismatched_index(spark):
     assert [(r.id_a, r.id_b) for r in pairs] == [(1, 100)]
 
 
-def test_abs_banded_join_equals_plain_join_on_hot_key(spark):
-    """Two-sided band join parity: exactly the rows of the plain key
-    join + |dt| <= band filter, on a 10%-hot-user fixture, including
-    pairs in the left-of, same, and right-of buckets."""
-    from ocr_poc_spark.operators.bandjoin import abs_banded_join
-
-    BAND = 300_000_000
-    rows_l, rows_r = [], []
-    for i in range(400):
-        user = 0 if i % 10 == 0 else i % 37
-        ts = (i * 977_000_003) % (50 * BAND)
-        rows_l.append((i, user, ts))
-        rows_r.append(
-            (10_000 + i, user, (ts + (i % 5 - 2) * BAND // 2) % (50 * BAND), float(i))
-        )
-    left = spark.createDataFrame(rows_l, "err_id long, user_id long, e_us long")
-    right = spark.createDataFrame(
-        rows_r, "view_id long, user_id long, v_us long, v_value double"
-    )
-    banded = abs_banded_join(left, right, "user_id", "e_us", "v_us", BAND)
-    plain = left.join(right, "user_id").where(
-        F.abs(F.col("v_us") - F.col("e_us")) <= BAND
-    )
-    cols = ["err_id", "view_id"]
-    b = sorted(tuple(r) for r in banded.select(cols).collect())
-    p = sorted(tuple(r) for r in plain.select(cols).collect())
-    assert b == p and len(b) > 0
-    # duplicates would double-count boosts downstream
-    assert len(b) == len(set(b))
-
-
 def test_bigram_lm_scores_contract(spark):
     """CCNet-style perplexity filter: a gibberish doc scores worse than
     fluent text under a model trained on a SEPARATE fluent corpus;
@@ -877,63 +782,6 @@ def test_bigram_lm_scores_contract(spark):
 
     with _pytest.raises(ValueError, match="alpha"):
         bigram_lm_scores(score, alpha=0.0)
-
-
-def test_bm25_topk_contract(spark):
-    """BM25 semantics on a hand-checkable corpus: rarer query terms
-    dominate (idf), length normalization penalizes padded docs, docs
-    matching no term never appear, blank query raises."""
-    import math
-
-    import pytest
-
-    from ocr_poc_spark.operators.search import bm25_topk
-
-    docs = [
-        (1, "spark shuffle spark shuffle spark"),   # tf-heavy on common term
-        (2, "quantile sketch here"),                # hits the RARE term once
-        (3, "spark " + "filler " * 60),             # padded: length-normalized down
-        (4, "nothing relevant at all"),
-    ]
-    d = spark.createDataFrame(docs, "doc_id long, text string")
-    out = {r["doc_id"]: r for r in bm25_topk(d, "spark quantile", top_n=10).collect()}
-    assert 4 not in out
-    assert set(out) == {1, 2, 3}
-    # idf(quantile): df=1 beats idf(spark): df=2 at N=4 -> doc 2 wins
-    assert out[2]["score"] > out[1]["score"] > out[3]["score"]
-    assert out[1]["n_hit_terms"] == 1 and out[2]["n_hit_terms"] == 1
-
-    # exact mirror for doc 2
-    N, avg = 4.0, sum(len(t.split()) for _, t in docs) / 4.0
-    idf = math.log((N - 1 + 0.5) / (1 + 0.5) + 1.0)
-    tfp = (1 * 2.2) / (1 + 1.2 * (1 - 0.75 + 0.75 * 3 / avg))
-    assert out[2]["score"] == round(idf * tfp, 4)
-
-    with pytest.raises(ValueError, match="no terms"):
-        bm25_topk(d, "   ")
-
-
-def test_bm25_serving_mode_equals_direct(spark):
-    """Index-once/query-many: scoring against the persisted bm25_index
-    must equal the direct corpus path row-for-row, for several
-    queries, without touching document text."""
-    from ocr_poc_spark.operators.search import bm25_index, bm25_topk
-
-    d = spark.createDataFrame(
-        [
-            (i, f"spark shuffle join w{i} " * (i % 3 + 1) + "table scan")
-            for i in range(40)
-        ],
-        "doc_id long, text string",
-    )
-    idx = bm25_index(d)
-    assert set(idx.columns) == {"term", "doc_id", "tf", "dl"}
-    for q in ("spark table", "join w7", "scan shuffle spark"):
-        direct = sorted(map(tuple, bm25_topk(d, q, top_n=10).collect()))
-        served = sorted(
-            map(tuple, bm25_topk(d, q, top_n=10, index=idx).collect())
-        )
-        assert direct == served and direct
 
 
 def test_dsir_importance_weights_rank_target_like_docs(spark):
@@ -1061,99 +909,6 @@ def test_dsir_empty_target_raises_in_plan(spark):
         importance_weights(raw, empty).collect()
 
 
-def test_asof_join_backward_semantics(spark):
-    """Backward-inclusive as-of: latest right row with ts <= left ts per
-    key; same-instant rows match; (key, ts) ties resolved by tie_col;
-    NULL-ts right rows never carried; NULL-ts left rows kept with a
-    NULL match; output is exactly |L| rows."""
-    from ocr_poc_spark.operators.timeseries import asof_join
-
-    left = spark.createDataFrame(
-        [(1, 10, "l10"), (1, 5, "l5"), (1, 2, "l2"), (2, 7, "l7"),
-         (3, 4, "l4"), (1, None, "lnull")],
-        "k long, ts long, tag string",
-    )
-    right = spark.createDataFrame(
-        [(1, 9, 100, "a"), (1, 2, 101, "b"), (1, 2, 102, "b2"),
-         (2, 8, 103, "c"), (2, None, 104, "never"),],
-        "k long, ts long, rid long, v string",
-    )
-    out = asof_join(left, right, on="k", tie_col="rid")
-    rows = {(r["k"], r["ts"]): (r["ts_asof"], r["rid_asof"], r["v_asof"])
-            for r in out.collect()}
-    assert len(rows) == 6 and out.count() == 6
-    assert rows[(1, 10)] == (9, 100, "a")
-    assert rows[(1, 5)] == (2, 102, "b2")   # tie at ts=2 -> max rid wins
-    assert rows[(1, 2)] == (2, 102, "b2")   # same-instant inclusive
-    assert rows[(2, 7)] == (None, None, None)  # only later/NULL right rows
-    assert rows[(3, 4)] == (None, None, None)  # key absent on right
-    assert rows[(1, None)] == (None, None, None)
-
-    # column subset + all left columns preserved
-    assert set(out.columns) == {"k", "ts", "tag", "ts_asof", "rid_asof", "v_asof"}
-
-
-def test_asof_join_forward_and_tolerance(spark):
-    """Forward direction picks the earliest right row at-or-after the
-    left ts (inclusive); tolerance nulls matches farther than the
-    bound instead of falling back to the next nearest; backward
-    results unchanged by a generous tolerance."""
-    import pytest
-
-    from ocr_poc_spark.operators.timeseries import asof_join
-
-    left = spark.createDataFrame(
-        [(1, 10), (1, 5), (1, 2), (2, 7)], "k long, ts long"
-    )
-    right = spark.createDataFrame(
-        [(1, 9, "a"), (1, 2, "b"), (2, 1, "c")], "k long, ts long, v string"
-    )
-
-    fwd = {(r["k"], r["ts"]): (r["ts_asof"], r["v_asof"])
-           for r in asof_join(left, right, on="k", direction="forward").collect()}
-    assert fwd == {
-        (1, 10): (None, None),   # nothing at/after 10
-        (1, 5): (9, "a"),
-        (1, 2): (2, "b"),        # same-instant inclusive
-        (2, 7): (None, None),    # only earlier right rows
-    }
-
-    tol = {(r["k"], r["ts"]): (r["ts_asof"], r["v_asof"])
-           for r in asof_join(left, right, on="k", tolerance=2).collect()}
-    assert tol == {
-        (1, 10): (9, "a"),       # |10-9| <= 2
-        (1, 5): (None, None),    # |5-2| = 3 > 2: nulled, NOT next-nearest
-        (1, 2): (2, "b"),
-        (2, 7): (None, None),    # |7-1| = 6 > 2
-    }
-
-    loose = {(r["k"], r["ts"]): r["v_asof"]
-             for r in asof_join(left, right, on="k", tolerance=100).collect()}
-    assert loose == {(1, 10): "a", (1, 5): "b", (1, 2): "b", (2, 7): "c"}
-
-    with pytest.raises(ValueError, match="direction"):
-        asof_join(left, right, on="k", direction="nearest")
-    with pytest.raises(ValueError, match="non-negative"):
-        asof_join(left, right, on="k", tolerance=-1)
-
-
-def test_asof_join_tie_col_outside_right_cols(spark):
-    """tie_col may be excluded from the output columns and still drive
-    the (key, ts) collapse."""
-    from ocr_poc_spark.operators.timeseries import asof_join
-
-    left = spark.createDataFrame([(1, 5)], "k long, ts long")
-    right = spark.createDataFrame(
-        [(1, 2, 101, "old"), (1, 2, 102, "new")],
-        "k long, ts long, rid long, v string",
-    )
-    out = asof_join(
-        left, right, on="k", right_cols=["v"], tie_col="rid"
-    ).collect()
-    assert len(out) == 1
-    assert out[0]["v_asof"] == "new" and "rid_asof" not in out[0].asDict()
-
-
 def test_semantic_near_pairs_cluster_cap(spark):
     """The honesty guard: a cluster above max_cluster_size fails the
     job loudly instead of silently running |c|^2 cosines; under the
@@ -1179,19 +934,6 @@ def test_semantic_near_pairs_cluster_cap(spark):
         semantic_near_pairs(
             d, cents, cosine_threshold=0.999, max_cluster_size=10
         ).collect()
-
-
-def test_asof_join_null_keys_never_match(spark):
-    """NULL join keys must behave like an equi-join (match nothing),
-    not like a window partition (match each other)."""
-    from ocr_poc_spark.operators.timeseries import asof_join
-
-    left = spark.createDataFrame([(None, 5), (1, 5)], "k long, ts long")
-    right = spark.createDataFrame(
-        [(None, 3, "ghost"), (1, 3, "real")], "k long, ts long, v string"
-    )
-    rows = {r["k"]: r["v_asof"] for r in asof_join(left, right, on="k").collect()}
-    assert rows == {None: None, 1: "real"}
 
 
 def test_gopher_rules_thresholds(spark):
@@ -1253,161 +995,6 @@ def test_clean_text_normalization_and_idempotence(spark):
     once = clean_text(d).select("doc_id", F.col("clean").alias("text"))
     twice = {r["doc_id"]: r["clean"] for r in clean_text(once).collect()}
     assert twice == {k: v["clean"] for k, v in got.items()}
-
-
-def test_webgraph_links_hostgraph_pagerank(spark):
-    """Link extraction resolves absolute/scheme-relative/root-relative
-    hrefs and NULLs the rest; the host graph counts resolvable pairs;
-    PageRank puts the most-linked host first and sums to <= 1."""
-    from ocr_poc_spark.operators.webgraph import (
-        extract_links,
-        host_graph,
-        pagerank,
-    )
-
-    pages = spark.createDataFrame(
-        [
-            ("https://a.example/p1",
-             b'<a href="https://hub.example/x">1</a>'
-             b'<a href="//hub.example/y">2</a>'
-             b'<a href="/local">3</a>'
-             b'<a href="#frag">4</a><a href="mailto:z@q">5</a>'),
-            ("https://b.example/p1", b'<a href="https://hub.example/z">1</a>'),
-            ("https://hub.example/p1", b'<a href="https://a.example/">1</a>'),
-        ],
-        "url string, html binary",
-    )
-    links = extract_links(pages).collect()
-    assert len(links) == 7
-    by_href = {r["href"]: r["dst"] for r in links}
-    assert by_href["https://hub.example/x"] == "https://hub.example/x"
-    assert by_href["//hub.example/y"] == "https://hub.example/y"
-    assert by_href["/local"] == "https://a.example/local"
-    assert by_href["#frag"] is None and by_href["mailto:z@q"] is None
-
-    g = {(r["src_host"], r["dst_host"]): r["n_links"]
-         for r in host_graph(extract_links(pages)).collect()}
-    assert g[("a.example", "hub.example")] == 2
-    assert g[("a.example", "a.example")] == 1  # the root-relative self link
-    assert g[("b.example", "hub.example")] == 1
-    assert g[("hub.example", "a.example")] == 1
-
-    edges = host_graph(extract_links(pages)).where("src_host != dst_host")
-    pr = {r["host"]: r["rank"] for r in pagerank(edges, n_iter=5).collect()}
-    assert max(pr, key=pr.get) == "hub.example"
-    assert 0 < sum(pr.values()) <= 1.0 + 1e-9
-
-    import pytest
-
-    with pytest.raises(ValueError, match="n_iter"):
-        pagerank(edges, n_iter=0)
-
-
-def test_extract_anchor_texts(spark):
-    from ocr_poc_spark.operators.webgraph import extract_anchor_texts
-
-    pages = spark.createDataFrame(
-        [
-            ("https://a.example/p",
-             b'<a href="https://b.example/x" class="z"> Target Page </a>'
-             b'<a href="/local">rel</a><a href="#f">skip</a>'
-             b'<a href="https://c.example/y"></a>'),
-        ],
-        "url string, html binary",
-    )
-    got = {(r["dst"]): r["anchor"] for r in extract_anchor_texts(pages).collect()}
-    assert got == {
-        "https://b.example/x": "Target Page",
-        "https://a.example/local": "rel",
-        "https://c.example/y": "",
-    }
-
-
-def test_webgraph_href_anchored_to_a_tags(spark):
-    """HREF_RE/ANCHOR_RE must count only real hyperlinks: data-href=
-    and xhref= attributes, href on non-anchor tags (<link>, <base>,
-    <area>), and <abbr ...> lookalikes are NOT links (ADVICE r4)."""
-    from ocr_poc_spark.operators.webgraph import (
-        extract_anchor_texts,
-        extract_links,
-    )
-
-    pages = spark.createDataFrame(
-        [
-            ("https://a.example/p",
-             b'<link href="https://cdn.example/style.css" rel="stylesheet">'
-             b'<base href="https://base.example/">'
-             b'<area href="https://map.example/z">'
-             b'<div data-href="https://tracker.example/t">x</div>'
-             b'<span xhref="https://fake.example/f">y</span>'
-             b'<abbr title="https://abbr.example/">HTML</abbr>'
-             b'<a data-href="https://tracker.example/u" '
-             b'href="https://real.example/one">real one</a>'
-             b'<A HREF="https://real.example/two">upper</A>'
-             b'<a\nhref="https://real.example/three">newline</a>'),
-        ],
-        "url string, html binary",
-    )
-    links = extract_links(pages).collect()
-    assert sorted(r["dst"] for r in links) == [
-        "https://real.example/one",
-        "https://real.example/three",
-        "https://real.example/two",
-    ]
-    anchors = {r["dst"]: r["anchor"] for r in extract_anchor_texts(pages).collect()}
-    assert anchors == {
-        "https://real.example/one": "real one",
-        "https://real.example/two": "upper",
-        "https://real.example/three": "newline",
-    }
-
-
-def test_anchor_profile_topk_ties_and_corpus_join(spark):
-    """Per-dst top-k with (count desc, anchor asc) tie-break, windowed
-    inbound total over ALL phrases (not just top-k), and the host-level
-    in_corpus marker."""
-    import pytest
-
-    from ocr_poc_spark.operators.webgraph import anchor_profile
-
-    anchors = spark.createDataFrame(
-        [
-            # hub.example/p: 'home' x3, 'news' x2, 'a' x1, 'b' x1
-            *[("https://s.example/1", "https://hub.example/p", "home")] * 3,
-            *[("https://s.example/2", "https://hub.example/p", "news")] * 2,
-            ("https://s.example/3", "https://hub.example/p", "a"),
-            ("https://s.example/4", "https://hub.example/p", "b"),
-            # tie.example/q: 'x' and 'y' both once -> anchor asc order
-            ("https://s.example/5", "https://tie.example/q", "y"),
-            ("https://s.example/6", "https://tie.example/q", "x"),
-            # off.example/r: not in the corpus
-            ("https://s.example/7", "https://off.example/r", "z"),
-        ],
-        "src string, dst string, anchor string",
-    )
-    docs = spark.createDataFrame(
-        [("https://hub.example/any",), ("https://tie.example/other",)],
-        "url string",
-    )
-    rows = anchor_profile(anchors, top_k=2, docs=docs).collect()
-    by = {(r["dst"], r["rank"]): r for r in rows}
-    assert len(rows) == 5  # 2 + 2 + 1
-    hub1 = by[("https://hub.example/p", 1)]
-    hub2 = by[("https://hub.example/p", 2)]
-    assert (hub1["anchor"], hub1["n_anchor"]) == ("home", 3)
-    assert (hub2["anchor"], hub2["n_anchor"]) == ("news", 2)
-    assert hub1["n_links"] == 7  # all 4 phrases counted in the total
-    assert by[("https://tie.example/q", 1)]["anchor"] == "x"
-    assert by[("https://tie.example/q", 2)]["anchor"] == "y"
-    assert hub1["in_corpus"] and by[("https://tie.example/q", 1)]["in_corpus"]
-    assert not by[("https://off.example/r", 1)]["in_corpus"]
-
-    # without docs the column is absent
-    cols = anchor_profile(anchors, top_k=1).columns
-    assert "in_corpus" not in cols
-
-    with pytest.raises(ValueError, match="top_k"):
-        anchor_profile(anchors, top_k=0)
 
 
 def test_nb_classifier_separates_and_guards(spark):
@@ -1591,47 +1178,6 @@ def test_bitext_mine_duplicate_candidates_and_zero_candidate_raise(spark):
         src, tgt, k=2, margin_threshold=0.0, candidates=no0, on_short="skip"
     ).collect()
     assert skipped and not any(r["src_id"] == 0 for r in skipped)
-
-
-def test_hybrid_topk_rrf_fusion(spark):
-    """Hybrid retrieval: a doc present in BOTH legs' top lists outranks
-    docs present in one; a leg a doc missed contributes 0 (NULL rank);
-    rrf = 1/(60+r_bm25) + 1/(60+r_cos) exactly; result is partition-
-    independent and capped at top_n."""
-    from ocr_poc_spark.operators.search import hybrid_topk
-
-    docs = [
-        (1, "spark join spark join spark join"),   # strong in both legs
-        (2, "spark join plus other filler words"), # weaker, both legs
-        (3, "unrelated tokens entirely different here"),  # neither leg
-        (4, None),                                  # NULL text: no leg
-    ]
-    d = spark.createDataFrame(docs, "doc_id long, text string")
-    out = hybrid_topk(d, "spark join", pool=10, top_n=10).collect()
-    rows = {r["doc_id"]: r for r in out}
-    # doc 3/4 never match the sparse leg; doc 3 may appear via the
-    # dense leg (its hash vector has some cosine to the query) but a
-    # two-leg doc must outrank every one-leg doc.
-    assert rows[1]["bm25_rank"] is not None and rows[1]["cos_rank"] is not None
-    assert out[0]["doc_id"] == 1
-    assert 4 not in rows  # NULL text -> zero vector, no cosine, no terms
-    # exact RRF arithmetic from the returned ranks
-    for r in out:
-        want = 0.0
-        if r["bm25_rank"] is not None:
-            want += 1.0 / (60 + r["bm25_rank"])
-        if r["cos_rank"] is not None:
-            want += 1.0 / (60 + r["cos_rank"])
-        assert r["rrf_score"] == round(want, 6)
-    # two-leg docs strictly above every single-leg doc at these sizes
-    one_leg = [r for r in out if r["bm25_rank"] is None or r["cos_rank"] is None]
-    two_leg = [r for r in out if r["bm25_rank"] is not None and r["cos_rank"] is not None]
-    assert two_leg and all(
-        t["rrf_score"] > o["rrf_score"] for t in two_leg for o in one_leg
-    )
-    # partition independence + top_n cap
-    again = hybrid_topk(d.repartition(7), "spark join", pool=10, top_n=2).collect()
-    assert [r["doc_id"] for r in again] == [r["doc_id"] for r in out[:2]]
 
 
 def test_quantize_embeddings_scale_invariant_retrieval(spark):
@@ -1889,71 +1435,6 @@ def test_winnow_fingerprints_guarantee(spark):
 
     with pytest.raises(ValueError):
         winnow_fingerprints(d, k=1)
-
-
-def test_find_text_positions(spark):
-    """Corpus grep: exact char offsets, multiple occurrences indexed in
-    order, case-sensitive, split (non-overlapping) semantics, no rows
-    for clean/NULL docs, empty needle raises."""
-    import pytest
-
-    from ocr_poc_spark.operators.search import find_text
-
-    rows = [
-        (1, "abc NEEDLE def NEEDLE x"),
-        (2, "needle lowercase only"),
-        (3, None),
-        (4, "NEEDLENEEDLE"),
-        (5, "ends with NEEDLE"),
-    ]
-    d = spark.createDataFrame(rows, "doc_id long, text string")
-    out = sorted(
-        (r["doc_id"], r["occ_idx"], r["pos"])
-        for r in find_text(d, "NEEDLE").collect()
-    )
-    assert out == [
-        (1, 0, 4), (1, 1, 15),
-        (4, 0, 0), (4, 1, 6),
-        (5, 0, 10),
-    ]
-    # positions really point at the needle
-    assert rows[0][1][4:10] == "NEEDLE" and rows[0][1][15:21] == "NEEDLE"
-    # metacharacters are literal
-    meta = spark.createDataFrame([(9, "a.c a.c abc")], "doc_id long, text string")
-    got = [(r["occ_idx"], r["pos"]) for r in find_text(meta, "a.c").collect()]
-    assert got == [(0, 0), (1, 4)]
-    with pytest.raises(ValueError):
-        find_text(d, "")
-
-
-def test_find_text_random_mirror(spark):
-    """Randomized property check: find_text positions equal a pure-
-    Python str.find scan on 200 seeded random docs (one Spark job)."""
-    import random
-
-    from ocr_poc_spark.operators.search import find_text
-
-    rng = random.Random(42)
-    alphabet = ["ab", "NEEDLE", "c", " ", "NEED", "LE", "abcNEEDLE"]
-    rows = [
-        (i, "".join(rng.choice(alphabet) for _ in range(rng.randint(0, 12))))
-        for i in range(200)
-    ]
-    d = spark.createDataFrame(rows, "doc_id long, text string")
-    got = sorted(
-        (r["doc_id"], r["occ_idx"], r["pos"])
-        for r in find_text(d, "NEEDLE").collect()
-    )
-    want = []
-    for i, t in rows:
-        start, k = 0, 0
-        while True:
-            p = t.find("NEEDLE", start)
-            if p < 0:
-                break
-            want.append((i, k, p))
-            start, k = p + 6, k + 1   # non-overlapping, leftmost-first
-    assert got == sorted(want) and len(got) > 50
 
 
 def test_strip_repeated_lines_random_mirror(spark):

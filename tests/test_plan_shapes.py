@@ -43,21 +43,8 @@ def test_all_windows_are_partitioned_in_entry_queries(spark):
 
     import __spark_entry__ as entry_mod
 
-    # Documented exception: hybrid_search ranks its two retrieval legs
-    # with unpartitioned windows — but each leg is the output of a
-    # TakeOrderedAndProject LIMIT pool (<= 20 rows at any corpus
-    # scale), so the single partition is constant-size by construction
-    # (see search.hybrid_topk docstring). The assertion below pins
-    # that the exemption stays earned: every window in its plan must
-    # sit above a global-limit leg.
-    bounded_window_ok = {"hybrid_search"}
     for name, fn in entry_mod.queries().items():
         plan = _plan(fn(spark, "/root/testdata/sf0.001"))
-        if name in bounded_window_ok:
-            assert "TakeOrderedAndProject" in plan, (
-                f"{name}: bounded-window exemption requires limited legs"
-            )
-            continue
         for m in re.finditer(r"windowspecdefinition\(([^)]*)\)", plan):
             spec = m.group(1)
             first = spec.split(",")[0]
@@ -226,26 +213,6 @@ def test_assign_clusters_is_map_side(spark):
     # never hash-shuffle: no hashpartitioning Exchange anywhere.
     assert all("SinglePartition" in ln for ln in non_broadcast), plan
     assert "hashpartitioning" not in plan, plan
-
-
-def test_asof_join_has_no_join_node(spark):
-    """The as-of formulation's whole point: union + carry-forward
-    window — ONE hash exchange on the key, ONE partitioned window, and
-    no Join operator anywhere (a theta-join formulation would explode
-    |L|x|R| per key)."""
-    import re
-
-    import __spark_entry__ as entry_mod
-
-    plan = _plan(entry_mod.q_asof_join(spark, "/root/testdata/sf0.001"))
-    assert not re.search(r"Join", plan), plan
-    assert "Window" in plan, plan
-    exchanges = [
-        ln for ln in plan.splitlines() if re.search(r"\bExchange hashpartitioning", ln)
-    ]
-    # tie-col collapse + window may each demand the same user_id
-    # clustering; ENSURE_REQUIREMENTS reuses it — allow at most 2.
-    assert 1 <= len(exchanges) <= 2, plan
 
 
 def test_temperature_sample_corpus_never_hash_shuffles(spark):
