@@ -1,57 +1,53 @@
-"""Per-partition lineage/metrics (S5/A4) — the service-counter analogue.
+"""Per-bucket lineage rows (S5/A4) — the service-counter analogue.
 
 The reference keeps module-global request/success/error counters and a
-CSV metrics log (/root/reference/api_server.py:54-58,79,90). In a
-distributed job those become per-partition metric rows emitted by a
-``mapInPandas`` pass over the extracted output — one row per Spark
-partition with doc/ok/failed counts and wall seconds, appended to a
-lineage table keyed by run_id.
+CSV metrics log (its ``api_server.py``). Here each committed bucket gets
+one lineage row with doc/ok/failed counts and the seconds of its pass:
+``partition_metrics`` counts them in one aggregate over the written
+``(bucket, success)`` columns, and the Spark driver writes the row
+(``write_lineage_row``) right before the bucket's manifest entry — no
+per-partition pass over the extracted frame.
 """
 
 from __future__ import annotations
 
-import time
-from collections.abc import Iterator
+import os
+import shutil
 
-import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..schemas import LINEAGE_SCHEMA
 
+# The bucket column lives in the lineage/bucket=K/ directory name.
+_FILE_SCHEMA = to_arrow_schema(LINEAGE_SCHEMA)
+_FILE_SCHEMA = _FILE_SCHEMA.remove(_FILE_SCHEMA.get_field_index("bucket"))
+
 
 def partition_metrics(extracted: DataFrame, run_id: str) -> DataFrame:
-    """extracted (with success + bucket cols) -> lineage rows, one per
-    (bucket, partition). Only (bucket, success) are shipped through
-    Arrow — column pruning keeps this pass cheap."""
+    """extracted (with bucket + success cols) -> (run_id, bucket,
+    n_docs, n_ok), one row per bucket present. A plain aggregate, so
+    only the two columns it counts are scanned."""
+    return extracted.groupBy("bucket").agg(
+        F.count(F.lit(1)).alias("n_docs"), F.count_if("success").alias("n_ok")
+    ).select(F.lit(run_id).alias("run_id"), "bucket", "n_docs", "n_ok")
 
-    def _metrics(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
 
-        t0 = time.monotonic()
-        pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-        counts: dict[int, list[int]] = {}
-        for pdf in batches:
-            for bucket, ok in zip(pdf["bucket"], pdf["success"]):
-                c = counts.setdefault(int(bucket), [0, 0, 0])
-                c[0] += 1
-                if bool(ok):
-                    c[1] += 1
-                else:
-                    c[2] += 1
-        secs = time.monotonic() - t0
-        if counts:
-            yield pd.DataFrame(
-                {
-                    "run_id": [run_id] * len(counts),
-                    "bucket": list(counts),
-                    "partition_id": [pid] * len(counts),
-                    "n_docs": [c[0] for c in counts.values()],
-                    "n_ok": [c[1] for c in counts.values()],
-                    "n_failed": [c[2] for c in counts.values()],
-                    "secs": [secs] * len(counts),
-                    "status": ["SUCCESS"] * len(counts),
-                }
-            )
-
-    return extracted.select("bucket", "success").mapInPandas(_metrics, LINEAGE_SCHEMA)
+def write_lineage_row(
+    lin_dir: str, run_id: str, bucket: int, n_docs: int, n_ok: int, secs: float
+) -> None:
+    """Replace ``lin_dir/bucket=<bucket>/`` with a directory holding just
+    this bucket's row. The row is written to a hidden temp directory
+    that then takes the bucket directory's place, so files left there by
+    an earlier, uncommitted attempt go with it."""
+    row = dict(run_id=run_id, partition_id=-1, n_docs=n_docs, n_ok=n_ok,
+               n_failed=n_docs - n_ok, secs=secs, status="SUCCESS")
+    final = os.path.join(lin_dir, f"bucket={bucket}")
+    tmp = os.path.join(lin_dir, f".bucket={bucket}.tmp")
+    os.makedirs(tmp, exist_ok=True)
+    pq.write_table(pa.Table.from_pylist([row], schema=_FILE_SCHEMA), tmp + "/part-0.parquet")
+    shutil.rmtree(final, ignore_errors=True)
+    os.replace(tmp, final)

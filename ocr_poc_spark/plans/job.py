@@ -9,13 +9,15 @@ long-tail page sizes.
 
 Resumability (north_star: "checkpoint manifest enabling idempotent
 resume of failed partitions"): work is split into url-hash BUCKETS
-(restartable units). Each pass processes pending buckets, writes
-extracted rows under bucket=K directories and lineage rows, then commits
-a manifest entry per bucket. A crashed pass leaves no manifest entry, so
-the rerun overwrites those bucket directories — same final table
-(idempotence is asserted by tests/test_job_resume.py). The reference's
-analogue is the 3-retry REST policy (README_API.md:52) — per-request
-retry becomes per-bucket restart.
+(restartable units). A pass over pending buckets commits in this order:
+the extracted write (once, under bucket=K directories, no persist) ->
+one aggregate over the written (bucket, success) columns -> per bucket,
+from the Spark driver, its lineage row (one per bucket, not a per-partition
+pass) -> its manifest entry. A crash before a bucket's manifest entry
+leaves it pending, so the rerun replaces its extracted and lineage
+directories — same final tables (asserted by tests/test_job_resume.py).
+The reference's analogue is the 3-retry REST policy (README_API.md:52)
+— per-request retry becomes per-bucket restart.
 """
 
 from __future__ import annotations
@@ -30,7 +32,8 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.lineage import partition_metrics
+from ..operators.lineage import partition_metrics, write_lineage_row
+from ..operators.textstats import lang_guess_expr
 from ..schemas import EXTRACTED_SCHEMA
 
 
@@ -105,12 +108,17 @@ def completed_buckets(out_dir: str) -> set[int]:
     return done
 
 
-def _commit_bucket(out_dir: str, run_id: str, bucket: int, n_rows: int, secs: float) -> None:
+def _commit_bucket(
+    out_dir: str, run_id: str, bucket: int, n_docs: int, n_ok: int, secs: float
+) -> None:
+    """Commit one bucket from the Spark driver: its lineage row, then its
+    manifest entry, the atomic step that marks it done."""
+    write_lineage_row(os.path.join(out_dir, "lineage"), run_id, bucket, n_docs, n_ok, secs)
     mdir = _manifest_dir(out_dir)
     os.makedirs(mdir, exist_ok=True)
     tmp = os.path.join(mdir, f".bucket_{bucket}.tmp")
     with open(tmp, "w") as fh:
-        json.dump({"run_id": run_id, "bucket": bucket, "n_rows": n_rows, "secs": secs}, fh)
+        json.dump({"run_id": run_id, "bucket": bucket, "n_rows": n_docs, "secs": secs}, fh)
     os.replace(tmp, os.path.join(mdir, f"bucket_{bucket}.json"))  # atomic commit
 
 
@@ -191,44 +199,30 @@ def run_job(
         if fail_after_passes is not None and i >= fail_after_passes:
             raise RuntimeError("injected failure (test hook)")
         t0 = time.monotonic()
-        part = bucketed.where(F.col("bucket").isin([int(b) for b in batch]))
-        ext = extract_fused(part.select("url", "html", "bucket"))
-        ext = ext.withColumn(
+        part = bucketed.where(F.col("bucket").isin(batch))
+        ext = extract_fused(part).withColumn(
             "bucket", F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int")
         )
         # Language verification column (textstats operator over the
         # kernel's body_text / raw_text).
-        from ..operators.textstats import lang_guess_expr
-
         ext = ext.withColumn(
             "lang_guess", lang_guess_expr(F.coalesce("body_text", "raw_text"))
         )
-        ext = ext.persist()
-        try:
-            ext.write.mode("overwrite").partitionBy("bucket").option(
-                "partitionOverwriteMode", "dynamic"
-            ).parquet(ext_dir)
-            # Lineage uses the same bucket-scoped dynamic overwrite as the
-            # extracted table: a crash between this write and the manifest
-            # commit is repaired by the rerun REPLACING the bucket's rows
-            # (append would double-count SUM(n_docs) on resume).
-            lineage = partition_metrics(ext, run_id)
-            lineage.write.mode("overwrite").partitionBy("bucket").option(
-                "partitionOverwriteMode", "dynamic"
-            ).parquet(lin_dir)
-            per_bucket = {
-                int(r["bucket"]): int(r["n"])
-                for r in ext.groupBy("bucket")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()  # <= n_buckets rows — driver-side by design
-            }
-            n = sum(per_bucket.values())
-        finally:
-            ext.unpersist()
+        ext.write.mode("overwrite").partitionBy("bucket").option(
+            "partitionOverwriteMode", "dynamic"
+        ).parquet(ext_dir)
+        written = spark.read.schema("bucket int, success boolean").parquet(ext_dir)
+        counts = {
+            r["bucket"]: r
+            for r in partition_metrics(
+                written.where(F.col("bucket").isin(batch)), run_id
+            ).collect()  # <= n_buckets rows — driver-side by design
+        }
         secs = time.monotonic() - t0
         for b in batch:
-            _commit_bucket(out_dir, run_id, int(b), per_bucket.get(int(b), 0), secs)
-        total_rows += n
+            c = counts.get(b, {"n_docs": 0, "n_ok": 0})
+            _commit_bucket(out_dir, run_id, b, c["n_docs"], c["n_ok"], secs)
+            total_rows += c["n_docs"]
 
     return {
         "run_id": run_id,
@@ -353,19 +347,22 @@ def run_dedup(
         raise ValueError(method)
     dup_dir = os.path.join(out_dir, "dup_pairs")
     pairs.write.mode("overwrite").parquet(dup_dir)
-    n = spark.read.parquet(dup_dir).count()
-    out = {"dup_pairs": n, "dup_dir": dup_dir, "dedup_method": method}
+    # Read-backs carry the written frame's schema: no inference job.
+    written = spark.read.schema(pairs.schema).parquet(dup_dir)
+    out = {"dup_pairs": written.count(), "dup_dir": dup_dir, "dedup_method": method}
     if clusters:
         comp_dir = os.path.join(out_dir, "dup_components")
-        comp = connected_components(spark.read.parquet(dup_dir))
-        comp.withColumn(
+        comp = connected_components(written).withColumn(
             "keeper", F.col("doc_id") == F.col("component_id")
-        ).write.mode("overwrite").parquet(comp_dir)
-        cdf = spark.read.parquet(comp_dir)
+        )
+        comp.write.mode("overwrite").parquet(comp_dir)
+        n_docs, n_comps = spark.read.schema(comp.schema).parquet(comp_dir).agg(
+            F.count(F.lit(1)), F.count_distinct("component_id")
+        ).first()
         out.update(
             {
-                "dup_component_docs": cdf.count(),
-                "dup_components": cdf.select("component_id").distinct().count(),
+                "dup_component_docs": n_docs,
+                "dup_components": n_comps,
                 "dup_components_dir": comp_dir,
             }
         )
@@ -489,9 +486,9 @@ def run_curate(
     )
     cur_dir = os.path.join(out_dir, "curation")
     cur.write.mode("overwrite").parquet(cur_dir)
-    persisted = spark.read.parquet(cur_dir)
-    n = persisted.count()
-    n_kept = persisted.where("kept").count()
+    n, n_kept = spark.read.schema(cur.schema).parquet(cur_dir).agg(
+        F.count(F.lit(1)), F.count_if("kept")
+    ).first()
     return {"curation_rows": n, "curation_kept": n_kept, "curation_dir": cur_dir}
 
 

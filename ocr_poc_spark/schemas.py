@@ -53,8 +53,9 @@ EXTRACTED_SCHEMA = T.StructType(
     ]
 )
 
-# Per-partition lineage/metrics rows (service-counter analogue,
-# /root/reference/api_server.py:54-58,79,90).
+# Lineage rows: one per committed bucket, written by the Spark driver
+# before the bucket's manifest entry (service-counter analogue of the
+# reference's api_server.py). partition_id is -1: no task writes them.
 LINEAGE_SCHEMA = T.StructType(
     [
         T.StructField("run_id", T.StringType()),

@@ -1,6 +1,9 @@
 """End-to-end job test: full run == crash-then-resume run (idempotent
 checkpoint manifest), lineage rows present (SURVEY.md §5 item 3)."""
 
+import json
+import os
+
 import pytest
 
 from ocr_poc_spark.plans.job import completed_buckets, run_job
@@ -42,6 +45,156 @@ def test_full_run_then_idempotent_resume(spark, pages_df, tmp_path):
     agg = lineage.groupBy().sum("n_docs").collect()[0][0]
     assert agg == pages_df.count()
     assert summary["rows_this_run"] < pages_df.count()  # only resumed part
+
+
+def _assert_lineage_matches_manifest(spark, out):
+    """Exactly one lineage row per committed bucket, carrying its
+    manifest entry's run_id, row count and secs; LINEAGE_SCHEMA columns,
+    readable by Spark and by pyarrow. Returns the rows."""
+    import pyarrow.parquet as pq
+
+    from ocr_poc_spark.schemas import LINEAGE_SCHEMA
+
+    lineage = spark.read.parquet(out + "/lineage")
+    assert {f.name: f.dataType for f in lineage.schema} == {
+        f.name: f.dataType for f in LINEAGE_SCHEMA
+    }
+    rows = lineage.collect()
+    assert pq.read_table(out + "/lineage").num_rows == len(rows)
+    assert sorted(r["bucket"] for r in rows) == sorted(completed_buckets(out))
+    for r in rows:
+        with open(f"{out}/_manifest/bucket_{r['bucket']}.json") as fh:
+            m = json.load(fh)
+        assert (r["run_id"], r["n_docs"], r["secs"]) == (
+            m["run_id"], m["n_rows"], m["secs"]
+        )
+        assert r["n_ok"] + r["n_failed"] == r["n_docs"]
+    return rows
+
+
+@pytest.fixture(scope="module")
+def uninterrupted(spark, pages_df, tmp_path_factory):
+    """Sorted extracted rows of one uninterrupted 4-bucket run."""
+    out = str(tmp_path_factory.mktemp("uninterrupted"))
+    run_job(spark, pages_df, out, n_buckets=4)
+    return _read_sorted(spark, out + "/extracted")
+
+
+@pytest.mark.parametrize(
+    "commits_before_crash", [0, 1],
+    ids=["after_extracted_write", "after_first_bucket_commit"],
+)
+def test_resume_after_crash_inside_a_pass(
+    spark, pages_df, tmp_path, monkeypatch, uninterrupted, commits_before_crash
+):
+    """A crash between a pass's extracted write and its first bucket
+    commit, or between the two bucket commits of a pass, resumes to the
+    uninterrupted tables. A stray lineage part of a pending bucket (what
+    a Spark-side lineage writer left behind when it crashed before the
+    manifest commit) is replaced, never counted."""
+    from ocr_poc_spark.plans import job
+    from ocr_poc_spark.schemas import LINEAGE_SCHEMA
+
+    out = str(tmp_path / "crash")
+    commit = job._commit_bucket
+    committed = []
+
+    def crashing_commit(*args):
+        if len(committed) == commits_before_crash:
+            raise RuntimeError("crash inside a pass")
+        commit(*args)
+        committed.append(args)
+
+    with monkeypatch.context() as m:
+        m.setattr(job, "_commit_bucket", crashing_commit)
+        with pytest.raises(RuntimeError, match="crash inside a pass"):
+            run_job(spark, pages_df, out, n_buckets=4, buckets_per_pass=2)
+    done = completed_buckets(out)
+    assert len(done) == commits_before_crash
+    assert spark.read.parquet(out + "/extracted").count() > 0  # write landed
+    if done:
+        _assert_lineage_matches_manifest(spark, out)
+
+    pending = min(set(range(4)) - done)
+    spark.createDataFrame(
+        [("stale", pending, 0, 999, 999, 0, 0.0, "SUCCESS")], LINEAGE_SCHEMA
+    ).write.mode("append").partitionBy("bucket").parquet(out + "/lineage")
+
+    run_job(spark, pages_df, out, n_buckets=4, buckets_per_pass=2)
+    assert completed_buckets(out) == {0, 1, 2, 3}
+    assert _read_sorted(spark, out + "/extracted") == uninterrupted
+    rows = _assert_lineage_matches_manifest(spark, out)
+    assert sum(r["n_docs"] for r in rows) == len(uninterrupted)
+
+
+def test_one_pass_runs_at_most_three_spark_jobs(spark, pages_df, tmp_path):
+    """A pass is the extracted write plus one aggregate (two AQE jobs):
+    no persist, no metrics pass over the frame, no separate count."""
+    sc = spark.sparkContext
+    group = f"one-pass-{tmp_path.name}"
+    sc.setJobGroup(group, "one run_job pass")
+    try:
+        res = run_job(spark, pages_df, str(tmp_path / "jobs"), n_buckets=4)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert res["passes"] == 1
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 3
+
+
+def test_cli_kill_9_then_rerun_matches_in_process_run(spark, tmp_path):
+    """SIGKILL the CLI's whole process group (its Python process, the
+    Spark JVM and the Python workers) once its first bucket has
+    committed, then rerun it to completion: the same extracted table
+    and lineage sum as an uninterrupted in-process run_job."""
+    import contextlib
+    import signal
+    import subprocess
+    import sys
+    import time
+
+    from ocr_poc_spark.fixtures import write_pages_parquet
+    from ocr_poc_spark.sources.pages import read_pages
+
+    inp = str(tmp_path / "pages.parquet")
+    write_pages_parquet(inp, 120, seed=11)
+    out = str(tmp_path / "cli")
+    cmd = [
+        sys.executable, "-m", "ocr_poc_spark", "--input", inp, "--out", out,
+        "--buckets", "4", "--buckets-per-pass", "1", "--cpus", "2",
+    ]
+    env = {**os.environ, "SPARK_DRIVER_MEM": "1g"}
+    proc = subprocess.Popen(
+        cmd, env=env, start_new_session=True,
+        stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL,
+    )
+    try:
+        deadline = time.monotonic() + 300
+        while not completed_buckets(out):
+            assert proc.poll() is None, "the CLI exited before its first commit"
+            assert time.monotonic() < deadline, "no bucket committed in time"
+            time.sleep(0.05)
+    finally:
+        with contextlib.suppress(ProcessLookupError):
+            os.killpg(proc.pid, signal.SIGKILL)
+        proc.wait(timeout=60)
+    killed_at = len(completed_buckets(out))
+    assert 0 < killed_at < 4  # the kill landed mid-job
+
+    rerun = subprocess.run(
+        cmd, env=env, capture_output=True, text=True, check=True, timeout=600
+    )
+    summary = json.loads(rerun.stdout.strip().splitlines()[-1])
+    assert summary["passes"] == 4 - killed_at
+    assert completed_buckets(out) == {0, 1, 2, 3}
+
+    ref = str(tmp_path / "ref")
+    run_job(spark, read_pages(spark, inp), ref, n_buckets=4)
+    expected = _read_sorted(spark, ref + "/extracted")
+    assert len(expected) == 120
+    assert _read_sorted(spark, out + "/extracted") == expected
+    rows = _assert_lineage_matches_manifest(spark, out)
+    assert sum(r["n_docs"] for r in rows) == len(expected)
 
 
 @pytest.mark.parametrize(
