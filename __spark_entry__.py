@@ -1022,7 +1022,7 @@ def q_shuffle_shards(spark, sf_dir):
 
     d = _t(spark, sf_dir, "documents", spread=True)
     # Empty words filtered: split('') = [''] would count a phantom
-    # token for empty docs (run_shards uses the same rule).
+    # token for empty docs.
     n_tokens = F.size(
         F.filter(
             F.split(F.lower(F.trim(F.coalesce("text", F.lit("")))), r"\s+"),

@@ -231,52 +231,6 @@ def test_normalize_urls_idempotent_combinatorial(spark):
                 )
 
 
-def test_run_decontaminate_stage(spark, pages_df, tmp_path):
-    """CLI decontamination stage: a benchmark built from a subset of the
-    extracted bodies flags exactly the docs whose bodies contain those
-    8-grams; clean docs pass."""
-    from ocr_poc_spark.plans.job import run_decontaminate, run_job
-
-    out = str(tmp_path / "dc")
-    run_job(spark, pages_df.limit(40), out, mode="fused", n_buckets=2)
-    ext = spark.read.parquet(out + "/extracted").where(
-        "success AND body_text IS NOT NULL"
-    )
-    bench_urls = {r["url"] for r in ext.limit(5).select("url").collect()}
-    bench_path = str(tmp_path / "bench.parquet")
-    ext.where(F.col("url").isin(list(bench_urls))).select(
-        F.col("body_text").alias("text")
-    ).write.parquet(bench_path)
-    res = run_decontaminate(spark, out, bench_path)
-    rows = {r["doc_id"]: r for r in spark.read.parquet(res["contamination_dir"]).collect()}
-    assert res["contamination_rows"] == len(rows) == ext.count()
-    # every benchmark-source doc (with >= 8 words) must be flagged
-    flagged = {d for d, r in rows.items() if r["contaminated"]}
-    long_bench = {d for d in bench_urls if rows[d]["n_ngrams"] > 0}
-    assert long_bench and long_bench <= flagged
-    # and at least one non-benchmark doc stays clean
-    assert any(d not in flagged for d in rows if d not in bench_urls)
-
-
-def test_run_sample_stage(spark, pages_df, tmp_path):
-    """CLI sampling stage: deterministic per-language keep-list at the
-    requested rates; unlisted strata drop to zero; re-run identical."""
-    from ocr_poc_spark.plans.job import run_job, run_sample
-
-    out = str(tmp_path / "smp")
-    run_job(spark, pages_df.limit(60), out, mode="fused", n_buckets=2)
-    res = run_sample(spark, out, {"en": 1.0, "fr": 0.5})
-    kept = spark.read.parquet(res["sample_dir"]).collect()
-    ext = spark.read.parquet(out + "/extracted").where("success")
-    n_en = ext.where("lang_guess = 'en'").count()
-    langs = {r["lang_guess"] for r in kept}
-    assert "de" not in langs and "unknown" not in langs
-    assert sum(1 for r in kept if r["lang_guess"] == "en") == n_en  # rate 1.0 keeps all
-    a = sorted(r["url"] for r in kept)
-    b = sorted(r["url"] for r in spark.read.parquet(run_sample(spark, out, {"en": 1.0, "fr": 0.5})["sample_dir"]).collect())
-    assert a == b
-
-
 def test_chunk_documents_windows(spark):
     from ocr_poc_spark.operators.curation import chunk_documents
 
