@@ -1,67 +1,11 @@
-"""Skew-aware host-level aggregation (SURVEY.md §4: "salting skewed
-hosts — derive host = parse_url(url), salt heavy hitters before any
-host-level grouping").
-
-Common-Crawl host distributions are zipfian: a handful of hosts own a
-large share of pages, so a naive groupBy(host) funnels them through
-single reducers. ``salted_agg`` does the standard two-phase fix: group
-by (key, salt) with salt = xxhash64(row-identity) % n_salts (partial,
-spreads each hot key over n_salts reducers), then re-aggregate by key.
-Counts/sums are associative, so the result is provably identical to the
-direct groupBy — the equivalence is oracle-checked in __spark_entry__
-(q_salted_agg vs a plain GROUP BY in DuckDB).
-"""
+"""Host derivation shared by the crawl and curation operators."""
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
-
-N_SALTS = 16
 
 
 def host_of(url_col: str = "url"):
     """Host from a url (regexp — portable to the DuckDB oracle, unlike
     parse_url)."""
     return F.regexp_extract(F.col(url_col), r"^https?://([^/]+)", 1)
-
-
-def salted_agg(
-    df: DataFrame,
-    key_col: str,
-    salt_src_col: str,
-    value_col: str | None = None,
-    n_salts: int = N_SALTS,
-) -> DataFrame:
-    """Two-phase salted count/sum per key. salt_src_col: any column with
-    per-row entropy (url, event_id) to derive the salt from."""
-    salt = F.pmod(F.xxhash64(salt_src_col), F.lit(n_salts))
-    partial_aggs = [F.count(F.lit(1)).alias("_n")]
-    if value_col:
-        partial_aggs.append(F.sum(F.col(value_col).cast("decimal(18,2)")).alias("_s"))
-    partial = df.withColumn("_salt", salt).groupBy(key_col, "_salt").agg(*partial_aggs)
-    final_aggs = [F.sum("_n").alias("n_rows")]
-    if value_col:
-        final_aggs.append(F.sum("_s").cast("double").alias(f"sum_{value_col}"))
-    return partial.groupBy(key_col).agg(*final_aggs)
-
-
-def host_stats(pages: DataFrame, n_salts: int = N_SALTS) -> DataFrame:
-    """Per-host page counts + payload bytes over the pages table — the
-    same two-phase salted scheme as salted_agg, reused so the salting
-    logic lives in exactly one place (byte sums stay integer longs here,
-    vs salted_agg's decimal money path)."""
-    with_host = pages.select(
-        host_of("url").alias("host"),
-        F.col("url"),
-        F.length("html").cast("long").alias("n_bytes"),
-    )
-    salt = F.pmod(F.xxhash64("url"), F.lit(n_salts))
-    partial = (
-        with_host.withColumn("_salt", salt)
-        .groupBy("host", "_salt")
-        .agg(F.count(F.lit(1)).alias("_n"), F.sum("n_bytes").alias("_b"))
-    )
-    return partial.groupBy("host").agg(
-        F.sum("_n").alias("n_pages"), F.sum("_b").alias("total_bytes")
-    )

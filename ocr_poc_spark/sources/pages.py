@@ -1,4 +1,4 @@
-"""Pages-table source (S1) and result sinks (S4/S5).
+"""Pages-table source (S1).
 
 The reference reads one uploaded binary at a time through a temp file
 (/root/reference/api_server.py:123-126); here the source is a table scan:
@@ -47,23 +47,3 @@ def read_pages(spark: SparkSession, path_or_table: str) -> DataFrame:
     return spark.read.parquet(path_or_table)
 
 
-def write_extracted(df: DataFrame, target: str, mode: str = "append") -> None:
-    """Sink: Iceberg when the connector is present, parquet otherwise.
-    `mode` is honored on BOTH paths (append -> .append(), overwrite ->
-    .overwritePartitions()); anything else on the Iceberg path raises
-    rather than silently appending."""
-    if target.startswith("iceberg:"):
-        if not iceberg_available(df.sparkSession):
-            raise RuntimeError(
-                "Iceberg connector not on classpath; use a parquet path "
-                "or add iceberg-spark-runtime to spark.jars.packages"
-            )
-        writer = df.writeTo(target[len("iceberg:"):])
-        if mode == "append":
-            writer.append()
-        elif mode == "overwrite":
-            writer.overwritePartitions()
-        else:
-            raise ValueError(f"unsupported mode for the Iceberg sink: {mode!r}")
-    else:
-        df.write.mode(mode).parquet(target)

@@ -13,9 +13,8 @@ exact geometric semantics:
 
 Block fields:
     idx          int     reading order (elimination/anti-join key)
-    tag_path     str     e.g. "html>body>article>p"
     text         str     whitespace-normalised direct text of the block
-    depth        int     DOM depth (len of tag_path)
+    depth        int     DOM depth (open elements at the block's start)
     char_offset  int     start offset in '\\n'.join(block texts)
     n_chars      int     len(text)
     link_density float   fraction of block chars inside <a>
@@ -79,7 +78,6 @@ Y_PER_IDX = 40.0
 @dataclass
 class Block:
     idx: int
-    tag_path: str
     text: str
     depth: int
     char_offset: int
@@ -95,32 +93,35 @@ class _BlockParser(HTMLParser):
     def __init__(self) -> None:
         super().__init__(convert_charrefs=True)
         self.stack: list[str] = []
-        self.raw_blocks: list[tuple[str, str, int, int]] = []  # (path, text, link_chars, boiler_depth)
+        # open elements per tag: an end tag's "is it open at all?" test
+        # in O(1), not a scan of the whole stack
+        self.n_open: dict[str, int] = {}
+        self.raw_blocks: list[tuple[int, str, int, int]] = []  # (depth, text, link_chars, boiler_depth)
         self.saw_article = False
         self._skip = 0
         self._link = 0
         self._boiler = 0
-        self._cur_path: str | None = None
+        self._cur_depth: int | None = None
         self._cur_parts: list[str] = []
         self._cur_link_chars = 0
         self._cur_boiler = 0
 
     # -- block lifecycle ------------------------------------------------
-    def _open_block(self, path: str) -> None:
+    def _open_block(self, depth: int) -> None:
         self._flush()
-        self._cur_path = path
+        self._cur_depth = depth
         self._cur_parts = []
         self._cur_link_chars = 0
         self._cur_boiler = self._boiler
 
     def _flush(self) -> None:
-        if self._cur_path is None:
+        if self._cur_depth is None:
             return
         raw = "".join(self._cur_parts)
         self.raw_blocks.append(
-            (self._cur_path, raw, self._cur_link_chars, self._cur_boiler)
+            (self._cur_depth, raw, self._cur_link_chars, self._cur_boiler)
         )
-        self._cur_path = None
+        self._cur_depth = None
         self._cur_parts = []
         self._cur_link_chars = 0
         self._cur_boiler = 0
@@ -129,6 +130,7 @@ class _BlockParser(HTMLParser):
     def _pop_one(self) -> str:
         """Pop the top open element with full bookkeeping."""
         top = self.stack.pop()
+        self.n_open[top] -= 1
         if top in BLOCK_TAGS and self._skip == 0:
             self._flush()
         if top in SKIP_TAGS:
@@ -160,14 +162,15 @@ class _BlockParser(HTMLParser):
         if tag in BOILER_TAGS:
             self._boiler += 1
         self.stack.append(tag)
+        self.n_open[tag] = self.n_open.get(tag, 0) + 1
         if self._skip == 0 and tag in BLOCK_TAGS:
-            self._open_block(">".join(self.stack))
+            self._open_block(len(self.stack))
 
     def handle_endtag(self, tag: str) -> None:
         tag = tag.lower()
         if tag in VOID_TAGS:
             return
-        if tag not in self.stack:
+        if not self.n_open.get(tag):
             return
         # Pop (recovering from unclosed children) up to the matching tag.
         while self.stack:
@@ -177,12 +180,12 @@ class _BlockParser(HTMLParser):
     def handle_data(self, data: str) -> None:
         if self._skip or not data:
             return
-        if self._cur_path is None:
+        if self._cur_depth is None:
             if not data.strip():
                 return
             # Stray text outside a block element: implicit block at the
-            # current stack position.
-            self._open_block(">".join(self.stack) if self.stack else "html")
+            # current stack depth (1, as if under <html>, when empty).
+            self._open_block(len(self.stack) or 1)
         self._cur_parts.append(data)
         if self._link > 0:
             self._cur_link_chars += len(data)
@@ -209,17 +212,15 @@ def parse_html_blocks(payload: bytes) -> tuple[list[Block], str]:
     blocks: list[Block] = []
     offset = 0
     idx = 0
-    for path, raw, link_chars, boiler_depth in parser.raw_blocks:
+    for depth, raw, link_chars, boiler_depth in parser.raw_blocks:
         text = " ".join(raw.split())
         if not text:
             continue
         n = len(text)
         link_density = min(1.0, link_chars / n) if n else 0.0
-        depth = path.count(">") + 1
         blocks.append(
             Block(
                 idx=idx,
-                tag_path=path,
                 text=text,
                 depth=depth,
                 char_offset=offset,

@@ -132,7 +132,6 @@ def parse_pdf_blocks(payload: bytes) -> tuple[list[Block], str]:
         blocks.append(
             Block(
                 idx=idx,
-                tag_path="pdf>bt",
                 text=text,
                 depth=2,
                 char_offset=offset,

@@ -1,10 +1,11 @@
 """Fuzzy string similarity + label-likeness — exact ports of the
 reference's heuristics to web-page field vocabulary.
 
-- ``similarity_score`` replicates
-  /root/reference/ocr/extractors/cni_extractor_18_f.py:134-156 exactly:
-  difflib.SequenceMatcher.ratio() plus a Jaro-Winkler-style prefix bonus
-  ``base + prefix_len*0.1*(1-base)`` capped at 1.0 (prefix up to 4).
+- ``_sim_core`` replicates the reference's similarity_score
+  (/root/reference/ocr/extractors/cni_extractor_18_f.py:134-156) on
+  upper().strip()'d strings: difflib.SequenceMatcher.ratio() plus a
+  Jaro-Winkler-style prefix bonus ``base + prefix_len*0.1*(1-base)``
+  capped at 1.0 (prefix up to 4).
 - ``is_likely_label`` replicates the four-way label test of
   cni_extractor_18_f.py:251-291 (bilingual-slash hint, fuzzy >= 0.75 vs
   known labels, >= half words in the keyword list, exact keyword).
@@ -93,24 +94,19 @@ def _matcher_for(s2: str) -> SequenceMatcher:
     return sm
 
 
-def similarity_score(str1: str, str2: str) -> float:
-    """difflib ratio + prefix bonus, capped at 1.0 (exact ref port).
+def _sim_core(s1: str, s2: str) -> float:
+    """difflib ratio + prefix bonus, capped at 1.0, of two
+    upper().strip()'d strings. Callers normalise once (the label/anchor
+    loops would otherwise re-upper the same text once per vocabulary
+    entry); the vocabulary constants are already in normal form
+    (asserted above).
 
     Length-ratio prune (provably safe vs both thresholds): ratio() is
     bounded by 2*min(l1,l2)/(l1+l2); if max > 3*min that bound is < 0.5,
     and even with the maximal prefix bonus the final score is
     < 0.4 + 0.6*0.5 = 0.70 — strictly below every threshold used, so
     returning 0.0 early never changes a threshold decision. This prunes
-    long paragraph blocks from the quadratic difflib loop.
-    """
-    return _sim_core(str1.upper().strip(), str2.upper().strip())
-
-
-def _sim_core(s1: str, s2: str) -> float:
-    """similarity_score after normalisation — callers that already hold
-    upper().strip()'d strings (the label/anchor loops, which would
-    otherwise re-upper the same text once per vocabulary entry) call
-    this directly. upper/strip are idempotent, so this is exact."""
+    long paragraph blocks from the quadratic difflib loop."""
     l1, l2 = len(s1), len(s2)
     if 3 * min(l1, l2) < max(l1, l2):
         return 0.0

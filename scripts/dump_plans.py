@@ -69,12 +69,6 @@ def main() -> None:
             em.queries()["boilerplate_shingles"](spark, sf),
         ),
         (
-            "Benchmark decontamination (curation)",
-            "The benchmark n-gram side is a BroadcastExchange; the corpus "
-            "side shuffles once on doc id after a map-side partial agg.",
-            em.queries()["decontaminate"](spark, sf),
-        ),
-        (
             "TPC-H Q9-style star join (part/supplier/nation)",
             "All three dimension tables are BroadcastExchange; exactly one "
             "hash exchange (the final nation x brand aggregate), bounded "
@@ -96,59 +90,13 @@ def main() -> None:
             ),
         ),
         (
-            "Incremental MinHash dedup (new crawl vs persisted index)",
-            "Only the new slice is shingled up front; the corpus arrives "
-            "as the (id, band, sig) index. The exact-Jaccard verify side "
-            "LEFT SEMI-prunes corpus docs to candidate ids BEFORE "
-            "shingling.",
-            em.queries()["dedup_incremental"](spark, sf),
-        ),
-        (
-            "IVF ANN (k-means quantizer + n_probe search)",
-            "Broadcast centroid encoding at EVERY k since round 4: the "
-            "centroids ride as a single-row broadcast array (map-side "
+            "IVF ANN (broadcast-centroid branch, 80 centroids)",
+            "The centroids ride as a single-row broadcast array: map-side "
             "cross join + per-row HOF sorted-distance prefix — zero "
-            "exchanges before the ids-only cluster join, plan size "
-            "independent of k, and the plan is IDENTICAL across calls "
-            "and Lloyd rounds so generated code is reused; per-call "
-            "literals cost ~1s of re-analysis/codegen each). Vectors "
-            "join back once per side for the exact re-rank.",
-            em.queries()["ann_ivf"](spark, sf),
-        ),
-        (
-            "Full corpus pipeline (extract -> gate -> dedup -> components "
-            "-> keeper -> host cap -> chunk -> pack)",
-            "The composition a 100 TB run executes, as ONE plan. The "
-            "fused extraction runs once behind a localCheckpoint (Scan "
-            "ExistingRDD here); near-dup pair generation and the "
-            "component fixpoint run eagerly upstream. This RESULT plan "
-            "is the keeper anti-filter join feeding the host-cap "
-            "windows, the map-only chunk explode, and the two-phase "
-            "packing prefix sum — no text column rides the dedup or "
-            "cap exchanges (ids + 60-bit hash ranks only), and the "
-            "only per-host window runs over the skew-bounded local "
-            "top-k survivors.",
-            em.queries()["corpus_pipeline"](spark, sf),
-        ),
-        (
-            "DSIR importance weights",
-            "The bucket log-ratio table (<= n_buckets rows) arrives by "
-            "BroadcastExchange; the only hash exchanges carry (id, int "
-            "bucket, long count) rows from the per-doc partial-combined "
-            "groupBys — never text. Corpus totals are single-row "
-            "aggregates cross-joined as broadcasts.",
-            em.queries()["dsir_weights"](spark, sf),
-        ),
-        (
-            "SemDeDup semantic dedup (result join of the component stage)",
-            "Nearest-centroid assignment is map-side (single-row "
-            "broadcast centroid array; plan-guarded in "
-            "test_plan_shapes). The in-cluster pair join is the one "
-            "place vectors deliberately ride a shuffle — keyed on the "
-            "cluster id, bounded by cluster size (k must scale with n; "
-            "see SCALE10X). Components run eagerly upstream (Scan "
-            "ExistingRDD here).",
-            em.queries()["semantic_dedup"](spark, sf),
+            "exchanges before the ids-only cluster join, and a plan size "
+            "independent of k. Vectors join back once per side for the "
+            "exact re-rank.",
+            em.queries()["ann_ivf_bcast"](spark, sf),
         ),
         (
             "Crawl snapshot diff",
@@ -156,75 +104,6 @@ def main() -> None:
             "full-outer SortMergeJoin — ~80 bytes per url through the "
             "exchanges, page bytes never leave the scan.",
             em.queries()["crawl_diff"](spark, sf),
-        ),
-        (
-            "Training-order shuffle + shards (two-phase prefix sums)",
-            "Exactly ONE non-broadcast Exchange: the prefix-sum window's "
-            "bucket exchange on the deterministic key-space slice of the "
-            "uniform 60-bit order key (no range repartition, no "
-            "checkpoint). The exchanged projection carries (id, key, "
-            "counts) only — never text; the offset table joins back as a "
-            "BroadcastExchange.",
-            em.queries()["shuffle_shards"](spark, sf),
-        ),
-        (
-            "Temperature corpus rebalancing (derived-rate sampler)",
-            "The corpus side never hash-shuffles: the only hash "
-            "Exchanges are the stratum-count groupBys (collapsed to "
-            "#strata rows by map-side partial aggregation); the "
-            "threshold table applies as a null-safe BroadcastHashJoin "
-            "filter over the corpus scan.",
-            em.queries()["temperature_sample"](spark, sf),
-        ),
-        (
-            "Robots-policy gate (per-host directive fold)",
-            "Directives roll up to ONE array row per host (the only "
-            "hash exchange, keyed on the host grouping expression) and "
-            "reach the corpus as a BroadcastHashJoin; the allow/deny "
-            "decision is a per-row fold — no Generate/explode, so no "
-            "directive row ever multiplies a url row.",
-            em.queries()["robots_filter"](spark, sf),
-        ),
-        (
-            "Bitext margin mining (exact oracle config)",
-            "The all-pairs cross join is the documented EXACT config; "
-            "the k-NN windows partition by one endpoint id, and the "
-            "margin join carries (ids, cosine, avg) rows only. "
-            "Production replaces the cross join with an ids-only ANN "
-            "candidate frame (scale_bench bitext_ann).",
-            em.queries()["bitext_mine"](spark, sf),
-        ),
-        (
-            "Surgical decontamination (decontaminate_spans)",
-            "The benchmark collapses to a distinct shingle-hash set and "
-            "reaches the corpus occurrences as a BroadcastHashJoin "
-            "LeftSemi — occurrence rows (id, pos) shuffle exactly once "
-            "into the start-array aggregate; strictly fewer exchanges "
-            "than dedup_spans (no corpus-wide hash groupBy).",
-            em.queries()["decontaminate_spans"](spark, sf),
-        ),
-        (
-            "Crawl frontier (politeness waves)",
-            "Priority joins as a BroadcastHashJoin (one row per host); "
-            "the slot window partitions by host — the honest per-host "
-            "sequential constraint — and wave derivation is map-only.",
-            em.queries()["crawl_frontier"](spark, sf),
-        ),
-        (
-            "Incremental connected components (merge_components)",
-            "Label edges union the new pair batch, then the same "
-            "hub-degree-bounded star rounds as connected_components — "
-            "scalar min aggregates, (id, id)-only exchanges, "
-            "localCheckpoint per round ('Scan ExistingRDD').",
-            em.queries()["components_incremental"](spark, sf),
-        ),
-        (
-            "Quality classifier (train + score, one plan)",
-            "Class counts collapse to <= n_buckets rows map-side; the "
-            "model spine joins back as BroadcastExchanges; scoring "
-            "shuffles (id, bucket, count) rows once on the uniform "
-            "bucket key and once on the doc id — the dsir shape.",
-            em.queries()["quality_classifier"](spark, sf),
         ),
     ]
 

@@ -9,9 +9,10 @@ embedding float[64], label) — at 1x (the sf0.1 scale) and 10x
 FIXED RATE so true-pair counts grow linearly in n (each near-dup is a
 mutation of its immediate predecessor: no quadratic duplicate groups,
 which would make any growth comparison meaningless), then runs the
-five shuffle-heavy driver queries at both scales and reports wall,
-output rows, shuffle-write bytes (local Spark UI REST API) and the
-10x/1x growth ratios.
+shuffle-heavy driver queries (MinHash dedup, boilerplate shingles,
+crawl diff) and the sqrt(n)-centroid IVF variant at both scales and
+reports wall, output rows, shuffle-write bytes (local Spark UI REST API)
+and the 10x/1x growth ratios.
 
 Parquet is written with small row groups (multi-row-group = splittable
 scans), and the queries themselves spread post-scan exactly as in
@@ -38,11 +39,11 @@ import pyarrow.parquet as pq
 
 # A ~180-word vocabulary with a MILD skew at draw time (power 1.5).
 # Size matters for the growth test to be fair: a tiny vocabulary makes
-# organic token distributions collide, so SimHash fingerprints land
-# within hamming<=4 of each other for unrelated docs and the TRUE
-# near-dup pair count is quadratic in n — any operator would then show
-# quadratic output growth. Fingerprint diversity keeps organic pairs
-# rare; the planted mutations supply the linear true-pair signal.
+# organic token distributions collide, so unrelated docs become near-
+# dups and the TRUE near-dup pair count is quadratic in n — any operator
+# would then show quadratic output growth. Vocabulary diversity keeps
+# organic pairs rare; the planted mutations supply the linear true-pair
+# signal.
 _STEMS = (
     "spark batch part line column order small sort fast value scan hash "
     "slow group agg filter query big key window row table stream merge "
@@ -135,33 +136,9 @@ def main() -> None:
 
     qs = dict(entry.queries())
 
-    # LSH bucket density grows linearly with n when the plane count is
-    # fixed, so candidate pairs (and band-join shuffle bytes) grow ~n^2/2^p.
-    # The production knob is p ~ log2(n): +4 planes per 10x. This variant
-    # evidences that the knob restores near-linear shuffle growth.
-    def q_ann_lsh_p12(spark, sf_dir):
-        import pyspark.sql.functions as F
-        from ocr_poc_spark.operators.similarity import lsh_ann_topk
-
-        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").repartition(32)
-        return lsh_ann_topk(emb, k=3, dim=64, n_planes=12).select(
-            "query_id", "neighbor_id", "rank",
-            F.round("cosine", 6).alias("cosine"),
-        )
-
-    # Same story for SimHash banding: the entry query's max_hamming=4
-    # (5 bands x 12 bits = 4096 buckets/band) keeps bucket density
-    # growing with n; the operator default max_hamming=3 (4 bands x 15
-    # bits = 32768 buckets/band) is the scale setting.
-    def q_dedup_simhash_h3(spark, sf_dir):
-        from ocr_poc_spark.operators.dedup import simhash_near_pairs
-
-        d = spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(32)
-        return simhash_near_pairs(d, max_hamming=3)
-
     # IVF with the production rule applied: n_centroids ~ sqrt(n)
-    # (broadcast-centroid path above 64). The fixed-k=16 entry query
-    # shows the saturation; this shows the knob.
+    # (broadcast-centroid path above 64). A frozen k makes candidate
+    # work grow ~n^2*n_probe/k; this shows the knob.
     def q_ann_ivf_sqrtk(spark, sf_dir):
         import pyspark.sql.functions as F
         from ocr_poc_spark.operators.similarity import ivf_ann_topk
@@ -178,124 +155,12 @@ def main() -> None:
             F.round("cosine", 6).alias("cosine"),
         )
 
-    # SemDeDup with the cluster-count rule applied: the entry query's
-    # FROZEN k=8 literal centroids are the oracle setting; in-cluster
-    # all-pairs work is ~n^2/(2k), the same frozen-k hazard the IVF
-    # rows measure (at 10x/k=8 that is ~156M cosines — a known
-    # quadratic, not worth an hour of bench wall). k ~ sqrt(n) bounds
-    # the candidate set at ~n^1.5; centroids are learned (2 Lloyd
-    # rounds) inside the measured query, as a real pipeline would.
-    def q_semantic_dedup_sqrtk(spark, sf_dir):
-        import pyspark.sql.functions as F
-        from ocr_poc_spark.operators.similarity import (
-            kmeans_centroids,
-            semantic_dedup,
-        )
-        from ocr_poc_spark.operators.textstats import hash_embedding
-
-        n = spark.read.parquet(f"{sf_dir}/documents.parquet").count()
-        d = spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(32)
-        emb = hash_embedding(d, dim=16).select(
-            F.col("doc_id").alias("vec_id"), "embedding"
-        )
-        cents = kmeans_centroids(
-            emb, n_centroids=max(8, int(n ** 0.5)), dim=16, n_iter=2
-        )
-        return semantic_dedup(emb, cents, cosine_threshold=0.99)
-
-    # span_dedup ends in a LEFT join whose right side (removal starts
-    # per doc) is unique per key, so a bare .count() lets Catalyst
-    # ELIMINATE the join and with it the whole dup-detection subtree —
-    # the first round-5 run reported a phantom 0.0 MB / 0.3 s "map-only"
-    # row. (An agg wrapper does NOT help: count() over a grouping-less
-    # aggregate is statically one row and short-circuits too.) A filter
-    # on the join-derived n_removed column forces full evaluation while
-    # keeping the row count comparable.
-    base_span = qs["span_dedup"]
-
-    def q_span_dedup_full(spark, sf_dir):
-        return base_span(spark, sf_dir).where("n_removed >= 0")
-
-    qs["span_dedup"] = q_span_dedup_full
-
-    # Bitext mining on its PRODUCTION path: candidates from the LSH ANN
-    # (12 planes — the measured scale knob), margins computed within
-    # the candidate set, under-connected vectors skipped. The exact
-    # all-pairs config is the oracle setting (O(n_src x n_tgt)), not a
-    # growth-bench subject — same split as embedding_near_dup/ann_lsh.
-    def q_bitext_ann(spark, sf_dir):
-        import pyspark.sql.functions as F
-        from ocr_poc_spark.operators.similarity import bitext_mine, lsh_ann_topk
-
-        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").repartition(32)
-        cands = (
-            lsh_ann_topk(emb, k=8, dim=64, n_planes=12)
-            .where("query_id % 2 = 0 AND neighbor_id % 2 = 1")
-            .select(
-                F.col("query_id").alias("src_id"),
-                F.col("neighbor_id").alias("tgt_id"),
-            )
-        )
-        return bitext_mine(
-            emb.where("vec_id % 2 = 0"),
-            emb.where("vec_id % 2 = 1"),
-            k=3, margin_threshold=1.0, candidates=cands, on_short="skip",
-        )
-
-    qs["bitext_ann"] = q_bitext_ann
-
-    # decontaminate_spans shares span_dedup's rebuild tail (LEFT join
-    # with a unique-per-key right side) — same phantom-elimination
-    # hazard under .count(); force evaluation the same way.
-    base_dspan = qs["decontaminate_spans"]
-
-    def q_decon_spans_full(spark, sf_dir):
-        return base_dspan(spark, sf_dir).where("n_removed >= 0")
-
-    qs["decontaminate_spans"] = q_decon_spans_full
-
-    qs["ann_lsh_p12"] = q_ann_lsh_p12
-    qs["dedup_simhash_h3"] = q_dedup_simhash_h3
     qs["ann_ivf_sqrtk"] = q_ann_ivf_sqrtk
-    qs["semantic_dedup_sqrtk"] = q_semantic_dedup_sqrtk
     target = [
-        "ann_lsh",
-        "ann_lsh_p12",
-        "ann_ivf",
         "ann_ivf_sqrtk",
         "dedup_minhash",
-        "dedup_simhash",
-        "dedup_simhash_h3",
         "boilerplate_shingles",
-        "decontaminate",
-        # round 4: the full composition + new curation passes
-        "corpus_pipeline",
-        "lm_perplexity",
-        "strip_boilerplate",
-        "pack_subword",
-        # round 4, session 2: selection / incremental-crawl suite
-        "dsir_weights",
         "crawl_diff",
-        "semantic_dedup_sqrtk",
-        "gopher_rules",
-        "clean_text",
-        # round 5: span dedup + training-order + classifier stages
-        "span_dedup",
-        "shuffle_shards",
-        "temperature_sample",
-        "quality_classifier",
-        "bitext_ann",
-        # round 5, session 3: surgical decon + frontier
-        "decontaminate_spans",
-        "crawl_frontier",
-        # round 5, session 3 late: LM upgrades + audits
-        "kn_perplexity",
-        "ccnet_buckets",
-        "tokenizer_fertility",
-        "winnow_fingerprints",
-        "bitext_url",
-        "repeat_line_dedup",
-        "benchmark_coverage",
     ]
 
     spark = get_spark(
@@ -386,105 +251,30 @@ def main() -> None:
         "",
         "## Reading the shuffle ratios (interpolated from THIS run)",
         "",
-        f"- boilerplate_shingles / decontaminate: shuffle grows "
-        f"{summary['boilerplate_shingles']['shuffle_ratio']}x / "
-        f"{summary['decontaminate']['shuffle_ratio']}x for {m}x rows — "
-        "these pipelines shuffle O(n) ids+hashes, the linear ideal.",
-        f"- ann_lsh (fixed 8 planes) vs ann_lsh_p12: with a FIXED plane "
-        "count, bucket density grows with n, so candidate pairs (and the "
-        f"band-join shuffle) grow ~n^2/2^p — "
-        f"{summary['ann_lsh']['shuffle_ratio']}x here. Raising planes to "
-        f"12 for the {m}x corpus restores ~n-proportional shuffle "
-        f"({summary['ann_lsh_p12']['shuffle_ratio']}x) AND lowers wall. "
-        "Production rule: p ≈ log2(n) + const, i.e. +4 planes per 10x "
-        "corpus growth.",
-        f"- dedup_simhash (entry setting hamming<=4: 5 bands x 12 bits) "
-        "vs dedup_simhash_h3 (operator default hamming<=3: 4 bands x 15 "
-        "bits): identical story for the pigeonhole bands — 2^12 buckets "
-        f"per band saturate at {m}x "
-        f"({summary['dedup_simhash']['shuffle_ratio']}x shuffle), 2^15 "
-        "buckets keep the candidate set near-linear "
-        f"({summary['dedup_simhash_h3']['shuffle_ratio']}x). Band width "
-        "must track corpus size; recall stays provably 1.0 either way.",
+        f"- boilerplate_shingles: shuffle grows "
+        f"{summary['boilerplate_shingles']['shuffle_ratio']}x for {m}x "
+        "rows — the pipeline shuffles O(n) ids+hashes, the linear ideal.",
         f"- dedup_minhash: {summary['dedup_minhash']['shuffle_ratio']}x "
         f"shuffle for {m}x rows — band count is fixed (8 bands of 4 "
         "hashes) so candidate growth is mildly superlinear; the "
         "exact-Jaccard verify bounds emitted pairs to true pairs "
         "(linear by construction here).",
-        f"- ann_ivf (FROZEN k=16 centroids) vs ann_ivf_sqrtk "
-        f"(k ~ sqrt(n), broadcast-centroid path): all-vs-all IVF "
-        f"candidates grow ~n^2*n_probe/k when k is frozen — "
-        f"{summary['ann_ivf']['wall_ratio']}x wall / "
-        f"{summary['ann_ivf']['shuffle_ratio']}x shuffle here. Scaling "
-        f"k with sqrt(n) bounds candidate work at ~n^1.5: "
+        f"- ann_ivf_sqrtk (k ~ sqrt(n), broadcast-centroid path): "
         f"{summary['ann_ivf_sqrtk']['wall_ratio']}x wall / "
-        f"{summary['ann_ivf_sqrtk']['shuffle_ratio']}x "
-        "shuffle. This is the IVF production rule, and why the operator "
-        "switches to a single-row broadcast centroid array above "
-        "MAX_LITERAL_CENTROIDS.",
-        f"- corpus_pipeline (extract -> gate -> dedup -> components -> "
-        f"keeper -> host cap -> chunk -> pack, ONE plan): "
-        f"{summary['corpus_pipeline']['wall_ratio']}x wall / "
-        f"{summary['corpus_pipeline']['shuffle_ratio']}x shuffle for {m}x "
-        "docs — the extraction/chunk/pack legs are map-only, the dedup "
-        "legs shuffle ids+hashes, so the whole composition tracks its "
-        "heaviest linear stage.",
-        f"- lm_perplexity / strip_boilerplate / pack_subword: "
-        f"{summary['lm_perplexity']['shuffle_ratio']}x / "
-        f"{summary['strip_boilerplate']['shuffle_ratio']}x / "
-        f"{summary['pack_subword']['shuffle_ratio']}x shuffle — bigram "
-        "count joins, line-hash anti-joins and the two-phase packing "
-        "prefix sum all key on uniform hashes or range-partitioned ids; "
-        "linear is the expected shape.",
-        f"- dsir_weights / crawl_diff: "
-        f"{summary['dsir_weights']['shuffle_ratio']}x / "
-        f"{summary['crawl_diff']['shuffle_ratio']}x shuffle for {m}x "
-        "rows — the DSIR bucket-count table is capped at n_buckets rows "
-        "(broadcast) and the crawl diff ships (id, digest) projections; "
-        "both linear by construction.",
-        f"- semantic_dedup_sqrtk (k ~ sqrt(n), learned in-query): "
-        f"{summary['semantic_dedup_sqrtk']['wall_ratio']}x wall / "
-        f"{summary['semantic_dedup_sqrtk']['shuffle_ratio']}x shuffle — "
-        "in-cluster all-pairs work is ~n^2/(2k), so the cluster count "
-        "must track corpus size exactly like the IVF centroid count "
-        "(same formula, measured above); the entry query's frozen k=8 "
-        "literal centroids are the oracle setting, not the scale "
-        "setting (at 10x they imply ~156M in-cluster cosines).",
-        f"- gopher_rules / clean_text: ~0 MB shuffle at BOTH scales "
-        "(absolute columns) — map-only passes, the trivially-linear "
-        "ideal; the ratio column is pinned to 1.0 for sub-0.05MB "
-        "noise-floor cells.",
-        f"- span_dedup: {summary['span_dedup']['shuffle_ratio']}x "
-        f"shuffle for {m}x rows — occurrence rows are (hash, id, pos) "
-        "per token-window, so shuffle volume tracks total corpus "
-        "tokens (linear); the groupBy(hash) canonical pick partially "
-        "aggregates map-side, so a span duplicated across 10^8 docs "
-        "collapses before the exchange.",
-        f"- shuffle_shards / temperature_sample: "
-        f"{summary['shuffle_shards']['shuffle_ratio']}x / "
-        f"{summary['temperature_sample']['shuffle_ratio']}x shuffle — "
-        "the shard assigner's single exchange carries (id, key, two "
-        "longs) rows (linear); the rebalancer shuffles only the "
-        "#strata-row count aggregates (map-side-collapsed, ~0 MB — the "
-        "corpus side is a broadcast-join filter).",
-        f"- quality_classifier: "
-        f"{summary['quality_classifier']['shuffle_ratio']}x shuffle — "
-        "train + score in one plan; class counts collapse to <= "
-        "n_buckets rows map-side, the model is broadcast, and scoring "
-        "ships (id, bucket, count) rows only — the dsir shape, linear.",
-        f"- bitext_ann (mining on LSH candidates, 12 planes, "
-        f"on_short=skip): {summary['bitext_ann']['wall_ratio']}x wall / "
-        f"{summary['bitext_ann']['shuffle_ratio']}x shuffle — the heavy "
-        "stage is the already-measured banded ANN; the margin re-rank "
-        "adds only ids+cosine rows per candidate. The exact all-pairs "
-        "config is the oracle setting, not the scale path (same split "
-        "as ann_lsh vs embedding_near_dup).",
+        f"{summary['ann_ivf_sqrtk']['shuffle_ratio']}x shuffle. With a "
+        "FROZEN k, IVF candidates grow ~n^2*n_probe/k; scaling k with "
+        "sqrt(n) bounds candidate work at ~n^1.5. This is the IVF "
+        "production rule, and why the operator switches to a single-row "
+        "broadcast centroid array above MAX_LITERAL_CENTROIDS.",
+        f"- crawl_diff: {summary['crawl_diff']['shuffle_ratio']}x shuffle "
+        f"for {m}x rows — the diff ships (id, digest) projections, "
+        "linear by construction.",
         "",
         "## Corpus-shape caveat (first-run finding)",
         "",
         "An earlier synthesis drew tokens from a ~30-word vocabulary with "
         "strong skew; organic token distributions then collide and the "
-        "TRUE hamming<=4 pair count is quadratic in n (385k pairs at 1x, "
+        "TRUE near-dup pair count is quadratic in n (385k pairs at 1x, "
         "37M at 10x — 30x wall, 91x shuffle, all of it REAL output). "
         "Growth benchmarks for near-dup operators are only meaningful on "
         "corpora whose true-pair count is linear; the committed "

@@ -16,7 +16,7 @@ from ocr_poc_spark.textproc.scoring import block_score
 
 def mk(idx, text, score=None, x=0.0, y=None, boiler=False):
     return Block(
-        idx=idx, tag_path="html>body>p", text=text, depth=3,
+        idx=idx, text=text, depth=3,
         char_offset=idx * 100, n_chars=len(text),
         link_density=0.0,
         score=block_score(text, 0.0) if score is None else score,

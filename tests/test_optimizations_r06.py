@@ -3,8 +3,6 @@ touched an operator's internals must produce byte-identical results to
 the pre-change formulation (the oracle gate re-checks against DuckDB;
 these pin the in-engine equivalences directly)."""
 
-import pyspark.sql.functions as F
-
 
 def _docs(spark):
     rows = [
@@ -13,8 +11,8 @@ def _docs(spark):
         (3, "the quick brown fox leaps over the lazy dog", "en"),
         (4, "completely different text about spark pipelines here", "en"),
         (5, "le renard brun saute par dessus le chien paresseux", "fr"),
-        (6, "", "en"),              # feature-less doc: scored at bare prior
-        (7, None, None),            # NULL text AND NULL lang (negative class)
+        (6, "", "en"),              # empty text: no shingles
+        (7, None, None),            # NULL text AND NULL lang
         (8, "der schnelle braune fuchs springt", "de"),
     ]
     return spark.createDataFrame(rows, "doc_id long, text string, lang string")
@@ -22,25 +20,6 @@ def _docs(spark):
 
 def _rowset(df):
     return sorted(tuple(r) for r in df.collect())
-
-
-def test_nb_train_score_self_equals_composed(spark):
-    """The fused single-tokenize-pass self-train path must EXACTLY equal
-    nb_score(df, nb_train(pos, neg)) under the same pos/neg partition
-    (false-or-NULL predicate rows are negatives) — including empty-text
-    docs scored at the bare prior and the keep acceptance arm."""
-    from ocr_poc_spark.operators.classifier import (
-        nb_score, nb_train, nb_train_score_self,
-    )
-
-    d = _docs(spark)
-    pred = F.col("lang") == "en"
-    pos = d.where(pred)
-    neg = d.where((F.col("lang") != "en") | F.col("lang").isNull())
-    composed = nb_score(d, nb_train(pos, neg))
-    fused = nb_train_score_self(d, pred)
-    assert fused.columns == composed.columns
-    assert _rowset(fused) == _rowset(composed)
 
 
 def test_shingle_and_bands_materialize_parity(spark):
@@ -82,75 +61,3 @@ def test_minhash_pairs_plan_scans_source_once(spark):
     assert "Scan parquet" not in plan and "LocalTableScan" not in plan
 
 
-def test_bpe_batched_equals_sequential_on_fixture(spark):
-    """batch_merges=4 (used by the bpe_merges/chunk_bpe queries) must
-    produce the EXACT merge table sequential BPE produces on the
-    driver fixture corpus — the tie-frontier guard stops a batch at
-    every count plateau, so acceptance order cannot diverge here
-    (also verified at sf0.01 and sf0.1, OPTIMIZATION_r06.md)."""
-    from ocr_poc_spark.operators.curation import bpe_learn
-
-    d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    seq = [tuple(r) for r in bpe_learn(d, n_merges=30).collect()]
-    bat = [tuple(r) for r in bpe_learn(d, n_merges=30, batch_merges=4).collect()]
-    assert bat == seq
-
-
-def test_importance_weights_derived_raw_counts(spark):
-    """dsir.importance_weights' single-pass refactor (corpus bucket
-    counts derived from the per-doc aggregate) must match a direct
-    two-pass recompute of the same formula."""
-    import hashlib
-    import math
-    import re
-
-    from ocr_poc_spark.operators.dsir import DEFAULT_BUCKETS, importance_weights
-
-    d = _docs(spark)
-    target = d.where(F.col("lang") == "en")
-    out = {r["doc_id"]: (r["n_ngrams"], r["logw"])
-           for r in importance_weights(d, target).collect()}
-
-    # Reference: naive Python recompute of the hashed-ngram model
-    # (md5-hex15 == texthash.hash60; ln-sum order differences are
-    # absorbed by the 4-decimal rounding, same contract as the oracle).
-    def buckets(text):
-        if text is None:
-            return []
-        ws = [w for w in re.split(r"\s+", text.strip().lower())]
-        grams = [w for w in ws if w != ""]
-        grams += [f"{a} {b}" for a, b in zip(ws, ws[1:])] if len(ws) >= 2 else []
-        return [
-            int(hashlib.md5(g.encode()).hexdigest()[:15], 16) % DEFAULT_BUCKETS
-            for g in grams
-        ]
-
-    docs = {r["doc_id"]: r["text"] for r in d.collect()}
-    tgt_ids = {r["doc_id"] for r in target.collect()}
-    raw_counts: dict[int, int] = {}
-    tgt_counts: dict[int, int] = {}
-    per_doc: dict[int, dict[int, int]] = {}
-    for did, text in docs.items():
-        bs = buckets(text)
-        pd = per_doc.setdefault(did, {})
-        for b in bs:
-            raw_counts[b] = raw_counts.get(b, 0) + 1
-            pd[b] = pd.get(b, 0) + 1
-            if did in tgt_ids:
-                tgt_counts[b] = tgt_counts.get(b, 0) + 1
-    a, B = 0.5, float(DEFAULT_BUCKETS)
-    t_tgt, t_raw = sum(tgt_counts.values()), sum(raw_counts.values())
-    for did, pd in per_doc.items():
-        if not pd:
-            assert did not in out
-            continue
-        lw = 0.0
-        for b, c in pd.items():
-            lr = (
-                math.log(tgt_counts.get(b, 0) + a) - math.log(t_tgt + a * B)
-                - math.log(raw_counts[b] + a) + math.log(t_raw + a * B)
-            )
-            lw += c * lr
-        n, got = out[did]
-        assert n == sum(pd.values())
-        assert abs(got - lw) < 1e-3

@@ -56,22 +56,27 @@ def _module_name(rel: str) -> str:
     return ".".join(parts)
 
 
+def _from_base(rel: str, node: ast.ImportFrom) -> str:
+    """The module a ``from ... import`` in file ``rel`` reads from, a
+    relative import resolved against the file's package."""
+    if not node.level:
+        return node.module
+    module = _module_name(rel).split(".")
+    package = module if rel.endswith("__init__.py") else module[:-1]
+    base = package[: len(package) - node.level + 1]
+    return ".".join(base + ([node.module] if node.module else []))
+
+
 def _imported_names(rel: str, src: bytes) -> set[str]:
     """Dotted names an ``import`` anywhere in the file (module level or
     inside a function) may load, relative imports resolved against the
     file's package; ``from m import x`` yields both ``m`` and ``m.x``."""
-    module = _module_name(rel).split(".")
-    package = module if rel.endswith("__init__.py") else module[:-1]
     names = set()
     for node in ast.walk(ast.parse(src, rel)):
         if isinstance(node, ast.Import):
             names.update(alias.name for alias in node.names)
         elif isinstance(node, ast.ImportFrom):
-            if node.level:
-                base = package[: len(package) - node.level + 1]
-                base = ".".join(base + ([node.module] if node.module else []))
-            else:
-                base = node.module
+            base = _from_base(rel, node)
             names.add(base)
             names.update(f"{base}.{alias.name}" for alias in node.names)
     return names
@@ -111,3 +116,136 @@ def test_every_package_module_is_reachable():
         if not package[m].endswith("__init__.py")
     )
     assert not unreached, "only tests import:\n" + "\n".join(unreached)
+
+
+def _top_level_definitions(tree: ast.Module) -> dict[str, ast.stmt]:
+    """Top-level functions, classes and constants of a module, by name;
+    dunder names (``__version__``, ``__all__``) are exempt."""
+    defs = {}
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            names = [node.name]
+        elif isinstance(node, ast.Assign):
+            names = [t.id for t in node.targets if isinstance(t, ast.Name)]
+        elif isinstance(node, ast.AnnAssign) and isinstance(node.target, ast.Name):
+            names = [node.target.id]
+        else:
+            continue
+        for name in names:
+            if not (name.startswith("__") and name.endswith("__")):
+                defs[name] = node
+    return defs
+
+
+def _module_bindings(rel: str, tree: ast.Module, package: set[str]) -> dict:
+    """Local name -> package module, for every import in the file (module
+    level or inside a function) that binds a package module: ``import a.b``
+    binds ``a``, ``import a.b as c`` binds ``c``, ``from a import b`` binds
+    ``b`` when ``a.b`` is a module."""
+    bindings = {}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            for alias in node.names:
+                if alias.asname:
+                    bindings[alias.asname] = alias.name
+                else:
+                    head = alias.name.split(".")[0]
+                    bindings[head] = head
+        elif isinstance(node, ast.ImportFrom):
+            base = _from_base(rel, node)
+            for alias in node.names:
+                if f"{base}.{alias.name}" in package:
+                    bindings[alias.asname or alias.name] = f"{base}.{alias.name}"
+    return bindings
+
+
+def _dotted(node: ast.expr) -> str | None:
+    if isinstance(node, ast.Name):
+        return node.id
+    if isinstance(node, ast.Attribute):
+        head = _dotted(node.value)
+        return f"{head}.{node.attr}" if head else None
+    return None
+
+
+def test_every_package_definition_is_reachable():
+    """Every top-level function, class and constant of ``ocr_poc_spark`` is
+    reached from the same roots as the module check: the CLI and the
+    tracked files outside the package and the tests. Reachability follows
+    ``from m import name``, ``module.attr`` and same-module names, out of
+    function bodies and module-level statements; a definition only tests
+    reach is dead code."""
+    files = [rel for rel in _python_files() if not rel.startswith("tests/")]
+    package_files = {
+        _module_name(rel): rel for rel in files
+        if rel.startswith("ocr_poc_spark/")
+    }
+    trees = {}
+    for rel in files:
+        with open(os.path.join(REPO, rel), "rb") as fh:
+            trees[rel] = ast.parse(fh.read(), rel)
+    defs = {
+        mod: _top_level_definitions(trees[rel])
+        for mod, rel in package_files.items()
+    }
+    bindings = {
+        rel: _module_bindings(rel, tree, set(package_files))
+        for rel, tree in trees.items()
+    }
+    reached: set[tuple[str, str]] = set()
+    run_modules: set[str] = set()
+    queue: list[tuple[str, ast.AST]] = []  # (file, live node)
+
+    def reach_module(mod: str) -> None:
+        # importing a.b.c also runs the packages a and a.b; a module's
+        # statements other than its definitions run on import
+        parts = mod.split(".")
+        for i in range(1, len(parts) + 1):
+            m = ".".join(parts[:i])
+            if m in package_files and m not in run_modules:
+                run_modules.add(m)
+                rel = package_files[m]
+                definitions = set(map(id, defs[m].values()))
+                queue.extend(
+                    (rel, node) for node in trees[rel].body
+                    if id(node) not in definitions
+                )
+
+    def reach(mod: str, name: str) -> None:
+        if f"{mod}.{name}" in package_files:
+            reach_module(f"{mod}.{name}")
+        elif name in defs.get(mod, {}) and (mod, name) not in reached:
+            reached.add((mod, name))
+            reach_module(mod)
+            queue.append((package_files[mod], defs[mod][name]))
+
+    roots = [
+        rel for rel in files if not rel.startswith("ocr_poc_spark/")
+    ] + ["ocr_poc_spark/__main__.py"]
+    queue.extend((rel, trees[rel]) for rel in roots)
+    reach_module(_module_name("ocr_poc_spark/__main__.py"))
+    while queue:
+        rel, live = queue.pop()
+        own = _module_name(rel)
+        for node in ast.walk(live):
+            if isinstance(node, ast.ImportFrom):
+                base = _from_base(rel, node)
+                for alias in node.names:
+                    reach(base, alias.name)
+            elif isinstance(node, ast.Import):
+                for alias in node.names:
+                    reach_module(alias.name)
+            elif isinstance(node, ast.Name):
+                reach(own, node.id)
+            elif isinstance(node, ast.Attribute):
+                # module.attr, with module bound by an import in this file
+                head, _, rest = (_dotted(node.value) or "").partition(".")
+                mod = bindings[rel].get(head)
+                if mod:
+                    reach(".".join([mod] + ([rest] if rest else [])), node.attr)
+    unreached = sorted(
+        f"{package_files[mod]}: {name}"
+        for mod, names in defs.items() for name in names
+        if (mod, name) not in reached
+    )
+    assert not unreached, "only tests reach:\n" + "\n".join(unreached)

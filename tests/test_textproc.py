@@ -3,7 +3,7 @@
 from ocr_poc_spark.textproc.html_blocks import parse_html_blocks
 from ocr_poc_spark.textproc.pdf_blocks import is_pdf, parse_pdf_blocks
 from ocr_poc_spark.textproc.scoring import block_score
-from ocr_poc_spark.textproc.simtext import is_likely_label, similarity_score
+from ocr_poc_spark.textproc.simtext import _sim_core, is_likely_label
 
 
 def test_html_blocks_basic():
@@ -70,12 +70,12 @@ def test_block_score_bands():
 
 
 def test_similarity_exact_and_fuzzy():
-    assert similarity_score("AUTHOR", "AUTHOR") == 1.0
-    assert similarity_score("Authr", "AUTHOR") >= 0.70   # fuzzy anchor hit
-    assert similarity_score("Auth0r", "AUTHOR") >= 0.70
-    assert similarity_score("banana", "AUTHOR") < 0.70
+    assert _sim_core("AUTHOR", "AUTHOR") == 1.0
+    assert _sim_core("AUTHR", "AUTHOR") >= 0.70   # fuzzy anchor hit
+    assert _sim_core("AUTH0R", "AUTHOR") >= 0.70
+    assert _sim_core("BANANA", "AUTHOR") < 0.70
     # length-ratio prune: long text can never reach the threshold
-    assert similarity_score("x" * 100, "AUTHOR") == 0.0
+    assert _sim_core("X" * 100, "AUTHOR") == 0.0
 
 
 def test_similarity_prefix_bonus():
@@ -83,7 +83,7 @@ def test_similarity_prefix_bonus():
 
     base = SequenceMatcher(None, "CATEG", "CATEGORY").ratio()
     expect = min(base + 4 * 0.1 * (1 - base), 1.0)
-    assert similarity_score("categ", "CATEGORY") == expect
+    assert _sim_core("CATEG", "CATEGORY") == expect
 
 
 def test_is_likely_label():
@@ -120,16 +120,17 @@ def test_implied_end_tags_keep_siblings_flat():
 
     blocks, _ = parse_html_blocks(b"<ul><li>Alpha<li>Beta<li>Gamma<li>Delta</ul>")
     assert [b.text for b in blocks] == ["Alpha", "Beta", "Gamma", "Delta"]
-    assert len({b.depth for b in blocks}) == 1
-    assert all(b.tag_path == "ul>li" for b in blocks)
+    assert [(b.text, b.depth) for b in blocks] == [
+        ("Alpha", 2), ("Beta", 2), ("Gamma", 2), ("Delta", 2),
+    ]
 
     blocks, _ = parse_html_blocks(b"<p>one<p>two<div><p>three</div><p>four")
-    assert [(b.text, b.tag_path) for b in blocks] == [
-        ("one", "p"), ("two", "p"), ("three", "div>p"), ("four", "p"),
+    assert [(b.text, b.depth) for b in blocks] == [
+        ("one", 1), ("two", 1), ("three", 2), ("four", 1),
     ]
 
     blocks, _ = parse_html_blocks(b"<table><tr><td>a<td>b<tr><td>c</table>")
-    assert all(b.tag_path == "table>tr>td" for b in blocks)
+    assert [(b.text, b.depth) for b in blocks] == [("a", 3), ("b", 3), ("c", 3)]
 
 
 def test_pdf_strings_cannot_inject_positioning():
@@ -152,3 +153,23 @@ def test_pdf_strings_cannot_inject_positioning():
     assert lay == "article"
     _, lay2 = parse_pdf_blocks(b"%PDF-1.4\n%layout:listing\nBT 1 2 Td (x) Tj ET")
     assert lay2 == "listing"
+
+
+def test_html_parse_time_linear_in_nesting_depth():
+    """A page of n nested <div>s must parse in time linear in n: 8x the
+    input may cost ~8x, never the ~64x of a per-block cost that grows
+    with the open-element stack. Bound 20 leaves slack for timer noise."""
+    import time
+
+    def best_of_3(n):
+        page = b"<div>x " * n
+        best = float("inf")
+        for _ in range(3):
+            t0 = time.perf_counter()
+            blocks, _ = parse_html_blocks(page)
+            best = min(best, time.perf_counter() - t0)
+        assert len(blocks) == n and blocks[-1].depth == n
+        return best
+
+    small, large = best_of_3(2_000), best_of_3(16_000)
+    assert large / small < 20, (small, large)
