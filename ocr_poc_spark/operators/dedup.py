@@ -5,7 +5,8 @@ All-native column expressions (zero Python in the hot path):
 - n-gram Jaccard       : word-set similarity on bounded prefixes
 - MinHash + LSH        : shingle -> 32 minhashes -> 8 banded signatures
                          -> bucket self-join -> candidate pairs
-- connected components : near-dup pairs -> duplicate clusters
+- connected components : near-dup pairs -> duplicate clusters (batch and
+                         incremental label merge)
 
 Scale notes: MinHash avoids the O(n^2) pair explosion by joining only
 within LSH bands; only ids ride the band shuffles (the shingle arrays
@@ -73,7 +74,7 @@ def _shingle_and_bands(
     materialize: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """(shingled(id, shingles), band_ids(id, band, sig)) — the shared
-    front half of minhash_lsh_pairs and minhash_band_index.
+    front half of the batch and incremental MinHash paths.
 
     ``materialize``: callers that consume BOTH frames more than once
     (minhash_lsh_pairs references shingled on each verify side and
@@ -110,8 +111,11 @@ def minhash_band_index(
     num_hashes: int = NUM_MINHASHES,
     num_bands: int = NUM_BANDS,
 ) -> DataFrame:
-    """The MinHash inverted file: (id, band, sig), one row per document
-    per band — ~num_bands small fixed-width rows per document, never
+    """The persistable MinHash inverted file: (id, band, sig), one row
+    per document per band. Write this per corpus snapshot; the next
+    crawl's dedup pass (minhash_lsh_pairs_incremental) then reads it
+    instead of recomputing shingles + signatures for the whole corpus —
+    the index is ~num_bands small fixed-width rows per document, never
     document text."""
     return _shingle_and_bands(df, id_col, text_col, num_hashes, num_bands)[1]
 
@@ -143,6 +147,17 @@ def minhash_lsh_pairs(
         .select("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
     )
+    return _exact_jaccard_verify(cand, shingled, jaccard_threshold)
+
+
+def _exact_jaccard_verify(
+    cand: DataFrame, shingled: DataFrame, jaccard_threshold: float
+) -> DataFrame:
+    """Shared verify tail of the batch and incremental MinHash paths:
+    join the shingle arrays back once per side of each candidate id
+    pair, compute exact shingle-set Jaccard, keep pairs >= threshold.
+    ONE definition — the incremental==batch-restriction parity property
+    depends on both paths verifying identically."""
     cand = cand.join(
         shingled.select(F.col("id").alias("id_a"), F.col("shingles").alias("sh_a")),
         "id_a",
@@ -160,6 +175,95 @@ def minhash_lsh_pairs(
         .where(F.col("jaccard") >= jaccard_threshold)
         .select("id_a", "id_b", "jaccard")
     )
+
+
+def minhash_lsh_pairs_incremental(
+    new_docs: DataFrame,
+    corpus_docs: DataFrame,
+    corpus_index: DataFrame | None = None,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    num_hashes: int = NUM_MINHASHES,
+    num_bands: int = NUM_BANDS,
+    jaccard_threshold: float = 0.7,
+) -> DataFrame:
+    """Incremental near-dup pass: every pair involving at least one NEW
+    document — new-vs-corpus and new-vs-new — without re-banding the
+    corpus. EXACTLY equals minhash_lsh_pairs(new ∪ corpus) restricted
+    to pairs touching a new id (property-tested), with id_a < id_b.
+
+    The snapshot pattern a rolling crawl runs: persist
+    ``minhash_band_index(corpus)`` once per snapshot and pass it as
+    ``corpus_index`` (computed from corpus_docs when None); only the
+    new slice is shingled/hashed up front. Corpus text is touched
+    twice, both times candidate-bounded: the exact-Jaccard verify
+    needs shingles for candidate corpus docs only, so corpus_docs is
+    LEFT SEMI-pruned to candidate ids BEFORE shingling — at 100TB the
+    full corpus is never re-shingled, only the (tiny) candidate set.
+    Ids must be distinct across the two inputs (crawl ids are)."""
+    shingled_new, bands_new = _shingle_and_bands(
+        new_docs, id_col, text_col, num_hashes, num_bands, materialize=True
+    )
+    if corpus_index is None:
+        corpus_index = minhash_band_index(
+            corpus_docs, id_col, text_col, num_hashes, num_bands
+        )
+    else:
+        # A persisted index built with a different banding config is a
+        # SILENT total-recall loss (band sigs never collide with the
+        # new slice's) — the same failure class ivf_ann_topk guards
+        # with its centroid-dim check. Band ids are checkable in-plan:
+        # an index with band >= num_bands was built with more bands
+        # (and one with fewer is unobservable from ids alone, so the
+        # hash-count mismatch is documented as caller contract).
+        missing = {"id", "band", "sig"} - set(corpus_index.columns)
+        if missing:
+            raise ValueError(
+                f"corpus_index missing columns {sorted(missing)}; expected "
+                "the (id, band, sig) frame written by minhash_band_index"
+            )
+        corpus_index = corpus_index.where(
+            F.when(
+                (F.col("band") < 0) | (F.col("band") >= num_bands),
+                F.raise_error(
+                    F.concat(
+                        F.lit(
+                            "minhash_lsh_pairs_incremental: corpus_index "
+                            f"band out of range for num_bands={num_bands} "
+                            "(index built with a different banding config?): "
+                        ),
+                        F.col("band").cast("string"),
+                    )
+                ).cast("boolean"),
+            ).otherwise(F.lit(True))
+        )
+    all_bands = corpus_index.select("id", "band", "sig").unionByName(bands_new)
+
+    left = bands_new.select(F.col("id").alias("id_a"), "band", "sig")
+    right = all_bands.select(F.col("id").alias("id_b"), "band", "sig")
+    cand = (
+        left.join(right, ["band", "sig"])
+        .where(F.col("id_a") != F.col("id_b"))
+        # new-new candidates arrive in both orientations, new-corpus in
+        # one; normalize to id_a < id_b, then dedup across bands.
+        .select(
+            F.least("id_a", "id_b").alias("id_a"),
+            F.greatest("id_a", "id_b").alias("id_b"),
+        )
+        .dropDuplicates(["id_a", "id_b"])
+    )
+
+    cand_ids = cand.select(F.col("id_a").alias("id")).union(
+        cand.select(F.col("id_b").alias("id"))
+    ).distinct()
+    corpus_needed = corpus_docs.join(
+        cand_ids, corpus_docs[id_col] == cand_ids["id"], "left_semi"
+    )
+    shingled_needed = word_shingles(
+        corpus_needed.select(id_col, text_col), text_col
+    ).select(F.col(id_col).alias("id"), "shingles")
+    all_shingled = shingled_new.unionByName(shingled_needed)
+    return _exact_jaccard_verify(cand, all_shingled, jaccard_threshold)
 
 
 def ngram_jaccard_pairs(
@@ -340,3 +444,125 @@ def connected_components(
     )
 
 
+def merge_components(
+    labels: DataFrame,
+    new_pairs: DataFrame,
+    src: str = "id_a",
+    dst: str = "id_b",
+    max_iter: int = 12,
+) -> DataFrame:
+    """Incremental connected components: fold a NEW batch of near-dup
+    pairs into an existing (doc_id, component_id) label table without
+    re-running CC over the full historical pair list — the label-side
+    companion of minhash_lsh_pairs_incremental. A prior component is
+    already fully described by its (member -> label) edges (the label
+    IS a member, the component minimum), so CC over
+    ``labels-as-edges UNION new pairs`` reproduces exactly the labels
+    a from-scratch run over all pairs ever seen would produce — while
+    the input is one edge per EXISTING DOC plus the new pairs, not the
+    full pair history (a 10^6-copy boilerplate cluster contributes
+    10^6 label edges, not the 10^7+ pairs that built it; singleton
+    docs need no label row at all).
+
+    Labels stay min-id-stable: a merge of two old components relabels
+    the loser to the global minimum, new docs adopt the minimum of
+    whatever they touch. Returns the new complete label table — docs
+    in ``labels`` keep a row even if untouched this batch.
+
+    Same hub-safe star-contraction engine and (id, id)-only shuffles
+    as connected_components."""
+    lab = labels.select(
+        F.col("doc_id").alias(src), F.col("component_id").alias(dst)
+    ).where(F.col(src) != F.col(dst))
+    np = new_pairs.select(src, dst)
+    return connected_components(lab.unionByName(np), src=src, dst=dst,
+                                max_iter=max_iter)
+
+
+def minhash_estimate_audit(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    num_hashes: int = 16,
+    jaccard_threshold: float = 0.5,
+    k: int = SHINGLE_K,
+    max_rows: int | None = 100_000,
+) -> DataFrame:
+    """MinHash estimator audit — the dedup-side sibling of ann_recall:
+    for every TRUE near-dup pair (exact shingle-set Jaccard >=
+    threshold), compare the MinHash ESTIMATE (matching signature
+    components / num_hashes, an unbiased estimator with stderr
+    ~ sqrt(j(1-j)/H)) against the exact value. This is how you SIZE
+    num_hashes: if the observed |error| tail crosses the banding
+    threshold margin, pairs are being missed/over-collected and H must
+    grow.
+
+    Signatures here use the SEEDED-MD5 family (min over shingles of
+    hash60(j || ':' || shingle)) rather than production's xxhash64
+    (minhash_signature) — estimator STATISTICS are hash-family-
+    independent (any uniform family gives the same expectation), and
+    md5-hex15 is the one construction the DuckDB oracle can replay
+    bit-exactly (texthash.py discipline; xxhash64 has no DuckDB
+    equivalent — the documented divergence).
+
+    All-pairs-within-corpus like ngram_jaccard_pairs, and guarded the
+    same way: audits run on samples, so inputs over ``max_rows`` are
+    refused (pass None to waive). Returns
+    (id_a, id_b, jaccard, est_jaccard, abs_err), all rounded 6."""
+    if num_hashes < 1:
+        raise ValueError("minhash_estimate_audit: num_hashes must be >= 1")
+    h = int(num_hashes)
+    base = (
+        word_shingles(df.select(id_col, text_col), text_col, k=k)
+        .select(F.col(id_col).alias("id"), F.array_distinct("shingles").alias("_sh"))
+        .where(F.size("_sh") > 0)
+    )
+    if max_rows is not None:
+        # in-plan bound via a broadcast one-row count — NOT a global
+        # window, which would move the shingle arrays to one partition
+        # just to count them
+        cnt = base.agg(F.count(F.lit(1)).alias("_cnt"))
+        base = base.crossJoin(F.broadcast(cnt)).where(
+            F.when(
+                F.col("_cnt") > F.lit(max_rows),
+                F.raise_error(
+                    F.lit(
+                        "minhash_estimate_audit is the all-pairs audit "
+                        f"variant: corpus exceeds max_rows={max_rows}. "
+                        "Audit a sample, or pass max_rows=None to accept "
+                        "O(n^2)."
+                    )
+                ).cast("boolean"),
+            ).otherwise(F.lit(True))
+        ).drop("_cnt")
+    sig = F.expr(
+        f"transform(sequence(0, {h - 1}), j -> array_min(transform(_sh, "
+        f"s -> cast(conv(substring(md5(concat(cast(j as string), ':', s)), 1, 15), 16, 10) as bigint))))"
+    )
+    sided = base.select("id", "_sh", sig.alias("_sig"))
+    a = sided.select(
+        F.col("id").alias("id_a"), F.col("_sh").alias("sh_a"), F.col("_sig").alias("sig_a")
+    )
+    b = sided.select(
+        F.col("id").alias("id_b"), F.col("_sh").alias("sh_b"), F.col("_sig").alias("sig_b")
+    )
+    jac = F.size(F.array_intersect("sh_a", "sh_b")) / F.size(
+        F.array_union("sh_a", "sh_b")
+    )
+    est = F.size(
+        F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda v: v)
+    ) / F.lit(float(h))
+    return (
+        a.crossJoin(b)
+        .where(F.col("id_a") < F.col("id_b"))
+        .withColumn("_j", jac)
+        .where(F.col("_j") >= jaccard_threshold)
+        .withColumn("_e", est)
+        .select(
+            "id_a",
+            "id_b",
+            F.round("_j", 6).alias("jaccard"),
+            F.round("_e", 6).alias("est_jaccard"),
+            F.round(F.abs(F.col("_j") - F.col("_e")), 6).alias("abs_err"),
+        )
+    )

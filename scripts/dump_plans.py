@@ -69,6 +69,12 @@ def main() -> None:
             em.queries()["boilerplate_shingles"](spark, sf),
         ),
         (
+            "Benchmark decontamination (curation)",
+            "The benchmark n-gram side is a BroadcastExchange; the corpus "
+            "side shuffles once on doc id after a map-side partial agg.",
+            em.queries()["decontaminate"](spark, sf),
+        ),
+        (
             "TPC-H Q9-style star join (part/supplier/nation)",
             "All three dimension tables are BroadcastExchange; exactly one "
             "hash exchange (the final nation x brand aggregate), bounded "
@@ -90,13 +96,35 @@ def main() -> None:
             ),
         ),
         (
-            "IVF ANN (broadcast-centroid branch, 80 centroids)",
-            "The centroids ride as a single-row broadcast array: map-side "
+            "Incremental MinHash dedup (new crawl vs persisted index)",
+            "Only the new slice is shingled up front; the corpus arrives "
+            "as the (id, band, sig) index. The exact-Jaccard verify side "
+            "LEFT SEMI-prunes corpus docs to candidate ids BEFORE "
+            "shingling.",
+            em.queries()["dedup_incremental"](spark, sf),
+        ),
+        (
+            "IVF ANN (k-means quantizer + n_probe search)",
+            "Broadcast centroid encoding at EVERY k since round 4: the "
+            "centroids ride as a single-row broadcast array (map-side "
             "cross join + per-row HOF sorted-distance prefix — zero "
-            "exchanges before the ids-only cluster join, and a plan size "
-            "independent of k. Vectors join back once per side for the "
-            "exact re-rank.",
-            em.queries()["ann_ivf_bcast"](spark, sf),
+            "exchanges before the ids-only cluster join, plan size "
+            "independent of k, and the plan is IDENTICAL across calls "
+            "and Lloyd rounds so generated code is reused; per-call "
+            "literals cost ~1s of re-analysis/codegen each). Vectors "
+            "join back once per side for the exact re-rank.",
+            em.queries()["ann_ivf"](spark, sf),
+        ),
+        (
+            "SemDeDup semantic dedup (result join of the component stage)",
+            "Nearest-centroid assignment is map-side (single-row "
+            "broadcast centroid array; plan-guarded in "
+            "test_plan_shapes). The in-cluster pair join is the one "
+            "place vectors deliberately ride a shuffle — keyed on the "
+            "cluster id, bounded by cluster size (k must scale with n; "
+            "see SCALE10X). Components run eagerly upstream (Scan "
+            "ExistingRDD here).",
+            em.queries()["semantic_dedup"](spark, sf),
         ),
         (
             "Crawl snapshot diff",
@@ -104,6 +132,58 @@ def main() -> None:
             "full-outer SortMergeJoin — ~80 bytes per url through the "
             "exchanges, page bytes never leave the scan.",
             em.queries()["crawl_diff"](spark, sf),
+        ),
+        (
+            "Training-order shuffle + shards (two-phase prefix sums)",
+            "Exactly ONE non-broadcast Exchange: the prefix-sum window's "
+            "bucket exchange on the deterministic key-space slice of the "
+            "uniform 60-bit order key (no range repartition, no "
+            "checkpoint). The exchanged projection carries (id, key, "
+            "counts) only — never text; the offset table joins back as a "
+            "BroadcastExchange.",
+            em.queries()["shuffle_shards"](spark, sf),
+        ),
+        (
+            "Temperature corpus rebalancing (derived-rate sampler)",
+            "The corpus side never hash-shuffles: the only hash "
+            "Exchanges are the stratum-count groupBys (collapsed to "
+            "#strata rows by map-side partial aggregation); the "
+            "threshold table applies as a null-safe BroadcastHashJoin "
+            "filter over the corpus scan.",
+            em.queries()["temperature_sample"](spark, sf),
+        ),
+        (
+            "Robots-policy gate (per-host directive fold)",
+            "Directives roll up to ONE array row per host (the only "
+            "hash exchange, keyed on the host grouping expression) and "
+            "reach the corpus as a BroadcastHashJoin; the allow/deny "
+            "decision is a per-row fold — no Generate/explode, so no "
+            "directive row ever multiplies a url row.",
+            em.queries()["robots_filter"](spark, sf),
+        ),
+        (
+            "Surgical decontamination (decontaminate_spans)",
+            "The benchmark collapses to a distinct shingle-hash set and "
+            "reaches the corpus occurrences as a BroadcastHashJoin "
+            "LeftSemi — occurrence rows (id, pos) shuffle exactly once "
+            "into the start-array aggregate; strictly fewer exchanges "
+            "than dedup_spans (no corpus-wide hash groupBy).",
+            em.queries()["decontaminate_spans"](spark, sf),
+        ),
+        (
+            "Crawl frontier (politeness waves)",
+            "Priority joins as a BroadcastHashJoin (one row per host); "
+            "the slot window partitions by host — the honest per-host "
+            "sequential constraint — and wave derivation is map-only.",
+            em.queries()["crawl_frontier"](spark, sf),
+        ),
+        (
+            "Incremental connected components (merge_components)",
+            "Label edges union the new pair batch, then the same "
+            "hub-degree-bounded star rounds as connected_components — "
+            "scalar min aggregates, (id, id)-only exchanges, "
+            "localCheckpoint per round ('Scan ExistingRDD').",
+            em.queries()["components_incremental"](spark, sf),
         ),
     ]
 

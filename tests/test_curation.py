@@ -1,10 +1,15 @@
-"""Unit tests for the curation and crawl operators (boilerplate shingle
-stats, host caps, blocklist and robots filters, crawl diff and churn)
-and the curation stage."""
+"""Unit tests for cross-document curation operators (boilerplate
+shingle dedup, benchmark decontamination, stratified sampling, host
+caps)."""
 
 import pyspark.sql.functions as F
 
-from ocr_poc_spark.operators.curation import boilerplate_shingle_stats, host_cap
+from ocr_poc_spark.operators.curation import (
+    boilerplate_shingle_stats,
+    decontaminate,
+    host_cap,
+    stratified_sample,
+)
 
 BOILER = "we use cookies to improve your experience on this site"
 
@@ -34,6 +39,41 @@ def test_boilerplate_ratio_bounds_and_short_doc(spark):
     # prefix window) but their tails differ.
     assert 0.0 < out[1]["boiler_ratio"] < 1.0
     assert out[1]["n_boiler"] == out[2]["n_boiler"]
+
+
+def test_decontaminate_flags_benchmark_overlap(spark):
+    docs = _docs(spark)
+    bench = spark.createDataFrame(
+        [(100, BOILER + " held out eval continuation", "en", "bench")],
+        "doc_id long, text string, lang string, source string",
+    )
+    out = {r["doc_id"]: r for r in decontaminate(docs, bench, n=8).collect()}
+    # Docs 1/2/5 contain the full boilerplate sentence -> 8-gram overlap.
+    assert out[1]["contaminated"] and out[2]["contaminated"] and out[5]["contaminated"]
+    assert not out[3]["contaminated"]
+    # Doc 4 has no 8-grams at all but still gets a row.
+    assert out[4]["n_ngrams"] == 0 and not out[4]["contaminated"]
+    # Overlap never exceeds the doc's own n-gram count.
+    assert all(r["n_overlap"] <= r["n_ngrams"] for r in out.values())
+
+
+def test_stratified_sample_deterministic_and_exhaustive(spark):
+    docs = spark.range(0, 2000).select(
+        F.col("id").alias("doc_id"),
+        F.when(F.col("id") % 2 == 0, "en").otherwise("fr").alias("lang"),
+    )
+    kept = stratified_sample(docs, {"en": 0.5, "fr": 0.1}, strat_col="lang")
+    counts = {r["lang"]: r["n"] for r in kept.groupBy("lang").agg(F.count("*").alias("n")).collect()}
+    # md5 buckets are uniform: expect ~500 en, ~100 fr with slack.
+    assert 400 <= counts["en"] <= 600
+    assert 60 <= counts.get("fr", 0) <= 140
+    # Deterministic: the same call keeps the same ids.
+    a = sorted(r["doc_id"] for r in kept.collect())
+    b = sorted(r["doc_id"] for r in stratified_sample(docs, {"en": 0.5, "fr": 0.1}, strat_col="lang").collect())
+    assert a == b
+    # Unlisted strata default to rate 0.
+    none_kept = stratified_sample(docs, {"en": 0.5}, strat_col="lang")
+    assert none_kept.where(F.col("lang") == "fr").count() == 0
 
 
 def test_host_cap_stable_under_partitioning(spark):
@@ -90,6 +130,24 @@ def test_run_curate_stage(spark, pages_df, tmp_path):
     )
 
 
+def test_normalize_urls_edges(spark):
+    from ocr_poc_spark.operators.curation import normalize_urls
+
+    cases = {
+        "HTTP://WWW.Ex.COM:80/A/b?utm_source=tw&b=2&a=1#frag": "http://www.ex.com/A/b?a=1&b=2",
+        "https://ex.com:443": "https://ex.com/",
+        "https://ex.com:8443/x": "https://ex.com:8443/x",  # non-default port kept
+        "http://ex.com:443/x": "http://ex.com:443/x",  # :443 is not http's default
+        "https://ex.com/x?ref=home": "https://ex.com/x",
+        "https://ex.com/x?ref2=keep&fbclid=1": "https://ex.com/x?ref2=keep",  # prefix!=param
+        "https://ex.com/y?": "https://ex.com/y",
+        "not a url": "not a url",  # pass-through
+    }
+    df = spark.createDataFrame([(u,) for u in cases], "url string")
+    out = {r["url"]: r["url_norm"] for r in normalize_urls(df).collect()}
+    assert out == cases
+
+
 def test_null_text_docs_keep_rows(spark):
     """NULL text must not vanish from curation outputs (ANSI size(NULL)
     is NULL, which satisfies neither size branch without the coalesce)."""
@@ -99,6 +157,8 @@ def test_null_text_docs_keep_rows(spark):
     )
     b = {r["doc_id"]: r for r in boilerplate_shingle_stats(docs, k=5).collect()}
     assert b[1]["n_shingles"] == 0 and b[1]["boiler_ratio"] == 0.0
+    d = {r["doc_id"]: r for r in decontaminate(docs, docs.where("doc_id = 2"), n=8).collect()}
+    assert d[1]["n_ngrams"] == 0 and not d[1]["contaminated"]
 
 
 def test_run_curate_dup_urls_and_zero_cap(spark, tmp_path):
@@ -136,6 +196,136 @@ def test_run_curate_dup_urls_and_zero_cap(spark, tmp_path):
     assert len(rows0) == 4 and not any(r["kept"] for r in rows0)
 
 
+def test_normalize_urls_idempotent_combinatorial(spark):
+    """Canonicalization invariants over a combinatorial URL corpus:
+    normalize(normalize(u)) == normalize(u); no fragment or tracking
+    param survives; scheme/host come out lowercase."""
+    import itertools
+
+    from ocr_poc_spark.operators.curation import normalize_urls
+
+    schemes = ["http", "HTTPS", "ftp"]
+    hosts = ["Ex.COM", "ex.com:80", "EX.com:443", "ex.com:8080", ""]
+    paths = ["", "/", "/A/b%20c", "//double"]
+    queries = ["", "?", "?utm_source=x", "?b=2&a=1", "?ref", "?ref=&x=1&utm_a=2",
+               "?a=1&a=0", "?=bare&key="]
+    frags = ["", "#f", "#a?b=1"]
+    urls = [
+        f"{s}://{h}{p}{q}{fr}"
+        for s, h, p, q, fr in itertools.product(schemes, hosts, paths, queries, frags)
+    ] + ["", "no-scheme/path?utm_source=x", "http:/one-slash", "://nohost"]
+    df = spark.createDataFrame([(u,) for u in urls], "url string")
+    once = normalize_urls(df).select(F.col("url_norm").alias("url"))
+    twice = normalize_urls(once)
+    rows = twice.collect()
+    assert all(r["url_norm"] == r["url"] for r in rows)  # idempotent
+    for r in rows:
+        u = r["url"]
+        if "://" not in u:
+            continue  # pass-through inputs
+        assert "#" not in u  # fragments never survive normalization
+        if "?" in u:
+            for prm in u.split("?", 1)[1].split("&"):
+                assert not prm.startswith("utm_") and prm.split("=")[0] not in (
+                    "fbclid", "gclid", "msclkid", "ref",
+                )
+
+
+def test_chunk_documents_windows(spark):
+    from ocr_poc_spark.operators.curation import chunk_documents
+
+    docs = spark.createDataFrame(
+        [(1, " ".join(f"w{i}" for i in range(10))), (2, "a b"), (3, None)],
+        "doc_id long, text string",
+    )
+    out = chunk_documents(docs, chunk_tokens=4, stride=2).collect()
+    by_doc = {}
+    for r in out:
+        by_doc.setdefault(r["doc_id"], []).append(r)
+    # doc 1: 10 words, windows start at 0,2,4,6 -> 1+ceil(6/2)=4 chunks
+    c1 = sorted(by_doc[1], key=lambda r: r["chunk_idx"])
+    assert [r["n_tokens"] for r in c1] == [4, 4, 4, 4]
+    assert c1[0]["chunk_text"] == "w0 w1 w2 w3"
+    assert c1[1]["chunk_text"] == "w2 w3 w4 w5"
+    assert c1[-1]["chunk_text"] == "w6 w7 w8 w9"
+    # overlap coverage: every word appears in some chunk
+    covered = set(" ".join(r["chunk_text"] for r in c1).split())
+    assert covered == {f"w{i}" for i in range(10)}
+    # doc 2: shorter than one window -> single short chunk
+    assert len(by_doc[2]) == 1 and by_doc[2][0]["n_tokens"] == 2
+    # doc 3 (NULL text): no chunks at all (no phantom 1-token rows)
+    assert 3 not in by_doc
+    # stride > chunk_tokens would silently drop inter-window words
+    import pytest
+
+    with pytest.raises(ValueError):
+        chunk_documents(docs, chunk_tokens=4, stride=5)
+
+
+def test_vocab_topk_counts_and_order(spark):
+    from ocr_poc_spark.operators.curation import vocab_topk
+
+    docs = spark.createDataFrame(
+        [(1, "apple apple banana"), (2, "apple cherry"), (3, "banana")],
+        "doc_id long, text string",
+    )
+    out = vocab_topk(docs, top_k=2, min_count=1).collect()
+    assert [(r["term"], r["term_count"], r["doc_count"]) for r in out] == [
+        ("apple", 3, 2),
+        ("banana", 2, 2),
+    ]
+
+
+def test_pack_sequences_budgets_and_attribution(spark):
+    """Exact token budgets + boundary attribution: every sequence except
+    the last tiles [0, seq_len) gap- and overlap-free; every chunk's
+    pieces reassemble exactly its tokens; chunk spans align with their
+    in-sequence spans; zero-token chunks are skipped."""
+    import collections
+
+    from ocr_poc_spark.operators.curation import pack_sequences
+
+    rows = [(d, c, (d * 7 + c * 3) % 40 + 1) for d in range(25) for c in range(d % 4 + 1)]
+    rows.append((99, 0, 0))  # zero-token chunk: must carry nothing
+    df = spark.createDataFrame(rows, "doc_id long, chunk_idx int, n_tokens int")
+    out = [tuple(r) for r in pack_sequences(df, seq_len=50).collect()]
+
+    per_seq = collections.defaultdict(list)
+    per_chunk = collections.defaultdict(int)
+    for seq, ts, te, d, c, cs, ce in out:
+        assert ce - cs == te - ts > 0
+        per_seq[seq].append((ts, te))
+        per_chunk[(d, c)] += ce - cs
+    last = max(per_seq)
+    for s, spans in per_seq.items():
+        spans.sort()
+        assert spans[0][0] == 0
+        assert all(spans[i][1] == spans[i + 1][0] for i in range(len(spans) - 1))
+        if s != last:
+            assert spans[-1][1] == 50
+    assert per_chunk == {(d, c): n for d, c, n in rows if n > 0}
+    total = sum(n for _, _, n in rows)
+    assert sorted(per_seq) == list(range(total // 50 + (1 if total % 50 else 0)))
+
+
+def test_pack_sequences_partition_independent(spark):
+    """The packing rule is a function of the global chunk order only:
+    output must be identical at any input partitioning / parallelism."""
+    from ocr_poc_spark.operators.curation import pack_sequences
+
+    rows = [(d, c, (d * 13 + c) % 30 + 1) for d in range(40) for c in range(3)]
+    df = spark.createDataFrame(rows, "doc_id long, chunk_idx int, n_tokens int")
+    ref = sorted(tuple(r) for r in pack_sequences(df.repartition(1), 64, n_partitions=1).collect())
+    for p in (3, 16):
+        got = sorted(tuple(r) for r in pack_sequences(df.repartition(p), 64, n_partitions=p).collect())
+        assert got == ref, f"packing differs at parallelism {p}"
+
+    import pytest
+
+    with pytest.raises(ValueError):
+        pack_sequences(df, seq_len=0)
+
+
 def test_host_cap_prefilter_identical_on_hot_host(spark):
     """The hot-host pre-filter must not change the kept set or the
     surviving ranks: on a fixture where one host owns 10% of all rows,
@@ -161,6 +351,79 @@ def test_host_cap_prefilter_identical_on_hot_host(spark):
         assert got == ref, f"kept set differs at parallelism {p}"
     hot_kept = [r for r in ref if r[1] == "hot.example"]
     assert len(hot_kept) == 7  # the hot host is really capped
+
+
+def test_strip_boilerplate_lines(spark):
+    """Line dedup must REMOVE corpus-repeated lines from every doc,
+    preserve unique lines (and blank lines) verbatim in order, and
+    return one row per input doc — including docs with no newlines,
+    fully-stripped docs and NULL text."""
+    from ocr_poc_spark.operators.curation import strip_boilerplate_lines
+
+    d = spark.createDataFrame(
+        [
+            (1, "Subscribe now\nreal content one\n\nCopyright 2024"),
+            (2, "subscribe now \nreal content two\nCopyright 2024"),
+            (3, "totally unique\nlines here"),
+            (4, ""),
+            (5, None),
+            (6, "Subscribe now"),
+        ],
+        "doc_id long, text string",
+    )
+    rows = {r["doc_id"]: r for r in strip_boilerplate_lines(d).collect()}
+    assert len(rows) == 6
+    # normalized matching ('subscribe now ' == 'Subscribe now'); blank
+    # line in doc 1 survives (structure, never counted)
+    assert rows[1]["text_clean"] == "real content one\n"
+    assert rows[1]["n_lines"] == 4 and rows[1]["n_removed"] == 2
+    assert rows[2]["text_clean"] == "real content two"
+    assert rows[3]["text_clean"] == "totally unique\nlines here"
+    assert rows[3]["n_removed"] == 0
+    assert rows[4]["text_clean"] == "" and rows[4]["n_lines"] == 1
+    assert rows[5]["text_clean"] == ""
+    assert rows[6]["text_clean"] == "" and rows[6]["n_removed"] == 1
+    # idempotent: stripping the stripped corpus removes nothing new
+    again = strip_boilerplate_lines(
+        spark.createDataFrame(
+            [(k, v["text_clean"]) for k, v in rows.items()],
+            "doc_id long, text string",
+        )
+    ).collect()
+    assert all(r["n_removed"] == 0 for r in again)
+
+
+def test_split_corpus_deterministic_and_leakage_safe(spark):
+    """Every row gets exactly one split; fractions land near quotas;
+    keying on the host column sends a whole host to one split; bad
+    fraction sums raise."""
+    import pytest
+
+    from ocr_poc_spark.operators.curation import split_corpus
+
+    d = spark.createDataFrame(
+        [(i, f"host{i % 17}.example") for i in range(2000)],
+        "doc_id long, source string",
+    )
+    out = split_corpus(d, {"train": 0.8, "val": 0.1, "test": 0.1})
+    counts = {r["split"]: r["n"] for r in out.groupBy("split").agg(
+        F.count(F.lit(1)).alias("n")).collect()}
+    assert set(counts) <= {"train", "val", "test"}
+    assert sum(counts.values()) == 2000
+    assert counts["train"] > counts["val"] and counts["train"] > counts["test"]
+
+    again = {tuple(r) for r in split_corpus(
+        d, {"train": 0.8, "val": 0.1, "test": 0.1}).collect()}
+    assert again == {tuple(r) for r in out.collect()}
+
+    by_host = split_corpus(d, {"train": 0.8, "val": 0.1, "test": 0.1}, by="source")
+    assert by_host.groupBy("source").agg(
+        F.countDistinct("split").alias("k")).where(F.col("k") > 1).count() == 0
+
+    with pytest.raises(ValueError, match="sum to"):
+        split_corpus(d, {"train": 0.8, "val": 0.1})
+    with pytest.raises(ValueError, match="empty"):
+        split_corpus(d, {})
 
 
 def test_crawl_diff_statuses_and_changed_slice(spark):
@@ -244,6 +507,34 @@ def test_crawl_churn_stats_per_host(spark):
     assert abs(a["churn"] - round(2 / 3, 6)) < 1e-9 and b["churn"] == 0.5
 
 
+def test_split_corpus_rejects_negative_fractions(spark):
+    import pytest
+
+    from ocr_poc_spark.operators.curation import split_corpus
+
+    d = spark.createDataFrame([(1,)], "doc_id long")
+    with pytest.raises(ValueError, match="non-negative"):
+        split_corpus(d, {"train": 1.2, "val": -0.2})
+
+
+def test_split_corpus_null_key_raises(spark):
+    """A NULL split key must fail loudly, never silently yield
+    split=NULL (a row lost from all three partitions)."""
+    import pytest
+
+    from ocr_poc_spark.operators.curation import split_corpus
+
+    d = spark.createDataFrame(
+        [(1, "h1"), (2, None)], "doc_id long, source string"
+    )
+    ok = split_corpus(
+        d.where("source IS NOT NULL"), {"train": 1.0}, by="source"
+    ).collect()
+    assert [r["split"] for r in ok] == ["train"]
+    with pytest.raises(Exception, match="NULL 'source' key"):
+        split_corpus(d, {"train": 1.0}, by="source").collect()
+
+
 def test_url_blocklist_filter_suffix_semantics(spark):
     """Exact-domain and subdomain matches are blocked; lookalike
     suffixes are not; case-insensitive; unparseable urls survive;
@@ -273,6 +564,189 @@ def test_url_blocklist_filter_suffix_semantics(spark):
         url_blocklist_filter(d, [])
     with pytest.raises(ValueError, match="empty domain"):
         url_blocklist_filter(d, ["ok.example", "  "])
+
+
+def test_dedup_spans_exact_semantics(spark):
+    """Span-level exact dedup (Lee et al. 2022 style): the globally
+    first (doc_id, pos) occurrence of each duplicated k-shingle keeps
+    its window; every other occurrence loses the union of its lost
+    windows, which covers the whole maximal duplicated region."""
+    from ocr_poc_spark.operators.curation import dedup_spans
+
+    shared = "s1 s2 s3 s4 s5 s6"  # 6-token duplicated region, k=4
+    rows = [
+        (1, f"a1 a2 {shared} a3 a4"),
+        (2, f"b1 b2 b3 {shared} b4"),
+        (3, "c1 c2 c3 c4 c5 c6 c7 c8"),       # unique -> untouched
+        (4, "tiny doc here"),                  # < k tokens -> untouched
+        (5, None),                             # NULL -> '' out
+        (6, f"{shared} d1 d2 {shared}"),       # same-doc repeat
+    ]
+    d = spark.createDataFrame(rows, "doc_id long, text string")
+    out = {r["doc_id"]: r for r in dedup_spans(d, span_tokens=4).collect()}
+    assert set(out) == {1, 2, 3, 4, 5, 6}
+    # doc 1 holds the global first occurrence of every shared shingle
+    # (doc_id 1 < 2 < 6): fully kept.
+    assert out[1]["text_clean"] == f"a1 a2 {shared} a3 a4"
+    assert out[1]["n_removed"] == 0 and out[1]["n_tokens"] == 10
+    # doc 2 loses the whole 6-token region (union of its 3 lost
+    # 4-token windows), keeping its unique frame.
+    assert out[2]["text_clean"] == "b1 b2 b3 b4"
+    assert out[2]["n_removed"] == 6 and out[2]["n_tokens"] == 10
+    assert out[3]["n_removed"] == 0
+    assert out[4]["text_clean"] == "tiny doc here"
+    assert out[4]["n_removed"] == 0 and out[4]["n_tokens"] == 3
+    assert out[5]["text_clean"] == "" and out[5]["n_tokens"] == 0
+    # doc 6: both its copies lose to doc 1; everything shared goes,
+    # including the cross-boundary shingles that swallow d1 d2.
+    assert "s1" not in out[6]["text_clean"].split()
+    assert out[6]["n_tokens"] == 14 and out[6]["n_removed"] >= 12
+
+
+def test_dedup_spans_partition_independent(spark):
+    from ocr_poc_spark.operators.curation import dedup_spans
+
+    shared = " ".join(f"w{i}" for i in range(12))
+    rows = [(i, f"u{i}a u{i}b {shared} u{i}c") for i in range(1, 9)] + [
+        (9, "lone text with no duplication at all whatsoever")
+    ]
+    d = spark.createDataFrame(rows, "doc_id long, text string")
+    a = sorted(
+        dedup_spans(d.repartition(1), span_tokens=5).collect(),
+        key=lambda r: r["doc_id"],
+    )
+    b = sorted(
+        dedup_spans(d.repartition(7), span_tokens=5).collect(),
+        key=lambda r: r["doc_id"],
+    )
+    assert [tuple(r) for r in a] == [tuple(r) for r in b]
+    # only doc 1 (global minimum) keeps the shared region
+    keepers = [r["doc_id"] for r in a if "w0" in r["text_clean"].split()]
+    assert keepers == [1]
+
+
+def test_dedup_spans_validates_params(spark):
+    import pytest
+
+    from ocr_poc_spark.operators.curation import dedup_spans
+
+    d = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
+    with pytest.raises(ValueError):
+        dedup_spans(d, span_tokens=1)
+    with pytest.raises(ValueError):
+        dedup_spans(d, min_count=1)
+
+
+def test_temperature_sample_rates_and_null_stratum(spark):
+    """Temperature rebalancing: the rarest stratum is kept whole, a
+    bigger stratum is kept at floor(sqrt(n_min/n)*denom)/denom exactly
+    (same md5 bucket rule as stratified_sample), NULL strata survive as
+    their own stratum (the null-safe-join contract), alpha=1 keeps the
+    natural distribution, and bad alphas raise."""
+    import math
+
+    import pytest
+
+    from ocr_poc_spark.operators.curation import sample_bucket, temperature_sample
+
+    rows = (
+        [(i, "x", "en", "s") for i in range(400)]
+        + [(1000 + i, "x", "fr", "s") for i in range(25)]
+        + [(2000 + i, "x", None, "s") for i in range(25)]
+    )
+    df = spark.createDataFrame(rows, "doc_id long, text string, lang string, source string")
+
+    out = temperature_sample(df, alpha=0.5).collect()
+    by_lang = {}
+    for r in out:
+        by_lang.setdefault(r["lang"], set()).add(r["doc_id"])
+    # rarest strata (fr and NULL tie at 25): rate 1.0 -> kept whole.
+    assert by_lang.get("fr", set()) == {1000 + i for i in range(25)}
+    assert by_lang.get(None, set()) == {2000 + i for i in range(25)}
+    # en: threshold floor(sqrt(25/400)*10000) = 2500; recompute the
+    # exact kept set from the operator's own bucket rule.
+    thresh = math.floor(math.sqrt(25 / 400) * 10000)
+    assert thresh == 2500
+    buckets = {
+        r["doc_id"]: r["b"]
+        for r in df.select("doc_id", sample_bucket().alias("b")).collect()
+    }
+    expect = {i for i in range(400) if buckets[i] < thresh}
+    assert by_lang.get("en", set()) == expect
+    # alpha=1: natural distribution — every row kept (all rates 1).
+    assert len(temperature_sample(df, alpha=1.0).collect()) == len(rows)
+    # extreme-skew clamp: with denom=10 and rates sqrt(25/400)=0.25 the
+    # en threshold floors to 2; shrink further (denom=10, alpha -> rate
+    # 1/16 at alpha=0.5 needs n=6400) — use alpha=0 (rate n_min/n =
+    # 1/16 -> floor(0.625) would be 0) and check the stratum SURVIVES.
+    skew = spark.createDataFrame(
+        [(i, "x", "en" if i < 1600 else "fr", "s") for i in range(1700)],
+        "doc_id long, text string, lang string, source string",
+    )
+    kept_en = (
+        temperature_sample(skew, alpha=0.0, denom=10)
+        .where("lang = 'en'")
+        .count()
+    )
+    assert kept_en > 0  # clamped to 1 bucket, never zeroed out
+    # output schema is the input schema (helper columns dropped).
+    assert temperature_sample(df).columns == df.columns
+    for bad in (-0.1, 1.5):
+        with pytest.raises(ValueError):
+            temperature_sample(df, alpha=bad)
+
+
+def test_shuffle_shards_order_shards_and_invariance(spark):
+    """Training-order shuffle: positions are a permutation, token
+    offsets are the exclusive prefix sums in position order, shards cut
+    greedily at the budget without splitting docs, NULL/negative token
+    counts occupy a position with 0 tokens, a different seed yields a
+    different order, and output is identical at any parallelism."""
+    import pytest
+
+    from ocr_poc_spark.operators.curation import shuffle_shards
+
+    rows = [(i, (i * 17) % 50 + 1) for i in range(300)]
+    rows += [(900, None), (901, -3)]  # NULL / negative -> 0 tokens
+    df = spark.createDataFrame(rows, "doc_id long, n_tokens int")
+
+    out = sorted(
+        (r["pos"], r["tok_offset"], r["shard_id"], r["doc_id"])
+        for r in shuffle_shards(df, shard_tokens=500, seed="ep0").collect()
+    )
+    assert [p for p, *_ in out] == list(range(len(rows)))
+    ntok = dict(rows)
+    run = 0
+    for pos, off, shard, doc in out:
+        assert off == run, f"offset mismatch at pos {pos}"
+        assert shard == off // 500
+        run += max(ntok[doc] or 0, 0)
+    # shard sizes: assignment is by START offset, so a doc straddling a
+    # boundary tips its whole length into the earlier shard — non-last
+    # shard token sums land within one max-doc-length of the budget on
+    # either side (the whole-doc sharding tolerance), never further.
+    sizes = {}
+    for pos, off, shard, doc in out:
+        sizes[shard] = sizes.get(shard, 0) + max(ntok[doc] or 0, 0)
+    last = max(sizes)
+    assert all(500 - 50 < s < 500 + 51 for sh, s in sizes.items() if sh != last)
+    # shard ids are contiguous from 0.
+    assert sorted(sizes) == list(range(len(sizes)))
+
+    # parallelism invariance + seed sensitivity.
+    def rows_of(res):
+        return sorted(
+            (r["pos"], r["tok_offset"], r["shard_id"], r["doc_id"])
+            for r in res.collect()
+        )
+
+    a = rows_of(shuffle_shards(df.repartition(1), 500, seed="ep0", n_partitions=1))
+    b = rows_of(shuffle_shards(df.repartition(13), 500, seed="ep0", n_partitions=13))
+    assert a == out == b
+    c = rows_of(shuffle_shards(df, 500, seed="ep1"))
+    assert c != a
+    with pytest.raises(ValueError):
+        shuffle_shards(df, shard_tokens=0)
 
 
 def test_robots_filter_longest_match_semantics(spark):
@@ -332,5 +806,223 @@ def test_robots_filter_host_normalization_fail_closed(spark):
     )
     kept = {r["doc_id"] for r in robots_filter(df, rules).collect()}
     assert kept == {3, 4, 5}
+
+
+def test_decontaminate_spans_excises_benchmark_text(spark):
+    """Surgical decontamination: every occurrence of a benchmark
+    k-shingle is excised (no surviving canonical copy — the goal is
+    zero eval overlap), overlapping matches cover the maximal leaked
+    region, clean docs and short docs pass through, NULL -> ''."""
+    from ocr_poc_spark.operators.curation import decontaminate_spans
+
+    leak = "q1 q2 q3 q4 q5 q6"  # 6-token benchmark region, k=4
+    bench = spark.createDataFrame(
+        [(f"eval prompt {leak} eval answer",), ("short",)], "text string"
+    )
+    rows = [
+        (1, f"a1 a2 {leak} a3 a4"),            # mid-doc leak
+        (2, f"{leak} b1 {leak}"),              # two copies, both go
+        (3, "c1 c2 c3 c4 c5 c6 c7 c8"),        # clean -> untouched
+        (4, "tiny doc"),                       # < k tokens -> untouched
+        (5, None),                             # NULL -> '' out
+    ]
+    d = spark.createDataFrame(rows, "doc_id long, text string")
+    out = {
+        r["doc_id"]: r
+        for r in decontaminate_spans(d, bench, span_tokens=4).collect()
+    }
+    assert set(out) == {1, 2, 3, 4, 5}
+    assert out[1]["text_clean"] == "a1 a2 a3 a4"
+    assert out[1]["n_removed"] == 6 and out[1]["n_tokens"] == 10
+    # doc 2: BOTH copies excised (difference vs dedup_spans); the b1
+    # between them survives — cross-boundary shingles are not in the
+    # benchmark, so removal is exactly the two leaked regions.
+    assert out[2]["text_clean"] == "b1"
+    assert out[2]["n_removed"] == 12
+    assert out[3]["n_removed"] == 0
+    assert out[3]["text_clean"] == "c1 c2 c3 c4 c5 c6 c7 c8"
+    assert out[4]["text_clean"] == "tiny doc" and out[4]["n_removed"] == 0
+    assert out[5]["text_clean"] == "" and out[5]["n_tokens"] == 0
+    # partition independence (broadcast + one groupBy: order-free)
+    a = sorted(
+        tuple(r)
+        for r in decontaminate_spans(
+            d.repartition(7), bench.repartition(3), span_tokens=4
+        ).collect()
+    )
+    assert a == sorted(tuple(out[k]) for k in out)
+    import pytest
+
+    with pytest.raises(ValueError):
+        decontaminate_spans(d, bench, span_tokens=1)
+
+
+def test_crawl_frontier_politeness_waves(spark):
+    """Frontier scheduling: no host exceeds per_host fetches per wave,
+    slots are the deterministic url-hash order (re-planning never
+    reorders), unknown hosts get priority 0, hostless urls share the
+    '' politeness bucket, duplicates collapse."""
+    from ocr_poc_spark.operators.crawl import crawl_frontier
+
+    urls = [(f"https://big.example/p{i}",) for i in range(7)] + [
+        ("https://small.example/a",),
+        ("https://small.example/b",),
+        ("not-a-url",),
+        ("also-not-a-url",),
+        ("https://big.example/p0",),  # duplicate -> collapses
+        (None,),
+    ]
+    u = spark.createDataFrame(urls, "url string")
+    pr = spark.createDataFrame(
+        [("big.example", 9.5)], "host string, priority double"
+    )
+    out = crawl_frontier(u, priority=pr, per_host=2).collect()
+    rows = {r["url"]: r for r in out}
+    assert len(out) == 11  # 7 big + 2 small + 2 hostless, dup+NULL gone
+    # politeness: per (host, wave) at most 2
+    from collections import Counter
+
+    c = Counter((r["host"], r["wave"]) for r in out)
+    assert max(c.values()) <= 2
+    # big.example needs ceil(7/2)=4 waves; small fits in wave 0
+    big_waves = {r["wave"] for r in out if r["host"] == "big.example"}
+    assert big_waves == {0, 1, 2, 3}
+    assert {r["wave"] for r in out if r["host"] == "small.example"} == {0}
+    # priorities: joined for big, 0.0 default elsewhere
+    assert rows["https://big.example/p0"]["priority"] == 9.5
+    assert rows["https://small.example/a"]["priority"] == 0.0
+    assert rows["not-a-url"]["host"] == ""
+    # determinism: same assignment under different partitioning
+    again = sorted(
+        tuple(r) for r in crawl_frontier(
+            u.repartition(5), priority=pr, per_host=2
+        ).collect()
+    )
+    assert again == sorted(tuple(r) for r in out)
+    import pytest
+
+    with pytest.raises(ValueError):
+        crawl_frontier(u, per_host=0)
+
+
+def test_merge_components_incremental_equals_batch(spark):
+    """Incremental CC: merging each batch's pairs into the running
+    label table equals from-scratch CC over the union of all pairs —
+    including cross-batch merges of two pre-existing components and
+    min-label stability."""
+    from ocr_poc_spark.operators.dedup import (
+        connected_components, merge_components,
+    )
+
+    b1 = [(10, 11), (20, 21)]
+    b2 = [(11, 12), (30, 31)]
+    b3 = [(12, 20), (40, 41), (31, 30)]   # merges comp(10) with comp(20)
+    mk = lambda rows: spark.createDataFrame(rows, "id_a long, id_b long")
+
+    labels = connected_components(mk(b1))
+    labels = merge_components(labels, mk(b2))
+    labels = merge_components(labels, mk(b3))
+    got = {(r["doc_id"], r["component_id"]) for r in labels.collect()}
+
+    want = {
+        (r["doc_id"], r["component_id"])
+        for r in connected_components(mk(b1 + b2 + b3)).collect()
+    }
+    assert got == want
+    # the cross-batch merge collapsed to the global min label 10
+    assert (21, 10) in got and (12, 10) in got
+    # untouched component kept its row and label
+    assert (41, 40) in got
+
+
+def test_minhash_estimate_audit_contract(spark):
+    """Estimator audit: identical docs estimate 1.0 with 0 error,
+    disjoint docs never appear (below threshold), the estimate is
+    matching-components/H exactly, and the oversized-corpus guard
+    raises."""
+    import pytest
+
+    from ocr_poc_spark.operators.dedup import minhash_estimate_audit
+
+    t1 = "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10"
+    rows = [
+        (1, t1),
+        (2, t1),                               # identical -> j = 1.0
+        (3, t1 + " extra tail words here"),    # high-overlap pair
+        (4, "completely different tokens that share nothing at all"),
+    ]
+    d = spark.createDataFrame(rows, "doc_id long, text string")
+    out = {(r["id_a"], r["id_b"]): r
+           for r in minhash_estimate_audit(d, num_hashes=16).collect()}
+    assert (1, 2) in out
+    r12 = out[(1, 2)]
+    assert r12["jaccard"] == 1.0 and r12["est_jaccard"] == 1.0
+    assert r12["abs_err"] == 0.0
+    assert all(k[1] != 4 and k[0] != 4 for k in out)
+    # estimates are quantised to 1/16 and errors consistent
+    for r in out.values():
+        assert abs(r["est_jaccard"] * 16 - round(r["est_jaccard"] * 16)) < 1e-9
+        assert r["abs_err"] == round(abs(r["jaccard"] - r["est_jaccard"]), 6)
+
+    with pytest.raises(Exception, match="max_rows"):
+        minhash_estimate_audit(d, max_rows=2).collect()
+
+
+def test_strip_repeated_lines_within_doc(spark):
+    """Self-repetition rewrite: later copies of a line go (case/space
+    insensitive), first occurrences and blank lines stay in order,
+    other docs untouched, NULL -> ''."""
+    from ocr_poc_spark.operators.curation import strip_repeated_lines
+
+    rows = [
+        (1, "Nav Home\nbody one\n\nNAV HOME \nbody two\nnav home"),
+        (2, "unique a\nunique b"),
+        (3, None),
+        (4, "\n\n"),
+    ]
+    d = spark.createDataFrame(rows, "doc_id long, text string")
+    out = {r["doc_id"]: r for r in strip_repeated_lines(d).collect()}
+    assert out[1]["text_clean"] == "Nav Home\nbody one\n\nbody two"
+    assert out[1]["n_lines"] == 6 and out[1]["n_removed"] == 2
+    assert out[2]["text_clean"] == "unique a\nunique b"
+    assert out[2]["n_removed"] == 0
+    assert out[3]["text_clean"] == "" and out[3]["n_lines"] == 1
+    assert out[4]["text_clean"] == "\n\n" and out[4]["n_removed"] == 0
+    # idempotent: a second pass changes nothing
+    again = strip_repeated_lines(
+        spark.createDataFrame(
+            [(1, out[1]["text_clean"])], "doc_id long, text string"
+        )
+    ).first()
+    assert again["text_clean"] == out[1]["text_clean"]
+    assert again["n_removed"] == 0
+
+
+def test_benchmark_coverage_reverse_decontamination(spark):
+    """Bench-side report: a bench doc fully quoted in the corpus covers
+    1.0, a clean doc 0.0, a partial doc in between; sub-n docs report
+    NULL coverage with 0 n-grams."""
+    from ocr_poc_spark.operators.curation import benchmark_coverage
+
+    leaked = "q1 q2 q3 q4 q5 q6 q7 q8"
+    corpus = spark.createDataFrame(
+        [(1, f"intro {leaked} outro words here"), (2, "other page text entirely")],
+        "doc_id long, text string",
+    )
+    bench = spark.createDataFrame(
+        [
+            (10, leaked),                               # fully covered
+            (11, "clean eval item nothing shared here x"),  # 0 coverage
+            (12, f"{leaked} novel tail t1 t2 t3"),      # partial
+            (13, "short"),                              # < n words
+        ],
+        "bench_id long, text string",
+    )
+    out = {r["bench_id"]: r
+           for r in benchmark_coverage(corpus, bench, n=4).collect()}
+    assert out[10]["coverage"] == 1.0 and out[10]["n_ngrams"] == 5
+    assert out[11]["coverage"] == 0.0 and out[11]["n_found"] == 0
+    assert 0.0 < out[12]["coverage"] < 1.0
+    assert out[13]["n_ngrams"] == 0 and out[13]["coverage"] is None
 
 

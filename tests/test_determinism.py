@@ -14,12 +14,16 @@ def test_fused_output_invariant_to_input_partitioning(spark, pages_df, oracle_re
 
 
 def test_session2_operators_invariant_to_input_partitioning(spark):
-    """The crawl diff must produce identical sorted results at 1/7/11-way
-    input partitioning — unordered first()/collect-order dependence
-    would surface here."""
+    """The session-2 operators (semantic dedup, crawl diff, corpus
+    splits) must produce identical sorted results at
+    1/7/11-way input partitioning — unordered first()/collect-order
+    dependence would surface here."""
     import pyspark.sql.functions as F
 
     from ocr_poc_spark.operators.crawl import crawl_diff
+    from ocr_poc_spark.operators.curation import split_corpus
+    from ocr_poc_spark.operators.similarity import semantic_dedup
+    from ocr_poc_spark.operators.textstats import hash_embedding
 
     docs = spark.createDataFrame(
         [
@@ -35,11 +39,27 @@ def test_session2_operators_invariant_to_input_partitioning(spark):
         F.when(F.col("doc_id") % 4 == 0, F.concat("text", F.lit(" v2")))
         .otherwise(F.col("text")).alias("text"),
     )
-    a, b, c = (
-        sorted(map(tuple, crawl_diff(
+    cents = [[float((i * 5 + j) % 7 - 3) for j in range(16)] for i in range(4)]
+
+    def runs(build):
+        outs = []
+        for n in (1, 7, 11):
+            outs.append(sorted(map(tuple, build(n).collect())))
+        return outs
+
+    for name, build in {
+        "split": lambda n: split_corpus(
+            docs.repartition(n), {"train": 0.8, "val": 0.1, "test": 0.1},
+            by="source",
+        ),
+        "crawl_diff": lambda n: crawl_diff(
             old.repartition(n), new.repartition(max(1, n - 2)), id_col="doc_id"
-        ).collect()))
-        for n in (1, 7, 11)
-    )
-    assert a == b == c
-    assert a  # non-trivial output
+        ),
+        "semantic": lambda n: semantic_dedup(
+            hash_embedding(docs.repartition(n), dim=16),
+            cents, id_col="doc_id", cosine_threshold=0.97,
+        ),
+    }.items():
+        a, b, c = runs(build)
+        assert a == b == c, name
+        assert a, name  # non-trivial output

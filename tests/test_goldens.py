@@ -1,8 +1,8 @@
-"""Guards the committed golden parquet (dist/golden/extract_sf001.parquet)
-that backs the extract_pipeline oracle as a second witness: regenerate it
-in memory via scripts/make_goldens.py and assert byte-equality with the
-committed file, so any kernel / page-synthesis drift fails HERE before
-the driver's correctness gate sees a stale golden."""
+"""Guards the committed golden parquets (dist/golden/*) that back the
+ann_lsh and extract_pipeline DuckDB oracles: regenerate them in memory
+via scripts/make_goldens.py and assert byte-equality with the committed
+files, so any kernel / page-synthesis / LSH-parameter drift fails HERE
+before the driver's correctness gate sees a stale golden."""
 
 import os
 import sys
@@ -16,6 +16,16 @@ import make_goldens  # noqa: E402
 
 def _committed(name):
     return pq.read_table(os.path.join(make_goldens.OUT_DIR, name))
+
+
+def test_ann_lsh_golden_is_current():
+    fresh = make_goldens.golden_ann_lsh()
+    assert fresh.equals(_committed("ann_lsh_sf001.parquet"))
+
+
+def test_ann_ivf_golden_is_current():
+    fresh = make_goldens.golden_ann_ivf()
+    assert fresh.equals(_committed("ann_ivf_sf001.parquet"))
 
 
 def test_extract_golden_is_current():
@@ -77,25 +87,10 @@ def test_page_synthesis_matches_spark_side(spark):
         assert spark_pages[url] == payload, url
 
 
-# k-means fixture: 16 centroids over the sf0.01 64-d embeddings, 3 Lloyd
-# iterations, seed 7 (similarity.kmeans_centroids' seeded init).
-IVF_DIM, IVF_CENTROIDS, IVF_ITER, IVF_SEED = 64, 16, 3, 7
-SF_DIR = "/root/testdata/sf0.01"
-
-
-def _sqdist(a: list[float], b: list[float]) -> float:
-    """Left-fold of (x-y)^2 — the exact op sequence of Spark's
-    F.aggregate(zip_with(a, b, (x,y)->(x-y)*(x-y)), 0.0, acc+d)."""
-    acc = 0.0
-    for x, y in zip(a, b):
-        acc = acc + (x - y) * (x - y)
-    return acc
-
-
 def test_ivf_centroid_rounding_margin_and_spark_parity(spark):
-    """kmeans_centroids' exactness rests on 4-decimal centroid rounding
-    absorbing summation-order ulp noise (Spark's task-order sums vs a
-    pure-Python mirror's file-order sums). That only holds if no
+    """The ann_ivf golden's exactness rests on 4-decimal centroid
+    rounding absorbing summation-order ulp noise (Spark's task-order
+    sums vs the mirror's file-order sums). That only holds if no
     pre-round mean sits ON a rounding boundary — so (a) assert every
     per-cell quotient in every Lloyd iteration keeps comfortable
     distance (>1e-6 in units of 1e-4) from the nearest round-half
@@ -105,55 +100,56 @@ def test_ivf_centroid_rounding_margin_and_spark_parity(spark):
     don't widen the rounding."""
     from ocr_poc_spark.operators.similarity import kmeans_centroids
 
-    t = pq.read_table(f"{SF_DIR}/embeddings.parquet")
+    t = pq.read_table(f"{make_goldens.SF_DIR}/embeddings.parquet")
     vecs = [[float(x) for x in v] for v in t.column("embedding").to_pylist()]
 
     import numpy as np
 
-    rs = np.random.RandomState(IVF_SEED + 31)
+    rs = np.random.RandomState(make_goldens.IVF_SEED + 31)
     cents = rs.randn(
-        IVF_CENTROIDS, IVF_DIM
+        make_goldens.IVF_CENTROIDS, make_goldens.IVF_DIM
     ).astype(float).tolist()
 
     def assign(v):
         return min(
-            ((_sqdist(v, c), i) for i, c in enumerate(cents))
+            ((make_goldens._sqdist(v, c), i) for i, c in enumerate(cents))
         )[1]
 
     min_margin = 0.5
-    for _ in range(IVF_ITER):
-        sums = [[0.0] * IVF_DIM for _ in range(IVF_CENTROIDS)]
-        counts = [0] * IVF_CENTROIDS
+    for _ in range(make_goldens.IVF_ITER):
+        sums = [[0.0] * make_goldens.IVF_DIM for _ in range(make_goldens.IVF_CENTROIDS)]
+        counts = [0] * make_goldens.IVF_CENTROIDS
         for v in vecs:
             c = assign(v)
             counts[c] += 1
             for p, x in enumerate(v):
                 sums[c][p] += x
-        for i in range(IVF_CENTROIDS):
+        for i in range(make_goldens.IVF_CENTROIDS):
             if not counts[i]:
                 continue
-            for p in range(IVF_DIM):
+            for p in range(make_goldens.IVF_DIM):
                 q = sums[i][p] / counts[i]
                 frac = (q * 1e4) % 1.0
                 min_margin = min(min_margin, abs(frac - 0.5))
         cents = [
-            [round(sums[i][p] / counts[i], 4) for p in range(IVF_DIM)]
+            [round(sums[i][p] / counts[i], 4) for p in range(make_goldens.IVF_DIM)]
             if counts[i]
             else cents[i]
-            for i in range(IVF_CENTROIDS)
+            for i in range(make_goldens.IVF_CENTROIDS)
         ]
     # >1e-6 in 1e-4 units = >1e-10 absolute slack: ulp noise on sums of
     # ~1500 doubles is orders of magnitude below this.
     assert min_margin > 1e-6, min_margin
 
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    emb = spark.read.parquet(f"{make_goldens.SF_DIR}/embeddings.parquet")
     spark_cents = kmeans_centroids(
         emb,
         "embedding",
-        dim=IVF_DIM,
-        n_centroids=IVF_CENTROIDS,
-        n_iter=IVF_ITER,
-        seed=IVF_SEED,
+        dim=make_goldens.IVF_DIM,
+        n_centroids=make_goldens.IVF_CENTROIDS,
+        n_iter=make_goldens.IVF_ITER,
+        seed=make_goldens.IVF_SEED,
     )
     assert spark_cents == cents
+
 
