@@ -64,19 +64,17 @@ BENCH_QUERIES = [
     "dedup_components", "dedup_incremental",
     "embedding_topk", "ann_lsh", "ann_ivf", "tpch_part_profit",
     "sessionization", "lang_id", "fingerprint",
-    "boilerplate_shingles", "decontaminate",
-    "lm_perplexity", "strip_boilerplate",
+    "boilerplate_shingles",
     "semantic_dedup", "crawl_diff",
-    "gopher_rules", "clean_text",
     "url_blocklist",
     # round-4 families previously correctness-only (VERDICT r4 #8):
     "corpus_split",
-    "crawl_churn", "corpus_quantiles",
+    "crawl_churn",
     # round-5 additions:
-    "span_dedup", "semantic_dedup_bcast",
-    "decontaminate_spans", "crawl_frontier",
-    "ann_quantized", "ann_recall", "ccnet_buckets", "winnow_fingerprints",
-    "components_incremental", "repeat_line_dedup", "benchmark_coverage",
+    "semantic_dedup_bcast",
+    "crawl_frontier",
+    "ann_quantized", "ann_recall",
+    "components_incremental",
     "temperature_sample", "shuffle_shards",
     "robots_filter",
 ]

@@ -1,20 +1,17 @@
-"""Corpus-curation operators beyond per-document signals: the cross-
-document passes a web-scale training-data pipeline runs between
-extraction and tokenization.
+"""Corpus-curation operators beyond per-document signals.
 
+Production path (run_curate):
 - boilerplate_shingle_stats : RefinedWeb/C4-style "line dedup" analogue
   — fraction of a document made of spans that repeat across the corpus
   (nav menus, cookie banners, legal footers). Spans are k-word shingles
-  because the curated unit here is whitespace text; on corpora with
-  real newlines pass a line splitter instead.
-- decontaminate             : benchmark-overlap flagging (GPT-3/Llama
-  style eval decontamination) — count n-grams shared with a benchmark
-  set and flag contaminated documents.
-- stratified_sample         : deterministic per-stratum quota sampling
-  (corpus mixing) via a reproducible md5 bucket — no RNG, so re-runs
-  and resumed partitions select the same documents.
+  because the curated unit here is whitespace text.
 - host_cap                  : at most k documents per host/source,
   selected by a stable hash order (domain-balance cap).
+
+Also here: url_blocklist_filter (the CLI's --blocklist) and, each
+reached by its driver query, the reproducible md5-bucket samplers
+(stratified_sample, temperature_sample, split_corpus), normalize_urls
+and shuffle_shards.
 
 All native column expressions; every shuffle carries ids + 60-bit
 hashes only, never document bodies. The 60-bit hash is the md5-hex15
@@ -23,14 +20,10 @@ recompute every operator exactly.
 
 Scale notes (100 TB):
 - boilerplate: explode is per-DISTINCT-shingle (bounded by doc length);
-  the groupBy key is a uniform hash -> no skew; partial aggregation
-  collapses each doc's rows map-side before both shuffles.
-- decontaminate: the benchmark n-gram set is explicitly broadcast (eval
-  sets are ~10^6-10^7 n-grams — megabytes); the corpus side shuffles
-  once, on doc id, carrying one boolean per n-gram (map-side combine
-  collapses to one row per doc before the exchange because exploded
-  rows of a doc are co-partitioned with their input split).
-- stratified_sample: map-only, zero shuffle.
+  the per-shingle document count is a window over the uniform 60-bit
+  hash -> no skew; only (id, hash) pairs ride the two exchanges.
+- samplers and split_corpus: map-only, no RNG (temperature_sample adds
+  one broadcast join of a per-stratum threshold table).
 - host_cap: window over host; the shuffle carries (host, id, hash)
   only. A pathological host with 10^9 docs would make one heavy window
   partition, so the filtering path pre-filters EXACTLY (no sampling):
@@ -111,58 +104,6 @@ def boilerplate_shingle_stats(
         )
     )
     return per_doc.unionByName(short)
-
-
-def decontaminate(
-    df: DataFrame,
-    bench_df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 8,
-    min_overlap: int = 1,
-) -> DataFrame:
-    """Benchmark decontamination: per corpus document, the number of
-    distinct n-gram hashes shared with `bench_df` (same text_col), and
-    a contaminated flag at `min_overlap`.
-
-    The benchmark side is collapsed to its distinct n-gram hashes and
-    broadcast — the canonical plan at scale, since eval suites are
-    orders of magnitude smaller than the corpus. The corpus side
-    shuffles exactly once, on the doc id, after a map-side partial
-    aggregate; docs shorter than n words never explode and return via a
-    constant union branch (no join-back)."""
-    bench = (
-        bench_df.select(_norm_words(text_col).alias("_w"))
-        .select(F.explode(F.array_distinct(_shingle_hashes("_w", n))).alias("_h"))
-        .distinct()
-        .select("_h", F.lit(1).alias("_hit"))
-    )
-    base = df.select(F.col(id_col).alias("_id"), _norm_words(text_col).alias("_w"))
-    short = base.where(F.size("_w") < n).select(
-        F.col("_id").alias(id_col),
-        F.lit(0).cast("long").alias("n_ngrams"),
-        F.lit(0).cast("long").alias("n_overlap"),
-        F.lit(min_overlap <= 0).alias("contaminated"),
-    )
-    exploded = (
-        base.where(F.size("_w") >= n)
-        .select("_id", F.explode(F.array_distinct(_shingle_hashes("_w", n))).alias("_h"))
-    )
-    overlap = (
-        exploded.join(F.broadcast(bench), "_h", "left")
-        .groupBy("_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_ngrams"),
-            F.sum(F.coalesce("_hit", F.lit(0))).alias("n_overlap"),
-        )
-        .select(
-            F.col("_id").alias(id_col),
-            F.col("n_ngrams").cast("long").alias("n_ngrams"),
-            F.col("n_overlap").cast("long").alias("n_overlap"),
-            (F.col("n_overlap") >= min_overlap).alias("contaminated"),
-        )
-    )
-    return overlap.unionByName(short)
 
 
 def sample_bucket(id_col: str = "doc_id", denom: int = 10000):
@@ -359,147 +300,33 @@ def normalize_urls(df: DataFrame, url_col: str = "url") -> DataFrame:
     return df.withColumn("url_norm", norm)
 
 
-def chunk_documents(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    chunk_tokens: int = 128,
-    stride: int = 64,
-) -> DataFrame:
-    """Training-sequence prep: split each document into fixed-size
-    word windows with overlap (stride <= chunk_tokens, enforced — a
-    larger stride would silently drop the words between windows) — the
-    per-document half of sequence packing. Returns (id, chunk_idx,
-    chunk_text, n_tokens); a doc shorter than one window yields its
-    single short chunk; an EMPTY (or NULL / whitespace-only) doc yields
-    no chunks at all. Map-only + explode: zero shuffle, linear at any
-    corpus size.
-
-    Window starts step by `stride`; the last window may be short but is
-    never empty; starts past the end emit nothing (a doc of w words has
-    ceil(max(w - chunk_tokens, 0) / stride) + 1 chunks).
-    """
-    if stride <= 0 or chunk_tokens <= 0:
-        raise ValueError("chunk_tokens and stride must be positive")
-    if stride > chunk_tokens:
-        raise ValueError(
-            f"stride ({stride}) > chunk_tokens ({chunk_tokens}) would drop "
-            "the words between windows"
-        )
-    df = df.where(F.length(F.trim(F.coalesce(F.col(text_col), F.lit("")))) > 0)
-    w = _norm_words(text_col)
-    n_chunks = F.expr(
-        f"1 + cast(ceil(greatest(size(_w) - {chunk_tokens}, 0) / {stride}) as int)"
-    )
-    slice_sql = f"slice(_w, i * {stride} + 1, {chunk_tokens})"
-    chunks = F.expr(
-        f"transform(sequence(0, _nc - 1), "
-        f"i -> struct(i as chunk_idx, "
-        f"concat_ws(' ', {slice_sql}) as chunk_text, "
-        f"size({slice_sql}) as n_tokens))"
-    )
-    return (
-        df.select(F.col(id_col).alias(id_col), w.alias("_w"))
-        .withColumn("_nc", n_chunks)
-        .select(id_col, F.explode(chunks).alias("_c"))
-        .select(
-            id_col,
-            F.col("_c.chunk_idx").alias("chunk_idx"),
-            F.col("_c.chunk_text").alias("chunk_text"),
-            F.col("_c.n_tokens").alias("n_tokens"),
-        )
-    )
-
-
-def vocab_topk(
-    df: DataFrame,
-    text_col: str = "text",
-    top_k: int = 100,
-    min_count: int = 1,
-    id_col: str | None = None,
-) -> DataFrame:
-    """Corpus vocabulary stats: global term frequencies + document
-    frequencies, top-k by count (count desc, term asc — deterministic).
-
-    Plan: ONE scan + tokenization -> explode (doc, term) occurrences ->
-    groupBy (term, doc) with map-side partial aggregation (collapses a
-    doc's repeats before the exchange) -> groupBy term over the tiny
-    per-(term, doc) rows (term_count = sum, doc_count = count) ->
-    distributed top-k via sort+limit (TakeOrderedAndProject, never a
-    global window). No self-join, no second pass over the corpus.
-
-    Pass ``id_col`` when the frame has a real document id: the
-    intermediate (term, doc) frame is then inspectable and provably
-    partition-independent. Without one, a synthetic per-row id stands in
-    (output counts are invariant to the ids — each input row is one
-    document either way).
-    """
-    doc_key = F.col(id_col) if id_col else F.monotonically_increasing_id()
-    terms = (
-        df.select(doc_key.alias("_d"), _norm_words(text_col).alias("_w"))
-        .select("_d", F.explode("_w").alias("term"))
-        .where(F.col("term") != "")
-    )
-    per_doc = terms.groupBy("term", "_d").agg(F.count(F.lit(1)).alias("_c"))
-    return (
-        per_doc.groupBy("term")
-        .agg(
-            F.sum("_c").alias("term_count"),
-            F.count(F.lit(1)).alias("doc_count"),
-        )
-        .where(F.col("term_count") >= min_count)
-        .orderBy(F.desc("term_count"), F.asc("term"))
-        .limit(top_k)
-    )
-
-
 def _two_phase_prefix_sums(
     df: DataFrame,
     order_cols: list[str],
     sums: dict[str, object],
-    n_partitions: int,
-    bucket=None,
+    bucket,
 ) -> DataFrame:
     """Global EXCLUSIVE running sums over `order_cols` order without a
-    single-partition window: split the order into n_partitions ordered
+    single-partition window: `bucket` splits the order into ordered
     buckets, per-BUCKET running sums (bounded window partitions), then
-    broadcast the per-bucket totals back as offsets. The collect is
+    the per-bucket totals are broadcast back as offsets. The collect is
     bounded by the bucket count — one tiny row per bucket — never by
     data size. `sums` maps output column name -> value column (name or
     Column); each output is the sum of its value over all rows strictly
     before the row in the global order.
 
-    The output is a pure function of the global order, never of the
-    physical partitioning (parallelism-invariance tests pin this).
-
-    Bucketing strategy — two paths, same semantics:
-    - bucket=None: repartitionByRange on the order key (works for ANY
-      key distribution; range boundaries come from Spark's sampling).
-      The row->bucket map is then a property of the physical lineage,
-      so it is pinned with a localCheckpoint — which ERASES the range
-      partitioner at the SQL layer and costs the window's ENSURE_
-      REQUIREMENTS a second (pid-keyed, ids-only) exchange.
-    - bucket=<Column>: a caller-supplied DETERMINISTIC bucket id that
-      must be monotone in the order key (e.g. key div step for a
-      uniform hash key). No repartition, no checkpoint, and the window
-      demands exactly ONE exchange — the plan a 100 TB run wants when
-      the order key is uniform by construction."""
+    `bucket` is a DETERMINISTIC bucket id that must be monotone in the
+    order key (e.g. key div step for a uniform hash key), so the window
+    demands exactly ONE exchange and the output is a pure function of
+    the global order, never of the physical partitioning
+    (parallelism-invariance tests pin this)."""
     spark = df.sparkSession
     d = df
     names = list(sums)
     for out, c in sums.items():
         col = F.col(c) if isinstance(c, str) else c
         d = d.withColumn(f"{out}_v", col)
-    if bucket is not None:
-        d = d.withColumn("_pid", bucket.cast("int"))
-    else:
-        d = d.repartitionByRange(n_partitions, *order_cols).withColumn(
-            "_pid", F.spark_partition_id()
-        )
-        # Pin the row->partition assignment: the totals collect and the
-        # main pass must see the SAME assignment (deterministic for one
-        # lineage, but pinning is free and local).
-        d = d.localCheckpoint(eager=False)
+    d = d.withColumn("_pid", bucket.cast("int"))
     w = Window.partitionBy("_pid").orderBy(*order_cols)
     for out in names:
         d = d.withColumn(
@@ -524,145 +351,6 @@ def _two_phase_prefix_sums(
             out, (F.col(f"{out}_off") + F.col(f"{out}_run")).cast("long")
         ).drop(f"{out}_v", f"{out}_run", f"{out}_off")
     return d.drop("_pid")
-
-
-def pack_sequences(
-    chunks: DataFrame,
-    seq_len: int,
-    id_col: str = "doc_id",
-    chunk_idx_col: str = "chunk_idx",
-    n_tokens_col: str = "n_tokens",
-    n_partitions: int | None = None,
-) -> DataFrame:
-    """Pack chunk_documents output into fixed-length training sequences
-    (the final stage of an LLM data pipeline): conceptually concatenate
-    all chunks in global (id, chunk_idx) order into one token stream and
-    cut it every ``seq_len`` tokens — the GPT-style concat-and-slice
-    packing. Documents/chunks MAY cross sequence boundaries; boundary
-    attribution is returned per piece, so every training sequence can be
-    reassembled and every token traced back to its source chunk.
-
-    Returns one row per (sequence, piece):
-        seq_id          long  sequence number (0-based)
-        tok_start/_end  int   half-open token span WITHIN the sequence
-        <id>, <chunk_idx>     the source chunk
-        chunk_tok_start/_end  half-open span WITHIN the source chunk
-    Every sequence except the last covers exactly [0, seq_len) with no
-    gaps or overlaps. Zero-token chunks carry no tokens and are skipped.
-
-    The packing rule is a pure function of the GLOBAL chunk order, never
-    of the physical partitioning, so output is identical at any
-    parallelism (tested) and recomputable in plain SQL as a window
-    cumsum. At scale the prefix sum is two-phase instead of one global
-    window: range-partition by the order key, per-PARTITION running sums
-    (bounded window partitions), then per-partition totals — at most one
-    tiny row per partition — are collected and broadcast back as
-    offsets. The collect is bounded by the partition count, exactly like
-    run_job's manifest collect, never by data size.
-    """
-    if seq_len <= 0:
-        raise ValueError("seq_len must be positive")
-    spark = chunks.sparkSession
-    if n_partitions is None:
-        n_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-    items = chunks.select(id_col, chunk_idx_col, n_tokens_col).where(
-        F.col(n_tokens_col) > 0
-    )
-    d = _two_phase_prefix_sums(
-        items, [id_col, chunk_idx_col], {"_start": n_tokens_col}, n_partitions
-    )
-    end = F.col("_start") + F.col(n_tokens_col).cast("long")
-    L = F.lit(seq_len).cast("long")
-    d = d.withColumn("_end", end)
-    # Integer div, not floor(double division): token offsets at
-    # 10^12-doc scale exceed the 2^53 exact-integer range of doubles.
-    seqs = F.sequence(
-        F.expr(f"_start div {seq_len}"), F.expr(f"(_end - 1) div {seq_len}")
-    )
-    e = d.withColumn("seq_id", F.explode(seqs))
-    lo = F.greatest(F.col("_start"), F.col("seq_id") * L)
-    hi = F.least(F.col("_end"), (F.col("seq_id") + 1) * L)
-    return e.select(
-        F.col("seq_id").cast("long").alias("seq_id"),
-        (lo - F.col("seq_id") * L).cast("int").alias("tok_start"),
-        (hi - F.col("seq_id") * L).cast("int").alias("tok_end"),
-        F.col(id_col),
-        F.col(chunk_idx_col),
-        (lo - F.col("_start")).cast("int").alias("chunk_tok_start"),
-        (hi - F.col("_start")).cast("int").alias("chunk_tok_end"),
-    )
-
-
-def strip_boilerplate_lines(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_docs: int = 2,
-) -> DataFrame:
-    """RefinedWeb-style exact line dedup that actually REWRITES the
-    text (boilerplate_shingle_stats is the read-only signal): a line
-    whose normalized form (trimmed, lowercased) appears in >= min_docs
-    DISTINCT documents is removed from every document; everything else
-    is preserved verbatim, in order. Blank/whitespace-only lines never
-    participate in counting and are always kept (they are structure,
-    not content). Returns (id, text_clean, n_lines, n_removed) — one
-    row per input document, including documents with no line breaks,
-    fully-stripped documents (text_clean = remaining lines, possibly
-    empty) and NULL-text documents ('' in, '' out).
-
-    Plan: split -> posexplode (id, idx, line) -> per-line 60-bit hash;
-    participating (id, hash) pairs are distinct-per-doc, so a window
-    count over the hash IS the distinct-doc frequency (no self-join);
-    lines join the flagged-hash set with a LEFT ANTI on the uniform
-    hash key; the rebuild is one groupBy(id) assembling sort_array of
-    (idx, line) — a document's own lines only, the same per-doc bound
-    every extractor stage already holds. Shuffles carry (id, idx,
-    line) once for the rebuild and bare (id, hash) for the counting.
-    """
-    base = df.select(
-        F.col(id_col).alias("_id"),
-        F.split(F.coalesce(F.col(text_col), F.lit("")), "\n").alias("_ls"),
-    )
-    lines = base.select(
-        "_id",
-        F.posexplode("_ls").alias("_idx", "_line"),
-    ).withColumn("_norm", F.lower(F.trim("_line")))
-    participating = F.length("_norm") > 0
-    boiler = (
-        lines.where(participating)
-        .select("_id", hash60("_norm").alias("_h"))
-        .distinct()
-        .withColumn("_n_docs", F.count(F.lit(1)).over(Window.partitionBy("_h")))
-        .where(F.col("_n_docs") >= min_docs)
-        .select("_h")
-        .distinct()
-    )
-    flagged = lines.withColumn(
-        "_h", F.when(participating, hash60("_norm"))
-    ).join(boiler, "_h", "left_anti")
-    rebuilt = flagged.groupBy("_id").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("_idx", "_line"))),
-                lambda s: s["_line"],
-            ),
-            "\n",
-        ).alias("text_clean"),
-        F.count(F.lit(1)).alias("_n_kept"),
-    )
-    totals = lines.groupBy("_id").agg(F.count(F.lit(1)).alias("n_lines"))
-    return (
-        totals.join(rebuilt, "_id", "left")
-        .select(
-            F.col("_id").alias(id_col),
-            F.coalesce("text_clean", F.lit("")).alias("text_clean"),
-            F.col("n_lines").cast("long").alias("n_lines"),
-            (F.col("n_lines") - F.coalesce("_n_kept", F.lit(0)))
-            .cast("long")
-            .alias("n_removed"),
-        )
-    )
 
 
 def url_blocklist_filter(
@@ -700,139 +388,6 @@ def url_blocklist_filter(
     )
     blocked = (host != "") & hit
     return df.where(~blocked if keep else blocked)
-
-
-def _span_tok_base(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(_id, _toks) frame with the span operators' shared tokenisation:
-    norm_words with empties dropped, NULL text => empty array. ONE
-    definition — dedup_spans and decontaminate_spans must tokenise
-    identically or their oracles (and the --span-dedup ->
-    --decontaminate-spans composition) drift."""
-    toks = F.filter(
-        F.coalesce(
-            _raw_norm_words(text_col), F.expr("CAST(array() AS ARRAY<STRING>)")
-        ),
-        lambda w: F.length(w) > 0,
-    )
-    return df.select(F.col(id_col).alias("_id"), toks.alias("_toks"))
-
-
-def _span_occurrences(base: DataFrame, k: int) -> DataFrame:
-    """All k-shingle occurrences of a _span_tok_base frame as
-    (_id, _pos, _h) rows — 60-bit md5-hex15 hashes, positions 0-based;
-    sub-k-token docs emit nothing (sequence guard per texthash docs)."""
-    span_structs = F.expr(
-        f"CASE WHEN size(_toks) >= {k} THEN "
-        f"transform(sequence(1, size(_toks) - {k - 1}), "
-        f"i -> struct(cast(i - 1 as int) as pos, "
-        f"cast(conv(substring(md5(concat_ws(' ', slice(_toks, i, {k}))), 1, 15), 16, 10) as bigint) as h)) "
-        f"ELSE CAST(array() AS ARRAY<STRUCT<pos: INT, h: BIGINT>>) END"
-    )
-    return base.select("_id", F.explode(span_structs).alias("_s")).select(
-        "_id", F.col("_s.pos").alias("_pos"), F.col("_s.h").alias("_h")
-    )
-
-
-def _excise_spans(
-    base: DataFrame, removals: DataFrame, k: int, id_col: str
-) -> DataFrame:
-    """Shared rebuild tail: drop every token covered by a removal
-    window [pos, pos + k) and re-join the survivors — returns one row
-    per base doc: (id, text_clean, n_tokens, n_removed)."""
-    starts = removals.groupBy("_id").agg(
-        F.array_sort(F.collect_list("_pos")).alias("_starts")
-    )
-    joined = base.join(starts, "_id", "left").withColumn(
-        "_st", F.coalesce("_starts", F.expr("CAST(array() AS ARRAY<INT>)"))
-    )
-    kept = F.expr(
-        f"filter(_toks, (t, i) -> NOT exists(_st, p -> p <= i AND i < p + {k}))"
-    )
-    return joined.select(
-        F.col("_id").alias(id_col),
-        F.array_join(kept, " ").alias("text_clean"),
-        F.size("_toks").cast("long").alias("n_tokens"),
-        (F.size("_toks") - F.size(kept)).cast("long").alias("n_removed"),
-    )
-
-
-def dedup_spans(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    span_tokens: int = 50,
-    min_count: int = 2,
-) -> DataFrame:
-    """Span-level EXACT substring dedup (Lee et al. 2022, "Deduplicating
-    Training Data Makes Language Models Better"): remove every >=
-    span_tokens-token span whose exact token sequence occurs at least
-    min_count times across the corpus, keeping only the globally first
-    occurrence. Complements strip_boilerplate_lines (line-level) and
-    MinHash/semantic (document-level) — this is the pass that
-    excises a verbatim licence block or syndicated paragraph embedded
-    inside otherwise-unique documents, without dropping the documents.
-
-    Semantics (deterministic, oracle-replayable):
-    - tokens = whitespace-split of lower(trim(text)), empties dropped
-      (the shared norm_words tokenisation); output text is therefore
-      the normalised token stream re-joined by single spaces.
-    - every span_tokens-token window (shingle) is hashed (60-bit
-      md5-hex15); a hash with >= min_count occurrences corpus-wide is
-      duplicated (same-document repeats count).
-    - the canonical occurrence of a duplicated shingle is the minimum
-      (id, pos) pair; every OTHER occurrence marks its window
-      [pos, pos + span_tokens) for removal in its document. Because a
-      duplicated region of length L >= k contributes L-k+1 overlapping
-      duplicated shingles, the union of marked windows covers the
-      maximal duplicated span, not just one window.
-    - edge: a document can own one shingle of an overlapping region
-      while losing a neighbouring one to an earlier document; removal
-      is the union of lost windows — aggressive but deterministic.
-
-    Returns one row per input document (NULL text => '' out):
-      (id, text_clean, n_tokens, n_removed).
-
-    Plan / 100 TB shape: occurrence rows carry ONLY (hash, id, pos) —
-    never text — through two exchanges. Duplicate detection is a
-    groupBy(hash) agg of count + min(struct(id, pos)): both partially
-    aggregable, so a cookie-banner span duplicated in 10^8 documents
-    is collapsed map-side instead of sorting a hot window partition
-    (why this differs from strip_boilerplate_lines's window form,
-    whose per-doc-distinct line rows stay small). The join back to
-    occurrences is an equi-join on the uniform 60-bit hash (AQE skew
-    split handles a residual hot hash). Rebuild joins a per-doc sorted
-    start array (bounded by the doc's own token count) back to the
-    token arrays and filters with one EXISTS higher-order function per
-    token — O(|tokens| * |starts|) per doc, linear for real corpora
-    where duplicated-span density is far below saturation.
-    """
-    if span_tokens < 2:
-        raise ValueError("dedup_spans: span_tokens must be >= 2")
-    if min_count < 2:
-        raise ValueError("dedup_spans: min_count must be >= 2")
-    k = int(span_tokens)
-    base = _span_tok_base(df, id_col, text_col)
-    occ = _span_occurrences(base, k)
-    dup = (
-        occ.groupBy("_h")
-        .agg(
-            F.count(F.lit(1)).alias("_cnt"),
-            F.min(F.struct(F.col("_id"), F.col("_pos"))).alias("_first"),
-        )
-        .where(F.col("_cnt") >= min_count)
-        .select("_h", "_first")
-    )
-    removals = (
-        occ.join(dup, "_h")
-        .where(
-            ~(
-                (F.col("_id") == F.col("_first._id"))
-                & (F.col("_pos") == F.col("_first._pos"))
-            )
-        )
-        .select("_id", "_pos")
-    )
-    return _excise_spans(base, removals, k, id_col)
 
 
 def temperature_sample(
@@ -923,8 +478,7 @@ def shuffle_shards(
     by the md5 of (seed, id) and cut greedily into shards of ~
     ``shard_tokens`` tokens each (a document never splits across
     shards; a shard may overshoot by less than one document — the
-    standard whole-doc sharding rule; pack_sequences is the stage that
-    splits token streams exactly).
+    standard whole-doc sharding rule).
 
     Returns one row per input row:
         <id>        the document
@@ -938,13 +492,13 @@ def shuffle_shards(
     physical row order. NULL/negative token counts count as 0 (the doc
     still occupies a position).
 
-    Plan / 100 TB shape: the only wide op is ONE range repartition by
-    the 60-bit order key (uniform by construction — md5 output, so the
-    range partitioner cannot be skewed by hot hosts or doc sizes);
-    prefix sums are the same two-phase per-partition-window + broadcast-
-    offsets scheme as pack_sequences (_two_phase_prefix_sums) — no
-    global window, driver traffic bounded by the partition count. Rows
-    carry (id, key, n_tokens) only, never text.
+    Plan / 100 TB shape: the only wide op is ONE exchange on an
+    equal-width slice of the 60-bit order key (uniform by construction —
+    md5 output, so hot hosts or doc sizes cannot skew it); prefix sums
+    are two-phase per-bucket windows + broadcast offsets
+    (_two_phase_prefix_sums) — no global window, driver traffic bounded
+    by the partition count. Rows carry (id, key, n_tokens) only, never
+    text.
     """
     if shard_tokens <= 0:
         raise ValueError("shuffle_shards: shard_tokens must be positive")
@@ -965,15 +519,13 @@ def shuffle_shards(
     # the order must be TOTAL for the output to be well-defined.
     # The order key is a uniform 60-bit hash BY CONSTRUCTION, so the
     # prefix-sum buckets are a deterministic equal-width slice of the
-    # key space (monotone in _k, balanced without sampling): the
-    # one-exchange path of _two_phase_prefix_sums.
+    # key space (monotone in _k, balanced without sampling).
     step = (1 << 60) // int(n_partitions)
     d = _two_phase_prefix_sums(
         items,
         ["_k", id_col],
         {"tok_offset": "_nt", "pos": F.lit(1)},
-        n_partitions,
-        bucket=F.expr(f"_k div {step}"),
+        F.expr(f"_k div {step}"),
     )
     return d.select(
         F.col(id_col),
@@ -981,164 +533,3 @@ def shuffle_shards(
         F.col("tok_offset"),
         (F.expr(f"tok_offset div {int(shard_tokens)}")).alias("shard_id"),
     )
-
-
-def decontaminate_spans(
-    df: DataFrame,
-    bench_df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    span_tokens: int = 8,
-) -> DataFrame:
-    """Surgical benchmark decontamination: REWRITE each document with
-    every >= span_tokens-token window that appears verbatim in the
-    benchmark corpus excised, instead of dropping the whole document
-    (`decontaminate` flags docs; this removes just the leaked spans —
-    the "surgical" variant real pipelines run when a one-line benchmark
-    quote would otherwise cost an entire long document).
-
-    Same deterministic token/shingle semantics as dedup_spans (shared
-    norm_words tokenisation, 60-bit md5-hex15 shingle hashes, union of
-    overlapping matched windows covers the maximal leaked span) with
-    one intentional difference: there is NO canonical first occurrence
-    — every occurrence of a benchmark shingle is removed, because the
-    goal is zero eval-set overlap, not one surviving copy.
-
-    Returns one row per input document (NULL text => '' out):
-      (id, text_clean, n_tokens, n_removed).
-
-    Plan / 100 TB shape: the benchmark collapses to its DISTINCT
-    shingle hashes and is broadcast (eval suites are orders of
-    magnitude smaller than the corpus — same rationale as
-    decontaminate), so matching is a map-side LEFT SEMI: corpus
-    occurrence rows (id, pos) only ever shuffle once, into the per-doc
-    start-array groupBy. One exchange on the occurrence side plus the
-    id-equi-join back to the token arrays — strictly fewer exchanges
-    than dedup_spans (no corpus-wide hash groupBy, no hash join-back).
-    """
-    if span_tokens < 2:
-        raise ValueError("decontaminate_spans: span_tokens must be >= 2")
-    k = int(span_tokens)
-    base = _span_tok_base(df, id_col, text_col)
-    occ = _span_occurrences(base, k)
-    bench = (
-        _span_tok_base(bench_df, text_col, text_col)
-        .where(F.size("_toks") >= k)
-        .select(F.explode(F.array_distinct(_shingle_hashes("_toks", k))).alias("_h"))
-        .distinct()
-    )
-    removals = occ.join(F.broadcast(bench), "_h", "left_semi").select("_id", "_pos")
-    return _excise_spans(base, removals, k, id_col)
-
-
-def strip_repeated_lines(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Within-document repeated-line removal — the SELF-repetition
-    rewrite (Dolma-style) complementing strip_boilerplate_lines
-    (cross-document): a line whose normalized form (ALL edge
-    whitespace stripped — including \r/\t, so CRLF splits match —
-    then lowercased) already occurred EARLIER in the same document is
-    dropped; the first occurrence and all blank lines are kept
-    verbatim, in order (blanks are structure, not content — same
-    contract as the cross-doc pass). Catches the chrome web pages
-    repeat inside one page (cookie banners rendered per section,
-    repeated share bars) that no cross-document threshold sees.
-
-    ENTIRELY map-only — the keep decision is one higher-order filter
-    over the document's own line array, zero shuffle, no state. The
-    per-doc cost is O(lines^2) comparisons (each line scans its
-    predecessors); for real pages (hundreds of lines) that is
-    microseconds, and a pathological million-line doc should be length-
-    gated before it reaches any curation stage anyway. NULL text reads
-    as one blank line ('' in, '' out).
-
-    Returns (id, text_clean, n_lines, n_removed)."""
-    base = df.select(
-        F.col(id_col),
-        F.split(F.coalesce(F.col(text_col), F.lit("")), "\n").alias("_ls"),
-    )
-    # normalization strips ALL leading/trailing whitespace (regexp,
-    # not trim(): trim only removes ASCII spaces, so CRLF documents —
-    # 'nav\r' vs 'nav' after a \n split — and tab-padded chrome would
-    # otherwise defeat the match; an all-\r/\t line counts as blank)
-    norm = "regexp_replace({x}, '^\\\\s+|\\\\s+$', '')"
-    kept = F.expr(
-        "filter(_ls, (l, i) -> "
-        + norm.format(x="l") + " = '' OR NOT exists("
-        "slice(_ls, 1, i), p -> lower(" + norm.format(x="p") + ")"
-        " = lower(" + norm.format(x="l") + ")))"
-    )
-    return base.select(
-        id_col,
-        F.array_join(kept, "\n").alias("text_clean"),
-        F.size("_ls").cast("long").alias("n_lines"),
-        (F.size("_ls") - F.size(kept)).cast("long").alias("n_removed"),
-    )
-
-
-def benchmark_coverage(
-    df: DataFrame,
-    bench_df: DataFrame,
-    bench_id_col: str = "bench_id",
-    text_col: str = "text",
-    n: int = 8,
-) -> DataFrame:
-    """Benchmark-side contamination report — the reverse direction of
-    `decontaminate`: for each BENCHMARK document, the fraction of its
-    distinct n-grams that appear anywhere in the corpus. Corpus-side
-    flags tell you which training docs to drop; THIS tells you which
-    eval rows are already compromised (a benchmark item 90%-covered by
-    the corpus measures memorization, not ability) — the integrity
-    report an eval owner reads before trusting a score.
-
-    Plan shape (deliberately the mirror of decontaminate's): the
-    BENCHMARK side is tiny and explodes to (bench_id, hash) rows; the
-    CORPUS side collapses to its distinct n-gram hashes — too big to
-    broadcast at 100 TB, so the membership test is a LEFT SEMI
-    equi-join on the uniform 60-bit hash key (bare hashes, partial-
-    aggregated distinct, the cheapest possible corpus projection).
-    Sub-n-word benchmark docs report n_ngrams = 0 with coverage NULL
-    (nothing to leak — never a divide error).
-
-    Returns (bench_id, n_ngrams, n_found, coverage round 6)."""
-    corpus = (
-        df.select(_norm_words(text_col).alias("_w"))
-        .where(F.size("_w") >= n)
-        .select(F.explode(F.array_distinct(_shingle_hashes("_w", n))).alias("_h"))
-        .distinct()
-    )
-    bench = bench_df.select(
-        F.col(bench_id_col).alias("_bid"), _norm_words(text_col).alias("_w")
-    )
-    exploded = (
-        bench.where(F.size("_w") >= n)
-        .select("_bid", F.explode(F.array_distinct(_shingle_hashes("_w", n))).alias("_h"))
-    )
-    # ONE pass over the exploded bench side (decontaminate's shape):
-    # left join against the marked corpus hashes, count + sum(marker)
-    # in the same aggregate — no second explode, no agg-to-agg join.
-    marked = corpus.withColumn("_hit", F.lit(1))
-    full = (
-        exploded.join(marked, "_h", "left")
-        .groupBy("_bid")
-        .agg(
-            F.count(F.lit(1)).alias("n_ngrams"),
-            F.sum(F.coalesce("_hit", F.lit(0))).alias("n_found"),
-        )
-        .select(
-            F.col("_bid").alias(bench_id_col),
-            F.col("n_ngrams").cast("long").alias("n_ngrams"),
-            F.col("n_found").cast("long").alias("n_found"),
-            F.round(F.col("n_found") / F.col("n_ngrams"), 6).alias("coverage"),
-        )
-    )
-    short = bench.where(F.size("_w") < n).select(
-        F.col("_bid").alias(bench_id_col),
-        F.lit(0).cast("long").alias("n_ngrams"),
-        F.lit(0).cast("long").alias("n_found"),
-        F.lit(None).cast("double").alias("coverage"),
-    )
-    return full.unionByName(short)

@@ -20,13 +20,11 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from ..functions.texthash import norm_words
+
 NUM_MINHASHES = 32
 NUM_BANDS = 8  # 4 hashes per band
 SHINGLE_K = 3
-
-
-def _words(text_col: str):
-    return F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
 
 
 def word_shingles(df: DataFrame, text_col: str = "text", k: int = SHINGLE_K) -> DataFrame:
@@ -36,7 +34,7 @@ def word_shingles(df: DataFrame, text_col: str = "text", k: int = SHINGLE_K) -> 
     naive `sequence(1, greatest(size-k+1, 0))` is a trap: for short docs
     it evaluates to sequence(1, 0) = [1, 0] (descending) and slice(_, 0,
     k) throws at runtime, poison-pilling the whole dedup job."""
-    df = df.withColumn("_words", _words(text_col))
+    df = df.withColumn("_words", norm_words(text_col))
     expr = (
         f"CASE WHEN size(_words) >= {k} THEN "
         f"transform(sequence(1, size(_words) - {k - 1}), "
@@ -283,7 +281,7 @@ def ngram_jaccard_pairs(
     base = df.select(
         F.col(id_col).alias("id"),
         *( [F.col(group_col).alias("grp")] if group_col else [F.lit(1).alias("grp")] ),
-        F.array_distinct(F.slice(_words(text_col), 1, prefix_words)).alias("ws"),
+        F.array_distinct(F.slice(norm_words(text_col), 1, prefix_words)).alias("ws"),
     )
     if max_group_rows is not None:
         # In-pipeline guard (no separate eager job recomputing the input):

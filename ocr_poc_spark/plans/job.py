@@ -211,11 +211,12 @@ def run_job(
         for i in range(0, len(pending), buckets_per_pass)
     ]
 
+    # One bucket expression both selects a pass's pages and stamps the
+    # rows it writes.
+    bucket = F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int")
+    bucketed = pages.withColumn("bucket", bucket)
     # Long-tail page-size balance: spread documents uniformly by url hash
     # (SURVEY.md §4 — explicit repartition, not a Catalyst concern).
-    bucketed = pages.withColumn(
-        "bucket", F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int")
-    )
     if repartition:
         bucketed = bucketed.repartition(repartition, F.xxhash64("url"))
 
@@ -226,9 +227,7 @@ def run_job(
             raise RuntimeError("injected failure (test hook)")
         t0 = time.monotonic()
         part = bucketed.where(F.col("bucket").isin(batch))
-        ext = extract_fused(part).withColumn(
-            "bucket", F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int")
-        )
+        ext = extract_fused(part).withColumn("bucket", bucket)
         # Language verification column (textstats operator over the
         # kernel's body_text / raw_text).
         ext = ext.withColumn(

@@ -69,12 +69,6 @@ def main() -> None:
             em.queries()["boilerplate_shingles"](spark, sf),
         ),
         (
-            "Benchmark decontamination (curation)",
-            "The benchmark n-gram side is a BroadcastExchange; the corpus "
-            "side shuffles once on doc id after a map-side partial agg.",
-            em.queries()["decontaminate"](spark, sf),
-        ),
-        (
             "TPC-H Q9-style star join (part/supplier/nation)",
             "All three dimension tables are BroadcastExchange; exactly one "
             "hash exchange (the final nation x brand aggregate), bounded "
@@ -160,15 +154,6 @@ def main() -> None:
             "decision is a per-row fold — no Generate/explode, so no "
             "directive row ever multiplies a url row.",
             em.queries()["robots_filter"](spark, sf),
-        ),
-        (
-            "Surgical decontamination (decontaminate_spans)",
-            "The benchmark collapses to a distinct shingle-hash set and "
-            "reaches the corpus occurrences as a BroadcastHashJoin "
-            "LeftSemi — occurrence rows (id, pos) shuffle exactly once "
-            "into the start-array aggregate; strictly fewer exchanges "
-            "than dedup_spans (no corpus-wide hash groupBy).",
-            em.queries()["decontaminate_spans"](spark, sf),
         ),
         (
             "Crawl frontier (politeness waves)",

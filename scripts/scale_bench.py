@@ -193,31 +193,6 @@ def main() -> None:
         )
         return semantic_dedup(emb, cents, cosine_threshold=0.99)
 
-    # span_dedup ends in a LEFT join whose right side (removal starts
-    # per doc) is unique per key, so a bare .count() lets Catalyst
-    # ELIMINATE the join and with it the whole dup-detection subtree —
-    # the first round-5 run reported a phantom 0.0 MB / 0.3 s "map-only"
-    # row. (An agg wrapper does NOT help: count() over a grouping-less
-    # aggregate is statically one row and short-circuits too.) A filter
-    # on the join-derived n_removed column forces full evaluation while
-    # keeping the row count comparable.
-    base_span = qs["span_dedup"]
-
-    def q_span_dedup_full(spark, sf_dir):
-        return base_span(spark, sf_dir).where("n_removed >= 0")
-
-    qs["span_dedup"] = q_span_dedup_full
-
-    # decontaminate_spans shares span_dedup's rebuild tail (LEFT join
-    # with a unique-per-key right side) — same phantom-elimination
-    # hazard under .count(); force evaluation the same way.
-    base_dspan = qs["decontaminate_spans"]
-
-    def q_decon_spans_full(spark, sf_dir):
-        return base_dspan(spark, sf_dir).where("n_removed >= 0")
-
-    qs["decontaminate_spans"] = q_decon_spans_full
-
     qs["ann_lsh_p12"] = q_ann_lsh_p12
     qs["ann_ivf_sqrtk"] = q_ann_ivf_sqrtk
     qs["semantic_dedup_sqrtk"] = q_semantic_dedup_sqrtk
@@ -228,27 +203,14 @@ def main() -> None:
         "ann_ivf_sqrtk",
         "dedup_minhash",
         "boilerplate_shingles",
-        "decontaminate",
-        # round 4: curation passes
-        "lm_perplexity",
-        "strip_boilerplate",
         # round 4, session 2: selection / incremental-crawl suite
         "crawl_diff",
         "semantic_dedup_sqrtk",
-        "gopher_rules",
-        "clean_text",
-        # round 5: span dedup + training-order stages
-        "span_dedup",
+        # round 5: training-order stages
         "shuffle_shards",
         "temperature_sample",
-        # round 5, session 3: surgical decon + frontier
-        "decontaminate_spans",
+        # round 5, session 3: frontier
         "crawl_frontier",
-        # round 5, session 3 late: LM buckets + audits
-        "ccnet_buckets",
-        "winnow_fingerprints",
-        "repeat_line_dedup",
-        "benchmark_coverage",
     ]
 
     spark = get_spark(
@@ -339,10 +301,9 @@ def main() -> None:
         "",
         "## Reading the shuffle ratios (interpolated from THIS run)",
         "",
-        f"- boilerplate_shingles / decontaminate: shuffle grows "
-        f"{summary['boilerplate_shingles']['shuffle_ratio']}x / "
-        f"{summary['decontaminate']['shuffle_ratio']}x for {m}x rows — "
-        "these pipelines shuffle O(n) ids+hashes, the linear ideal.",
+        f"- boilerplate_shingles: shuffle grows "
+        f"{summary['boilerplate_shingles']['shuffle_ratio']}x for {m}x "
+        "rows — the pipeline shuffles O(n) ids+hashes, the linear ideal.",
         f"- ann_lsh (fixed 8 planes) vs ann_lsh_p12: with a FIXED plane "
         "count, bucket density grows with n, so candidate pairs (and the "
         f"band-join shuffle) grow ~n^2/2^p — "
@@ -367,11 +328,6 @@ def main() -> None:
         "shuffle. This is the IVF production rule, and why the operator "
         "switches to a single-row broadcast centroid array above "
         "MAX_LITERAL_CENTROIDS.",
-        f"- lm_perplexity / strip_boilerplate: "
-        f"{summary['lm_perplexity']['shuffle_ratio']}x / "
-        f"{summary['strip_boilerplate']['shuffle_ratio']}x shuffle — "
-        "bigram count joins and line-hash anti-joins key on uniform "
-        "hashes; linear is the expected shape.",
         f"- crawl_diff: {summary['crawl_diff']['shuffle_ratio']}x shuffle "
         f"for {m}x rows — the crawl diff ships (id, digest) projections, "
         "linear by construction.",
@@ -383,16 +339,6 @@ def main() -> None:
         "(same formula, measured above); the entry query's frozen k=8 "
         "literal centroids are the oracle setting, not the scale "
         "setting (at 10x they imply ~156M in-cluster cosines).",
-        f"- gopher_rules / clean_text: ~0 MB shuffle at BOTH scales "
-        "(absolute columns) — map-only passes, the trivially-linear "
-        "ideal; the ratio column is pinned to 1.0 for sub-0.05MB "
-        "noise-floor cells.",
-        f"- span_dedup: {summary['span_dedup']['shuffle_ratio']}x "
-        f"shuffle for {m}x rows — occurrence rows are (hash, id, pos) "
-        "per token-window, so shuffle volume tracks total corpus "
-        "tokens (linear); the groupBy(hash) canonical pick partially "
-        "aggregates map-side, so a span duplicated across 10^8 docs "
-        "collapses before the exchange.",
         f"- shuffle_shards / temperature_sample: "
         f"{summary['shuffle_shards']['shuffle_ratio']}x / "
         f"{summary['temperature_sample']['shuffle_ratio']}x shuffle — "

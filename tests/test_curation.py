@@ -1,12 +1,10 @@
 """Unit tests for cross-document curation operators (boilerplate
-shingle dedup, benchmark decontamination, stratified sampling, host
-caps)."""
+shingle dedup, stratified sampling, host caps)."""
 
 import pyspark.sql.functions as F
 
 from ocr_poc_spark.operators.curation import (
     boilerplate_shingle_stats,
-    decontaminate,
     host_cap,
     stratified_sample,
 )
@@ -39,22 +37,6 @@ def test_boilerplate_ratio_bounds_and_short_doc(spark):
     # prefix window) but their tails differ.
     assert 0.0 < out[1]["boiler_ratio"] < 1.0
     assert out[1]["n_boiler"] == out[2]["n_boiler"]
-
-
-def test_decontaminate_flags_benchmark_overlap(spark):
-    docs = _docs(spark)
-    bench = spark.createDataFrame(
-        [(100, BOILER + " held out eval continuation", "en", "bench")],
-        "doc_id long, text string, lang string, source string",
-    )
-    out = {r["doc_id"]: r for r in decontaminate(docs, bench, n=8).collect()}
-    # Docs 1/2/5 contain the full boilerplate sentence -> 8-gram overlap.
-    assert out[1]["contaminated"] and out[2]["contaminated"] and out[5]["contaminated"]
-    assert not out[3]["contaminated"]
-    # Doc 4 has no 8-grams at all but still gets a row.
-    assert out[4]["n_ngrams"] == 0 and not out[4]["contaminated"]
-    # Overlap never exceeds the doc's own n-gram count.
-    assert all(r["n_overlap"] <= r["n_ngrams"] for r in out.values())
 
 
 def test_stratified_sample_deterministic_and_exhaustive(spark):
@@ -157,8 +139,6 @@ def test_null_text_docs_keep_rows(spark):
     )
     b = {r["doc_id"]: r for r in boilerplate_shingle_stats(docs, k=5).collect()}
     assert b[1]["n_shingles"] == 0 and b[1]["boiler_ratio"] == 0.0
-    d = {r["doc_id"]: r for r in decontaminate(docs, docs.where("doc_id = 2"), n=8).collect()}
-    assert d[1]["n_ngrams"] == 0 and not d[1]["contaminated"]
 
 
 def test_run_curate_dup_urls_and_zero_cap(spark, tmp_path):
@@ -231,101 +211,6 @@ def test_normalize_urls_idempotent_combinatorial(spark):
                 )
 
 
-def test_chunk_documents_windows(spark):
-    from ocr_poc_spark.operators.curation import chunk_documents
-
-    docs = spark.createDataFrame(
-        [(1, " ".join(f"w{i}" for i in range(10))), (2, "a b"), (3, None)],
-        "doc_id long, text string",
-    )
-    out = chunk_documents(docs, chunk_tokens=4, stride=2).collect()
-    by_doc = {}
-    for r in out:
-        by_doc.setdefault(r["doc_id"], []).append(r)
-    # doc 1: 10 words, windows start at 0,2,4,6 -> 1+ceil(6/2)=4 chunks
-    c1 = sorted(by_doc[1], key=lambda r: r["chunk_idx"])
-    assert [r["n_tokens"] for r in c1] == [4, 4, 4, 4]
-    assert c1[0]["chunk_text"] == "w0 w1 w2 w3"
-    assert c1[1]["chunk_text"] == "w2 w3 w4 w5"
-    assert c1[-1]["chunk_text"] == "w6 w7 w8 w9"
-    # overlap coverage: every word appears in some chunk
-    covered = set(" ".join(r["chunk_text"] for r in c1).split())
-    assert covered == {f"w{i}" for i in range(10)}
-    # doc 2: shorter than one window -> single short chunk
-    assert len(by_doc[2]) == 1 and by_doc[2][0]["n_tokens"] == 2
-    # doc 3 (NULL text): no chunks at all (no phantom 1-token rows)
-    assert 3 not in by_doc
-    # stride > chunk_tokens would silently drop inter-window words
-    import pytest
-
-    with pytest.raises(ValueError):
-        chunk_documents(docs, chunk_tokens=4, stride=5)
-
-
-def test_vocab_topk_counts_and_order(spark):
-    from ocr_poc_spark.operators.curation import vocab_topk
-
-    docs = spark.createDataFrame(
-        [(1, "apple apple banana"), (2, "apple cherry"), (3, "banana")],
-        "doc_id long, text string",
-    )
-    out = vocab_topk(docs, top_k=2, min_count=1).collect()
-    assert [(r["term"], r["term_count"], r["doc_count"]) for r in out] == [
-        ("apple", 3, 2),
-        ("banana", 2, 2),
-    ]
-
-
-def test_pack_sequences_budgets_and_attribution(spark):
-    """Exact token budgets + boundary attribution: every sequence except
-    the last tiles [0, seq_len) gap- and overlap-free; every chunk's
-    pieces reassemble exactly its tokens; chunk spans align with their
-    in-sequence spans; zero-token chunks are skipped."""
-    import collections
-
-    from ocr_poc_spark.operators.curation import pack_sequences
-
-    rows = [(d, c, (d * 7 + c * 3) % 40 + 1) for d in range(25) for c in range(d % 4 + 1)]
-    rows.append((99, 0, 0))  # zero-token chunk: must carry nothing
-    df = spark.createDataFrame(rows, "doc_id long, chunk_idx int, n_tokens int")
-    out = [tuple(r) for r in pack_sequences(df, seq_len=50).collect()]
-
-    per_seq = collections.defaultdict(list)
-    per_chunk = collections.defaultdict(int)
-    for seq, ts, te, d, c, cs, ce in out:
-        assert ce - cs == te - ts > 0
-        per_seq[seq].append((ts, te))
-        per_chunk[(d, c)] += ce - cs
-    last = max(per_seq)
-    for s, spans in per_seq.items():
-        spans.sort()
-        assert spans[0][0] == 0
-        assert all(spans[i][1] == spans[i + 1][0] for i in range(len(spans) - 1))
-        if s != last:
-            assert spans[-1][1] == 50
-    assert per_chunk == {(d, c): n for d, c, n in rows if n > 0}
-    total = sum(n for _, _, n in rows)
-    assert sorted(per_seq) == list(range(total // 50 + (1 if total % 50 else 0)))
-
-
-def test_pack_sequences_partition_independent(spark):
-    """The packing rule is a function of the global chunk order only:
-    output must be identical at any input partitioning / parallelism."""
-    from ocr_poc_spark.operators.curation import pack_sequences
-
-    rows = [(d, c, (d * 13 + c) % 30 + 1) for d in range(40) for c in range(3)]
-    df = spark.createDataFrame(rows, "doc_id long, chunk_idx int, n_tokens int")
-    ref = sorted(tuple(r) for r in pack_sequences(df.repartition(1), 64, n_partitions=1).collect())
-    for p in (3, 16):
-        got = sorted(tuple(r) for r in pack_sequences(df.repartition(p), 64, n_partitions=p).collect())
-        assert got == ref, f"packing differs at parallelism {p}"
-
-    import pytest
-
-    with pytest.raises(ValueError):
-        pack_sequences(df, seq_len=0)
-
-
 def test_host_cap_prefilter_identical_on_hot_host(spark):
     """The hot-host pre-filter must not change the kept set or the
     surviving ranks: on a fixture where one host owns 10% of all rows,
@@ -351,46 +236,6 @@ def test_host_cap_prefilter_identical_on_hot_host(spark):
         assert got == ref, f"kept set differs at parallelism {p}"
     hot_kept = [r for r in ref if r[1] == "hot.example"]
     assert len(hot_kept) == 7  # the hot host is really capped
-
-
-def test_strip_boilerplate_lines(spark):
-    """Line dedup must REMOVE corpus-repeated lines from every doc,
-    preserve unique lines (and blank lines) verbatim in order, and
-    return one row per input doc — including docs with no newlines,
-    fully-stripped docs and NULL text."""
-    from ocr_poc_spark.operators.curation import strip_boilerplate_lines
-
-    d = spark.createDataFrame(
-        [
-            (1, "Subscribe now\nreal content one\n\nCopyright 2024"),
-            (2, "subscribe now \nreal content two\nCopyright 2024"),
-            (3, "totally unique\nlines here"),
-            (4, ""),
-            (5, None),
-            (6, "Subscribe now"),
-        ],
-        "doc_id long, text string",
-    )
-    rows = {r["doc_id"]: r for r in strip_boilerplate_lines(d).collect()}
-    assert len(rows) == 6
-    # normalized matching ('subscribe now ' == 'Subscribe now'); blank
-    # line in doc 1 survives (structure, never counted)
-    assert rows[1]["text_clean"] == "real content one\n"
-    assert rows[1]["n_lines"] == 4 and rows[1]["n_removed"] == 2
-    assert rows[2]["text_clean"] == "real content two"
-    assert rows[3]["text_clean"] == "totally unique\nlines here"
-    assert rows[3]["n_removed"] == 0
-    assert rows[4]["text_clean"] == "" and rows[4]["n_lines"] == 1
-    assert rows[5]["text_clean"] == ""
-    assert rows[6]["text_clean"] == "" and rows[6]["n_removed"] == 1
-    # idempotent: stripping the stripped corpus removes nothing new
-    again = strip_boilerplate_lines(
-        spark.createDataFrame(
-            [(k, v["text_clean"]) for k, v in rows.items()],
-            "doc_id long, text string",
-        )
-    ).collect()
-    assert all(r["n_removed"] == 0 for r in again)
 
 
 def test_split_corpus_deterministic_and_leakage_safe(spark):
@@ -566,77 +411,6 @@ def test_url_blocklist_filter_suffix_semantics(spark):
         url_blocklist_filter(d, ["ok.example", "  "])
 
 
-def test_dedup_spans_exact_semantics(spark):
-    """Span-level exact dedup (Lee et al. 2022 style): the globally
-    first (doc_id, pos) occurrence of each duplicated k-shingle keeps
-    its window; every other occurrence loses the union of its lost
-    windows, which covers the whole maximal duplicated region."""
-    from ocr_poc_spark.operators.curation import dedup_spans
-
-    shared = "s1 s2 s3 s4 s5 s6"  # 6-token duplicated region, k=4
-    rows = [
-        (1, f"a1 a2 {shared} a3 a4"),
-        (2, f"b1 b2 b3 {shared} b4"),
-        (3, "c1 c2 c3 c4 c5 c6 c7 c8"),       # unique -> untouched
-        (4, "tiny doc here"),                  # < k tokens -> untouched
-        (5, None),                             # NULL -> '' out
-        (6, f"{shared} d1 d2 {shared}"),       # same-doc repeat
-    ]
-    d = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r["doc_id"]: r for r in dedup_spans(d, span_tokens=4).collect()}
-    assert set(out) == {1, 2, 3, 4, 5, 6}
-    # doc 1 holds the global first occurrence of every shared shingle
-    # (doc_id 1 < 2 < 6): fully kept.
-    assert out[1]["text_clean"] == f"a1 a2 {shared} a3 a4"
-    assert out[1]["n_removed"] == 0 and out[1]["n_tokens"] == 10
-    # doc 2 loses the whole 6-token region (union of its 3 lost
-    # 4-token windows), keeping its unique frame.
-    assert out[2]["text_clean"] == "b1 b2 b3 b4"
-    assert out[2]["n_removed"] == 6 and out[2]["n_tokens"] == 10
-    assert out[3]["n_removed"] == 0
-    assert out[4]["text_clean"] == "tiny doc here"
-    assert out[4]["n_removed"] == 0 and out[4]["n_tokens"] == 3
-    assert out[5]["text_clean"] == "" and out[5]["n_tokens"] == 0
-    # doc 6: both its copies lose to doc 1; everything shared goes,
-    # including the cross-boundary shingles that swallow d1 d2.
-    assert "s1" not in out[6]["text_clean"].split()
-    assert out[6]["n_tokens"] == 14 and out[6]["n_removed"] >= 12
-
-
-def test_dedup_spans_partition_independent(spark):
-    from ocr_poc_spark.operators.curation import dedup_spans
-
-    shared = " ".join(f"w{i}" for i in range(12))
-    rows = [(i, f"u{i}a u{i}b {shared} u{i}c") for i in range(1, 9)] + [
-        (9, "lone text with no duplication at all whatsoever")
-    ]
-    d = spark.createDataFrame(rows, "doc_id long, text string")
-    a = sorted(
-        dedup_spans(d.repartition(1), span_tokens=5).collect(),
-        key=lambda r: r["doc_id"],
-    )
-    b = sorted(
-        dedup_spans(d.repartition(7), span_tokens=5).collect(),
-        key=lambda r: r["doc_id"],
-    )
-    assert [tuple(r) for r in a] == [tuple(r) for r in b]
-    # only doc 1 (global minimum) keeps the shared region
-    keepers = [r["doc_id"] for r in a if "w0" in r["text_clean"].split()]
-    assert keepers == [1]
-
-
-def test_dedup_spans_validates_params(spark):
-    import pytest
-
-    from ocr_poc_spark.operators.curation import dedup_spans
-
-    d = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
-    with pytest.raises(ValueError):
-        dedup_spans(d, span_tokens=1)
-    with pytest.raises(ValueError):
-        dedup_spans(d, min_count=1)
-
-
 def test_temperature_sample_rates_and_null_stratum(spark):
     """Temperature rebalancing: the rarest stratum is kept whole, a
     bigger stratum is kept at floor(sqrt(n_min/n)*denom)/denom exactly
@@ -808,55 +582,6 @@ def test_robots_filter_host_normalization_fail_closed(spark):
     assert kept == {3, 4, 5}
 
 
-def test_decontaminate_spans_excises_benchmark_text(spark):
-    """Surgical decontamination: every occurrence of a benchmark
-    k-shingle is excised (no surviving canonical copy — the goal is
-    zero eval overlap), overlapping matches cover the maximal leaked
-    region, clean docs and short docs pass through, NULL -> ''."""
-    from ocr_poc_spark.operators.curation import decontaminate_spans
-
-    leak = "q1 q2 q3 q4 q5 q6"  # 6-token benchmark region, k=4
-    bench = spark.createDataFrame(
-        [(f"eval prompt {leak} eval answer",), ("short",)], "text string"
-    )
-    rows = [
-        (1, f"a1 a2 {leak} a3 a4"),            # mid-doc leak
-        (2, f"{leak} b1 {leak}"),              # two copies, both go
-        (3, "c1 c2 c3 c4 c5 c6 c7 c8"),        # clean -> untouched
-        (4, "tiny doc"),                       # < k tokens -> untouched
-        (5, None),                             # NULL -> '' out
-    ]
-    d = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {
-        r["doc_id"]: r
-        for r in decontaminate_spans(d, bench, span_tokens=4).collect()
-    }
-    assert set(out) == {1, 2, 3, 4, 5}
-    assert out[1]["text_clean"] == "a1 a2 a3 a4"
-    assert out[1]["n_removed"] == 6 and out[1]["n_tokens"] == 10
-    # doc 2: BOTH copies excised (difference vs dedup_spans); the b1
-    # between them survives — cross-boundary shingles are not in the
-    # benchmark, so removal is exactly the two leaked regions.
-    assert out[2]["text_clean"] == "b1"
-    assert out[2]["n_removed"] == 12
-    assert out[3]["n_removed"] == 0
-    assert out[3]["text_clean"] == "c1 c2 c3 c4 c5 c6 c7 c8"
-    assert out[4]["text_clean"] == "tiny doc" and out[4]["n_removed"] == 0
-    assert out[5]["text_clean"] == "" and out[5]["n_tokens"] == 0
-    # partition independence (broadcast + one groupBy: order-free)
-    a = sorted(
-        tuple(r)
-        for r in decontaminate_spans(
-            d.repartition(7), bench.repartition(3), span_tokens=4
-        ).collect()
-    )
-    assert a == sorted(tuple(out[k]) for k in out)
-    import pytest
-
-    with pytest.raises(ValueError):
-        decontaminate_spans(d, bench, span_tokens=1)
-
-
 def test_crawl_frontier_politeness_waves(spark):
     """Frontier scheduling: no host exceeds per_host fetches per wave,
     slots are the deterministic url-hash order (re-planning never
@@ -966,63 +691,3 @@ def test_minhash_estimate_audit_contract(spark):
 
     with pytest.raises(Exception, match="max_rows"):
         minhash_estimate_audit(d, max_rows=2).collect()
-
-
-def test_strip_repeated_lines_within_doc(spark):
-    """Self-repetition rewrite: later copies of a line go (case/space
-    insensitive), first occurrences and blank lines stay in order,
-    other docs untouched, NULL -> ''."""
-    from ocr_poc_spark.operators.curation import strip_repeated_lines
-
-    rows = [
-        (1, "Nav Home\nbody one\n\nNAV HOME \nbody two\nnav home"),
-        (2, "unique a\nunique b"),
-        (3, None),
-        (4, "\n\n"),
-    ]
-    d = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r["doc_id"]: r for r in strip_repeated_lines(d).collect()}
-    assert out[1]["text_clean"] == "Nav Home\nbody one\n\nbody two"
-    assert out[1]["n_lines"] == 6 and out[1]["n_removed"] == 2
-    assert out[2]["text_clean"] == "unique a\nunique b"
-    assert out[2]["n_removed"] == 0
-    assert out[3]["text_clean"] == "" and out[3]["n_lines"] == 1
-    assert out[4]["text_clean"] == "\n\n" and out[4]["n_removed"] == 0
-    # idempotent: a second pass changes nothing
-    again = strip_repeated_lines(
-        spark.createDataFrame(
-            [(1, out[1]["text_clean"])], "doc_id long, text string"
-        )
-    ).first()
-    assert again["text_clean"] == out[1]["text_clean"]
-    assert again["n_removed"] == 0
-
-
-def test_benchmark_coverage_reverse_decontamination(spark):
-    """Bench-side report: a bench doc fully quoted in the corpus covers
-    1.0, a clean doc 0.0, a partial doc in between; sub-n docs report
-    NULL coverage with 0 n-grams."""
-    from ocr_poc_spark.operators.curation import benchmark_coverage
-
-    leaked = "q1 q2 q3 q4 q5 q6 q7 q8"
-    corpus = spark.createDataFrame(
-        [(1, f"intro {leaked} outro words here"), (2, "other page text entirely")],
-        "doc_id long, text string",
-    )
-    bench = spark.createDataFrame(
-        [
-            (10, leaked),                               # fully covered
-            (11, "clean eval item nothing shared here x"),  # 0 coverage
-            (12, f"{leaked} novel tail t1 t2 t3"),      # partial
-            (13, "short"),                              # < n words
-        ],
-        "bench_id long, text string",
-    )
-    out = {r["bench_id"]: r
-           for r in benchmark_coverage(corpus, bench, n=4).collect()}
-    assert out[10]["coverage"] == 1.0 and out[10]["n_ngrams"] == 5
-    assert out[11]["coverage"] == 0.0 and out[11]["n_found"] == 0
-    assert 0.0 < out[12]["coverage"] < 1.0
-    assert out[13]["n_ngrams"] == 0 and out[13]["coverage"] is None
-
-

@@ -4,7 +4,7 @@ import pyspark.sql.functions as F
 
 from ocr_poc_spark.operators.dedup import minhash_lsh_pairs, ngram_jaccard_pairs
 from ocr_poc_spark.operators.similarity import cosine_topk, lsh_ann_topk
-from ocr_poc_spark.operators.textstats import fingerprint, lang_id, token_stats
+from ocr_poc_spark.operators.textstats import fingerprint, lang_id
 
 
 def _docs(spark):
@@ -79,9 +79,6 @@ def test_lsh_ann_agrees_with_bruteforce_mostly(spark, fixture_rows):
 
 def test_token_stats_and_fingerprint(spark):
     d = _docs(spark)
-    ts = {r["doc_id"]: r for r in token_stats(d).collect()}
-    assert ts[1]["n_tokens"] == 9
-    assert ts[1]["n_chars_calc"] == len("the quick brown fox jumps over the lazy dog")
     fp = {r["doc_id"]: r for r in fingerprint(d).collect()}
     assert fp[1]["md5_fp"] == fp[2]["md5_fp"]
     assert fp[1]["md5_fp"] != fp[4]["md5_fp"]
@@ -106,31 +103,6 @@ def test_ngram_jaccard_refuses_oversized_groups(spark):
         ngram_jaccard_pairs(df, group_col="lang", max_group_rows=10).count()
     # waivable, and the small default passes untouched
     assert ngram_jaccard_pairs(df, group_col="lang", max_group_rows=None).count() > 0
-
-
-def test_scrub_pii_and_repetition_stats(spark):
-    from ocr_poc_spark.operators.textstats import repetition_stats, scrub_pii
-
-    d = spark.createDataFrame(
-        [
-            (1, "reach me at a.b+c@corp.example.org or 192.168.1.20 tel +44 20 7946 0958 ok"),
-            (2, "no pii here just words words words words words words"),
-            (3, ""),
-        ],
-        "doc_id long, text string",
-    )
-    s = {r["doc_id"]: r for r in scrub_pii(d).collect()}
-    assert (s[1]["n_emails"], s[1]["n_ipv4"], s[1]["n_phones"]) == (1, 1, 1)
-    assert "<EMAIL>" in s[1]["scrubbed"] and "<IP>" in s[1]["scrubbed"]
-    assert "<PHONE>" in s[1]["scrubbed"] and "@" not in s[1]["scrubbed"]
-    assert s[2]["scrubbed"] == "no pii here just words words words words words words"
-
-    r = {x["doc_id"]: x for x in repetition_stats(d).collect()}
-    # doc 2: 'words'x6 run -> trigram 'words words words' repeats 3 times
-    assert r[2]["dup_trigram_ratio"] > 0.3
-    assert r[1]["dup_trigram_ratio"] == 0.0
-    assert r[2]["alpha_word_ratio"] == 1.0
-    assert r[3]["n_words"] == 1 and r[3]["max_word_len"] == 0  # split('')=['']
 
 
 def test_lsh_bucket_dim_mismatch_raises(spark):
@@ -666,53 +638,6 @@ def test_incremental_dedup_rejects_mismatched_index(spark):
     assert [(r.id_a, r.id_b) for r in pairs] == [(1, 100)]
 
 
-def test_bigram_lm_scores_contract(spark):
-    """CCNet-style perplexity filter: a gibberish doc scores worse than
-    fluent text under a model trained on a SEPARATE fluent corpus;
-    short/empty docs yield no row; integer witness columns are exact."""
-    import math
-
-    import pytest as _pytest
-
-    from ocr_poc_spark.operators.textstats import bigram_lm_scores
-
-    train = spark.createDataFrame(
-        [(100 + i, "the cat sat on the mat and the dog sat on the rug")
-         for i in range(5)],
-        "doc_id long, text string",
-    )
-    score = spark.createDataFrame(
-        [
-            (1, "the cat sat on the sofa"),
-            (2, "zqx vbn qwe rty uio"),
-            (3, "a"),
-            (4, None),
-        ],
-        "doc_id long, text string",
-    )
-    rows = {r["doc_id"]: r for r in bigram_lm_scores(score, train_df=train).collect()}
-    assert set(rows) == {1, 2}  # 3 and 4 have no bigrams
-    assert rows[1]["cross_entropy"] < rows[2]["cross_entropy"]
-    assert rows[1]["ppl"] < rows[2]["ppl"]
-    assert rows[1]["n_bigrams"] == 5 and rows[2]["n_bigrams"] == 4
-    assert rows[1]["n_seen"] == 4  # "the sofa" unseen as a bigram
-    assert rows[2]["n_seen"] == 0
-    # mirror doc 1 exactly: counts from the train corpus
-    big = {("the", "cat"): 5, ("cat", "sat"): 5, ("sat", "on"): 10,
-           ("on", "the"): 10, ("the", "sofa"): 0}
-    pre = {"the": 20, "cat": 5, "sat": 10, "on": 10, "sofa": 0}
-    V = 8  # the cat sat on mat and dog rug
-    bs = [("the", "cat"), ("cat", "sat"), ("sat", "on"), ("on", "the"),
-          ("the", "sofa")]
-    h = sum(
-        -math.log2((big[p] + 0.5) / (pre[p[0]] + 0.5 * (V + 1))) for p in bs
-    )
-    assert rows[1]["cross_entropy"] == round(h / 5, 4)
-
-    with _pytest.raises(ValueError, match="alpha"):
-        bigram_lm_scores(score, alpha=0.0)
-
-
 def test_semantic_dedup_within_cluster_groups(spark):
     """Near-dup groups resolve within clusters with one keeper (min
     id); transitive chains collapse; pairs straddling a centroid
@@ -750,36 +675,6 @@ def test_semantic_dedup_within_cluster_groups(spark):
         semantic_dedup(d, [[1.0, 2.0, 3.0]], cosine_threshold=0.9).collect()
 
 
-def test_corpus_quantiles_exact_and_approx(spark):
-    """Exact path reproduces hand-computed linear interpolation; approx
-    (t-digest scale path) lands within rank-error bounds of exact;
-    invalid ps raise."""
-    import pytest
-
-    from ocr_poc_spark.operators.textstats import corpus_quantiles
-
-    vals = list(range(1, 101))  # 1..100 in one group
-    d = spark.createDataFrame([("g", v) for v in vals], "lang string, x long")
-    ex = corpus_quantiles(d, "x", keys=["lang"], ps=(0.25, 0.5, 0.99), exact=True)
-    r = ex.collect()[0]
-    assert set(ex.columns) == {"lang", "n", "mean", "p25", "p50", "p99"}
-    assert r["n"] == 100 and r["mean"] == 50.5
-    # exact percentile: rank p*(n-1) on the sorted values
-    assert r["p25"] == 1 + 0.25 * 99 and r["p50"] == 1 + 0.5 * 99
-    assert r["p99"] == 1 + 0.99 * 99
-
-    ap = corpus_quantiles(d, "x", keys=["lang"], ps=(0.25, 0.5, 0.99)).collect()[0]
-    for c in ("p25", "p50", "p99"):
-        assert abs(ap[c] - r[c]) <= 2.0  # 100 values, accuracy 10000
-
-    assert corpus_quantiles(d, "x", ps=(0.999,), exact=True).columns[-1] == "p99_9"
-
-    with pytest.raises(ValueError, match="ps is empty"):
-        corpus_quantiles(d, "x", ps=())
-    with pytest.raises(ValueError, match="in \\[0, 1\\]"):
-        corpus_quantiles(d, "x", ps=(1.5,))
-
-
 def test_semantic_near_pairs_cluster_cap(spark):
     """The honesty guard: a cluster above max_cluster_size fails the
     job loudly instead of silently running |c|^2 cosines; under the
@@ -805,67 +700,6 @@ def test_semantic_near_pairs_cluster_cap(spark):
         semantic_near_pairs(
             d, cents, cosine_threshold=0.999, max_cluster_size=10
         ).collect()
-
-
-def test_gopher_rules_thresholds(spark):
-    """Each published rule flips on its published boundary; empty/NULL
-    docs fail the word gate without poisoning the job (ANSI /0)."""
-    from ocr_poc_spark.operators.textstats import gopher_rules
-
-    good = ("the quick brown words flow and that sentence reads well "
-            "have some more prose with normal shape " * 5).strip()
-    rows = [
-        (1, good),                                     # passes everything
-        (2, "word " * 10),                             # too few words
-        (3, ("#" * 30 + " word ") * 60),               # symbol ratio blown
-        (4, "\n".join("- item" for _ in range(10))),   # all bullet lines
-        (5, "12345 67890 " * 60),                      # no alphabetic words
-        (6, ""),                                       # empty
-        (7, None),                                     # NULL
-        (8, ("zz " * 60).strip()),                     # no stopwords
-    ]
-    d = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r["doc_id"]: r for r in gopher_rules(d, min_words=20).collect()}
-    assert got[1]["gopher_keep"] is True
-    assert got[2]["ok_words"] is False and got[2]["gopher_keep"] is False
-    assert got[3]["ok_symbols"] is False
-    assert got[4]["ok_bullets"] is False
-    assert got[5]["ok_alpha"] is False
-    for i in (6, 7):
-        assert got[i]["ok_words"] is False and got[i]["gopher_keep"] is False
-        assert got[i]["mean_word_len"] is None
-    assert got[8]["ok_stopwords"] is False
-    # boundary: exactly min_words words passes the gate
-    b = spark.createDataFrame(
-        [(9, "the and " + "word " * 18)], "doc_id long, text string"
-    )
-    assert gopher_rules(b, min_words=20).collect()[0]["ok_words"] is True
-
-
-def test_clean_text_normalization_and_idempotence(spark):
-    from ocr_poc_spark.operators.textstats import clean_text
-
-    rows = [
-        (1, "a\x00b\x07c"),                          # controls stripped
-        (2, "x​y﻿z"),                      # zero-widths stripped
-        (3, "“quoted” ‘q’ – — a b"),
-        (4, "a  \t b\n   line \n\n\n\n end  "),      # whitespace shaping
-        (5, None),
-        (6, "already clean text"),
-    ]
-    d = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r["doc_id"]: r for r in clean_text(d).collect()}
-    assert got[1]["clean"] == "abc" and got[1]["n_ctrl"] == 2
-    assert got[2]["clean"] == "xyz" and got[2]["n_zw"] == 2
-    assert got[3]["clean"] == "\"quoted\" 'q' - - a b"
-    assert got[4]["clean"] == "a b\nline\n\nend"
-    assert got[5]["clean"] is None
-    assert got[6]["clean"] == "already clean text"
-
-    # idempotence: cleaning the cleaned column changes nothing
-    once = clean_text(d).select("doc_id", F.col("clean").alias("text"))
-    twice = {r["doc_id"]: r["clean"] for r in clean_text(once).collect()}
-    assert twice == {k: v["clean"] for k, v in got.items()}
 
 
 def test_quantize_embeddings_scale_invariant_retrieval(spark):
@@ -943,111 +777,3 @@ def test_ann_recall_audit(spark):
     assert (out[1]["n_exact"], out[1]["n_hit"], out[1]["recall"]) == (2, 1, 0.5)
     assert (out[2]["n_exact"], out[2]["n_hit"], out[2]["recall"]) == (2, 2, 1.0)
     assert (out[3]["n_exact"], out[3]["n_hit"], out[3]["recall"]) == (1, 0, 0.0)
-
-
-def test_ccnet_buckets_rank_terciles(spark):
-    """Head/middle/tail: per-stratum thirds by ppl rank — fluent docs
-    land head, gibberish lands tail; tiny strata drain to tail; NULL
-    lang is its own stratum; under-2-token docs are excluded."""
-    from ocr_poc_spark.operators.textstats import ccnet_buckets
-
-    fluent = "the quick brown fox jumps over the lazy dog again and again"
-    rows = []
-    # 6 fluent English docs (repeating shared bigrams -> low ppl) and
-    # 3 gibberish ones (unique bigrams -> high ppl)
-    for i in range(6):
-        rows.append((i, "en", fluent))
-    for i in range(6, 9):
-        rows.append((i, "en", f"zzq{i} wfjx{i} qqv{i} xkcd{i} mmr{i}"))
-    rows.append((20, None, fluent))          # NULL stratum, n=1
-    rows.append((21, "fr", "solo"))          # 1 token: no LM row
-    d = spark.createDataFrame(rows, "doc_id long, lang string, text string")
-    out = {r["doc_id"]: r for r in ccnet_buckets(d).collect()}
-    assert 21 not in out                      # no bigrams -> excluded
-    assert out[20]["bucket"] == "tail"        # n=1 stratum drains to tail
-    en = [r for r in out.values() if r["lang"] == "en"]
-    assert len(en) == 9
-    buckets = {b: [r["doc_id"] for r in en if r["bucket"] == b]
-               for b in ("head", "middle", "tail")}
-    assert len(buckets["head"]) == 3 and len(buckets["middle"]) == 3
-    assert len(buckets["tail"]) == 3
-    # every gibberish doc must rank worse than every fluent doc
-    assert set(buckets["tail"]) == {6, 7, 8}
-    # determinism under repartition
-    again = {r["doc_id"]: r["bucket"]
-             for r in ccnet_buckets(d.repartition(7)).collect()}
-    assert again == {k: v["bucket"] for k, v in out.items()}
-
-
-def test_winnow_fingerprints_guarantee(spark):
-    """Winnowing invariants: density <= 1 fingerprint per window slot,
-    every selected hash is a real shingle hash at its position, short
-    docs collapse to one window, and the coverage GUARANTEE holds —
-    two docs sharing a >= k+window-1-token substring share at least
-    one selected fingerprint hash."""
-    from ocr_poc_spark.operators.textstats import winnow_fingerprints
-
-    shared = "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10"  # 10 tokens >= 5+4-1
-    rows = [
-        (1, f"aa bb {shared} cc"),
-        (2, f"{shared} zz yy xx"),
-        (3, "only four little words"),   # < k shingles... 4 words, k=5 -> none
-        (4, "five little words right here"),  # exactly 1 shingle
-        (5, None),
-    ]
-    d = spark.createDataFrame(rows, "doc_id long, text string")
-    out = winnow_fingerprints(d, k=5, window=4).collect()
-    by_doc = {}
-    for r in out:
-        by_doc.setdefault(r["doc_id"], set()).add((r["pos"], r["hash"]))
-    assert 3 not in by_doc and 5 not in by_doc
-    assert len(by_doc[4]) == 1 and next(iter(by_doc[4]))[0] == 0
-    # guarantee: docs 1 and 2 share a fingerprint HASH
-    h1 = {h for _, h in by_doc[1]}
-    h2 = {h for _, h in by_doc[2]}
-    assert h1 & h2
-    # density: n_windows = n_shingles - window + 1; selections <= that
-    n_sh_1 = 13 - 5 + 1  # 13 tokens
-    assert len(by_doc[1]) <= n_sh_1 - 4 + 1
-    # determinism under partitioning
-    again = sorted(tuple(r) for r in
-                   winnow_fingerprints(d.repartition(5), k=5, window=4).collect())
-    assert again == sorted(tuple(r) for r in out)
-    import pytest
-
-    with pytest.raises(ValueError):
-        winnow_fingerprints(d, k=1)
-
-
-def test_strip_repeated_lines_random_mirror(spark):
-    """Randomized property check: the HOF rewrite equals a pure-Python
-    first-occurrence filter on 200 seeded random multi-line docs."""
-    import random
-
-    from ocr_poc_spark.operators.curation import strip_repeated_lines
-
-    rng = random.Random(7)
-    lines_pool = ["Nav Home", "nav home ", "body", "", "  ", "More",
-                  "x y", "Nav Home\r", "\tbody", "\r", "\t "]
-    rows = [
-        (i, "\n".join(rng.choice(lines_pool)
-                      for _ in range(rng.randint(1, 10))))
-        for i in range(200)
-    ]
-    d = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r["doc_id"]: (r["text_clean"], r["n_removed"])
-           for r in strip_repeated_lines(d).collect()}
-
-    def mirror(t):
-        seen, kept = set(), []
-        for l in t.split("\n"):
-            norm = l.strip().lower()   # python strip == full whitespace
-            if norm == "":
-                kept.append(l)
-            elif norm not in seen:
-                seen.add(norm)
-                kept.append(l)
-        return "\n".join(kept), len(t.split("\n")) - len(kept)
-
-    for i, t in rows:
-        assert got[i] == mirror(t), (i, t)

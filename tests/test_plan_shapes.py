@@ -83,23 +83,6 @@ def test_boilerplate_plan_two_exchanges_no_join(spark):
     assert "Join" not in plan, plan
 
 
-def test_decontaminate_plan_broadcast_bench_one_shuffle(spark):
-    """decontaminate must broadcast the benchmark n-gram side and
-    shuffle the corpus exactly once (on doc id)."""
-    from ocr_poc_spark.operators.curation import decontaminate
-
-    docs = spark.createDataFrame(
-        [(1, "a b c d e f g h i j"), (2, "x")], "doc_id long, text string"
-    )
-    bench = spark.createDataFrame([(9, "a b c d e f g h")], "doc_id long, text string")
-    plan = _plan(decontaminate(docs, bench))
-    assert "BroadcastExchange" in plan, plan
-    # corpus-side shuffles: one for the doc-id aggregate; the bench side
-    # needs one for its distinct (small side, pre-broadcast)
-    n_ex = plan.count("Exchange hashpartitioning")
-    assert n_ex <= 2, plan
-
-
 def test_normalize_and_sample_are_zero_shuffle(spark):
     """normalize_urls and stratified_sample are map-only passes."""
     from ocr_poc_spark.operators.curation import normalize_urls, stratified_sample
@@ -294,26 +277,6 @@ def test_robots_filter_corpus_joins_broadcast_rules(spark):
             # grouping expression; the corpus ids/urls never shuffle.
             assert "doc_id" not in ln and "url" not in ln, plan
     assert "Generate" not in plan.split("BroadcastHashJoin")[0], plan
-
-
-def test_decontaminate_spans_broadcasts_bench(spark):
-    """decontaminate_spans must broadcast the benchmark shingle set
-    (map-side LEFT SEMI match) — the corpus side never shuffles for
-    the match, only for the per-doc start-array aggregate and the
-    token-array rebuild join."""
-    from ocr_poc_spark.operators.curation import decontaminate_spans
-
-    docs = spark.createDataFrame(
-        [(1, "a b c d e f g h i j"), (2, "x y z w v u t s")],
-        "doc_id long, text string",
-    )
-    bench = spark.createDataFrame(
-        [("a b c d e f g h",)], "text string"
-    )
-    plan = _plan(decontaminate_spans(docs, bench, span_tokens=4))
-    assert "BroadcastExchange" in plan, plan
-    # occurrence->starts aggregate + the id rebuild join (both sides)
-    assert plan.count("Exchange hashpartitioning") <= 3, plan
 
 
 def test_quantize_embeddings_is_map_only(spark):
