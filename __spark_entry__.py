@@ -1,21 +1,20 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 entry() runs the flagship extraction (the fused map-only kernel) over
-pages synthesised from the driver's documents table. queries() holds 49
-queries. The first 29 are the production-path contract: 16 pure-
+pages synthesised from the documents table of the test data. queries()
+holds 36 queries. The first 29 are the production-path contract: 16 pure-
 relational re-expressions of the cascade's SQL shapes (SURVEY.md §2), 8
 queries over the operators of the production path (extraction, MinHash
 dedup and components, crawl diff and churn, host cap, boilerplate
 shingles, language ID), and 5 that tests/test_entry_contract.py pins.
-The other 20 cover the sampling, sharding, URL, crawl-policy,
-similarity and incremental-dedup operators (stratified and temperature
-sampling, splits, shuffle shards, URL normalization and blocklists,
-robots rules, the crawl frontier, ANN/IVF variants, semantic dedup,
-incremental MinHash and components). EVERY query has a DuckDB
-oracle in oracle_sql(): SQL-expressible ops are re-derived in SQL
-(incl. the exact all-pairs Jaccard behind MinHash); hyperplane LSH and
-the HTML extraction cascade compare against committed golden parquet
-from independent reimplementations (scripts/make_goldens.py).
+The other 7 cover the sampling, sharding, URL and crawl-policy
+operators (stratified and temperature sampling, splits, shuffle
+shards, URL normalization and blocklists, robots rules). EVERY query
+has a DuckDB oracle in oracle_sql() that re-derives its result in SQL
+(incl. the exact all-pairs Jaccard behind MinHash and the HTML
+extraction cascade's fields over the synthesised page template); the
+committed extraction golden from the sequential kernel
+(scripts/make_goldens.py) is a second witness for the cascade.
 
 Cross-engine float discipline: aggregates over doubles are cast to
 DECIMAL before summing (exact, associative); ratios/cosines are rounded
@@ -25,16 +24,10 @@ microseconds (unix_micros / epoch_us).
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
-
-# Committed golden parquet behind the ann_lsh / ann_ivf oracles.
-_GOLDEN_DIR = os.path.join(
-    os.path.dirname(os.path.abspath(__file__)), "dist", "golden"
-)
 
 
 def _t(
@@ -227,28 +220,6 @@ def q_dedup_minhash(spark, sf_dir):  # MinHash+LSH, exact-Jaccard verified
     )
 
 
-def q_dedup_incremental(spark, sf_dir):
-    """Rolling-crawl dedup: every 4th doc plays the NEW crawl slice,
-    the rest the already-indexed corpus; pairs touching at least one
-    new doc must exactly equal the batch operator's output restricted
-    to those pairs (the oracle recomputes exact all-pairs Jaccard with
-    that predicate). The corpus side goes through the persisted-index
-    path (minhash_band_index), never re-shingled except for the
-    candidate-pruned verify."""
-    from ocr_poc_spark.operators.dedup import (
-        minhash_band_index,
-        minhash_lsh_pairs_incremental,
-    )
-
-    d = _t(spark, sf_dir, "documents", spread=True)
-    new = d.where(F.col("doc_id") % 4 == 0)
-    corpus = d.where(F.col("doc_id") % 4 != 0)
-    idx = minhash_band_index(corpus)
-    return minhash_lsh_pairs_incremental(
-        new, corpus, corpus_index=idx, jaccard_threshold=0.5
-    ).select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-
-
 def q_dedup_components(spark, sf_dir):
     """Duplicate-CLUSTER resolution: connected components over the
     MinHash near-dup pair list (doc_id -> min doc id of its component),
@@ -263,40 +234,6 @@ def q_dedup_components(spark, sf_dir):
     return connected_components(pairs).orderBy("doc_id")
 
 
-def q_components_incremental(spark, sf_dir):
-    """Incremental CC (dedup.merge_components): labels built from the
-    even-keyed half of the MinHash pair list, then the odd-keyed half
-    merged in — must equal from-scratch CC over all pairs, which is
-    exactly what the oracle recomputes (same recursive closure as
-    dedup_components). Proves label-table maintenance for a rolling
-    crawl needs one edge per labeled doc, not the pair history."""
-    from ocr_poc_spark.operators.dedup import (
-        connected_components, merge_components, minhash_lsh_pairs,
-    )
-
-    d = _t(spark, sf_dir, "documents", spread=True)
-    # Both halves filter the same pair list — materialize it once so
-    # the band join + exact-Jaccard verify don't run per reference.
-    pairs = minhash_lsh_pairs(d, jaccard_threshold=0.5).localCheckpoint(eager=True)
-    first = pairs.where((F.col("id_a") + F.col("id_b")) % 2 == 0)
-    second = pairs.where((F.col("id_a") + F.col("id_b")) % 2 != 0)
-    labels = connected_components(first)
-    return merge_components(labels, second).orderBy("doc_id")
-
-
-def q_minhash_estimate(spark, sf_dir):
-    """MinHash estimator audit (dedup.minhash_estimate_audit): est vs
-    exact Jaccard on every true >= 0.5 pair, seeded-md5 signature
-    family so signatures, estimates, and errors all replay bit-exactly
-    in SQL (the documented stand-in for production's xxhash64 — the
-    estimator's statistics are hash-family-independent)."""
-    from ocr_poc_spark.operators.dedup import minhash_estimate_audit
-
-    return minhash_estimate_audit(
-        _t(spark, sf_dir, "documents", spread=True), num_hashes=16
-    )
-
-
 def q_embedding_topk(spark, sf_dir):  # brute-force cosine top-k
     # Reuses the operator directly (no inline re-implementation to
     # drift); ranking happens on the UNROUNDED cosine in both engines.
@@ -309,75 +246,11 @@ def q_embedding_topk(spark, sf_dir):  # brute-force cosine top-k
     )
 
 
-def q_ann_lsh(spark, sf_dir):  # hyperplane-LSH ANN
-    from ocr_poc_spark.operators.similarity import lsh_ann_topk
-
-    emb = _t(spark, sf_dir, "embeddings", spread=True)
-    return lsh_ann_topk(emb, k=3, dim=64, n_planes=8).select(
-        "query_id", "neighbor_id", "rank", F.round("cosine", 6).alias("cosine")
-    )
-
-
-def q_ann_ivf(spark, sf_dir):  # IVF (k-means inverted-file) ANN
-    """The coarse-quantizer alternative to q_ann_lsh: deterministic
-    seeded Lloyd's k-means (native aggregations, centroids as driver
-    literals), n_probe nearest-centroid search, exact cosine re-rank.
-    Oracle = committed golden from an arithmetic-exact pure-Python
-    mirror (scripts/make_goldens.py::golden_ann_ivf; left-fold float
-    ops match Spark's HOF folds bit-for-bit; the 4-decimal centroid
-    rounding both sides quantizes away sum-order noise)."""
-    from ocr_poc_spark.operators.similarity import ivf_ann_topk
-
-    emb = _t(spark, sf_dir, "embeddings", spread=True)
-    return ivf_ann_topk(
-        emb, k=3, dim=64, n_centroids=16, n_probe=4, n_iter=3
-    ).select(
-        "query_id", "neighbor_id", "rank", F.round("cosine", 6).alias("cosine")
-    )
-
-
-def _ivf_lookup_centroids() -> list[list[float]]:
-    """Small INTEGER centroids shared by q_ann_ivf_lookup,
-    q_semantic_dedup, q_cluster_profile and their SQL oracles: with
-    integer vectors AND integer centroids every distance, dot product
-    and squared norm is exactly representable in doubles, so the whole
-    serving-mode IVF (assignment, probes, cosine re-rank) and the
-    SemDeDup assignment are bit-exactly recomputable in SQL — no golden
-    needed."""
-    import numpy as np
-
-    rs = np.random.RandomState(13)
-    return rs.randint(-3, 4, size=(8, 16)).astype(float).tolist()
-
-
-def q_ann_ivf_lookup(spark, sf_dir):
-    """Serving-mode IVF: every 4th doc plays the incoming query batch,
-    the rest the indexed corpus; centroids are supplied (the persisted
-    quantizer), so no k-means runs. Vectors are hashing-trick INTEGER
-    embeddings — the one configuration where an approximate-ANN path
-    has an exact SQL oracle end-to-end."""
-    from ocr_poc_spark.operators.similarity import ivf_ann_topk
-    from ocr_poc_spark.operators.textstats import hash_embedding
-
-    emb = hash_embedding(
-        _t(spark, sf_dir, "documents", spread=True), dim=16
-    ).select(F.col("doc_id").alias("vec_id"), "embedding")
-    corpus = emb.where(F.col("vec_id") % 4 != 0)
-    queries = emb.where(F.col("vec_id") % 4 == 0)
-    return ivf_ann_topk(
-        corpus, k=2, dim=16, n_probe=3,
-        queries=queries, centroids=_ivf_lookup_centroids(),
-    ).select(
-        "query_id", "neighbor_id", "rank", F.round("cosine", 6).alias("cosine")
-    )
-
-
 def _ivf_bcast_centroids() -> list[list[float]]:
-    """80 INTEGER centroids (> similarity.MAX_LITERAL_CENTROIDS = 64)
-    shared by q_ann_ivf_bcast and its SQL oracle — forces the
-    broadcast-centroid branch (_with_centroids_col +
-    _sorted_centroid_dists), the production branch at k ~ sqrt(n),
-    while keeping every distance/argmin/cosine exact in doubles."""
+    """80 INTEGER centroids shared by q_ann_ivf_bcast and its SQL
+    oracle: a k ~ sqrt(n) quantizer for the broadcast-centroid path
+    (_with_centroids_col + _sorted_centroid_dists) that keeps every
+    distance/argmin/cosine exact in doubles."""
     import numpy as np
 
     rs = np.random.RandomState(29)
@@ -385,59 +258,25 @@ def _ivf_bcast_centroids() -> list[list[float]]:
 
 
 def q_ann_ivf_bcast(spark, sf_dir):
-    """IVF ANN through the BROADCAST-CENTROID branch: 80 supplied
-    integer centroids exceed MAX_LITERAL_CENTROIDS, so assignment and
-    probe selection run as the single-row broadcast centroid array +
-    per-row HOF sorted-distance prefix (similarity._with_centroids_col
-    / _sorted_centroid_dists) — the branch SCALE10X names the
-    production path (k must track sqrt(corpus)). Self-search over
+    """IVF ANN with 80 supplied integer centroids: assignment and probe
+    selection run as the single-row broadcast centroid array + per-row
+    HOF sorted-distance prefix (similarity._with_centroids_col /
+    _sorted_centroid_dists). Self-search over
     integer hashing-trick embeddings: the whole approximate path
     (assignment argmin, probe ordering with (d, ci) tie-break,
     self-pair filter, cosine re-rank) is exactly recomputable in SQL.
     Plan shape pinned by
     tests/test_plan_shapes.py::test_ivf_broadcast_assignment_is_exchange_free."""
-    from ocr_poc_spark.operators.similarity import (
-        MAX_LITERAL_CENTROIDS,
-        ivf_ann_topk,
-    )
+    from ocr_poc_spark.operators.similarity import ivf_ann_topk
     from ocr_poc_spark.operators.textstats import hash_embedding
 
-    cents = _ivf_bcast_centroids()
-    assert len(cents) > MAX_LITERAL_CENTROIDS
     emb = hash_embedding(
         _t(spark, sf_dir, "documents", spread=True), dim=16
     ).select(F.col("doc_id").alias("vec_id"), "embedding")
     return ivf_ann_topk(
-        emb, k=2, dim=16, n_probe=3, centroids=cents
+        emb, centroids=_ivf_bcast_centroids(), k=2, dim=16, n_probe=3
     ).select(
         "query_id", "neighbor_id", "rank", F.round("cosine", 6).alias("cosine")
-    )
-
-
-def q_embedding_near_dup_lsh(spark, sf_dir):
-    """LSH-bucketed embedding near-dup SCALE path, exact-oracled via a
-    planted-duplicate corpus: the embeddings table is augmented with one
-    scaled copy (x2.0) of every vector under vec_id+100000. Scaling by a
-    power of two is EXACT in IEEE-754 and commutes with the sign of every
-    hyperplane dot product, so each planted pair collides in every LSH
-    table — recall on the planted pairs is provably 1.0, not tuned. With
-    threshold 0.95 and max organic cosine ~0.51 on this corpus, the exact
-    pair set is precisely the planted pairs, so the LSH path's output
-    (candidates -> exact re-rank filter) must EQUAL the all-pairs SQL
-    oracle: the equi-join bucketing, pair dedup, vector join-back and
-    precision filter are all on the hook. Recall in the approximate
-    (near-but-not-identical) regime is bounded separately by
-    tests/test_ops.py::test_embedding_near_dup_lsh_recall_bound."""
-    from ocr_poc_spark.operators.similarity import embedding_near_dup_pairs
-
-    emb = _t(spark, sf_dir, "embeddings", spread=True).select("vec_id", "embedding")
-    planted = emb.select(
-        (F.col("vec_id") + 100000).alias("vec_id"),
-        F.transform("embedding", lambda x: x * F.lit(2.0).cast("float")).alias("embedding"),
-    )
-    aug = emb.unionByName(planted)
-    return embedding_near_dup_pairs(aug, cosine_threshold=0.95).select(
-        "id_a", "id_b", F.round("cosine", 6).alias("cosine")
     )
 
 
@@ -755,166 +594,6 @@ def q_robots_filter(spark, sf_dir):
     return robots_filter(docs, rules)
 
 
-def q_semantic_dedup(spark, sf_dir):
-    """SemDeDup-style cluster-then-dedup (similarity.semantic_dedup):
-    integer hashing-trick embeddings assigned to the 8 shared integer
-    centroids (broadcast, map-side), exact cosine pairs WITHIN each
-    cluster only, hub-safe connected components, one keeper per group.
-    Integer vectors + integer centroids make assignment, cosine and
-    closure bit-exactly recomputable in SQL."""
-    from ocr_poc_spark.operators.similarity import semantic_dedup
-    from ocr_poc_spark.operators.textstats import hash_embedding
-
-    emb = hash_embedding(_t(spark, sf_dir, "documents", spread=True), dim=16)
-    return semantic_dedup(
-        emb, _ivf_lookup_centroids(), id_col="doc_id",
-        cosine_threshold=0.99,
-    )
-
-
-def _semantic_bcast_centroids() -> list[list[float]]:
-    """80 INTEGER centroids (> similarity.MAX_LITERAL_CENTROIDS = 64)
-    shared by q_semantic_dedup_bcast and its SQL oracle — the
-    production-shaped quantizer config (k tracks ~sqrt(n) instead of
-    the 8-cluster fixture freeze VERDICT r3/r4 flagged), keeping every
-    distance/argmin/cosine exact in doubles. Distinct seed from the
-    IVF twins so cluster boundaries differ across the suite."""
-    import numpy as np
-
-    rs = np.random.RandomState(31)
-    return rs.randint(-3, 4, size=(80, 16)).astype(float).tolist()
-
-
-def q_semantic_dedup_bcast(spark, sf_dir):
-    """SemDeDup at the PRODUCTION quantizer scale: same cluster-then-
-    dedup chain as semantic_dedup but with 80 supplied integer
-    centroids (> MAX_LITERAL_CENTROIDS) — the k ~ sqrt(n) regime where
-    in-cluster pair work is bounded at ~n^2/k (SCALE10X measured the
-    frozen-k=8 config at ~156M in-cluster cosines at 10x; this config
-    is the one a 100 TB run ships). Assignment rides the single-row
-    broadcast centroid array (similarity._with_centroids_col), exactly
-    like ann_ivf_bcast — the r4 verdict's asked-for mirror. Integer
-    vectors + integer centroids keep assignment, cosine and the
-    component closure bit-exactly recomputable in SQL."""
-    from ocr_poc_spark.operators.similarity import (
-        MAX_LITERAL_CENTROIDS,
-        semantic_dedup,
-    )
-    from ocr_poc_spark.operators.textstats import hash_embedding
-
-    cents = _semantic_bcast_centroids()
-    assert len(cents) > MAX_LITERAL_CENTROIDS
-    emb = hash_embedding(_t(spark, sf_dir, "documents", spread=True), dim=16)
-    return semantic_dedup(
-        emb, cents, id_col="doc_id", cosine_threshold=0.99,
-    )
-
-
-def q_crawl_frontier(spark, sf_dir):
-    """Politeness-aware crawl scheduling (operators/crawl.crawl_frontier):
-    synthesized frontier urls (one per document, the robots_filter url
-    recipe), per-host priority = the host's document count (the
-    "recrawl big hosts first" baseline signal; churn or any host score
-    slots in the same way), per_host=2 waves. The oracle replays the url
-    synthesis, host regex, priority join, and the hash-ordered
-    partitioned window in SQL."""
-    from ocr_poc_spark.operators.crawl import crawl_frontier
-
-    d = _t(spark, sf_dir, "documents", spread=True)
-    urls = d.select(
-        F.concat(
-            F.lit("https://"), F.col("source"), F.lit(".example/doc/"),
-            F.col("doc_id").cast("string"),
-        ).alias("url")
-    )
-    pr = d.groupBy("source").agg(F.count(F.lit(1)).alias("_n")).select(
-        F.concat(F.col("source"), F.lit(".example")).alias("host"),
-        F.col("_n").cast("double").alias("priority"),
-    )
-    return crawl_frontier(urls, priority=pr, per_host=2)
-
-
-def q_ann_quantized(spark, sf_dir):
-    """ANN over int8-quantized embeddings (similarity.
-    quantize_embeddings): floor-quantized integer cells are
-    bit-identical cross-engine (one IEEE mul + div + floor per cell),
-    cosine is scale-invariant so retrieval runs directly on the
-    quantized vectors, and integer dots make every cosine exact —
-    the 4x-memory ANN serving path with a complete SQL oracle."""
-    from ocr_poc_spark.operators.similarity import (
-        cosine_topk, quantize_embeddings,
-    )
-
-    emb = _t(spark, sf_dir, "embeddings")
-    qd = quantize_embeddings(emb).select(
-        "vec_id", F.col("qvec").alias("embedding")
-    )
-    return cosine_topk(qd, query_ids=[0, 1, 2, 3, 4], k=3).select(
-        "query_id", "neighbor_id", "rank", F.round("cosine", 6).alias("cosine")
-    )
-
-
-def q_ann_recall(spark, sf_dir):
-    """ANN quality audit (similarity.ann_recall): recall@2 of the
-    broadcast-centroid IVF path against exact cosine ground truth for
-    a 10-query sample, both legs over the integer hashing-trick
-    embeddings — so BOTH the exact leg, the whole approximate leg
-    (assignment, probes, re-rank), and the recall arithmetic are
-    bit-exactly recomputable in SQL."""
-    from ocr_poc_spark.operators.similarity import (
-        ann_recall, cosine_topk, ivf_ann_topk,
-    )
-    from ocr_poc_spark.operators.textstats import hash_embedding
-
-    qids = list(range(10))
-    # Both audit legs (exact + IVF) read the same embedding frame;
-    # materialize it once instead of re-running the md5 hashing fold
-    # per leg (values identical — the checkpoint is the same frame).
-    emb = hash_embedding(
-        _t(spark, sf_dir, "documents", spread=True), dim=16
-    ).select(F.col("doc_id").alias("vec_id"), "embedding").localCheckpoint(
-        eager=True
-    )
-    exact = cosine_topk(emb, query_ids=qids, k=2)
-    approx = ivf_ann_topk(
-        emb, k=2, dim=16, n_probe=3, centroids=_ivf_bcast_centroids()
-    ).where(F.col("query_id").isin(qids))
-    return ann_recall(exact, approx)
-
-
-def q_cluster_profile(spark, sf_dir):
-    """Corpus cartography: assign every document to its nearest shared
-    centroid (similarity.assign_clusters — map-side broadcast argmin
-    over the hashing-trick embeddings) and profile each cluster with
-    its doc count and top-3 terms by frequency — the unsupervised
-    what-is-in-this-corpus report a curation run starts from. Exact
-    integer counts; (count desc, term) rank ties deterministic."""
-    from ocr_poc_spark.operators.similarity import assign_clusters
-    from ocr_poc_spark.operators.textstats import hash_embedding
-
-    docs = _t(spark, sf_dir, "documents", spread=True)
-    assigned = assign_clusters(
-        hash_embedding(docs, dim=16), _ivf_lookup_centroids(), id_col="doc_id"
-    ).select("doc_id", "cluster")
-    sizes = assigned.groupBy("cluster").agg(F.count(F.lit(1)).alias("n_docs"))
-    words = docs.select(
-        "doc_id", F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("term")
-    ).where(F.col("term") != "")
-    tf = (
-        words.join(assigned, "doc_id")
-        .groupBy("cluster", "term")
-        .agg(F.count(F.lit(1)).alias("term_count"))
-    )
-    w = Window.partitionBy("cluster").orderBy(
-        F.desc("term_count"), F.asc("term")
-    )
-    top = tf.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= 3)
-    return top.join(sizes, "cluster").select(
-        "cluster", "n_docs", F.col("rank").cast("int").alias("rank"),
-        "term", "term_count",
-    )
-
-
 def q_url_blocklist(spark, sf_dir):
     """Domain-blocklist filtering (curation.url_blocklist_filter): the
     first pass of a web pipeline. Documents become urls under
@@ -1025,11 +704,11 @@ def q_host_cap(spark, sf_dir):  # domain-balance cap, stable hash order
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # The driver's correctness gate checks the first 50 entries; all 49
-    # sit inside that window, so every entry is checked against its
+    # The correctness gate checks the first 50 entries; all 36 sit
+    # inside that window, so every entry is checked against its
     # oracle. The three blocks of the production-path contract come
-    # first; the operator families after them keep their operators
-    # reachable and oracle-checked.
+    # first; the sampling, sharding and URL queries after them keep
+    # their operators reachable and oracle-checked.
     return {
         # -- pure relational: the cascade's SQL shapes, no operator import --
         "quality_gate": q_quality_gate,
@@ -1064,27 +743,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "fingerprint": q_fingerprint,
         "text_embed_near_dup": q_text_embed_near_dup,
         "ann_ivf_bcast": q_ann_ivf_bcast,
-        # -- sampling, sharding, URL, crawl and similarity operators --
-        "dedup_incremental": q_dedup_incremental,
-        "components_incremental": q_components_incremental,
-        "minhash_estimate": q_minhash_estimate,
+        # -- sampling, sharding, URL and crawl-policy operators --
         "url_blocklist": q_url_blocklist,
         "corpus_split": q_corpus_split,
-        "crawl_frontier": q_crawl_frontier,
-        "ann_quantized": q_ann_quantized,
-        "ann_recall": q_ann_recall,
-        "cluster_profile": q_cluster_profile,
-        "semantic_dedup_bcast": q_semantic_dedup_bcast,
         "temperature_sample": q_temperature_sample,
         "shuffle_shards": q_shuffle_shards,
         "robots_filter": q_robots_filter,
-        "semantic_dedup": q_semantic_dedup,
-        "ann_lsh": q_ann_lsh,
         "stratified_sample": q_stratified_sample,
         "normalize_urls": q_normalize_urls,
-        "ann_ivf": q_ann_ivf,
-        "ann_ivf_lookup": q_ann_ivf_lookup,
-        "embedding_near_dup_lsh": q_embedding_near_dup_lsh,
     }
 
 
@@ -1118,57 +784,6 @@ _STOP = {
     "de": "['der','die','das','und','ein','eine','zu','mit','ist','den']",
     "es": "['el','la','los','de','y','un','una','que','es','para']",
 }
-
-
-def _semantic_dedup_oracle(centroids: list[list[float]]) -> str:
-    """SemDeDup oracle SQL shared by semantic_dedup (8 fixture
-    centroids) and semantic_dedup_bcast (80 production-shaped
-    centroids): integer-exact recompute of the whole cluster-then-
-    dedup chain — nearest-centroid assignment ((dist, ci) order),
-    in-cluster cosine pairs at 0.99, recursive-CTE closure, min-id
-    keeper."""
-    cent_rows = ", ".join(
-        "({}, [{}])".format(i, ", ".join(f"{x:.1f}" for x in c))
-        for i, c in enumerate(centroids)
-    )
-    return f"""
-            WITH RECURSIVE {_EMBED_VEC_SQL},
-            cent(ci, cv) AS (VALUES {cent_rows}),
-            assign AS (
-              SELECT doc_id, ci FROM (
-                SELECT v.doc_id, t.ci,
-                       ROW_NUMBER() OVER (
-                         PARTITION BY v.doc_id
-                         ORDER BY list_sum(list_transform(range(1, 17),
-                             i -> (v.v[i] - t.cv[i]) * (v.v[i] - t.cv[i]))),
-                           t.ci) AS rn
-                FROM vec v CROSS JOIN cent t)
-              WHERE rn = 1),
-            p AS (
-              SELECT a.doc_id AS id_a, b.doc_id AS id_b
-              FROM vec a JOIN assign aa ON aa.doc_id = a.doc_id
-                   JOIN assign bb ON aa.ci = bb.ci
-                   JOIN vec b ON b.doc_id = bb.doc_id AND a.doc_id < b.doc_id
-              WHERE list_sum(list_transform(range(1, 17), i -> a.v[i] * b.v[i]))
-                      / NULLIF(
-                          sqrt(list_sum(list_transform(range(1, 17), i -> a.v[i] * a.v[i])))
-                          * sqrt(list_sum(list_transform(range(1, 17), i -> b.v[i] * b.v[i]))),
-                          0)
-                    >= 0.99),
-            e AS (SELECT id_a AS u, id_b AS v FROM p
-                  UNION SELECT id_b, id_a FROM p),
-            reach(u, v) AS (
-              SELECT u, v FROM e
-              UNION
-              SELECT r.u, e2.v FROM reach r JOIN e e2 ON r.v = e2.u
-                WHERE e2.v != r.u),
-            comp AS (
-              SELECT u AS doc_id, least(u, min(v)) AS component_id
-              FROM reach GROUP BY u)
-            SELECT c.doc_id, CAST(a2.ci AS INTEGER) AS cluster,
-                   c.component_id, (c.doc_id = c.component_id) AS keeper
-            FROM comp c JOIN assign a2 ON a2.doc_id = c.doc_id
-        """
 
 
 def oracle_sql() -> dict[str, str]:
@@ -1270,31 +885,6 @@ def oracle_sql() -> dict[str, str]:
                 SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
                          ORDER BY cosine DESC, neighbor_id ASC) AS rank FROM pairs)
             WHERE rank <= 3
-        """,
-        # embedding_near_dup_lsh: exact all-pairs recompute over the SAME
-        # planted-duplicate augmentation the Spark query builds (scaled
-        # copies under vec_id+100000). Because x2.0 scaling is IEEE-exact,
-        # the LSH path provably emits exactly this set (see the query
-        # docstring); any bucketing / dedup / join-back / threshold bug
-        # shows up as a hash mismatch here.
-        "embedding_near_dup_lsh": """
-            WITH aug AS (
-                SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-                FROM embeddings
-                UNION ALL
-                SELECT vec_id + 100000,
-                       list_transform(CAST(embedding AS DOUBLE[]),
-                                      x -> x * 2.0::DOUBLE)
-                FROM embeddings
-            )
-            SELECT a.vec_id AS id_a, c.vec_id AS id_b,
-                   ROUND(list_dot_product(a.v, c.v)
-                         / (sqrt(list_dot_product(a.v, a.v))
-                            * sqrt(list_dot_product(c.v, c.v))), 6) AS cosine
-            FROM aug a JOIN aug c ON a.vec_id < c.vec_id
-            WHERE list_dot_product(a.v, c.v)
-                  / (sqrt(list_dot_product(a.v, a.v))
-                     * sqrt(list_dot_product(c.v, c.v))) >= 0.95
         """,
         "lang_id": f"""
             WITH scored AS (SELECT doc_id, lang AS lang_true, {lang_hits}
@@ -1446,70 +1036,11 @@ def oracle_sql() -> dict[str, str]:
             SELECT id_a, id_b, ROUND(cos_raw, 6) AS cosine
             FROM scored WHERE cos_raw >= 0.99
         """,
-        # Serving-mode IVF oracle: integer vectors + integer centroid
-        # literals make assignment distances, probe ordering and the
-        # cosine re-rank all exact in SQL. Same (d, ci) / (cos desc,
-        # id asc) tie-breaks as the Spark windows.
-        "ann_ivf_lookup": f"""
-            WITH {_EMBED_VEC_SQL},
-            cent(ci, cv) AS (VALUES {{cent_rows}}),
-            corpus AS (SELECT doc_id, v FROM vec WHERE doc_id % 4 != 0),
-            qs AS (SELECT doc_id, v FROM vec WHERE doc_id % 4 = 0),
-            assign AS (
-              SELECT doc_id, ci FROM (
-                SELECT c.doc_id, t.ci,
-                       ROW_NUMBER() OVER (
-                         PARTITION BY c.doc_id
-                         ORDER BY list_sum(list_transform(range(1, 17),
-                             i -> (c.v[i] - t.cv[i]) * (c.v[i] - t.cv[i]))),
-                           t.ci) AS rn
-                FROM corpus c CROSS JOIN cent t)
-              WHERE rn = 1),
-            probes AS (
-              SELECT doc_id, ci FROM (
-                SELECT q.doc_id, t.ci,
-                       ROW_NUMBER() OVER (
-                         PARTITION BY q.doc_id
-                         ORDER BY list_sum(list_transform(range(1, 17),
-                             i -> (q.v[i] - t.cv[i]) * (q.v[i] - t.cv[i]))),
-                           t.ci) AS rn
-                FROM qs q CROSS JOIN cent t)
-              WHERE rn <= 3),
-            cand AS (
-              -- serving mode: no self-pair filter (frames are disjoint
-              -- here by the %4 split; a collision would be a re-queried
-              -- doc whose indexed copy is a legitimate neighbor)
-              SELECT p.doc_id AS qid, a.doc_id AS nid
-              FROM probes p JOIN assign a ON p.ci = a.ci),
-            scored AS (
-              SELECT c.qid, c.nid,
-                     list_sum(list_transform(range(1, 17), i -> q.v[i] * n.v[i]))
-                       / NULLIF(
-                           sqrt(list_sum(list_transform(range(1, 17), i -> q.v[i] * q.v[i])))
-                           * sqrt(list_sum(list_transform(range(1, 17), i -> n.v[i] * n.v[i]))),
-                           0) AS cos_raw
-              FROM cand c JOIN qs q ON q.doc_id = c.qid
-                JOIN corpus n ON n.doc_id = c.nid),
-            ranked AS (
-              SELECT qid, nid, cos_raw,
-                     ROW_NUMBER() OVER (
-                       PARTITION BY qid ORDER BY cos_raw DESC, nid ASC) AS rnk
-              FROM scored WHERE cos_raw IS NOT NULL)
-            SELECT qid AS query_id, nid AS neighbor_id,
-                   CAST(rnk AS INTEGER) AS rank,
-                   ROUND(cos_raw, 6) AS cosine
-            FROM ranked WHERE rnk <= 2
-        """.format(
-            cent_rows=", ".join(
-                "({}, [{}])".format(
-                    i, ", ".join(f"{x:.1f}" for x in c)
-                )
-                for i, c in enumerate(_ivf_lookup_centroids())
-            )
-        ),
-        # Broadcast-centroid IVF oracle (self-search): same exact
-        # integer arithmetic as ann_ivf_lookup, but over the FULL doc
-        # set with the self-pair filter, 80 centroids. The NULLIF guard
+        # Broadcast-centroid IVF oracle (self-search): integer vectors +
+        # integer centroid literals make assignment distances, probe
+        # ordering and the cosine re-rank all exact in SQL, with the
+        # same (d, ci) / (cos desc, id asc) tie-breaks as the Spark
+        # windows and the self-pair filter. The NULLIF guard
         # mirrors the engine's zero-norm-cosine-is-NULL contract
         # (_cosine_or_null): a zero vector must be dropped, not ranked
         # first via NaN (DuckDB sorts NaN greatest).
@@ -1566,83 +1097,11 @@ def oracle_sql() -> dict[str, str]:
                 for i, c in enumerate(_ivf_bcast_centroids())
             )
         ),
-        # Incremental oracle: identical exact-Jaccard recompute, restricted
-        # to pairs touching the "new crawl" slice (doc_id % 4 == 0).
-        "dedup_incremental": f"""
-            WITH s AS (
-              SELECT doc_id,
-                     list_distinct(list_transform(
-                         range(1, greatest(len({_WORDS_SQL})-2, 0)+1),
-                         i -> array_to_string(({_WORDS_SQL})[i:i+2], ' '))) AS sh
-              FROM documents),
-            p AS (
-              SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                     len(list_intersect(a.sh, b.sh))::DOUBLE
-                         / len(list_distinct(a.sh || b.sh)) AS j
-              FROM s a JOIN s b ON a.doc_id < b.doc_id)
-            SELECT id_a, id_b, ROUND(j, 6) AS jaccard FROM p
-            WHERE j >= 0.5 AND (id_a % 4 = 0 OR id_b % 4 = 0)
-        """,
         # Components oracle: the exact-Jaccard edge set (same construction
         # as the dedup_minhash oracle) closed transitively with a
         # recursive CTE; component id = min reachable doc id. Fully
         # independent of the Spark large-star/small-star iteration.
         "dedup_components": f"""
-            WITH RECURSIVE s AS (
-              SELECT doc_id,
-                     list_distinct(list_transform(
-                         range(1, greatest(len({_WORDS_SQL})-2, 0)+1),
-                         i -> array_to_string(({_WORDS_SQL})[i:i+2], ' '))) AS sh
-              FROM documents),
-            p AS (
-              SELECT a.doc_id AS id_a, b.doc_id AS id_b
-              FROM s a JOIN s b ON a.doc_id < b.doc_id
-              WHERE len(list_intersect(a.sh, b.sh))::DOUBLE
-                        / len(list_distinct(a.sh || b.sh)) >= 0.5),
-            e AS (SELECT id_a AS u, id_b AS v FROM p
-                  UNION SELECT id_b, id_a FROM p),
-            reach(u, v) AS (
-              SELECT u, v FROM e
-              UNION
-              SELECT r.u, e2.v FROM reach r JOIN e e2 ON r.v = e2.u
-                WHERE e2.v != r.u)
-            SELECT u AS doc_id, least(u, min(v)) AS component_id
-            FROM reach GROUP BY u ORDER BY doc_id
-        """,
-        "minhash_estimate": f"""
-            WITH s AS (
-              SELECT doc_id,
-                     list_distinct(list_transform(
-                         range(1, greatest(len({_WORDS_SQL})-2, 0)+1),
-                         i -> array_to_string(({_WORDS_SQL})[i:i+2], ' '))) AS sh
-              FROM documents),
-            s2 AS (SELECT doc_id, sh FROM s WHERE len(sh) > 0),
-            e AS (
-              SELECT s2.doc_id, u.j AS hj,
-                     MIN(('0x' || substr(md5(CAST(u.j AS VARCHAR) || ':' || sg.sg), 1, 15))::BIGINT) AS mh
-              FROM s2, unnest(s2.sh) AS sg(sg), unnest(range(0, 16)) AS u(j)
-              GROUP BY s2.doc_id, u.j),
-            p AS (
-              SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                     len(list_intersect(a.sh, b.sh))::DOUBLE
-                         / len(list_distinct(a.sh || b.sh)) AS jac
-              FROM s2 a JOIN s2 b ON a.doc_id < b.doc_id),
-            pf AS (SELECT * FROM p WHERE jac >= 0.5),
-            m AS (
-              SELECT pf.id_a, pf.id_b, pf.jac,
-                     SUM(CASE WHEN ea.mh = eb.mh THEN 1 ELSE 0 END) AS eq
-              FROM pf
-              JOIN e ea ON ea.doc_id = pf.id_a
-              JOIN e eb ON eb.doc_id = pf.id_b AND eb.hj = ea.hj
-              GROUP BY pf.id_a, pf.id_b, pf.jac)
-            SELECT id_a, id_b, ROUND(jac, 6) AS jaccard,
-                   ROUND(eq / 16.0, 6) AS est_jaccard,
-                   ROUND(ABS(jac - eq / 16.0), 6) AS abs_err
-            FROM m
-        """,
-        # Incremental CC must equal from-scratch CC over all pairs —
-        # the oracle IS the dedup_components closure.
-        "components_incremental": f"""
             WITH RECURSIVE s AS (
               SELECT doc_id,
                      list_distinct(list_transform(
@@ -1812,201 +1271,6 @@ def oracle_sql() -> dict[str, str]:
                 FROM documents)
             WHERE host_rank <= 5
         """,
-        # ann_lsh / extract_pipeline: semantics not expressible in SQL
-        # (seeded hyperplane LSH; HTML DOM cascade). Oracle = committed
-        # golden parquet produced by an INDEPENDENT reimplementation
-        # (scripts/make_goldens.py: pure-Python LSH mirror resp. the
-        # parity-tested sequential kernel over identically synthesised
-        # pages, both at the driver's sf0.01 correctness scale);
-        # tests/test_goldens.py asserts the files are current.
-        "ann_lsh": f"""
-            SELECT query_id, neighbor_id, CAST(rank AS INTEGER) AS rank,
-                   ROUND(cosine, 6) AS cosine
-            FROM read_parquet('{_GOLDEN_DIR}/ann_lsh_sf001.parquet')
-        """,
-        "ann_ivf": f"""
-            SELECT query_id, neighbor_id, CAST(rank AS INTEGER) AS rank,
-                   ROUND(cosine, 6) AS cosine
-            FROM read_parquet('{_GOLDEN_DIR}/ann_ivf_sf001.parquet')
-        """,
-        "crawl_frontier": """
-            WITH u AS (
-              SELECT DISTINCT
-                     'https://' || source || '.example/doc/'
-                       || CAST(doc_id AS VARCHAR) AS url
-              FROM documents),
-            h AS (SELECT url,
-                         regexp_extract(url, '^https?://([^/]+)', 1) AS host
-                  FROM u),
-            pr AS (SELECT source || '.example' AS host,
-                          COUNT(*)::DOUBLE AS priority
-                   FROM documents GROUP BY source),
-            j AS (SELECT h.url, h.host, COALESCE(pr.priority, 0.0) AS priority
-                  FROM h LEFT JOIN pr ON h.host = pr.host),
-            s AS (SELECT url, host, priority,
-                         ROW_NUMBER() OVER (
-                           PARTITION BY host
-                           ORDER BY ('0x' || substr(md5(url), 1, 15))::BIGINT,
-                                    url) AS slot
-                  FROM j)
-            SELECT url, host, priority, CAST(slot AS INTEGER) AS slot,
-                   CAST((slot - 1) // 2 AS INTEGER) AS wave
-            FROM s
-        """,
-        "ann_quantized": """
-            WITH base AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-                          FROM embeddings),
-            qz AS (
-              SELECT vec_id,
-                     CASE WHEN list_max(list_transform(v, x -> abs(x))) > 0
-                          THEN list_transform(v, x -> CAST(floor(
-                                 x * 127.0
-                                 / list_max(list_transform(v, y -> abs(y))))
-                               AS BIGINT))
-                          ELSE list_transform(v, x -> CAST(0 AS BIGINT))
-                     END AS q
-              FROM base),
-            pairs AS (
-              SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-                     list_dot_product(a.q, b.q)
-                       / NULLIF(sqrt(list_dot_product(a.q, a.q))
-                                * sqrt(list_dot_product(b.q, b.q)), 0) AS cosine
-              FROM qz a CROSS JOIN qz b
-              WHERE a.vec_id < 5 AND a.vec_id <> b.vec_id)
-            SELECT query_id, neighbor_id, CAST(rank AS INTEGER) AS rank,
-                   ROUND(cosine, 6) AS cosine FROM (
-              SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                       ORDER BY cosine DESC, neighbor_id ASC) AS rank
-              FROM pairs WHERE cosine IS NOT NULL)
-            WHERE rank <= 3
-        """,
-        "ann_recall": f"""
-            WITH {_EMBED_VEC_SQL},
-            cent(ci, cv) AS (VALUES {{cent_rows}}),
-            exact_pairs AS (
-              SELECT q.doc_id AS qid, c.doc_id AS nid,
-                     list_sum(list_transform(range(1, 17), i -> q.v[i] * c.v[i]))
-                       / NULLIF(
-                           sqrt(list_sum(list_transform(range(1, 17), i -> q.v[i] * q.v[i])))
-                           * sqrt(list_sum(list_transform(range(1, 17), i -> c.v[i] * c.v[i]))),
-                           0) AS cos_raw
-              FROM vec q CROSS JOIN vec c
-              WHERE q.doc_id < 10 AND q.doc_id <> c.doc_id),
-            exact_top AS (
-              SELECT qid, nid FROM (
-                SELECT qid, nid,
-                       ROW_NUMBER() OVER (PARTITION BY qid
-                         ORDER BY cos_raw DESC, nid ASC) AS rnk
-                FROM exact_pairs WHERE cos_raw IS NOT NULL)
-              WHERE rnk <= 2),
-            assign AS (
-              SELECT doc_id, ci FROM (
-                SELECT v.doc_id, t.ci,
-                       ROW_NUMBER() OVER (
-                         PARTITION BY v.doc_id
-                         ORDER BY list_sum(list_transform(range(1, 17),
-                             i -> (v.v[i] - t.cv[i]) * (v.v[i] - t.cv[i]))),
-                           t.ci) AS rn
-                FROM vec v CROSS JOIN cent t)
-              WHERE rn = 1),
-            probes AS (
-              SELECT doc_id, ci FROM (
-                SELECT v.doc_id, t.ci,
-                       ROW_NUMBER() OVER (
-                         PARTITION BY v.doc_id
-                         ORDER BY list_sum(list_transform(range(1, 17),
-                             i -> (v.v[i] - t.cv[i]) * (v.v[i] - t.cv[i]))),
-                           t.ci) AS rn
-                FROM vec v CROSS JOIN cent t)
-              WHERE rn <= 3),
-            cand AS (
-              SELECT p.doc_id AS qid, a.doc_id AS nid
-              FROM probes p JOIN assign a ON p.ci = a.ci
-              WHERE p.doc_id != a.doc_id),
-            scored AS (
-              SELECT c.qid, c.nid,
-                     list_sum(list_transform(range(1, 17), i -> q.v[i] * n.v[i]))
-                       / NULLIF(
-                           sqrt(list_sum(list_transform(range(1, 17), i -> q.v[i] * q.v[i])))
-                           * sqrt(list_sum(list_transform(range(1, 17), i -> n.v[i] * n.v[i]))),
-                           0) AS cos_raw
-              FROM cand c JOIN vec q ON q.doc_id = c.qid
-                JOIN vec n ON n.doc_id = c.nid),
-            approx_top AS (
-              SELECT DISTINCT qid, nid FROM (
-                SELECT qid, nid,
-                       ROW_NUMBER() OVER (
-                         PARTITION BY qid ORDER BY cos_raw DESC, nid ASC) AS rnk
-                FROM scored WHERE cos_raw IS NOT NULL)
-              WHERE rnk <= 2 AND qid < 10),
-            per AS (
-              SELECT e.qid,
-                     COUNT(*) AS n_exact,
-                     SUM(CASE WHEN a.nid IS NOT NULL THEN 1 ELSE 0 END) AS n_hit
-              FROM exact_top e
-              LEFT JOIN approx_top a ON a.qid = e.qid AND a.nid = e.nid
-              GROUP BY e.qid)
-            SELECT qid AS query_id,
-                   CAST(n_exact AS BIGINT) AS n_exact,
-                   CAST(n_hit AS BIGINT) AS n_hit,
-                   ROUND(n_hit / n_exact, 6) AS recall
-            FROM per
-        """.format(
-            cent_rows=", ".join(
-                "({}, [{}])".format(
-                    i, ", ".join(f"{x:.1f}" for x in c)
-                )
-                for i, c in enumerate(_ivf_bcast_centroids())
-            )
-        ),
-        # Cluster profile: same integer-exact assignment CTE as
-        # semantic_dedup, then per-cluster doc counts and a (count
-        # desc, term) row_number top-3 over exploded words.
-        "cluster_profile": """
-            WITH {_EVS},
-            cent(ci, cv) AS (VALUES {cent_rows}),
-            assign AS (
-              SELECT doc_id, ci FROM (
-                SELECT v.doc_id, t.ci,
-                       ROW_NUMBER() OVER (
-                         PARTITION BY v.doc_id
-                         ORDER BY list_sum(list_transform(range(1, 17),
-                             i -> (v.v[i] - t.cv[i]) * (v.v[i] - t.cv[i]))),
-                           t.ci) AS rn
-                FROM vec v CROSS JOIN cent t)
-              WHERE rn = 1),
-            sizes AS (SELECT ci, COUNT(*) AS n_docs FROM assign GROUP BY ci),
-            words AS (
-              SELECT d.doc_id, u.term
-              FROM documents d,
-                   unnest(string_split_regex(lower(trim(d.text)), '\\s+')) AS u(term)
-              WHERE u.term <> ''),
-            tf AS (
-              SELECT a.ci, w.term, COUNT(*) AS term_count
-              FROM words w JOIN assign a ON a.doc_id = w.doc_id
-              GROUP BY a.ci, w.term),
-            top AS (
-              SELECT ci, term, term_count,
-                     ROW_NUMBER() OVER (
-                       PARTITION BY ci ORDER BY term_count DESC, term ASC) AS rank
-              FROM tf)
-            SELECT CAST(t.ci AS INTEGER) AS cluster, s.n_docs,
-                   CAST(t.rank AS INTEGER) AS rank, t.term, t.term_count
-            FROM top t JOIN sizes s ON s.ci = t.ci
-            WHERE t.rank <= 3
-        """.format(
-            _EVS=_EMBED_VEC_SQL,
-            cent_rows=", ".join(
-                "({}, [{}])".format(
-                    i, ", ".join(f"{x:.1f}" for x in c)
-                )
-                for i, c in enumerate(_ivf_lookup_centroids())
-            )
-        ),
-        "semantic_dedup": _semantic_dedup_oracle(_ivf_lookup_centroids()),
-        "semantic_dedup_bcast": _semantic_dedup_oracle(
-            _semantic_bcast_centroids()
-        ),
         # Blocklist: same url synthesis; a doc survives unless its
         # host equals a blocked domain or ends with '.'+domain.
         "url_blocklist": """

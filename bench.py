@@ -60,32 +60,18 @@ def _pages_path(n_pages: int) -> str:
 # UDF-heavy shapes). The rest are correctness-gated already.
 BENCH_QUERIES = [
     "tpch_pricing", "tpch_top_orders", "region_rollup",
-    "dedup_ngram_jaccard", "dedup_minhash",
-    "dedup_components", "dedup_incremental",
-    "embedding_topk", "ann_lsh", "ann_ivf", "tpch_part_profit",
+    "dedup_ngram_jaccard", "dedup_minhash", "dedup_components",
+    "embedding_topk", "tpch_part_profit",
     "sessionization", "lang_id", "fingerprint",
-    "boilerplate_shingles",
-    "semantic_dedup", "crawl_diff",
+    "boilerplate_shingles", "crawl_diff",
     "url_blocklist",
     # round-4 families previously correctness-only (VERDICT r4 #8):
     "corpus_split",
     "crawl_churn",
     # round-5 additions:
-    "semantic_dedup_bcast",
-    "crawl_frontier",
-    "ann_quantized", "ann_recall",
-    "components_incremental",
     "temperature_sample", "shuffle_shards",
     "robots_filter",
 ]
-# embedding_near_dup is deliberately absent: it is the documented
-# all-pairs EXACT oracle variant (O(n^2) cross join); the benchmarked
-# scale path for that capability is the LSH near-dup bucketing.
-# minhash_estimate joins that exclusion set: it is the guarded
-# all-pairs estimator AUDIT (correctness-gated at sf0.01 where the
-# fixture's 25 true pairs live; at sf0.1 the fixture's near-dup ids
-# are spread so no bounded sample keeps both pair endpoints, and the
-# full sweep is the O(n^2) shape the max_rows guard exists to refuse).
 
 
 def main() -> None:

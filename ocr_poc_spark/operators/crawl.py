@@ -1,4 +1,5 @@
-"""Crawl-snapshot operators: comparing two crawls of the same id space.
+"""Crawl operators: comparing two crawls of the same id space, and the
+robots gate.
 
 A rolling web crawl re-fetches URLs continuously; the expensive part of
 the pipeline (extraction, dedup, curation) should only ever run on
@@ -7,7 +8,8 @@ classifies every url across two snapshots as added / deleted / changed
 / unchanged from content digests, and `changed_slice` is the
 ready-to-process frame (new rows needing work) an incremental run
 feeds to `plans.job.run_job`, whose manifest resume makes the recrawl
-incremental.
+incremental. `crawl_churn_stats` rolls the diff up per host, and
+`robots_filter` drops the urls a site's robots rules disallow.
 
 Scale notes (100 TB): both sides project to (id, 64-hex sha2 digest)
 BEFORE the full-outer join, so the shuffle carries ~80 bytes per url,
@@ -18,9 +20,9 @@ documents the contract instead of scanning for violations). sha2-256
 digest collisions are negligible at any corpus size.
 
 Reference parity: the reference service re-OCRs every uploaded card
-unconditionally (/root/reference/api_server.py:177 — stateless per-
-document HTTP); snapshot diffing is the batch-pipeline capability that
-replaces "re-process everything" at crawl scale.
+unconditionally (its api_server.py — stateless per-document HTTP);
+snapshot diffing is the batch-pipeline capability that replaces
+"re-process everything" at crawl scale.
 """
 
 from __future__ import annotations
@@ -219,68 +221,3 @@ def robots_filter(
     allowed = F.col("_rules").isNull() | F.coalesce(verdict["a"], F.lit(True))
     out = joined.where(allowed if keep else ~allowed)
     return out.drop("_h", "_rh", "_rules", "_p")
-
-
-def crawl_frontier(
-    urls: DataFrame,
-    priority: DataFrame | None = None,
-    url_col: str = "url",
-    per_host: int = 1,
-) -> DataFrame:
-    """Politeness-aware crawl scheduling: assign every frontier url a
-    fetch ``wave`` such that no host serves more than ``per_host``
-    fetches per wave (RFC-9309-era politeness is per-origin rate
-    limiting; waves are the batch form a distributed fetcher executes
-    as "wave k = one Spark job, one task slot per url"). Within a
-    host, order is the deterministic 60-bit url hash — a reproducible
-    shuffle so re-planning the frontier never reorders fetches — and
-    ``slot`` is that 1-based position: wave = (slot - 1) div per_host.
-
-    ``priority`` (optional): per-host score frame (host, priority) —
-    churn ratio (crawl_churn_stats), a host rank, or any custom
-    signal; it rides along as a column so the fetcher can order hosts
-    WITHIN a wave by value.
-    Unknown hosts get priority 0.0, urls with no extractable host get
-    host '' (one politeness bucket for hostless junk — they throttle
-    each other, never a real host).
-
-    Plan / 100 TB shape: duplicate urls collapse via one distinct on
-    the url (a frontier is a set); the per-host slot is a window
-    PARTITIONED by host (never global — zipfian hosts make long
-    partitions, which AQE skew handling splits downstream but the
-    window itself is the honest per-host sequential constraint), and
-    the priority join broadcasts when the host table is bounded (it
-    is: one row per host). Output columns: (url, host, priority, slot,
-    wave)."""
-    from pyspark.sql import Window
-
-    from ..functions.texthash import hash60
-    from .hoststats import host_of
-
-    if per_host < 1:
-        raise ValueError("crawl_frontier: per_host must be >= 1")
-    base = (
-        urls.select(F.col(url_col).alias("url"))
-        .where(F.col("url").isNotNull())
-        .distinct()
-        .select("url", host_of("url").alias("host"))
-    )
-    if priority is not None:
-        pr = priority.select(
-            F.col("host").alias("_ph"),
-            F.col("priority").cast("double").alias("_pr"),
-        )
-        base = base.join(
-            F.broadcast(pr), base["host"] == pr["_ph"], "left"
-        ).select("url", "host", F.coalesce("_pr", F.lit(0.0)).alias("priority"))
-    else:
-        base = base.select("url", "host", F.lit(0.0).alias("priority"))
-    w = Window.partitionBy("host").orderBy(F.asc(hash60("url")), F.asc("url"))
-    slot = F.row_number().over(w)
-    return base.select(
-        "url",
-        "host",
-        "priority",
-        slot.alias("slot"),
-        ((slot - 1) / F.lit(per_host)).cast("int").alias("wave"),
-    )

@@ -90,37 +90,6 @@ def main() -> None:
             ),
         ),
         (
-            "Incremental MinHash dedup (new crawl vs persisted index)",
-            "Only the new slice is shingled up front; the corpus arrives "
-            "as the (id, band, sig) index. The exact-Jaccard verify side "
-            "LEFT SEMI-prunes corpus docs to candidate ids BEFORE "
-            "shingling.",
-            em.queries()["dedup_incremental"](spark, sf),
-        ),
-        (
-            "IVF ANN (k-means quantizer + n_probe search)",
-            "Broadcast centroid encoding at EVERY k since round 4: the "
-            "centroids ride as a single-row broadcast array (map-side "
-            "cross join + per-row HOF sorted-distance prefix — zero "
-            "exchanges before the ids-only cluster join, plan size "
-            "independent of k, and the plan is IDENTICAL across calls "
-            "and Lloyd rounds so generated code is reused; per-call "
-            "literals cost ~1s of re-analysis/codegen each). Vectors "
-            "join back once per side for the exact re-rank.",
-            em.queries()["ann_ivf"](spark, sf),
-        ),
-        (
-            "SemDeDup semantic dedup (result join of the component stage)",
-            "Nearest-centroid assignment is map-side (single-row "
-            "broadcast centroid array; plan-guarded in "
-            "test_plan_shapes). The in-cluster pair join is the one "
-            "place vectors deliberately ride a shuffle — keyed on the "
-            "cluster id, bounded by cluster size (k must scale with n; "
-            "see SCALE10X). Components run eagerly upstream (Scan "
-            "ExistingRDD here).",
-            em.queries()["semantic_dedup"](spark, sf),
-        ),
-        (
             "Crawl snapshot diff",
             "Both snapshots project to (id, 64-hex sha2) BEFORE the "
             "full-outer SortMergeJoin — ~80 bytes per url through the "
@@ -154,21 +123,6 @@ def main() -> None:
             "decision is a per-row fold — no Generate/explode, so no "
             "directive row ever multiplies a url row.",
             em.queries()["robots_filter"](spark, sf),
-        ),
-        (
-            "Crawl frontier (politeness waves)",
-            "Priority joins as a BroadcastHashJoin (one row per host); "
-            "the slot window partitions by host — the honest per-host "
-            "sequential constraint — and wave derivation is map-only.",
-            em.queries()["crawl_frontier"](spark, sf),
-        ),
-        (
-            "Incremental connected components (merge_components)",
-            "Label edges union the new pair batch, then the same "
-            "hub-degree-bounded star rounds as connected_components — "
-            "scalar min aggregates, (id, id)-only exchanges, "
-            "localCheckpoint per round ('Scan ExistingRDD').",
-            em.queries()["components_incremental"](spark, sf),
         ),
     ]
 

@@ -133,84 +133,15 @@ def main() -> None:
     from ocr_poc_spark.session import get_spark
     import __spark_entry__ as entry
 
-    qs = dict(entry.queries())
-
-    # LSH bucket density grows linearly with n when the plane count is
-    # fixed, so candidate pairs (and band-join shuffle bytes) grow ~n^2/2^p.
-    # The production knob is p ~ log2(n): +4 planes per 10x. This variant
-    # evidences that the knob restores near-linear shuffle growth.
-    def q_ann_lsh_p12(spark, sf_dir):
-        import pyspark.sql.functions as F
-        from ocr_poc_spark.operators.similarity import lsh_ann_topk
-
-        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").repartition(32)
-        return lsh_ann_topk(emb, k=3, dim=64, n_planes=12).select(
-            "query_id", "neighbor_id", "rank",
-            F.round("cosine", 6).alias("cosine"),
-        )
-
-    # IVF with the production rule applied: n_centroids ~ sqrt(n)
-    # (broadcast-centroid path above 64). The fixed-k=16 entry query
-    # shows the saturation; this shows the knob.
-    def q_ann_ivf_sqrtk(spark, sf_dir):
-        import pyspark.sql.functions as F
-        from ocr_poc_spark.operators.similarity import ivf_ann_topk
-
-        # n from the raw parquet (metadata count, no shuffle) so the
-        # repartition exchange isn't billed to the measured query.
-        n = spark.read.parquet(f"{sf_dir}/embeddings.parquet").count()
-        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").repartition(32)
-        k_cent = max(16, int(n ** 0.5))
-        return ivf_ann_topk(
-            emb, k=3, dim=64, n_centroids=k_cent, n_probe=4, n_iter=3
-        ).select(
-            "query_id", "neighbor_id", "rank",
-            F.round("cosine", 6).alias("cosine"),
-        )
-
-    # SemDeDup with the cluster-count rule applied: the entry query's
-    # FROZEN k=8 literal centroids are the oracle setting; in-cluster
-    # all-pairs work is ~n^2/(2k), the same frozen-k hazard the IVF
-    # rows measure (at 10x/k=8 that is ~156M cosines — a known
-    # quadratic, not worth an hour of bench wall). k ~ sqrt(n) bounds
-    # the candidate set at ~n^1.5; centroids are learned (2 Lloyd
-    # rounds) inside the measured query, as a real pipeline would.
-    def q_semantic_dedup_sqrtk(spark, sf_dir):
-        import pyspark.sql.functions as F
-        from ocr_poc_spark.operators.similarity import (
-            kmeans_centroids,
-            semantic_dedup,
-        )
-        from ocr_poc_spark.operators.textstats import hash_embedding
-
-        n = spark.read.parquet(f"{sf_dir}/documents.parquet").count()
-        d = spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(32)
-        emb = hash_embedding(d, dim=16).select(
-            F.col("doc_id").alias("vec_id"), "embedding"
-        )
-        cents = kmeans_centroids(
-            emb, n_centroids=max(8, int(n ** 0.5)), dim=16, n_iter=2
-        )
-        return semantic_dedup(emb, cents, cosine_threshold=0.99)
-
-    qs["ann_lsh_p12"] = q_ann_lsh_p12
-    qs["ann_ivf_sqrtk"] = q_ann_ivf_sqrtk
-    qs["semantic_dedup_sqrtk"] = q_semantic_dedup_sqrtk
+    qs = entry.queries()
     target = [
-        "ann_lsh",
-        "ann_lsh_p12",
-        "ann_ivf",
-        "ann_ivf_sqrtk",
         "dedup_minhash",
         "boilerplate_shingles",
-        # round 4, session 2: selection / incremental-crawl suite
+        # round 4, session 2: incremental-crawl suite
         "crawl_diff",
-        "semantic_dedup_sqrtk",
         # round 5: training-order stages
         "shuffle_shards",
         "temperature_sample",
-        # round 5, session 3: frontier
-        "crawl_frontier",
     ]
 
     spark = get_spark(
@@ -293,8 +224,8 @@ def main() -> None:
         "quadratic candidate set or a skewed band join).",
         "",
         "WALL ratios on this box carry 2-3x run-to-run noise (documented "
-        "external load spikes; identical-plan reruns of the sqrt-k IVF "
-        "row measured 17s/35s/102s on one day). SHUFFLE bytes are the "
+        "external load spikes; identical-plan reruns of one row "
+        "measured 17s/35s/102s on one day). SHUFFLE bytes are the "
         "load-independent signal: identical plans reproduce them to the "
         "hundredth of a MB across rounds, so growth conclusions below "
         "key on shuffle first and treat wall as corroboration.",
@@ -304,41 +235,14 @@ def main() -> None:
         f"- boilerplate_shingles: shuffle grows "
         f"{summary['boilerplate_shingles']['shuffle_ratio']}x for {m}x "
         "rows — the pipeline shuffles O(n) ids+hashes, the linear ideal.",
-        f"- ann_lsh (fixed 8 planes) vs ann_lsh_p12: with a FIXED plane "
-        "count, bucket density grows with n, so candidate pairs (and the "
-        f"band-join shuffle) grow ~n^2/2^p — "
-        f"{summary['ann_lsh']['shuffle_ratio']}x here. Raising planes to "
-        f"12 for the {m}x corpus restores ~n-proportional shuffle "
-        f"({summary['ann_lsh_p12']['shuffle_ratio']}x) AND lowers wall. "
-        "Production rule: p ≈ log2(n) + const, i.e. +4 planes per 10x "
-        "corpus growth.",
         f"- dedup_minhash: {summary['dedup_minhash']['shuffle_ratio']}x "
         f"shuffle for {m}x rows — band count is fixed (8 bands of 4 "
         "hashes) so candidate growth is mildly superlinear; the "
         "exact-Jaccard verify bounds emitted pairs to true pairs "
         "(linear by construction here).",
-        f"- ann_ivf (FROZEN k=16 centroids) vs ann_ivf_sqrtk "
-        f"(k ~ sqrt(n), broadcast-centroid path): all-vs-all IVF "
-        f"candidates grow ~n^2*n_probe/k when k is frozen — "
-        f"{summary['ann_ivf']['wall_ratio']}x wall / "
-        f"{summary['ann_ivf']['shuffle_ratio']}x shuffle here. Scaling "
-        f"k with sqrt(n) bounds candidate work at ~n^1.5: "
-        f"{summary['ann_ivf_sqrtk']['wall_ratio']}x wall / "
-        f"{summary['ann_ivf_sqrtk']['shuffle_ratio']}x "
-        "shuffle. This is the IVF production rule, and why the operator "
-        "switches to a single-row broadcast centroid array above "
-        "MAX_LITERAL_CENTROIDS.",
         f"- crawl_diff: {summary['crawl_diff']['shuffle_ratio']}x shuffle "
         f"for {m}x rows — the crawl diff ships (id, digest) projections, "
         "linear by construction.",
-        f"- semantic_dedup_sqrtk (k ~ sqrt(n), learned in-query): "
-        f"{summary['semantic_dedup_sqrtk']['wall_ratio']}x wall / "
-        f"{summary['semantic_dedup_sqrtk']['shuffle_ratio']}x shuffle — "
-        "in-cluster all-pairs work is ~n^2/(2k), so the cluster count "
-        "must track corpus size exactly like the IVF centroid count "
-        "(same formula, measured above); the entry query's frozen k=8 "
-        "literal centroids are the oracle setting, not the scale "
-        "setting (at 10x they imply ~156M in-cluster cosines).",
         f"- shuffle_shards / temperature_sample: "
         f"{summary['shuffle_shards']['shuffle_ratio']}x / "
         f"{summary['temperature_sample']['shuffle_ratio']}x shuffle — "

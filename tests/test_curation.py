@@ -580,114 +580,3 @@ def test_robots_filter_host_normalization_fail_closed(spark):
     )
     kept = {r["doc_id"] for r in robots_filter(df, rules).collect()}
     assert kept == {3, 4, 5}
-
-
-def test_crawl_frontier_politeness_waves(spark):
-    """Frontier scheduling: no host exceeds per_host fetches per wave,
-    slots are the deterministic url-hash order (re-planning never
-    reorders), unknown hosts get priority 0, hostless urls share the
-    '' politeness bucket, duplicates collapse."""
-    from ocr_poc_spark.operators.crawl import crawl_frontier
-
-    urls = [(f"https://big.example/p{i}",) for i in range(7)] + [
-        ("https://small.example/a",),
-        ("https://small.example/b",),
-        ("not-a-url",),
-        ("also-not-a-url",),
-        ("https://big.example/p0",),  # duplicate -> collapses
-        (None,),
-    ]
-    u = spark.createDataFrame(urls, "url string")
-    pr = spark.createDataFrame(
-        [("big.example", 9.5)], "host string, priority double"
-    )
-    out = crawl_frontier(u, priority=pr, per_host=2).collect()
-    rows = {r["url"]: r for r in out}
-    assert len(out) == 11  # 7 big + 2 small + 2 hostless, dup+NULL gone
-    # politeness: per (host, wave) at most 2
-    from collections import Counter
-
-    c = Counter((r["host"], r["wave"]) for r in out)
-    assert max(c.values()) <= 2
-    # big.example needs ceil(7/2)=4 waves; small fits in wave 0
-    big_waves = {r["wave"] for r in out if r["host"] == "big.example"}
-    assert big_waves == {0, 1, 2, 3}
-    assert {r["wave"] for r in out if r["host"] == "small.example"} == {0}
-    # priorities: joined for big, 0.0 default elsewhere
-    assert rows["https://big.example/p0"]["priority"] == 9.5
-    assert rows["https://small.example/a"]["priority"] == 0.0
-    assert rows["not-a-url"]["host"] == ""
-    # determinism: same assignment under different partitioning
-    again = sorted(
-        tuple(r) for r in crawl_frontier(
-            u.repartition(5), priority=pr, per_host=2
-        ).collect()
-    )
-    assert again == sorted(tuple(r) for r in out)
-    import pytest
-
-    with pytest.raises(ValueError):
-        crawl_frontier(u, per_host=0)
-
-
-def test_merge_components_incremental_equals_batch(spark):
-    """Incremental CC: merging each batch's pairs into the running
-    label table equals from-scratch CC over the union of all pairs —
-    including cross-batch merges of two pre-existing components and
-    min-label stability."""
-    from ocr_poc_spark.operators.dedup import (
-        connected_components, merge_components,
-    )
-
-    b1 = [(10, 11), (20, 21)]
-    b2 = [(11, 12), (30, 31)]
-    b3 = [(12, 20), (40, 41), (31, 30)]   # merges comp(10) with comp(20)
-    mk = lambda rows: spark.createDataFrame(rows, "id_a long, id_b long")
-
-    labels = connected_components(mk(b1))
-    labels = merge_components(labels, mk(b2))
-    labels = merge_components(labels, mk(b3))
-    got = {(r["doc_id"], r["component_id"]) for r in labels.collect()}
-
-    want = {
-        (r["doc_id"], r["component_id"])
-        for r in connected_components(mk(b1 + b2 + b3)).collect()
-    }
-    assert got == want
-    # the cross-batch merge collapsed to the global min label 10
-    assert (21, 10) in got and (12, 10) in got
-    # untouched component kept its row and label
-    assert (41, 40) in got
-
-
-def test_minhash_estimate_audit_contract(spark):
-    """Estimator audit: identical docs estimate 1.0 with 0 error,
-    disjoint docs never appear (below threshold), the estimate is
-    matching-components/H exactly, and the oversized-corpus guard
-    raises."""
-    import pytest
-
-    from ocr_poc_spark.operators.dedup import minhash_estimate_audit
-
-    t1 = "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10"
-    rows = [
-        (1, t1),
-        (2, t1),                               # identical -> j = 1.0
-        (3, t1 + " extra tail words here"),    # high-overlap pair
-        (4, "completely different tokens that share nothing at all"),
-    ]
-    d = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {(r["id_a"], r["id_b"]): r
-           for r in minhash_estimate_audit(d, num_hashes=16).collect()}
-    assert (1, 2) in out
-    r12 = out[(1, 2)]
-    assert r12["jaccard"] == 1.0 and r12["est_jaccard"] == 1.0
-    assert r12["abs_err"] == 0.0
-    assert all(k[1] != 4 and k[0] != 4 for k in out)
-    # estimates are quantised to 1/16 and errors consistent
-    for r in out.values():
-        assert abs(r["est_jaccard"] * 16 - round(r["est_jaccard"] * 16)) < 1e-9
-        assert r["abs_err"] == round(abs(r["jaccard"] - r["est_jaccard"]), 6)
-
-    with pytest.raises(Exception, match="max_rows"):
-        minhash_estimate_audit(d, max_rows=2).collect()

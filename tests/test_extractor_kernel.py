@@ -24,12 +24,6 @@ def mk(idx, text, score=None, x=0.0, y=None, boiler=False):
     )
 
 
-def _page(parts, article=True):
-    body = "".join(f"<p>{p}</p>" for p in parts)
-    tag = ("<article>", "</article>") if article else ("", "")
-    return f"<html><body>{tag[0]}{body}{tag[1]}</body></html>".encode()
-
-
 LONG = "This is a long enough paragraph that scores very well indeed ok."
 
 

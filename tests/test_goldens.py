@@ -1,8 +1,8 @@
-"""Guards the committed golden parquets (dist/golden/*) that back the
-ann_lsh and extract_pipeline DuckDB oracles: regenerate them in memory
-via scripts/make_goldens.py and assert byte-equality with the committed
-files, so any kernel / page-synthesis / LSH-parameter drift fails HERE
-before the driver's correctness gate sees a stale golden."""
+"""Guards the committed golden parquet (dist/golden/extract_sf001.parquet)
+that is the extract_pipeline oracle's second witness: regenerate it in
+memory via scripts/make_goldens.py and assert byte-equality with the
+committed file, so any kernel / page-synthesis drift fails HERE before
+the oracle check sees a stale golden."""
 
 import os
 import sys
@@ -16,16 +16,6 @@ import make_goldens  # noqa: E402
 
 def _committed(name):
     return pq.read_table(os.path.join(make_goldens.OUT_DIR, name))
-
-
-def test_ann_lsh_golden_is_current():
-    fresh = make_goldens.golden_ann_lsh()
-    assert fresh.equals(_committed("ann_lsh_sf001.parquet"))
-
-
-def test_ann_ivf_golden_is_current():
-    fresh = make_goldens.golden_ann_ivf()
-    assert fresh.equals(_committed("ann_ivf_sf001.parquet"))
 
 
 def test_extract_golden_is_current():
@@ -85,71 +75,3 @@ def test_page_synthesis_matches_spark_side(spark):
     ):
         url, payload = make_goldens.synth_page(doc_id, text, lang)
         assert spark_pages[url] == payload, url
-
-
-def test_ivf_centroid_rounding_margin_and_spark_parity(spark):
-    """The ann_ivf golden's exactness rests on 4-decimal centroid
-    rounding absorbing summation-order ulp noise (Spark's task-order
-    sums vs the mirror's file-order sums). That only holds if no
-    pre-round mean sits ON a rounding boundary — so (a) assert every
-    per-cell quotient in every Lloyd iteration keeps comfortable
-    distance (>1e-6 in units of 1e-4) from the nearest round-half
-    boundary, and (b) assert Spark's distributed kmeans reproduces the
-    mirror's rounded centroids cell-for-cell at the fixture config.
-    Either failing on a regenerated fixture means: re-seat the fixture,
-    don't widen the rounding."""
-    from ocr_poc_spark.operators.similarity import kmeans_centroids
-
-    t = pq.read_table(f"{make_goldens.SF_DIR}/embeddings.parquet")
-    vecs = [[float(x) for x in v] for v in t.column("embedding").to_pylist()]
-
-    import numpy as np
-
-    rs = np.random.RandomState(make_goldens.IVF_SEED + 31)
-    cents = rs.randn(
-        make_goldens.IVF_CENTROIDS, make_goldens.IVF_DIM
-    ).astype(float).tolist()
-
-    def assign(v):
-        return min(
-            ((make_goldens._sqdist(v, c), i) for i, c in enumerate(cents))
-        )[1]
-
-    min_margin = 0.5
-    for _ in range(make_goldens.IVF_ITER):
-        sums = [[0.0] * make_goldens.IVF_DIM for _ in range(make_goldens.IVF_CENTROIDS)]
-        counts = [0] * make_goldens.IVF_CENTROIDS
-        for v in vecs:
-            c = assign(v)
-            counts[c] += 1
-            for p, x in enumerate(v):
-                sums[c][p] += x
-        for i in range(make_goldens.IVF_CENTROIDS):
-            if not counts[i]:
-                continue
-            for p in range(make_goldens.IVF_DIM):
-                q = sums[i][p] / counts[i]
-                frac = (q * 1e4) % 1.0
-                min_margin = min(min_margin, abs(frac - 0.5))
-        cents = [
-            [round(sums[i][p] / counts[i], 4) for p in range(make_goldens.IVF_DIM)]
-            if counts[i]
-            else cents[i]
-            for i in range(make_goldens.IVF_CENTROIDS)
-        ]
-    # >1e-6 in 1e-4 units = >1e-10 absolute slack: ulp noise on sums of
-    # ~1500 doubles is orders of magnitude below this.
-    assert min_margin > 1e-6, min_margin
-
-    emb = spark.read.parquet(f"{make_goldens.SF_DIR}/embeddings.parquet")
-    spark_cents = kmeans_centroids(
-        emb,
-        "embedding",
-        dim=make_goldens.IVF_DIM,
-        n_centroids=make_goldens.IVF_CENTROIDS,
-        n_iter=make_goldens.IVF_ITER,
-        seed=make_goldens.IVF_SEED,
-    )
-    assert spark_cents == cents
-
-
