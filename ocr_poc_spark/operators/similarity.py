@@ -84,7 +84,7 @@ def _join_back_vectors(pairs: DataFrame, vecs: DataFrame, id_col: str) -> DataFr
     per side (the candidate-generation shuffles stay ids-only)."""
     return pairs.join(
         vecs.select(F.col(id_col).alias("query_id"), F.col("_v").alias("q_v"),
-                  F.col("_norm").alias("q_norm")),
+                    F.col("_norm").alias("q_norm")),
         "query_id",
     ).join(
         vecs.select(F.col(id_col).alias("neighbor_id"), F.col("_v").alias("c_v"),
@@ -107,8 +107,8 @@ def cosine_topk(
     stays partitioned and the small query side ships to every executor.
     ``query_ids`` is therefore mandatory: broadcasting the whole corpus
     as the query side would run out of memory at scale (use
-    ivf_ann_topk for all-vs-all). A bounded query list over ``max_broadcast_queries``
-    is refused for the same reason.
+    ivf_ann_topk for all-vs-all). A bounded query list over
+    ``max_broadcast_queries`` is refused for the same reason.
     """
     if query_ids is None:
         raise ValueError(
