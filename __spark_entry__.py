@@ -2,15 +2,14 @@
 
 entry() runs the flagship extraction (the fused map-only kernel) over
 pages synthesised from the documents table of the test data. queries()
-holds 36 queries. The first 29 are the production-path contract: 16 pure-
+holds 31 queries. The first 29 are the production-path contract: 16 pure-
 relational re-expressions of the cascade's SQL shapes (SURVEY.md §2), 8
 queries over the operators of the production path (extraction, MinHash
 dedup and components, crawl diff and churn, host cap, boilerplate
 shingles, language ID), and 5 that tests/test_entry_contract.py pins.
-The other 7 cover the sampling, sharding, URL and crawl-policy
-operators (stratified and temperature sampling, splits, shuffle
-shards, URL normalization and blocklists, robots rules). EVERY query
-has a DuckDB oracle in oracle_sql() that re-derives its result in SQL
+The last 2 are the crawl-policy gates behind the CLI's --blocklist and
+--robots (domain blocklist, robots rules). EVERY query has a DuckDB
+oracle in oracle_sql() that re-derives its result in SQL
 (incl. the exact all-pairs Jaccard behind MinHash and the HTML
 extraction cascade's fields over the synthesised page template); the
 committed extraction golden from the sequential kernel
@@ -475,80 +474,6 @@ def q_boilerplate_shingles(spark, sf_dir):  # RefinedWeb-style cross-doc span de
     )
 
 
-def q_stratified_sample(spark, sf_dir):  # deterministic corpus-mixing sampler
-    from ocr_poc_spark.operators.curation import stratified_sample
-
-    d = _t(spark, sf_dir, "documents")
-    return stratified_sample(
-        d, {"en": 0.5, "fr": 0.25, "de": 0.1}, strat_col="lang"
-    ).select("doc_id", "lang", "source")
-
-
-def q_normalize_urls(spark, sf_dir):  # URL canonicalization (first CC pass)
-    from ocr_poc_spark.operators.curation import normalize_urls
-
-    d = _t(spark, sf_dir, "documents")
-    # Deterministic messy URLs synthesised from doc_id (mixed case,
-    # default ports, tracking params, fragments) — the oracle builds the
-    # identical strings and normalises them with its own functions.
-    i = F.col("doc_id")
-    url = F.concat(
-        F.when(i % 2 == 0, F.lit("HTTP")).otherwise(F.lit("https")),
-        F.lit("://WWW.Site"), (i % 7).cast("string"), F.lit(".COM"),
-        F.when(i % 3 == 0, F.lit(":80")).otherwise(F.lit("")),
-        F.when(i % 5 == 0, F.lit("")).otherwise(
-            F.concat(F.lit("/articles/"), i.cast("string"))
-        ),
-        F.when(i % 2 == 0, F.lit("?utm_source=tw&b=2&a=1"))
-        .when(i % 3 == 0, F.lit("?ref=home"))
-        .otherwise(F.lit("")),
-        F.when(i % 4 == 0, F.lit("#sec2")).otherwise(F.lit("")),
-    )
-    return normalize_urls(d.select("doc_id", url.alias("url"))).select(
-        "doc_id", "url", "url_norm"
-    )
-
-
-def q_temperature_sample(spark, sf_dir):
-    """Multilingual temperature rebalancing (XLM-R/mT5 p^alpha corpus
-    mixing): per-language sampling rates DERIVED from corpus counts —
-    rate = (n_min/n_lang)^(1-alpha), rarest language kept whole — then
-    the reproducible md5 bucket keeps/drops rows. alpha=0.5 makes the
-    rate an IEEE sqrt (correctly rounded in both engines), so the
-    thresholds are bit-identical cross-engine; floor-quantised to
-    1/10000. Oracle recomputes counts, thresholds, and buckets in SQL
-    with a null-safe stratum join (NULL lang is its own stratum)."""
-    from ocr_poc_spark.operators.curation import temperature_sample
-
-    return temperature_sample(
-        _t(spark, sf_dir, "documents"), alpha=0.5, strat_col="lang"
-    ).select("doc_id", "lang", "source")
-
-
-def q_shuffle_shards(spark, sf_dir):
-    """Deterministic training-order shuffle + token-balanced shards:
-    global order = md5('ep0:' || doc_id), greedy cut every 5000 tokens
-    (whole docs, standard sharding rule). The prefix sums run two-phase
-    (range repartition on the uniform 60-bit key + per-partition
-    windows + broadcast offsets — never one global window), and the
-    output is a pure function of the order, so the single-window SQL
-    oracle agrees row-for-row at any parallelism."""
-    from ocr_poc_spark.operators.curation import shuffle_shards
-
-    d = _t(spark, sf_dir, "documents", spread=True)
-    # Empty words filtered: split('') = [''] would count a phantom
-    # token for empty docs.
-    n_tokens = F.size(
-        F.filter(
-            F.split(F.lower(F.trim(F.coalesce("text", F.lit("")))), r"\s+"),
-            lambda w: F.length(w) > 0,
-        )
-    )
-    return shuffle_shards(
-        d.withColumn("n_tokens", n_tokens), shard_tokens=5000, seed="ep0"
-    )
-
-
 def q_robots_filter(spark, sf_dir):
     """Robots-policy gate (crawl.robots_filter, RFC 9309 longest-match
     subset): per-host directive table applied before extraction.
@@ -615,21 +540,6 @@ def q_url_blocklist(spark, sf_dir):
     return url_blocklist_filter(
         docs, ["src3.example", "src7.example", "src12.example"]
     )
-
-
-def q_corpus_split(spark, sf_dir):
-    """Deterministic train/val/test assignment keyed on the HOST column
-    (curation.split_corpus, by="source") — leakage-safe: every document
-    of a host lands in the same split, so near-dup pages within a site
-    never straddle the train/test boundary. Zero shuffle, no RNG; the
-    oracle recomputes the md5-bucket thresholds exactly."""
-    from ocr_poc_spark.operators.curation import split_corpus
-
-    return split_corpus(
-        _t(spark, sf_dir, "documents", spread=True),
-        {"train": 0.8, "val": 0.1, "test": 0.1},
-        by="source",
-    ).select("doc_id", "source", "split")
 
 
 def q_crawl_diff(spark, sf_dir):
@@ -704,11 +614,11 @@ def q_host_cap(spark, sf_dir):  # domain-balance cap, stable hash order
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # The correctness gate checks the first 50 entries; all 36 sit
+    # The correctness gate checks the first 50 entries; all 31 sit
     # inside that window, so every entry is checked against its
     # oracle. The three blocks of the production-path contract come
-    # first; the sampling, sharding and URL queries after them keep
-    # their operators reachable and oracle-checked.
+    # first; the two crawl-policy gates after them keep the operators
+    # behind --blocklist and --robots oracle-checked.
     return {
         # -- pure relational: the cascade's SQL shapes, no operator import --
         "quality_gate": q_quality_gate,
@@ -743,14 +653,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "fingerprint": q_fingerprint,
         "text_embed_near_dup": q_text_embed_near_dup,
         "ann_ivf_bcast": q_ann_ivf_bcast,
-        # -- sampling, sharding, URL and crawl-policy operators --
+        # -- crawl-policy gates (the CLI's --blocklist and --robots) --
         "url_blocklist": q_url_blocklist,
-        "corpus_split": q_corpus_split,
-        "temperature_sample": q_temperature_sample,
-        "shuffle_shards": q_shuffle_shards,
         "robots_filter": q_robots_filter,
-        "stratified_sample": q_stratified_sample,
-        "normalize_urls": q_normalize_urls,
     }
 
 
@@ -1145,26 +1050,6 @@ def oracle_sql() -> dict[str, str]:
                    ROUND(COALESCE(per.n_boiler / per.n_shingles, 0.0), 6) AS boiler_ratio
             FROM sh s LEFT JOIN per USING (doc_id)
         """.format(words=_WORDS_SQL),
-        "stratified_sample": """
-            SELECT doc_id, lang, source FROM documents
-            WHERE ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT % 10000
-                  < CASE lang WHEN 'en' THEN 5000 WHEN 'fr' THEN 2500
-                              WHEN 'de' THEN 1000 ELSE 0 END
-        """,
-        # Temperature rebalancing: counts -> sqrt(n_min/n) rates (IEEE
-        # sqrt, bit-equal cross-engine) -> floor-quantised thresholds
-        # -> md5 bucket filter. Null-safe stratum join: NULL lang is a
-        # stratum, and a plain equi-join would silently drop it.
-        "temperature_sample": """
-            WITH c AS (SELECT lang, COUNT(*) AS n FROM documents GROUP BY lang),
-            m AS (SELECT MIN(n) AS nmin FROM c),
-            t AS (SELECT lang,
-                         CAST(greatest(floor(sqrt(CAST(nmin AS DOUBLE) / CAST(n AS DOUBLE)) * 10000.0), 1) AS INTEGER) AS thresh
-                  FROM c, m)
-            SELECT d.doc_id, d.lang, d.source
-            FROM documents d JOIN t ON d.lang IS NOT DISTINCT FROM t.lang
-            WHERE ('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 15))::BIGINT % 10000 < t.thresh
-        """,
         # Robots gate: full longest-match replay — same synthesized
         # urls + directive table, rank matching prefixes by (length
         # desc, allow-first) per url, allowed = no match or top allow.
@@ -1195,71 +1080,6 @@ def oracle_sql() -> dict[str, str]:
             FROM u LEFT JOIN m ON m.doc_id = u.doc_id AND m.rn = 1
             WHERE m.rule IS NULL OR m.rule = 'allow'
         """,
-        # Training-order shuffle + shards: the oracle may use ONE global
-        # window (fine at sf0.01); the operator's two-phase prefix sums
-        # must agree with it row-for-row at any parallelism.
-        "shuffle_shards": """
-            WITH t AS (
-              SELECT doc_id,
-                     ('0x' || substr(md5('ep0:' || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT AS k,
-                     CAST(len(list_filter(string_split_regex(lower(trim(coalesce(text, ''))), '\\s+'), w -> w <> '')) AS BIGINT) AS nt
-              FROM documents),
-            o AS (
-              SELECT doc_id,
-                     ROW_NUMBER() OVER (ORDER BY k, doc_id) - 1 AS pos,
-                     COALESCE(SUM(nt) OVER (ORDER BY k, doc_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS tok_offset
-              FROM t)
-            SELECT doc_id, CAST(pos AS BIGINT) AS pos,
-                   CAST(tok_offset AS BIGINT) AS tok_offset,
-                   CAST(tok_offset // 5000 AS BIGINT) AS shard_id
-            FROM o
-        """,
-        "normalize_urls": r"""
-            WITH t AS (
-              SELECT doc_id,
-                     (CASE WHEN doc_id % 2 = 0 THEN 'HTTP' ELSE 'https' END)
-                     || '://WWW.Site' || CAST(doc_id % 7 AS VARCHAR) || '.COM'
-                     || (CASE WHEN doc_id % 3 = 0 THEN ':80' ELSE '' END)
-                     || (CASE WHEN doc_id % 5 = 0 THEN ''
-                              ELSE '/articles/' || CAST(doc_id AS VARCHAR) END)
-                     || (CASE WHEN doc_id % 2 = 0 THEN '?utm_source=tw&b=2&a=1'
-                              WHEN doc_id % 3 = 0 THEN '?ref=home' ELSE '' END)
-                     || (CASE WHEN doc_id % 4 = 0 THEN '#sec2' ELSE '' END) AS url
-              FROM documents),
-            p AS (
-              SELECT doc_id, url,
-                     lower(regexp_extract(url,
-                       '^([A-Za-z][A-Za-z0-9+.-]*)://([^/?#]*)([^?#]*)(?:\?([^#]*))?(?:#.*)?$', 1)) AS scheme,
-                     lower(regexp_extract(url,
-                       '^([A-Za-z][A-Za-z0-9+.-]*)://([^/?#]*)([^?#]*)(?:\?([^#]*))?(?:#.*)?$', 2)) AS host0,
-                     regexp_extract(url,
-                       '^([A-Za-z][A-Za-z0-9+.-]*)://([^/?#]*)([^?#]*)(?:\?([^#]*))?(?:#.*)?$', 3) AS path0,
-                     regexp_extract(url,
-                       '^([A-Za-z][A-Za-z0-9+.-]*)://([^/?#]*)([^?#]*)(?:\?([^#]*))?(?:#.*)?$', 4) AS qs
-              FROM t),
-            q AS (
-              SELECT *,
-                     list_sort(list_filter(string_split(qs, '&'),
-                       prm -> NOT (starts_with(prm, 'utm_')
-                                   OR regexp_matches(prm, '^(fbclid|gclid|msclkid|ref)(=|$)')
-                                   OR prm = ''))) AS kept
-              FROM p)
-            SELECT doc_id, url,
-                   CASE WHEN scheme = '' THEN url
-                        ELSE scheme || '://'
-                             || (CASE WHEN scheme = 'http' AND host0 LIKE '%:80'
-                                      THEN substr(host0, 1, length(host0) - 3)
-                                      WHEN scheme = 'https' AND host0 LIKE '%:443'
-                                      THEN substr(host0, 1, length(host0) - 4)
-                                      ELSE host0 END)
-                             || (CASE WHEN path0 = '' THEN '/' ELSE path0 END)
-                             || (CASE WHEN len(kept) > 0
-                                      THEN '?' || array_to_string(kept, '&')
-                                      ELSE '' END)
-                   END AS url_norm
-            FROM q
-        """,
         "host_cap": """
             SELECT doc_id, source, CAST(host_rank AS INTEGER) AS host_rank FROM (
                 SELECT doc_id, source,
@@ -1289,18 +1109,6 @@ def oracle_sql() -> dict[str, str]:
               SELECT 1 FROM (VALUES ('src12.example'), ('src3.example'),
                                     ('src7.example')) b(d)
               WHERE h.host = b.d OR ends_with(h.host, '.' || b.d))
-        """,
-        # Leakage-safe splits: md5-hex15 bucket of the HOST, cumulative
-        # thresholds in sorted split-name order (test 1000, train 9000,
-        # val 10000 of denom 10000) — exactly split_corpus's arithmetic.
-        "corpus_split": """
-            SELECT doc_id, source,
-                   CASE WHEN b < 1000 THEN 'test'
-                        WHEN b < 9000 THEN 'train'
-                        ELSE 'val' END AS split
-            FROM (SELECT doc_id, source,
-                         ('0x' || substr(md5(source), 1, 15))::BIGINT % 10000 AS b
-                  FROM documents)
         """,
         # Crawl diff: the same deterministic old/new synthesis, sha256
         # digests (NULL text digests to the 'null' sentinel — cannot

@@ -66,10 +66,8 @@ BENCH_QUERIES = [
     "boilerplate_shingles", "crawl_diff",
     "url_blocklist",
     # round-4 families previously correctness-only (VERDICT r4 #8):
-    "corpus_split",
     "crawl_churn",
-    # round-5 additions:
-    "temperature_sample", "shuffle_shards",
+    # round-5 addition:
     "robots_filter",
 ]
 
@@ -103,17 +101,15 @@ def main() -> None:
     # Best-of-2 full passes: the first pass still pays residual JIT /
     # codegen compilation; the minimum is the steady-state wall a long-
     # lived cluster session sees (both passes do identical full work).
-    n_passes = 1 if os.environ.get("BENCH_SKIP_QUERIES") else 2
     extract_secs = float("inf")
-    for _ in range(n_passes):
+    for _ in range(2):
         t0 = time.monotonic()
         extract_fused(pages).write.format("noop").mode("overwrite").save()
         extract_secs = min(extract_secs, time.monotonic() - t0)
 
     qs = entry_mod.queries()
     q_secs: dict[str, float] = {}
-    bench_queries = [] if os.environ.get("BENCH_SKIP_QUERIES") else BENCH_QUERIES
-    for name in bench_queries:
+    for name in BENCH_QUERIES:
         # Best-of-2 per query: single-shot timings on this shared box
         # swing up to 10x under external load (trivial linear queries
         # occasionally report seconds); the min is the steady-state wall.

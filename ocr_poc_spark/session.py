@@ -5,6 +5,10 @@ set per executor: AQE on (runtime coalesce + skew-join splitting), Arrow
 transfer for the pandas-UDF parse stage, shuffle partitions sized to
 cores (overridden to ~2-3x total cores on a real cluster), UTC session
 timezone so results compare bit-identically against the DuckDB oracle.
+
+Unless SPARK_GRAFT_CPUS / SPARK_DRIVER_MEM say otherwise, the local
+master uses every core this process may run on and the driver heap is
+half of physical memory.
 """
 
 from __future__ import annotations
@@ -13,7 +17,12 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+DEFAULT_CPUS = int(
+    os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0)))
+)
+DEFAULT_DRIVER_MEM = (
+    f"{os.sysconf('SC_PAGE_SIZE') * os.sysconf('SC_PHYS_PAGES') // 2**21}m"
+)
 
 
 def get_spark(
@@ -45,7 +54,10 @@ def get_spark(
         # One Arrow batch of html blobs must fit comfortably in worker
         # memory: ~2k pages x ~50KB avg = ~100MB per batch upper bound.
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM", DEFAULT_DRIVER_MEM),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")

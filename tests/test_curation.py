@@ -1,12 +1,11 @@
 """Unit tests for cross-document curation operators (boilerplate
-shingle dedup, stratified sampling, host caps)."""
+shingle dedup, host caps, crawl diff and policy gates)."""
 
 import pyspark.sql.functions as F
 
 from ocr_poc_spark.operators.curation import (
     boilerplate_shingle_stats,
     host_cap,
-    stratified_sample,
 )
 
 BOILER = "we use cookies to improve your experience on this site"
@@ -37,25 +36,6 @@ def test_boilerplate_ratio_bounds_and_short_doc(spark):
     # prefix window) but their tails differ.
     assert 0.0 < out[1]["boiler_ratio"] < 1.0
     assert out[1]["n_boiler"] == out[2]["n_boiler"]
-
-
-def test_stratified_sample_deterministic_and_exhaustive(spark):
-    docs = spark.range(0, 2000).select(
-        F.col("id").alias("doc_id"),
-        F.when(F.col("id") % 2 == 0, "en").otherwise("fr").alias("lang"),
-    )
-    kept = stratified_sample(docs, {"en": 0.5, "fr": 0.1}, strat_col="lang")
-    counts = {r["lang"]: r["n"] for r in kept.groupBy("lang").agg(F.count("*").alias("n")).collect()}
-    # md5 buckets are uniform: expect ~500 en, ~100 fr with slack.
-    assert 400 <= counts["en"] <= 600
-    assert 60 <= counts.get("fr", 0) <= 140
-    # Deterministic: the same call keeps the same ids.
-    a = sorted(r["doc_id"] for r in kept.collect())
-    b = sorted(r["doc_id"] for r in stratified_sample(docs, {"en": 0.5, "fr": 0.1}, strat_col="lang").collect())
-    assert a == b
-    # Unlisted strata default to rate 0.
-    none_kept = stratified_sample(docs, {"en": 0.5}, strat_col="lang")
-    assert none_kept.where(F.col("lang") == "fr").count() == 0
 
 
 def test_host_cap_stable_under_partitioning(spark):
@@ -112,24 +92,6 @@ def test_run_curate_stage(spark, pages_df, tmp_path):
     )
 
 
-def test_normalize_urls_edges(spark):
-    from ocr_poc_spark.operators.curation import normalize_urls
-
-    cases = {
-        "HTTP://WWW.Ex.COM:80/A/b?utm_source=tw&b=2&a=1#frag": "http://www.ex.com/A/b?a=1&b=2",
-        "https://ex.com:443": "https://ex.com/",
-        "https://ex.com:8443/x": "https://ex.com:8443/x",  # non-default port kept
-        "http://ex.com:443/x": "http://ex.com:443/x",  # :443 is not http's default
-        "https://ex.com/x?ref=home": "https://ex.com/x",
-        "https://ex.com/x?ref2=keep&fbclid=1": "https://ex.com/x?ref2=keep",  # prefix!=param
-        "https://ex.com/y?": "https://ex.com/y",
-        "not a url": "not a url",  # pass-through
-    }
-    df = spark.createDataFrame([(u,) for u in cases], "url string")
-    out = {r["url"]: r["url_norm"] for r in normalize_urls(df).collect()}
-    assert out == cases
-
-
 def test_null_text_docs_keep_rows(spark):
     """NULL text must not vanish from curation outputs (ANSI size(NULL)
     is NULL, which satisfies neither size branch without the coalesce)."""
@@ -176,41 +138,6 @@ def test_run_curate_dup_urls_and_zero_cap(spark, tmp_path):
     assert len(rows0) == 4 and not any(r["kept"] for r in rows0)
 
 
-def test_normalize_urls_idempotent_combinatorial(spark):
-    """Canonicalization invariants over a combinatorial URL corpus:
-    normalize(normalize(u)) == normalize(u); no fragment or tracking
-    param survives; scheme/host come out lowercase."""
-    import itertools
-
-    from ocr_poc_spark.operators.curation import normalize_urls
-
-    schemes = ["http", "HTTPS", "ftp"]
-    hosts = ["Ex.COM", "ex.com:80", "EX.com:443", "ex.com:8080", ""]
-    paths = ["", "/", "/A/b%20c", "//double"]
-    queries = ["", "?", "?utm_source=x", "?b=2&a=1", "?ref", "?ref=&x=1&utm_a=2",
-               "?a=1&a=0", "?=bare&key="]
-    frags = ["", "#f", "#a?b=1"]
-    urls = [
-        f"{s}://{h}{p}{q}{fr}"
-        for s, h, p, q, fr in itertools.product(schemes, hosts, paths, queries, frags)
-    ] + ["", "no-scheme/path?utm_source=x", "http:/one-slash", "://nohost"]
-    df = spark.createDataFrame([(u,) for u in urls], "url string")
-    once = normalize_urls(df).select(F.col("url_norm").alias("url"))
-    twice = normalize_urls(once)
-    rows = twice.collect()
-    assert all(r["url_norm"] == r["url"] for r in rows)  # idempotent
-    for r in rows:
-        u = r["url"]
-        if "://" not in u:
-            continue  # pass-through inputs
-        assert "#" not in u  # fragments never survive normalization
-        if "?" in u:
-            for prm in u.split("?", 1)[1].split("&"):
-                assert not prm.startswith("utm_") and prm.split("=")[0] not in (
-                    "fbclid", "gclid", "msclkid", "ref",
-                )
-
-
 def test_host_cap_prefilter_identical_on_hot_host(spark):
     """The hot-host pre-filter must not change the kept set or the
     surviving ranks: on a fixture where one host owns 10% of all rows,
@@ -236,39 +163,6 @@ def test_host_cap_prefilter_identical_on_hot_host(spark):
         assert got == ref, f"kept set differs at parallelism {p}"
     hot_kept = [r for r in ref if r[1] == "hot.example"]
     assert len(hot_kept) == 7  # the hot host is really capped
-
-
-def test_split_corpus_deterministic_and_leakage_safe(spark):
-    """Every row gets exactly one split; fractions land near quotas;
-    keying on the host column sends a whole host to one split; bad
-    fraction sums raise."""
-    import pytest
-
-    from ocr_poc_spark.operators.curation import split_corpus
-
-    d = spark.createDataFrame(
-        [(i, f"host{i % 17}.example") for i in range(2000)],
-        "doc_id long, source string",
-    )
-    out = split_corpus(d, {"train": 0.8, "val": 0.1, "test": 0.1})
-    counts = {r["split"]: r["n"] for r in out.groupBy("split").agg(
-        F.count(F.lit(1)).alias("n")).collect()}
-    assert set(counts) <= {"train", "val", "test"}
-    assert sum(counts.values()) == 2000
-    assert counts["train"] > counts["val"] and counts["train"] > counts["test"]
-
-    again = {tuple(r) for r in split_corpus(
-        d, {"train": 0.8, "val": 0.1, "test": 0.1}).collect()}
-    assert again == {tuple(r) for r in out.collect()}
-
-    by_host = split_corpus(d, {"train": 0.8, "val": 0.1, "test": 0.1}, by="source")
-    assert by_host.groupBy("source").agg(
-        F.countDistinct("split").alias("k")).where(F.col("k") > 1).count() == 0
-
-    with pytest.raises(ValueError, match="sum to"):
-        split_corpus(d, {"train": 0.8, "val": 0.1})
-    with pytest.raises(ValueError, match="empty"):
-        split_corpus(d, {})
 
 
 def test_crawl_diff_statuses_and_changed_slice(spark):
@@ -352,34 +246,6 @@ def test_crawl_churn_stats_per_host(spark):
     assert abs(a["churn"] - round(2 / 3, 6)) < 1e-9 and b["churn"] == 0.5
 
 
-def test_split_corpus_rejects_negative_fractions(spark):
-    import pytest
-
-    from ocr_poc_spark.operators.curation import split_corpus
-
-    d = spark.createDataFrame([(1,)], "doc_id long")
-    with pytest.raises(ValueError, match="non-negative"):
-        split_corpus(d, {"train": 1.2, "val": -0.2})
-
-
-def test_split_corpus_null_key_raises(spark):
-    """A NULL split key must fail loudly, never silently yield
-    split=NULL (a row lost from all three partitions)."""
-    import pytest
-
-    from ocr_poc_spark.operators.curation import split_corpus
-
-    d = spark.createDataFrame(
-        [(1, "h1"), (2, None)], "doc_id long, source string"
-    )
-    ok = split_corpus(
-        d.where("source IS NOT NULL"), {"train": 1.0}, by="source"
-    ).collect()
-    assert [r["split"] for r in ok] == ["train"]
-    with pytest.raises(Exception, match="NULL 'source' key"):
-        split_corpus(d, {"train": 1.0}, by="source").collect()
-
-
 def test_url_blocklist_filter_suffix_semantics(spark):
     """Exact-domain and subdomain matches are blocked; lookalike
     suffixes are not; case-insensitive; unparseable urls survive;
@@ -409,118 +275,6 @@ def test_url_blocklist_filter_suffix_semantics(spark):
         url_blocklist_filter(d, [])
     with pytest.raises(ValueError, match="empty domain"):
         url_blocklist_filter(d, ["ok.example", "  "])
-
-
-def test_temperature_sample_rates_and_null_stratum(spark):
-    """Temperature rebalancing: the rarest stratum is kept whole, a
-    bigger stratum is kept at floor(sqrt(n_min/n)*denom)/denom exactly
-    (same md5 bucket rule as stratified_sample), NULL strata survive as
-    their own stratum (the null-safe-join contract), alpha=1 keeps the
-    natural distribution, and bad alphas raise."""
-    import math
-
-    import pytest
-
-    from ocr_poc_spark.operators.curation import sample_bucket, temperature_sample
-
-    rows = (
-        [(i, "x", "en", "s") for i in range(400)]
-        + [(1000 + i, "x", "fr", "s") for i in range(25)]
-        + [(2000 + i, "x", None, "s") for i in range(25)]
-    )
-    df = spark.createDataFrame(rows, "doc_id long, text string, lang string, source string")
-
-    out = temperature_sample(df, alpha=0.5).collect()
-    by_lang = {}
-    for r in out:
-        by_lang.setdefault(r["lang"], set()).add(r["doc_id"])
-    # rarest strata (fr and NULL tie at 25): rate 1.0 -> kept whole.
-    assert by_lang.get("fr", set()) == {1000 + i for i in range(25)}
-    assert by_lang.get(None, set()) == {2000 + i for i in range(25)}
-    # en: threshold floor(sqrt(25/400)*10000) = 2500; recompute the
-    # exact kept set from the operator's own bucket rule.
-    thresh = math.floor(math.sqrt(25 / 400) * 10000)
-    assert thresh == 2500
-    buckets = {
-        r["doc_id"]: r["b"]
-        for r in df.select("doc_id", sample_bucket().alias("b")).collect()
-    }
-    expect = {i for i in range(400) if buckets[i] < thresh}
-    assert by_lang.get("en", set()) == expect
-    # alpha=1: natural distribution — every row kept (all rates 1).
-    assert len(temperature_sample(df, alpha=1.0).collect()) == len(rows)
-    # extreme-skew clamp: with denom=10 and rates sqrt(25/400)=0.25 the
-    # en threshold floors to 2; shrink further (denom=10, alpha -> rate
-    # 1/16 at alpha=0.5 needs n=6400) — use alpha=0 (rate n_min/n =
-    # 1/16 -> floor(0.625) would be 0) and check the stratum SURVIVES.
-    skew = spark.createDataFrame(
-        [(i, "x", "en" if i < 1600 else "fr", "s") for i in range(1700)],
-        "doc_id long, text string, lang string, source string",
-    )
-    kept_en = (
-        temperature_sample(skew, alpha=0.0, denom=10)
-        .where("lang = 'en'")
-        .count()
-    )
-    assert kept_en > 0  # clamped to 1 bucket, never zeroed out
-    # output schema is the input schema (helper columns dropped).
-    assert temperature_sample(df).columns == df.columns
-    for bad in (-0.1, 1.5):
-        with pytest.raises(ValueError):
-            temperature_sample(df, alpha=bad)
-
-
-def test_shuffle_shards_order_shards_and_invariance(spark):
-    """Training-order shuffle: positions are a permutation, token
-    offsets are the exclusive prefix sums in position order, shards cut
-    greedily at the budget without splitting docs, NULL/negative token
-    counts occupy a position with 0 tokens, a different seed yields a
-    different order, and output is identical at any parallelism."""
-    import pytest
-
-    from ocr_poc_spark.operators.curation import shuffle_shards
-
-    rows = [(i, (i * 17) % 50 + 1) for i in range(300)]
-    rows += [(900, None), (901, -3)]  # NULL / negative -> 0 tokens
-    df = spark.createDataFrame(rows, "doc_id long, n_tokens int")
-
-    out = sorted(
-        (r["pos"], r["tok_offset"], r["shard_id"], r["doc_id"])
-        for r in shuffle_shards(df, shard_tokens=500, seed="ep0").collect()
-    )
-    assert [p for p, *_ in out] == list(range(len(rows)))
-    ntok = dict(rows)
-    run = 0
-    for pos, off, shard, doc in out:
-        assert off == run, f"offset mismatch at pos {pos}"
-        assert shard == off // 500
-        run += max(ntok[doc] or 0, 0)
-    # shard sizes: assignment is by START offset, so a doc straddling a
-    # boundary tips its whole length into the earlier shard — non-last
-    # shard token sums land within one max-doc-length of the budget on
-    # either side (the whole-doc sharding tolerance), never further.
-    sizes = {}
-    for pos, off, shard, doc in out:
-        sizes[shard] = sizes.get(shard, 0) + max(ntok[doc] or 0, 0)
-    last = max(sizes)
-    assert all(500 - 50 < s < 500 + 51 for sh, s in sizes.items() if sh != last)
-    # shard ids are contiguous from 0.
-    assert sorted(sizes) == list(range(len(sizes)))
-
-    # parallelism invariance + seed sensitivity.
-    def rows_of(res):
-        return sorted(
-            (r["pos"], r["tok_offset"], r["shard_id"], r["doc_id"])
-            for r in res.collect()
-        )
-
-    a = rows_of(shuffle_shards(df.repartition(1), 500, seed="ep0", n_partitions=1))
-    b = rows_of(shuffle_shards(df.repartition(13), 500, seed="ep0", n_partitions=13))
-    assert a == out == b
-    c = rows_of(shuffle_shards(df, 500, seed="ep1"))
-    assert c != a
-    with pytest.raises(ValueError):
-        shuffle_shards(df, shard_tokens=0)
 
 
 def test_robots_filter_longest_match_semantics(spark):

@@ -14,44 +14,30 @@ def test_fused_output_invariant_to_input_partitioning(spark, pages_df, oracle_re
 
 
 def test_session2_operators_invariant_to_input_partitioning(spark):
-    """The session-2 operators (crawl diff, corpus splits) must produce
-    identical sorted results at 1/7/11-way input partitioning —
-    unordered first()/collect-order dependence would surface here."""
+    """The session-2 operator (crawl diff) must produce identical sorted
+    results at 1/7/11-way input partitioning — unordered
+    first()/collect-order dependence would surface here."""
     import pyspark.sql.functions as F
 
     from ocr_poc_spark.operators.crawl import crawl_diff
-    from ocr_poc_spark.operators.curation import split_corpus
 
     docs = spark.createDataFrame(
         [
-            (i, f"w{i % 9} body text token{i % 23} filler word{i % 7} " * 4,
-             f"h{i % 5}")
+            (i, f"w{i % 9} body text token{i % 23} filler word{i % 7} " * 4)
             for i in range(120)
         ],
-        "doc_id long, text string, source string",
+        "doc_id long, text string",
     )
-    old = docs.select("doc_id", "text")
     new = docs.where(F.col("doc_id") % 3 != 0).select(
         "doc_id",
         F.when(F.col("doc_id") % 4 == 0, F.concat("text", F.lit(" v2")))
         .otherwise(F.col("text")).alias("text"),
     )
-
-    def runs(build):
-        outs = []
-        for n in (1, 7, 11):
-            outs.append(sorted(map(tuple, build(n).collect())))
-        return outs
-
-    for name, build in {
-        "split": lambda n: split_corpus(
-            docs.repartition(n), {"train": 0.8, "val": 0.1, "test": 0.1},
-            by="source",
-        ),
-        "crawl_diff": lambda n: crawl_diff(
-            old.repartition(n), new.repartition(max(1, n - 2)), id_col="doc_id"
-        ),
-    }.items():
-        a, b, c = runs(build)
-        assert a == b == c, name
-        assert a, name  # non-trivial output
+    a, b, c = (
+        sorted(map(tuple, crawl_diff(
+            docs.repartition(n), new.repartition(max(1, n - 2)), id_col="doc_id"
+        ).collect()))
+        for n in (1, 7, 11)
+    )
+    assert a == b == c
+    assert a  # non-trivial output

@@ -83,17 +83,6 @@ def test_boilerplate_plan_two_exchanges_no_join(spark):
     assert "Join" not in plan, plan
 
 
-def test_normalize_and_sample_are_zero_shuffle(spark):
-    """normalize_urls and stratified_sample are map-only passes."""
-    from ocr_poc_spark.operators.curation import normalize_urls, stratified_sample
-
-    docs = spark.createDataFrame(
-        [(1, "https://a.example/x", "en")], "doc_id long, url string, lang string"
-    )
-    assert "Exchange" not in _plan(normalize_urls(docs))
-    assert "Exchange" not in _plan(stratified_sample(docs, {"en": 0.5}))
-
-
 def test_part_profit_broadcasts_all_dims_one_exchange(spark):
     """The Q9-style star join must broadcast all three dimension tables
     (part/supplier/nation) and shuffle exactly once — the final
@@ -172,59 +161,6 @@ def test_star_round_is_hub_degree_bounded(spark):
     assert "explode" not in plan.lower(), plan
     # scalar min aggregates carry partial combine: partial_min present
     assert "partial_min" in plan or "partial_least" in plan, plan
-
-
-def test_temperature_sample_corpus_never_hash_shuffles(spark):
-    """The rebalancing filter's scale claim: the corpus side is map-only
-    — the only Exchanges are the tiny stratum-count roll-ups
-    (SinglePartition / the #strata-row agg) and the BroadcastExchange
-    of the threshold table. The corpus itself must never ride a
-    hashpartitioning Exchange."""
-    import re
-
-    from ocr_poc_spark.operators.curation import temperature_sample
-
-    d = spark.createDataFrame(
-        [(i, "en" if i % 3 else "fr") for i in range(300)],
-        "doc_id long, lang string",
-    )
-    plan = _plan(temperature_sample(d, alpha=0.5))
-    for ln in plan.splitlines():
-        if re.search(r"\bExchange hashpartitioning", ln):
-            # the only hash exchanges allowed are the stratum-count
-            # groupBys — keyed on the stratum column, already collapsed
-            # to #strata rows by the map-side partial agg. A doc_id-
-            # keyed exchange would mean the corpus itself shuffled.
-            assert "lang" in ln and "doc_id" not in ln, plan
-    # the filter applies as a broadcast join against the corpus scan
-    assert "BroadcastHashJoin" in plan, plan
-
-
-def test_shuffle_shards_single_exchange_ids_only(spark):
-    """The shard assigner's scale claim: exactly ONE wide op — the
-    window's bucket exchange on the deterministic key-space slice of
-    the uniform 60-bit order key (no range repartition, no checkpoint)
-    — plus the broadcast of the per-bucket offset rows; the window is
-    partitioned (never global), and no document text rides the
-    exchange."""
-    import re
-
-    from ocr_poc_spark.operators.curation import shuffle_shards
-
-    d = spark.createDataFrame(
-        [(i, "body " * 20, (i * 7) % 40 + 1) for i in range(200)],
-        "doc_id long, text string, n_tokens int",
-    )
-    plan = _plan(shuffle_shards(d, shard_tokens=500, seed="s"))
-    wide = [
-        ln for ln in plan.splitlines()
-        if re.search(r"\bExchange\b", ln) and "BroadcastExchange" not in ln
-    ]
-    assert len(wide) == 1 and "_pid" in wide[0], plan
-    # the exchanged stream carries (id, key, counts) — never text
-    assert not re.search(r"Exchange hashpartitioning.*\btext\b", plan), plan
-    # the prefix-sum window is partitioned by _pid, not global
-    assert "Window" in plan and "SinglePartition" not in plan, plan
 
 
 def test_robots_filter_corpus_joins_broadcast_rules(spark):
