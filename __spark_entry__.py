@@ -6,11 +6,12 @@ holds 31 queries. The first 29 are the production-path contract: 16 pure-
 relational re-expressions of the cascade's SQL shapes (SURVEY.md §2), 8
 queries over the operators of the production path (extraction, MinHash
 dedup and components, crawl diff and churn, host cap, boilerplate
-shingles, language ID), and 5 that tests/test_entry_contract.py pins.
-The last 2 are the crawl-policy gates behind the CLI's --blocklist and
+shingles, language ID), and 5 that tests/test_entry_contract.py pins,
+written out here in full because no production stage runs them. The
+last 2 are the crawl-policy gates behind the CLI's --blocklist and
 --robots (domain blocklist, robots rules). EVERY query has a DuckDB
-oracle in oracle_sql() that re-derives its result in SQL
-(incl. the exact all-pairs Jaccard behind MinHash and the HTML
+oracle in oracle_sql() that re-derives its result in SQL (incl. the
+exact all-pairs Jaccard behind MinHash and the HTML
 extraction cascade's fields over the synthesised page template); the
 committed extraction golden from the sequential kernel
 (scripts/make_goldens.py) is a second witness for the cascade.
@@ -198,16 +199,17 @@ def q_dedup_exact(spark, sf_dir):  # exact dedup on normalised 5-word prefix
     )
 
 
-def q_dedup_ngram_jaccard(spark, sf_dir):  # n-gram Jaccard near-dup pairs
-    from ocr_poc_spark.operators.dedup import ngram_jaccard_pairs
+def q_dedup_ngram_jaccard(spark, sf_dir):  # word-set Jaccard of 30-word prefixes
+    from ocr_poc_spark.functions.texthash import norm_words
 
     d = _t(spark, sf_dir, "documents", spread=True)
-    d = d.withColumn("grp_sl", F.concat_ws("|", "source", "lang"))
-    pairs = ngram_jaccard_pairs(
-        d, id_col="doc_id", text_col="text", group_col="grp_sl",
-        prefix_words=30, threshold=0.6,
-    )
-    return pairs.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
+    ws = F.array_distinct(F.slice(norm_words("text"), 1, 30))
+    a = d.select(F.col("doc_id").alias("id_a"), "source", "lang", ws.alias("wa"))
+    b = d.select(F.col("doc_id").alias("id_b"), "source", "lang", ws.alias("wb"))
+    # split() never yields an empty array, so the union is never empty
+    jac = F.size(F.array_intersect("wa", "wb")) / F.size(F.array_union("wa", "wb"))
+    pairs = a.join(b, ["source", "lang"]).where((F.col("id_a") < F.col("id_b")) & (jac >= 0.6))
+    return pairs.select("id_a", "id_b", F.round(jac, 6).alias("jaccard"))
 
 
 def q_dedup_minhash(spark, sf_dir):  # MinHash+LSH, exact-Jaccard verified
@@ -233,23 +235,68 @@ def q_dedup_components(spark, sf_dir):
     return connected_components(pairs).orderBy("doc_id")
 
 
-def q_embedding_topk(spark, sf_dir):  # brute-force cosine top-k
-    # Reuses the operator directly (no inline re-implementation to
-    # drift); ranking happens on the UNROUNDED cosine in both engines.
-    from ocr_poc_spark.operators.similarity import cosine_topk
+def _dot(a, b):
+    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x)
 
-    emb = _t(spark, sf_dir, "embeddings")
-    out = cosine_topk(emb, query_ids=[0, 1, 2, 3, 4], k=3)
-    return out.select(
-        "query_id", "neighbor_id", "rank", F.round("cosine", 6).alias("cosine")
+
+def _vectors(df: DataFrame, id_col: str, vec) -> DataFrame:
+    """(id, v, n): the vector as doubles and its norm, computed once per
+    vector rather than once per pair."""
+    v = df.select(F.col(id_col).alias("id"), vec.cast("array<double>").alias("v"))
+    return v.withColumn("n", F.sqrt(_dot("v", "v")))
+
+
+def _side(vecs: DataFrame, name: str, *keep: str) -> DataFrame:
+    """One side of a pair join: (name_id, name_v, name_n) and `keep`."""
+    return vecs.select(*[F.col(c).alias(f"{name}_{c}") for c in ("id", "v", "n")], *keep)
+
+
+def _cosine_or_null(a: str, b: str):
+    """Exact cosine of sides a and b, NULL when either norm is zero (the
+    oracles' NULLIF): under ANSI mode 0/0 fails the job, and NaN sorts first
+    under DESC. A zero vector has no direction, so it is nobody's neighbor."""
+    denom = F.col(f"{a}_n") * F.col(f"{b}_n")
+    return F.when(denom > 0, _dot(f"{a}_v", f"{b}_v") / denom)
+
+
+def _top_k(pairs: DataFrame, k: int) -> DataFrame:
+    """Each query's k best neighbors, ranked on the unrounded cosine (desc,
+    then neighbor_id asc); zero-norm pairs drop out before ranking."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
+    return (
+        pairs.withColumn("cosine", _cosine_or_null("query", "neighbor"))
+        .where(F.col("cosine").isNotNull())
+        .withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank", F.round("cosine", 6).alias("cosine"))
     )
 
 
+def _hash_vectors(docs: DataFrame) -> DataFrame:
+    """Dim-16 hashing-trick vectors of doc text: each word adds -1 (bit 4 of
+    its 60-bit hash set) or +1 to cell `hash & 15`. Integer cells keep every
+    dot product and norm exact, so the oracles match the cosines bit for bit."""
+    from ocr_poc_spark.functions.texthash import hash60, norm_words
+
+    hashes = F.transform(F.filter(norm_words("text"), lambda w: F.length(w) > 0), hash60)
+
+    def add(acc, h):
+        sign = F.when(F.shiftright(h, 4).bitwiseAND(1) == 1, -1.0).otherwise(1.0)
+        # the two-argument lambda is deliberate: i is the cell index
+        return F.transform(acc, lambda x, i: x + F.when(h.bitwiseAND(15) == i, sign).otherwise(0.0))
+
+    return _vectors(docs, "doc_id", F.aggregate(hashes, F.array_repeat(F.lit(0.0), 16), add))
+
+
+def q_embedding_topk(spark, sf_dir):  # exact cosine top-3 of vectors 0-4
+    vecs = _vectors(_t(spark, sf_dir, "embeddings"), "vec_id", F.col("embedding"))
+    pairs = F.broadcast(_side(vecs.where("id < 5"), "query")).crossJoin(_side(vecs, "neighbor"))
+    return _top_k(pairs.where("query_id != neighbor_id"), 3)
+
+
 def _ivf_bcast_centroids() -> list[list[float]]:
-    """80 INTEGER centroids shared by q_ann_ivf_bcast and its SQL
-    oracle: a k ~ sqrt(n) quantizer for the broadcast-centroid path
-    (_with_centroids_col + _sorted_centroid_dists) that keeps every
-    distance/argmin/cosine exact in doubles."""
+    """80 INTEGER centroids shared by q_ann_ivf_bcast and its SQL oracle:
+    a k ~ sqrt(n) quantizer that keeps every distance exact in doubles."""
     import numpy as np
 
     rs = np.random.RandomState(29)
@@ -257,56 +304,66 @@ def _ivf_bcast_centroids() -> list[list[float]]:
 
 
 def q_ann_ivf_bcast(spark, sf_dir):
-    """IVF ANN with 80 supplied integer centroids: assignment and probe
-    selection run as the single-row broadcast centroid array + per-row
-    HOF sorted-distance prefix (similarity._with_centroids_col /
-    _sorted_centroid_dists). Self-search over
-    integer hashing-trick embeddings: the whole approximate path
-    (assignment argmin, probe ordering with (d, ci) tie-break,
-    self-pair filter, cosine re-rank) is exactly recomputable in SQL.
-    Plan shape pinned by
-    tests/test_plan_shapes.py::test_ivf_broadcast_assignment_is_exchange_free."""
-    from ocr_poc_spark.operators.similarity import ivf_ann_topk
-    from ocr_poc_spark.operators.textstats import hash_embedding
+    """IVF ANN self-search over hashing-trick vectors: a vector's 3 nearest
+    centroids (squared distance, then centroid id) are its probes and the
+    nearest is its cluster; the candidates are the other vectors of a
+    probed cluster, re-ranked by exact cosine."""
+    # Spread by id: the per-id window then needs no shuffle of its own,
+    # which AQE would coalesce, running every pair below in one task. The
+    # clusters are broadcast, since a shuffle on ci would put each
+    # cluster's quadratic pair count in one task.
+    docs = _t(spark, sf_dir, "documents")
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    vecs = _hash_vectors(docs.repartition(n, "doc_id"))
+    cents = spark.createDataFrame(
+        list(enumerate(_ivf_bcast_centroids())), "ci int, cv array<double>"
+    )
+    diff = F.zip_with("v", "cv", lambda x, y: x - y)
+    nearest = Window.partitionBy("id").orderBy(_dot(diff, diff), "ci")
+    probes = vecs.crossJoin(F.broadcast(cents)).withColumn("rn", F.row_number().over(nearest))
+    pairs = _side(probes.where("rn <= 3"), "query", "ci").join(
+        F.broadcast(_side(probes.where("rn = 1"), "neighbor", "ci")), "ci"
+    )
+    return _top_k(pairs.where("query_id != neighbor_id"), 2)
 
-    emb = hash_embedding(
-        _t(spark, sf_dir, "documents", spread=True), dim=16
-    ).select(F.col("doc_id").alias("vec_id"), "embedding")
-    return ivf_ann_topk(
-        emb, centroids=_ivf_bcast_centroids(), k=2, dim=16, n_probe=3
-    ).select(
-        "query_id", "neighbor_id", "rank", F.round("cosine", 6).alias("cosine")
+
+def q_lang_id(spark, sf_dir):  # stopword-argmax language ID and its hit counts
+    from ocr_poc_spark.functions.texthash import norm_words
+    from ocr_poc_spark.operators.textstats import LANGS, _stopword_hits, lang_guess_expr
+
+    hits = _stopword_hits(F.array_distinct(norm_words("text")))
+    return _t(spark, sf_dir, "documents").select(
+        "doc_id",
+        F.col("lang").alias("lang_true"),
+        lang_guess_expr(F.col("text")).alias("lang_guess"),
+        *[h.alias(f"hits_{lang}") for lang, h in zip(LANGS, hits)],
     )
 
 
-def q_lang_id(spark, sf_dir):  # stopword-argmax language ID
-    from ocr_poc_spark.operators.textstats import lang_id
+def q_fingerprint(spark, sf_dir):  # md5 + winnowed 5-word-shingle fingerprints
+    from ocr_poc_spark.functions.texthash import shingle_hashes
 
-    return lang_id(_t(spark, sf_dir, "documents"))
-
-
-def q_fingerprint(spark, sf_dir):  # md5 + winnowed document fingerprints
-    from ocr_poc_spark.operators.textstats import fingerprint
-
-    return fingerprint(_t(spark, sf_dir, "documents", spread=True)).select(
-        "doc_id", "md5_fp", "winnow_fp"
+    # Docs under 5 words have no shingle, so winnow_fp is NULL
+    # (array_min of the empty array, as DuckDB's list_min).
+    norm = F.regexp_replace(F.lower(F.trim("text")), r"\s+", " ")
+    d = _t(spark, sf_dir, "documents", spread=True).withColumn("_w", F.split(norm, " "))
+    return d.select(
+        "doc_id", F.md5(norm).alias("md5_fp"),
+        F.array_min(shingle_hashes("_w", 5)).alias("winnow_fp"),
     )
 
 
 def q_text_embed_near_dup(spark, sf_dir):
-    """Composition: text -> hashing-trick embedding -> exact cosine
-    near-dup pairs, end-to-end oracle-exact. The integer vectors keep
-    every dot product / squared norm exactly representable in doubles,
-    and IEEE sqrt is correctly rounded — so even the cosine is
-    bit-identical across engines."""
-    from ocr_poc_spark.operators.similarity import cosine_near_dup_pairs_exact
-    from ocr_poc_spark.operators.textstats import hash_embedding
-
-    emb = hash_embedding(
-        _t(spark, sf_dir, "documents", spread=True), dim=16
-    ).select(F.col("doc_id").alias("vec_id"), "embedding")
-    return cosine_near_dup_pairs_exact(emb, cosine_threshold=0.99).select(
-        "id_a", "id_b", F.round("cosine", 6).alias("cosine")
+    # hashing-trick vectors, then every pair with exact cosine >= 0.99
+    vecs = _hash_vectors(_t(spark, sf_dir, "documents", spread=True))
+    return (
+        _side(vecs, "a").join(_side(vecs, "b"), F.col("a_id") < F.col("b_id"))
+        .withColumn("cosine", _cosine_or_null("a", "b"))
+        .where("cosine >= 0.99")
+        .select(
+            F.col("a_id").alias("id_a"), F.col("b_id").alias("id_b"),
+            F.round("cosine", 6).alias("cosine"),
+        )
     )
 
 
@@ -661,10 +718,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 _WORDS_SQL = "string_split_regex(lower(trim(text)), '\\s+')"
 
-# Shared hashing-trick embedding fragments (must mirror
-# textstats.hash_embedding with dim=16): ONE definition interpolated
-# into every embedding oracle — a drifting copy would make one oracle
-# silently test a different embedding.
+# Shared hashing-trick embedding fragments (must mirror _hash_vectors):
+# ONE definition interpolated into every embedding oracle — a drifting
+# copy would make one oracle silently test a different embedding.
 _EMBED_CELLS_SQL = f"""tok AS (
               SELECT doc_id, ('0x' || substr(md5(w.w), 1, 15))::BIGINT AS h
               FROM documents, unnest({_WORDS_SQL}) AS w(w)

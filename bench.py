@@ -6,7 +6,7 @@ documents/sec — reported as docs_per_sec alongside). Also times the
 relational operator queries from __spark_entry__ at $SPARK_GRAFT_SF_DIR.
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS (default 32),
+     SPARK_GRAFT_CPUS (default: the session's, every core of the process),
      BENCH_PAGES (override page count).
 """
 
@@ -20,8 +20,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from ocr_poc_spark.session import DEFAULT_CPUS as CPUS  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 # Pages per scale factor: sf0.1 -> 8000 docs (~50KB HTML each).
 PAGES_PER_SF = 80_000

@@ -1,6 +1,6 @@
 """The parity-critical word tokenisation and text-hash constructions
-shared by language ID, fingerprint, the hashing-trick embedding,
-boilerplate shingles and MinHash dedup.
+shared by the language guess, MinHash dedup, boilerplate shingles and
+the host cap (and by the driver's fingerprint and hashing-trick queries).
 
 The 60-bit hash is the first 15 hex chars of md5 parsed as an integer —
 chosen over xxhash64 specifically so an independent engine (the DuckDB

@@ -1,2 +1,2 @@
-"""Spark operator library: dedup, similarity search, text stats, curation,
-crawl diffing and lineage."""
+"""The Spark operators of the production path: MinHash dedup and
+components, the language guess, curation, crawl diffing and lineage."""

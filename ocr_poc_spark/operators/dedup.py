@@ -1,8 +1,8 @@
-"""Deduplication operators for web-scale corpus curation.
+"""Deduplication operators behind run_dedup (minhash_band_index, the
+banding alone, serves the perfbench dedup probe).
 
 All-native column expressions (zero Python in the hot path):
 
-- n-gram Jaccard       : word-set similarity on bounded prefixes
 - MinHash + LSH        : shingle -> 32 minhashes -> 8 banded signatures
                          -> bucket self-join -> candidate pairs
 - connected components : near-dup pairs -> duplicate clusters
@@ -165,71 +165,6 @@ def _exact_jaccard_verify(
     return (
         cand.withColumn("jaccard", jac)
         .where(F.col("jaccard") >= jaccard_threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-
-
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    group_col: str | None = "lang",
-    prefix_words: int = 30,
-    threshold: float = 0.5,
-    max_group_rows: int | None = 100_000,
-) -> DataFrame:
-    """Exact word-set Jaccard over bounded word prefixes, within groups
-    — the O(n^2)-WITHIN-GROUP small-scale / oracle-checkable variant;
-    minhash_lsh_pairs is the curation/scale path. To make that intent
-    unmissable, the call REFUSES inputs whose largest group exceeds
-    max_group_rows (pass None to waive, accepting the quadratic join)."""
-    base = df.select(
-        F.col(id_col).alias("id"),
-        *( [F.col(group_col).alias("grp")] if group_col else [F.lit(1).alias("grp")] ),
-        F.array_distinct(F.slice(norm_words(text_col), 1, prefix_words)).alias("ws"),
-    )
-    if max_group_rows is not None:
-        # In-pipeline guard (no separate eager job recomputing the input):
-        # a count window on grp — the same key the join shuffles on, so
-        # the clustering is reused — raises at execution time the moment
-        # any group exceeds the bound.
-        from pyspark.sql import Window
-
-        base = base.withColumn(
-            "_gcnt", F.count(F.lit(1)).over(Window.partitionBy("grp"))
-        )
-        base = base.where(
-            F.when(
-                F.col("_gcnt") > F.lit(max_group_rows),
-                F.raise_error(
-                    F.concat(
-                        F.lit(
-                            "ngram_jaccard_pairs is the all-pairs-within-group "
-                            "oracle variant: group "
-                        ),
-                        F.col("grp").cast("string"),
-                        F.lit(f" exceeds max_group_rows={max_group_rows}. Use "
-                              "minhash_lsh_pairs at scale, or pass "
-                              "max_group_rows=None to accept O(n^2)."),
-                    )
-                ).cast("boolean"),
-            ).otherwise(F.lit(True))
-        ).drop("_gcnt")
-    # Both self-join sides read `base`; without materialization each
-    # side re-tokenizes the corpus (and re-runs the guard window). The
-    # frame is (id, grp, <=prefix_words words) — small at any corpus
-    # size relative to the O(n^2) join it feeds.
-    base = base.localCheckpoint(eager=True)
-    a = base.select(F.col("id").alias("id_a"), "grp", F.col("ws").alias("ws_a"))
-    b = base.select(F.col("id").alias("id_b"), "grp", F.col("ws").alias("ws_b"))
-    inter = F.size(F.array_intersect("ws_a", "ws_b"))
-    union = F.size(F.array_union("ws_a", "ws_b"))
-    jac = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
-    return (
-        a.join(b, "grp")
-        .where(F.col("id_a") < F.col("id_b"))
-        .withColumn("jaccard", jac)
-        .where(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
 

@@ -43,7 +43,7 @@ def main(names=None):
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
-    spark = get_spark("oracle_check", cpus=8)
+    spark = get_spark("oracle_check")
 
     qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()

@@ -9,7 +9,7 @@ N_PAGES = 150
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("tests", cpus=8)
+    s = get_spark("tests")
     yield s
 
 

@@ -1,10 +1,9 @@
-"""Unit tests for dedup / similarity / textstats operators."""
+"""Unit tests for the dedup and language-guess operators."""
 
 import pyspark.sql.functions as F
 
-from ocr_poc_spark.operators.dedup import minhash_lsh_pairs, ngram_jaccard_pairs
-from ocr_poc_spark.operators.similarity import cosine_topk
-from ocr_poc_spark.operators.textstats import fingerprint, lang_id
+from ocr_poc_spark.operators.dedup import minhash_lsh_pairs
+from ocr_poc_spark.operators.textstats import lang_guess_expr
 
 
 def _docs(spark):
@@ -18,73 +17,27 @@ def _docs(spark):
     return spark.createDataFrame(rows, "doc_id long, text string, lang string, source string")
 
 
-def test_ngram_jaccard_pairs(spark):
-    out = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in ngram_jaccard_pairs(_docs(spark), group_col="source", threshold=0.5).collect()
-    }
-    assert out[(1, 2)] == 1.0           # identical
-    assert 0.5 <= out[(1, 3)] < 1.0     # one word differs
-    assert (1, 4) not in out
-
-
 def test_minhash_lsh_finds_near_dups(spark):
     out = {(r["id_a"], r["id_b"]) for r in minhash_lsh_pairs(_docs(spark), jaccard_threshold=0.5).collect()}
     assert (1, 2) in out
     assert (1, 4) not in out
 
 
-def test_cosine_topk_exact(spark):
-    rows = [
-        (0, [1.0, 0.0, 0.0]),
-        (1, [0.9, 0.1, 0.0]),   # closest to 0
-        (2, [0.0, 1.0, 0.0]),
-        (3, [-1.0, 0.0, 0.0]),  # opposite
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    out = cosine_topk(df, query_ids=[0], k=3).collect()
-    assert [r["neighbor_id"] for r in out] == [1, 2, 3]
-    assert out[0]["cosine"] > 0.99
-
-
-def test_cosine_topk_broadcast_guard(spark):
-    import pytest
-
-    df = spark.createDataFrame(
-        [(0, [1.0, 0.0])], "vec_id long, embedding array<float>"
-    )
-    with pytest.raises(ValueError, match="query_ids"):
-        cosine_topk(df, k=1)
-    with pytest.raises(ValueError, match="refusing to broadcast"):
-        cosine_topk(df, query_ids=list(range(10)), k=1, max_broadcast_queries=5)
-
-
-def test_token_stats_and_fingerprint(spark):
-    d = _docs(spark)
-    fp = {r["doc_id"]: r for r in fingerprint(d).collect()}
-    assert fp[1]["md5_fp"] == fp[2]["md5_fp"]
-    assert fp[1]["md5_fp"] != fp[4]["md5_fp"]
-    assert fp[1]["winnow_fp"] == fp[2]["winnow_fp"]
-
-
 def test_lang_id(spark):
-    d = _docs(spark)
-    out = {r["doc_id"]: r["lang_guess"] for r in lang_id(d).collect()}
-    assert out[1] == "en" and out[5] == "fr"
-
-
-def test_ngram_jaccard_refuses_oversized_groups(spark):
-    """The all-pairs variant must refuse quadratic blowups explicitly."""
-    import pytest
-
-    df = spark.createDataFrame(
-        [(i, "same words here", "en", "s0") for i in range(30)],
+    """The run_job `lang_guess` column: stopword argmax, 'unknown' for NULL
+    text, and en before fr when their hit counts tie."""
+    extra = spark.createDataFrame(
+        [(6, None, "en", "s0"), (7, "le chat the dog", "fr", "s1")],
         "doc_id long, text string, lang string, source string",
     )
-    with pytest.raises(Exception, match="minhash_lsh_pairs"):
-        ngram_jaccard_pairs(df, group_col="lang", max_group_rows=10).count()
-    # waivable, and the small default passes untouched
-    assert ngram_jaccard_pairs(df, group_col="lang", max_group_rows=None).count() > 0
+    d = _docs(spark).unionByName(extra)
+    out = {
+        r["doc_id"]: r["g"]
+        for r in d.select("doc_id", lang_guess_expr(F.col("text")).alias("g")).collect()
+    }
+    assert out[1] == "en" and out[5] == "fr"
+    assert out[6] == "unknown"
+    assert out[7] == "en"
 
 
 def test_connected_components_transitive_chain(spark):
@@ -156,37 +109,6 @@ def test_connected_components_string_ids(spark):
     }
 
 
-def test_ivf_ann_recall_vs_bruteforce(spark):
-    """IVF with n_probe=4 of 8 centroids must recover the exact top-1
-    neighbor for most queries (far above chance) and every returned
-    cosine must be exact (the re-rank is exact by construction: verify
-    against brute force where the pair overlaps)."""
-    import numpy as np
-
-    from ocr_poc_spark.operators.similarity import cosine_topk, ivf_ann_topk
-
-    rs = np.random.RandomState(11)
-    rows = [(i, rs.randn(16).astype(float).tolist()) for i in range(80)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    exact = {
-        (r["query_id"], r["rank"]): (r["neighbor_id"], r["cosine"])
-        for r in cosine_topk(df, query_ids=list(range(80)), k=1).collect()
-    }
-    approx = {
-        (r["query_id"], r["rank"]): (r["neighbor_id"], r["cosine"])
-        for r in ivf_ann_topk(
-            df, k=1, dim=16, n_probe=4, centroids=[v for _, v in rows[:8]]
-        ).collect()
-    }
-    hits = sum(
-        1 for key, (nid, _) in approx.items() if exact.get(key, (None,))[0] == nid
-    )
-    assert hits >= 0.5 * len(exact)
-    for key, (nid, cos) in approx.items():
-        if exact.get(key, (None,))[0] == nid:
-            assert abs(exact[key][1] - cos) < 1e-12
-
-
 def test_connected_components_star_graphs_both_orientations(spark):
     """Degree skew: a 400-edge star must resolve in one component
     whether the hub is the component MINIMUM (already canonical) or the
@@ -247,87 +169,6 @@ def test_connected_components_matches_union_find_on_random_graphs(spark):
             for r in connected_components(df).collect()
         }
         assert got == expected, f"seed={seed}"
-
-
-def test_hash_embedding_shape_and_contracts(spark):
-    """Fixed-dim integer vectors; each token moves exactly one cell by
-    +-1 (sum of |cells| <= n_tokens, equality when no sign collisions);
-    empty/null text yields the zero vector; non-power-of-two dim is
-    refused; output is partitioning-independent."""
-    import pytest
-
-    from ocr_poc_spark.operators.textstats import hash_embedding
-
-    df = spark.createDataFrame(
-        [(1, "alpha beta gamma alpha"), (2, ""), (3, None)],
-        "doc_id long, text string",
-    )
-    rows = {r.doc_id: r.embedding for r in hash_embedding(df, dim=8).collect()}
-    assert all(len(v) == 8 for v in rows.values())
-    assert sum(abs(x) for x in rows[1]) <= 4
-    assert sum(abs(x) for x in rows[1]) > 0
-    assert rows[2] == [0] * 8 and rows[3] == [0] * 8
-
-    with pytest.raises(ValueError, match="power of two"):
-        hash_embedding(df, dim=12)
-
-    r7 = {
-        r.doc_id: r.embedding
-        for r in hash_embedding(df.repartition(7), dim=8).collect()
-    }
-    assert r7 == rows
-
-
-def test_ivf_rejects_mismatched_centroid_and_vector_dims(spark):
-    """Dim drift in a persisted quantizer or the input vectors must FAIL
-    LOUDLY, never silently collapse recall (zip_with null-pads on
-    mismatch, turning every distance into NULL)."""
-    import numpy as np
-    import pytest
-
-    from ocr_poc_spark.operators.similarity import ivf_ann_topk
-
-    rs = np.random.RandomState(43)
-    df = spark.createDataFrame(
-        [(i, rs.randn(8).astype(float).tolist()) for i in range(10)],
-        "vec_id long, embedding array<float>",
-    )
-    with pytest.raises(ValueError, match="dims, expected dim"):
-        ivf_ann_topk(df, dim=8, centroids=rs.randn(4, 4).tolist())
-    from py4j.protocol import Py4JJavaError
-    from pyspark.errors.exceptions.captured import SparkRuntimeException
-
-    with pytest.raises((Py4JJavaError, SparkRuntimeException, Exception)):
-        ivf_ann_topk(df, dim=16, centroids=rs.randn(4, 16).tolist()).collect()
-
-
-def test_cosine_ops_survive_zero_vectors(spark):
-    """An all-zero vector (empty doc through hash_embedding) must never
-    crash a cosine consumer (ANSI DIVIDE_BY_ZERO) nor appear in any
-    pair/top-k output — it has no defined direction."""
-    from ocr_poc_spark.operators.similarity import (
-        cosine_near_dup_pairs_exact,
-        cosine_topk,
-        ivf_ann_topk,
-    )
-
-    df = spark.createDataFrame(
-        [
-            (0, [1.0, 2.0, 0.0, 1.0]),
-            (1, [1.0, 2.0, 0.1, 1.0]),
-            (2, [0.0, 0.0, 0.0, 0.0]),  # zero vector
-        ],
-        "vec_id long, embedding array<float>",
-    )
-    pairs = cosine_near_dup_pairs_exact(df, cosine_threshold=0.5).collect()
-    assert pairs and all(2 not in (r.id_a, r.id_b) for r in pairs)
-    topk = cosine_topk(df, query_ids=[0, 1, 2], k=2).collect()
-    assert topk and all(r.query_id != 2 and r.neighbor_id != 2 for r in topk)
-    ivf = ivf_ann_topk(
-        df, k=2, dim=4, n_probe=2,
-        centroids=[[1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0]],
-    ).collect()
-    assert all(r.query_id != 2 and r.neighbor_id != 2 for r in ivf)
 
 
 def test_connected_components_partitioning_independent(spark):

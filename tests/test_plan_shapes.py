@@ -119,31 +119,6 @@ def test_host_cap_filter_path_prefilters_before_host_window(spark):
     assert "SPARK_PARTITION_ID" not in keep_list, keep_list
 
 
-def test_ivf_broadcast_assignment_is_exchange_free(spark):
-    """The large-k IVF assignment/probe stage (single-row broadcast
-    centroid array + per-row HOF argmin) must contain NO hash exchange:
-    no corpus row or vector may cross a shuffle before the ids-only
-    candidate join."""
-    import numpy as np
-    import pyspark.sql.functions as F
-
-    import ocr_poc_spark.operators.similarity as sim
-
-    df = spark.createDataFrame(
-        [(i, [float(i), 1.0, 2.0, 3.0]) for i in range(20)],
-        "vec_id long, embedding array<float>",
-    )
-    base = sim.with_norm(df, "embedding")
-    cents = np.random.RandomState(38).randn(100, 4).tolist()
-    rows = sim._with_centroids_col(base.select("vec_id", "_v"), cents).select(
-        "vec_id",
-        F.slice(sim._sorted_centroid_dists(F.col("_v")), 1, 4).alias("ps"),
-    )
-    plan = _plan(rows)
-    assert "Exchange hashpartitioning" not in plan, plan
-    assert "BroadcastExchange" in plan or "BroadcastNestedLoopJoin" in plan, plan
-
-
 def test_star_round_is_hub_degree_bounded(spark):
     """The connected-components star round must stay hub-degree-bounded:
     neighborhood minima via scalar min aggregates (HashAggregate with

@@ -84,8 +84,9 @@ def _imported_names(rel: str, src: bytes) -> set[str]:
 
 def test_every_package_module_is_reachable():
     """Every ``ocr_poc_spark`` module is imported, directly or through other
-    package modules, from the CLI or from a tracked file outside the package
-    and the tests; a module only tests reach is dead code."""
+    package modules, from the CLI or from a tracked file outside the package,
+    the tests and the driver file ``__spark_entry__.py``; a module only tests
+    or driver queries reach is dead code."""
     files = _python_files()
     package = {
         _module_name(rel): rel for rel in files
@@ -94,6 +95,7 @@ def test_every_package_module_is_reachable():
     roots = [
         rel for rel in files
         if not rel.startswith(("ocr_poc_spark/", "tests/"))
+        and rel != "__spark_entry__.py"
     ] + ["ocr_poc_spark/__main__.py"]
     reached = {_module_name("ocr_poc_spark/__main__.py")}
     queue = list(roots)
@@ -171,10 +173,10 @@ def _dotted(node: ast.expr) -> str | None:
 def test_every_package_definition_is_reachable():
     """Every top-level function, class and constant of ``ocr_poc_spark`` is
     reached from the same roots as the module check: the CLI and the
-    tracked files outside the package and the tests. Reachability follows
-    ``from m import name``, ``module.attr`` and same-module names, out of
-    function bodies and module-level statements; a definition only tests
-    reach is dead code."""
+    tracked files outside the package, the tests and the driver file.
+    Reachability follows ``from m import name``, ``module.attr`` and
+    same-module names, out of function bodies and module-level statements;
+    a definition only tests or driver queries reach is dead code."""
     files = [rel for rel in _python_files() if not rel.startswith("tests/")]
     package_files = {
         _module_name(rel): rel for rel in files
@@ -220,7 +222,8 @@ def test_every_package_definition_is_reachable():
             queue.append((package_files[mod], defs[mod][name]))
 
     roots = [
-        rel for rel in files if not rel.startswith("ocr_poc_spark/")
+        rel for rel in files
+        if not rel.startswith("ocr_poc_spark/") and rel != "__spark_entry__.py"
     ] + ["ocr_poc_spark/__main__.py"]
     queue.extend((rel, trees[rel]) for rel in roots)
     reach_module(_module_name("ocr_poc_spark/__main__.py"))
