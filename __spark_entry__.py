@@ -526,9 +526,7 @@ def q_set_ops(spark, sf_dir):  # union/intersect/except (§2.7 set ops)
 def q_boilerplate_shingles(spark, sf_dir):  # RefinedWeb-style cross-doc span dedup signal
     from ocr_poc_spark.operators.curation import boilerplate_shingle_stats
 
-    return boilerplate_shingle_stats(
-        _t(spark, sf_dir, "documents", spread=True), k=5, min_docs=2
-    )
+    return boilerplate_shingle_stats(_t(spark, sf_dir, "documents", spread=True))
 
 
 def q_robots_filter(spark, sf_dir):
@@ -609,23 +607,24 @@ def q_crawl_diff(spark, sf_dir):
     identically in both engines."""
     from ocr_poc_spark.operators.crawl import crawl_diff
 
-    docs = _t(spark, sf_dir, "documents", spread=True).select("doc_id", "text")
-    did = F.col("doc_id")
+    # crawl_diff keys on `url`: the doc id rides under that name.
+    docs = _t(spark, sf_dir, "documents", spread=True).select(
+        F.col("doc_id").alias("url"), "text"
+    )
+    did = F.col("url")
     new = (
         docs.where(did % 7 != 0)
         .select(
-            "doc_id",
+            "url",
             F.when(did % 5 == 0, F.concat(F.col("text"), F.lit(" v2")))
             .otherwise(F.col("text"))
             .alias("text"),
         )
         .unionByName(
-            docs.where(did % 11 == 0).select(
-                (did + 1000000).alias("doc_id"), "text"
-            )
+            docs.where(did % 11 == 0).select((did + 1000000).alias("url"), "text")
         )
     )
-    return crawl_diff(docs, new, id_col="doc_id", content_col="text")
+    return crawl_diff(docs, new).withColumnRenamed("url", "doc_id")
 
 
 def q_crawl_churn(spark, sf_dir):
@@ -664,10 +663,14 @@ def q_crawl_churn(spark, sf_dir):
 
 
 def q_host_cap(spark, sf_dir):  # domain-balance cap, stable hash order
-    from ocr_poc_spark.operators.curation import host_cap
+    from ocr_poc_spark.operators.curation import host_rank
 
-    d = _t(spark, sf_dir, "documents").select("doc_id", "source")
-    return host_cap(d, max_per_host=5, host_col="source")
+    d = _t(spark, sf_dir, "documents").select("doc_id", F.col("source").alias("host"))
+    return (
+        host_rank(d)
+        .where(F.col("host_rank") <= 5)
+        .withColumnRenamed("host", "source")
+    )
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -36,7 +36,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--buckets", type=int, default=8)
     ap.add_argument("--buckets-per-pass", type=int, default=None)
     ap.add_argument("--cpus", type=int, default=None)
-    ap.add_argument("--repartition", type=int, default=None)
     ap.add_argument(
         "--blocklist", metavar="DOMAINS_FILE", default=None,
         help="text file of blocked domains (one per line, # comments); "
@@ -139,10 +138,7 @@ def main(argv: list[str] | None = None) -> int:
         # with manifest resume: the filtered frame just has fewer rows
         # per bucket.
         pages = changed_slice(
-            read_pages(spark, args.diff_against),
-            pages,
-            id_col="url",
-            content_col="html",
+            read_pages(spark, args.diff_against), pages, content_col="html"
         )
     summary = run_job(
         spark,
@@ -150,7 +146,6 @@ def main(argv: list[str] | None = None) -> int:
         args.out,
         n_buckets=args.buckets,
         buckets_per_pass=args.buckets_per_pass,
-        repartition=args.repartition,
     )
     if args.blocklist:
         summary["blocklist"] = args.blocklist
@@ -166,7 +161,6 @@ def main(argv: list[str] | None = None) -> int:
         crawl_churn_stats(
             read_pages(spark, args.diff_against),
             read_pages(spark, args.input),
-            id_col="url",
             content_col="html",
         ).write.mode("overwrite").parquet(churn_dir)
         summary["crawl_churn_dir"] = churn_dir

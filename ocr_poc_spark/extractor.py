@@ -402,38 +402,43 @@ def _body_blocks(
     ]
 
 
+def _failure(
+    url: str, doc_kind: str, message: str, raw_text: str = "",
+    quality_score: float = 0.0, n_blocks: int = 0,
+) -> ExtractResult:
+    """A success=false row: no fields, no body, zero confidence."""
+    return ExtractResult(
+        url=url, doc_kind=doc_kind, success=False, message=message,
+        quality_score=quality_score, confidence=0.0, raw_text=raw_text,
+        fields={f: None for f in ALL_FIELDS}, body_text=None, n_blocks=n_blocks,
+    )
+
+
 def extract_document(url: str, payload: bytes) -> ExtractResult:
     """Full per-document cascade (ref extract(), _18_f.py:442-520).
 
-    Never raises on a malformed payload: a parser exception is converted
-    to a typed failure row (see INTERNAL_ERROR_MSG_PREFIX)."""
+    Never raises: an exception anywhere in the cascade (parser or later
+    stage) becomes a typed failure row (see INTERNAL_ERROR_MSG_PREFIX),
+    so the Spark job and the sequential oracle give the same row."""
     try:
-        blocks, doc_kind = sniff_and_parse(payload)
+        return _extract(url, payload)
     except Exception as e:  # poison-pill isolation — typed, per document
-        return ExtractResult(
-            url=url, doc_kind=f"error/{type(e).__name__}", success=False,
-            message=INTERNAL_ERROR_MSG_PREFIX + type(e).__name__,
-            quality_score=0.0, confidence=0.0, raw_text="",
-            fields={f: None for f in ALL_FIELDS}, body_text=None, n_blocks=0,
-        )
+        name = type(e).__name__
+        return _failure(url, f"error/{name}", INTERNAL_ERROR_MSG_PREFIX + name)
+
+
+def _extract(url: str, payload: bytes) -> ExtractResult:
+    blocks, doc_kind = sniff_and_parse(payload)
     raw_text = " ".join(b.text for b in blocks)  # ref id_card_data_extractor.py:44
 
     if not blocks:
         msg = UNSUPPORTED_FORMAT_MSG if doc_kind == "binary/unknown" else EMPTY_DOC_MSG
-        return ExtractResult(
-            url=url, doc_kind=doc_kind, success=False, message=msg,
-            quality_score=0.0, confidence=0.0, raw_text=raw_text,
-            fields={f: None for f in ALL_FIELDS}, body_text=None, n_blocks=0,
-        )
+        return _failure(url, doc_kind, msg, raw_text)
 
     can, quality = assess_quality(blocks, doc_kind)
     if not can:
-        return ExtractResult(
-            url=url, doc_kind=doc_kind, success=False,
-            message=INSUFFICIENT_QUALITY_MSG, quality_score=quality,
-            confidence=0.0, raw_text=raw_text,
-            fields={f: None for f in ALL_FIELDS}, body_text=None,
-            n_blocks=len(blocks),
+        return _failure(
+            url, doc_kind, INSUFFICIENT_QUALITY_MSG, raw_text, quality, len(blocks)
         )
 
     data = preprocess(blocks, doc_kind)

@@ -262,17 +262,16 @@ def gen_pages(n: int, seed: int = 42) -> list[dict]:
     return rows
 
 
-def write_pages_parquet(
-    path: str, n: int, seed: int = 42, row_group_size: int = 256
-) -> None:
-    """Write the fixture table as parquet (pyarrow; no Spark needed).
+def write_pages_parquet(path: str, n: int, seed: int = 42) -> None:
+    """Write the fixture table as ONE parquet file (pyarrow; no Spark
+    needed), in 256-row row groups.
 
-    Small row groups matter: Spark parallelises a parquet file by byte
-    ranges that snap to row-group boundaries — a single-row-group file
-    is one task no matter how many cores (this exact mistake cost a 4x
-    scaling-efficiency miss before it was caught). Real Common-Crawl
-    inputs are thousands of files; row_group_size=256 simulates that
-    split structure in one file.
+    The row groups do not make the file split across cores: Spark cuts a
+    parquet file into byte ranges of ``maxSplitBytes``, which is never
+    below ``spark.sql.files.openCostInBytes`` (4 MB by default), and
+    only then snaps them to row groups. A file under 4 MB (400 fixture
+    pages take ~0.2 MB) therefore scans as ONE partition, the shape
+    run_job spreads over every core itself.
     """
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -287,4 +286,4 @@ def write_pages_parquet(
             "lang": pa.array([r["lang"] for r in rows], pa.string()),
         }
     )
-    pq.write_table(table, path, row_group_size=row_group_size)
+    pq.write_table(table, path, row_group_size=256)

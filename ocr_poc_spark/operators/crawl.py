@@ -1,5 +1,5 @@
-"""Crawl operators: comparing two crawls of the same id space, and the
-robots gate.
+"""Crawl operators: comparing two crawls keyed on `url`, and the robots
+gate.
 
 A rolling web crawl re-fetches URLs continuously; the expensive part of
 the pipeline (extraction, dedup, curation) should only ever run on
@@ -31,12 +31,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 
-def crawl_diff(
-    old: DataFrame,
-    new: DataFrame,
-    id_col: str = "url",
-    content_col: str = "text",
-) -> DataFrame:
+def crawl_diff(old: DataFrame, new: DataFrame, content_col: str = "text") -> DataFrame:
     """One row per url present in EITHER snapshot, with
     status in {'added','deleted','changed','unchanged'} plus both
     content digests (NULL where the url is absent on that side).
@@ -57,7 +52,7 @@ def crawl_diff(
         digest = F.when(c.isNull(), F.lit("null")).otherwise(
             F.sha2(c, 256)
         )
-        return df.select(F.col(id_col).alias("_id"), digest.alias(alias))
+        return df.select(F.col("url").alias("_id"), digest.alias(alias))
 
     joined = side(old, "old_digest").join(
         side(new, "new_digest"), "_id", "full_outer"
@@ -69,40 +64,31 @@ def crawl_diff(
         .otherwise(F.lit("unchanged"))
     )
     return joined.select(
-        F.col("_id").alias(id_col),
+        F.col("_id").alias("url"),
         status.alias("status"),
         "old_digest",
         "new_digest",
     )
 
 
-def changed_slice(
-    old: DataFrame,
-    new: DataFrame,
-    id_col: str = "url",
-    content_col: str = "text",
-) -> DataFrame:
+def changed_slice(old: DataFrame, new: DataFrame, content_col: str = "text") -> DataFrame:
     """The incremental work set: rows of `new` whose content is new or
     changed vs `old` — what an incremental extraction/curation run
     actually processes. LEFT SEMI against the diff, so the output
     carries `new`'s full row (the downstream job needs the page), but
     only ids+digests ride the diff join itself."""
     work = (
-        crawl_diff(old, new, id_col=id_col, content_col=content_col)
+        crawl_diff(old, new, content_col=content_col)
         .where(F.col("status").isin("added", "changed"))
-        .select(F.col(id_col).alias("_work_id"))
+        .select(F.col("url").alias("_work_id"))
     )
     return new.join(
-        work, on=F.col(id_col) == F.col("_work_id"), how="left_semi"
+        work, on=F.col("url") == F.col("_work_id"), how="left_semi"
     )
 
 
 def crawl_churn_stats(
-    old: DataFrame,
-    new: DataFrame,
-    id_col: str = "url",
-    content_col: str = "text",
-    key=None,
+    old: DataFrame, new: DataFrame, content_col: str = "text"
 ) -> DataFrame:
     """Per-host churn rollup of a snapshot pair — the recrawl-scheduling
     signal: hosts whose content churns (high added/changed/deleted
@@ -110,21 +96,17 @@ def crawl_churn_stats(
     demoted. Returns one row per host: status counts + churn ratio
     (non-unchanged share, round 6).
 
-    ``key`` is the grouping expression over the diff's id column
-    (default: the host of a url, hoststats.host_of — pass your own for
-    domain/TLD/prefix rollups). The groupBy key is a host string over
-    ids-only diff rows, so the whole rollup shuffles ~100 bytes per
-    url; zipfian host skew is absorbed by partial aggregation (counts
+    The host is hoststats.host_of of the url. The groupBy key is a
+    host string over ids-only diff rows, so the whole rollup shuffles
+    ~100 bytes per url; zipfian host skew is absorbed by partial aggregation (counts
     are associative — each input partition ships at most one row per
     host)."""
     from .hoststats import host_of
 
-    if key is None:
-        key = host_of(id_col)
-    diff = crawl_diff(old, new, id_col=id_col, content_col=content_col)
+    diff = crawl_diff(old, new, content_col=content_col)
     n_of = lambda s: F.sum((F.col("status") == s).cast("long")).alias(f"n_{s}")
     return (
-        diff.groupBy(key.alias("host"))
+        diff.groupBy(host_of().alias("host"))
         .agg(
             F.count(F.lit(1)).alias("n_urls"),
             n_of("added"),
@@ -141,12 +123,7 @@ def crawl_churn_stats(
     )
 
 
-def robots_filter(
-    df: DataFrame,
-    rules: DataFrame,
-    url_col: str = "url",
-    keep: bool = True,
-) -> DataFrame:
+def robots_filter(df: DataFrame, rules: DataFrame) -> DataFrame:
     """Robots-policy filtering (the crawl-politeness gate a web-corpus
     pipeline applies before extraction): drop every url a site's
     robots rules disallow. ``rules`` is the pre-parsed per-host policy
@@ -163,8 +140,6 @@ def robots_filter(
     allowed. Wildcards (*, $) are NOT implemented — a rules producer
     expands or drops them upstream; implementing a partial regex
     translation here would silently mis-enforce real files.
-
-    keep=False inverts the predicate (audit mode: the blocked rows).
 
     Host matching is deliberately more liberal than hoststats.host_of:
     scheme case-insensitive, userinfo and port stripped, authority cut
@@ -192,10 +167,10 @@ def robots_filter(
     )
     host = F.lower(
         F.regexp_extract(
-            F.col(url_col), r"(?i)^https?://(?:[^/@?#]*@)?([^/:?#]+)", 1
+            F.col("url"), r"(?i)^https?://(?:[^/@?#]*@)?([^/:?#]+)", 1
         )
     )
-    path_raw = F.regexp_replace(F.col(url_col), r"(?i)^https?://[^/?#]*", "")
+    path_raw = F.regexp_replace(F.col("url"), r"(?i)^https?://[^/?#]*", "")
     # REP matches against path (+query); a query-only url's path is '/'
     path = (
         F.when(path_raw == "", F.lit("/"))
@@ -219,5 +194,4 @@ def robots_filter(
         "THEN named_struct('len', length(r.p), 'a', r.a) ELSE acc END)"
     )
     allowed = F.col("_rules").isNull() | F.coalesce(verdict["a"], F.lit(True))
-    out = joined.where(allowed if keep else ~allowed)
-    return out.drop("_h", "_rh", "_rules", "_p")
+    return joined.where(allowed).drop("_h", "_rh", "_rules", "_p")

@@ -5,29 +5,23 @@ Production path (run_curate):
   — fraction of a document made of spans that repeat across the corpus
   (nav menus, cookie banners, legal footers). Spans are k-word shingles
   because the curated unit here is whitespace text.
-- host_cap                  : at most k documents per host/source,
-  selected by a stable hash order (domain-balance cap).
+- host_rank                 : per-host rank by a stable hash order;
+  run_curate keeps rank <= its cap (domain-balance cap).
 
 Also here: url_blocklist_filter (the CLI's --blocklist).
 
 All native column expressions; every shuffle carries ids + 60-bit
 hashes only, never document bodies. The 60-bit hash is the md5-hex15
-trick shared with fingerprint/minhash so the DuckDB oracle can
-recompute every operator exactly.
+trick (functions/texthash.hash60) so the DuckDB oracle can recompute
+every operator exactly.
 
 Scale notes (100 TB):
 - boilerplate: explode is per-DISTINCT-shingle (bounded by doc length);
   the per-shingle document count is a window over the uniform 60-bit
   hash -> no skew; only (id, hash) pairs ride the two exchanges.
-- host_cap: window over host; the shuffle carries (host, id, hash)
-  only. A pathological host with 10^9 docs would make one heavy window
-  partition, so the filtering path pre-filters EXACTLY (no sampling):
-  a local top-k per (host, input partition) — the per-key analogue of
-  TakeOrderedAndProject's partial top-k — bounds what any host ships
-  to the global rank at k rows per input partition. The global top-k
-  of a host is a subset of every partition's local top-k, so the kept
-  set is provably identical. At 10^12 docs per host the cap itself is
-  the wrong tool.
+- host_rank: one window over host; the shuffle carries (host, id,
+  hash) only. A pathological host with 10^9 docs makes one heavy
+  window partition; at that size a per-host cap is the wrong tool.
 """
 
 from __future__ import annotations
@@ -49,20 +43,18 @@ def _norm_words(text_col: str):
     return _raw_norm_words(c)
 
 
-def boilerplate_shingle_stats(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 5,
-    min_docs: int = 2,
-) -> DataFrame:
-    """Per-document boilerplate fraction: share of the document's
-    distinct k-word shingles that appear in >= min_docs distinct
-    documents corpus-wide (the RefinedWeb "exact line dedup" signal,
-    expressed over shingles).
+SHINGLE_K = 5  # boilerplate span length in words
+MIN_DOCS = 2  # a span is boilerplate once it occurs in this many docs
 
-    Returns (id, n_shingles, n_boiler, boiler_ratio); docs shorter than
-    k words report 0 shingles and ratio 0.0.
+
+def boilerplate_shingle_stats(df: DataFrame) -> DataFrame:
+    """Per-document boilerplate fraction of a (doc_id, text) frame:
+    share of the document's distinct SHINGLE_K-word shingles that appear
+    in >= MIN_DOCS distinct documents corpus-wide (the RefinedWeb "exact
+    line dedup" signal, expressed over shingles).
+
+    Returns (doc_id, n_shingles, n_boiler, boiler_ratio); docs shorter
+    than SHINGLE_K words report 0 shingles and ratio 0.0.
 
     Plan (exactly TWO exchanges, both on uniform keys, only (id, hash)
     pairs riding them): distinct-per-doc explode -> per-hash document
@@ -72,9 +64,10 @@ def boilerplate_shingle_stats(
     explode at all — they come back via a constant union branch keyed
     on word count, so no join-back is needed for them either.
     """
-    base = df.select(F.col(id_col).alias("_id"), _norm_words(text_col).alias("_w"))
+    k = SHINGLE_K
+    base = df.select(F.col("doc_id").alias("_id"), _norm_words("text").alias("_w"))
     short = base.where(F.size("_w") < k).select(
-        F.col("_id").alias(id_col),
+        F.col("_id").alias("doc_id"),
         F.lit(0).cast("long").alias("n_shingles"),
         F.lit(0).cast("long").alias("n_boiler"),
         F.lit(0.0).alias("boiler_ratio"),
@@ -89,10 +82,10 @@ def boilerplate_shingle_stats(
         .groupBy("_id")
         .agg(
             F.count(F.lit(1)).alias("n_shingles"),
-            F.sum(F.when(F.col("_n_docs") >= min_docs, 1).otherwise(0)).alias("n_boiler"),
+            F.sum(F.when(F.col("_n_docs") >= MIN_DOCS, 1).otherwise(0)).alias("n_boiler"),
         )
         .select(
-            F.col("_id").alias(id_col),
+            F.col("_id").alias("doc_id"),
             F.col("n_shingles").cast("long").alias("n_shingles"),
             F.col("n_boiler").cast("long").alias("n_boiler"),
             F.round(F.col("n_boiler") / F.col("n_shingles"), 6).alias("boiler_ratio"),
@@ -101,64 +94,25 @@ def boilerplate_shingle_stats(
     return per_doc.unionByName(short)
 
 
-def host_cap(
-    df: DataFrame,
-    max_per_host: int,
-    host_col: str = "source",
-    id_col: str = "doc_id",
-    filter: bool = True,
-) -> DataFrame:
-    """Domain-balance cap: keep at most `max_per_host` documents per
-    host, chosen by a stable hash order (so the kept set is independent
-    of input partitioning and re-runs). Returns the capped frame with a
-    `host_rank` column.
-
-    The rank shuffle carries (host, id, 60-bit hash) only; payload
-    columns are joined back by id afterwards by the caller if needed —
-    here the input frame is narrow so we rank in place.
-
-    Hot-host safety (filter=True path): before the per-host rank, each
-    INPUT partition keeps only its local k smallest (_hord, id) rows per
-    host — windowed over (host, spark_partition_id()), so a pathological
-    host is spread over every input partition instead of funneling into
-    one window partition. The global k smallest of a host are among
-    every partition's local k smallest, so the kept set and the surviving
-    ranks are IDENTICAL by construction (no sampling, no fallback); at
-    most k * n_input_partitions rows per host reach the global rank.
-    The filter=False keep-list mode must report the full rank of every
-    row (over-cap rows ship with kept=false), so it keeps the single
-    per-host window.
-    """
-    h = hash60(id_col)
-    stamped = df.withColumn("_hord", h)
-    if filter:
-        wl = Window.partitionBy(host_col, F.spark_partition_id()).orderBy(
-            F.asc("_hord"), F.asc(id_col)
-        )
-        stamped = (
-            stamped.withColumn("_lrank", F.row_number().over(wl))
-            .where(F.col("_lrank") <= max_per_host)
-            .drop("_lrank")
-        )
-    w = Window.partitionBy(host_col).orderBy(F.asc("_hord"), F.asc(id_col))
-    ranked = stamped.withColumn("host_rank", F.row_number().over(w)).drop("_hord")
-    if filter:
-        ranked = ranked.where(F.col("host_rank") <= max_per_host)
-    return ranked
+def host_rank(df: DataFrame) -> DataFrame:
+    """Adds `host_rank`: each document's 1-based rank within its `host`
+    by a stable hash order (hash60(doc_id), then doc_id), so the set
+    ranked <= k is independent of input partitioning and re-runs. The
+    rank shuffle carries (host, id, 60-bit hash) only."""
+    w = Window.partitionBy("host").orderBy(F.asc("_hord"), F.asc("doc_id"))
+    return (
+        df.withColumn("_hord", hash60("doc_id"))
+        .withColumn("host_rank", F.row_number().over(w))
+        .drop("_hord")
+    )
 
 
-def url_blocklist_filter(
-    df: DataFrame,
-    blocked_domains: list[str],
-    url_col: str = "url",
-    keep: bool = True,
-) -> DataFrame:
+def url_blocklist_filter(df: DataFrame, blocked_domains: list[str]) -> DataFrame:
     """Domain-blocklist filtering — the FIRST pass of a web-corpus
     pipeline (spam/adult/SEO-farm domain lists à la CCNet/RefinedWeb):
     drop every document whose url host equals a blocked domain or is a
     subdomain of one ('ads.example' blocks 'ads.example' and
-    'x.ads.example', never 'badads.example'). keep=False inverts the
-    predicate (audit mode: return only the blocked rows).
+    'x.ads.example', never 'badads.example'), by the host of `url`.
 
     Map-only, zero shuffle: real blocklists are 10^4-10^6 domains —
     kilobytes-to-megabytes — so they ride as an array literal evaluated
@@ -174,11 +128,11 @@ def url_blocklist_filter(
         raise ValueError("url_blocklist_filter: empty domain in blocklist")
     from .hoststats import host_of
 
-    host = F.lower(host_of(url_col))
+    host = F.lower(host_of())
     blocked_arr = F.array(*[F.lit(d) for d in norm])
     hit = F.exists(
         blocked_arr,
         lambda d: (host == d) | host.endswith(F.concat(F.lit("."), d)),
     )
     blocked = (host != "") & hit
-    return df.where(~blocked if keep else blocked)
+    return df.where(~blocked)

@@ -24,16 +24,19 @@ from ..functions.texthash import norm_words
 NUM_MINHASHES = 32
 NUM_BANDS = 8  # 4 hashes per band
 SHINGLE_K = 3
+MAX_ROUNDS = 12  # connected_components: covers chains of ~2^12 docs
 
 
-def word_shingles(df: DataFrame, text_col: str = "text", k: int = SHINGLE_K) -> DataFrame:
-    """Adds a `shingles` column: k-word n-grams (native HOF, no UDF).
+def word_shingles(df: DataFrame) -> DataFrame:
+    """Adds a `shingles` column: SHINGLE_K-word n-grams of `text`
+    (native HOF, no UDF).
 
     Documents with fewer than k words get an EMPTY shingle array — the
     naive `sequence(1, greatest(size-k+1, 0))` is a trap: for short docs
     it evaluates to sequence(1, 0) = [1, 0] (descending) and slice(_, 0,
     k) throws at runtime, poison-pilling the whole dedup job."""
-    df = df.withColumn("_words", norm_words(text_col))
+    k = SHINGLE_K
+    df = df.withColumn("_words", norm_words("text"))
     expr = (
         f"CASE WHEN size(_words) >= {k} THEN "
         f"transform(sequence(1, size(_words) - {k - 1}), "
@@ -43,8 +46,9 @@ def word_shingles(df: DataFrame, text_col: str = "text", k: int = SHINGLE_K) -> 
     return df.withColumn("shingles", F.expr(expr)).drop("_words")
 
 
-def minhash_signature(df: DataFrame, num_hashes: int = NUM_MINHASHES) -> DataFrame:
-    """Adds minhash_0..N-1 columns: min over shingles of xxhash64(shingle, seed).
+def minhash_signature(df: DataFrame) -> DataFrame:
+    """Adds minhash_0..NUM_MINHASHES-1 columns: min over shingles of
+    xxhash64(shingle, seed).
 
     NB the seed must be closed over via a factory function: a two-arg
     lambda (`lambda s, j=j: ...`) is interpreted by F.transform as
@@ -57,81 +61,58 @@ def minhash_signature(df: DataFrame, num_hashes: int = NUM_MINHASHES) -> DataFra
             F.transform("shingles", lambda s: F.xxhash64(s, F.lit(j)))
         )
 
-    for j in range(num_hashes):
+    for j in range(NUM_MINHASHES):
         df = df.withColumn(f"minhash_{j}", _mh(j))
     return df
 
 
-def _shingle_and_bands(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_hashes: int,
-    num_bands: int,
-    materialize: bool = False,
-) -> tuple[DataFrame, DataFrame]:
-    """(shingled(id, shingles), band_ids(id, band, sig)) — the front
-    half of minhash_lsh_pairs, also behind minhash_band_index.
-
-    ``materialize``: callers that consume BOTH frames more than once
-    (minhash_lsh_pairs references shingled on each verify side and
-    band_ids on each side of the band self-join) pass True so the
-    tokenize+shingle pass runs ONCE and the num_hashes-fold signature
-    pass runs ONCE — without it the physical plan scans and re-shingles
-    the corpus once per reference (4 scans + 2 signature passes,
-    measured in plans/r06/dedup_minhash_before.txt). localCheckpoint is
-    fine up to very large corpora; at 10^12 docs persist the two frames
-    as intermediate tables instead."""
-    rows_per_band = num_hashes // num_bands
-    shingled = word_shingles(df.select(id_col, text_col), text_col).select(
-        F.col(id_col).alias("id"), "shingles"
+def _shingles(df: DataFrame) -> DataFrame:
+    """(id, shingles) from a (doc_id, text) frame."""
+    return word_shingles(df.select("doc_id", "text")).select(
+        F.col("doc_id").alias("id"), "shingles"
     )
-    if materialize:
-        shingled = shingled.localCheckpoint(eager=True)
-    sig = minhash_signature(shingled, num_hashes)
+
+
+def _bands(shingled: DataFrame) -> DataFrame:
+    """(id, band, sig): NUM_BANDS banded MinHash signatures per id."""
+    rows_per_band = NUM_MINHASHES // NUM_BANDS
+    sig = minhash_signature(shingled)
     bands = []
-    for b in range(num_bands):
+    for b in range(NUM_BANDS):
         cols = [F.col(f"minhash_{b * rows_per_band + r}") for r in range(rows_per_band)]
         bands.append(F.struct(F.lit(b).alias("band"), F.xxhash64(*cols).alias("sig")))
-    band_ids = sig.select(
+    return sig.select(
         "id", F.explode(F.array(*bands)).alias("bs")
     ).select("id", "bs.band", "bs.sig")
-    if materialize:
-        band_ids = band_ids.localCheckpoint(eager=True)
-    return shingled, band_ids
 
 
-def minhash_band_index(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = NUM_MINHASHES,
-    num_bands: int = NUM_BANDS,
-) -> DataFrame:
+def minhash_band_index(df: DataFrame) -> DataFrame:
     """The MinHash inverted file: (id, band, sig), one row per document
-    per band — the exact banding minhash_lsh_pairs joins on, ~num_bands
+    per band — the exact banding minhash_lsh_pairs joins on, ~NUM_BANDS
     small fixed-width rows per document, never document text."""
-    return _shingle_and_bands(df, id_col, text_col, num_hashes, num_bands)[1]
+    return _bands(_shingles(df))
 
 
-def minhash_lsh_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = NUM_MINHASHES,
-    num_bands: int = NUM_BANDS,
-    jaccard_threshold: float = 0.7,
-) -> DataFrame:
-    """Near-duplicate pairs (id_a < id_b) via MinHash banding, verified
-    with exact shingle-set Jaccard on the candidates only."""
+def minhash_lsh_pairs(df: DataFrame, jaccard_threshold: float = 0.7) -> DataFrame:
+    """Near-duplicate pairs (id_a < id_b) of a (doc_id, text) frame via
+    MinHash banding, verified with exact shingle-set Jaccard on the
+    candidates only.
+
+    Both intermediate frames are referenced twice (shingles on each
+    verify side, bands on each side of the band self-join), so each is
+    localCheckpoint-ed eagerly: the tokenize+shingle pass and the
+    NUM_MINHASHES-fold signature pass each run ONCE instead of once per
+    reference (4 scans + 2 signature passes before, measured in
+    plans/r06/dedup_minhash_before.txt). localCheckpoint is fine up to
+    very large corpora; at 10^12 docs persist the two frames as
+    intermediate tables instead."""
     # Ids ONLY through the band shuffle: shipping the document-sized
     # shingle arrays on both sides of the self-join would multiply
     # shuffle volume by ~doc_size x num_bands at 100TB. Candidate id
     # pairs are deduped first; the shingle arrays are joined back ONCE
     # per side for the exact-Jaccard verify.
-    shingled, band_ids = _shingle_and_bands(
-        df, id_col, text_col, num_hashes, num_bands, materialize=True
-    )
+    shingled = _shingles(df).localCheckpoint(eager=True)
+    band_ids = _bands(shingled).localCheckpoint(eager=True)
 
     left = band_ids.select(F.col("id").alias("id_a"), "band", "sig")
     right = band_ids.select(F.col("id").alias("id_b"), "band", "sig")
@@ -140,22 +121,14 @@ def minhash_lsh_pairs(
         .where(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
-    )
-    return _exact_jaccard_verify(cand, shingled, jaccard_threshold)
-
-
-def _exact_jaccard_verify(
-    cand: DataFrame, shingled: DataFrame, jaccard_threshold: float
-) -> DataFrame:
-    """Verify tail of minhash_lsh_pairs: join the shingle arrays back
-    once per side of each candidate id pair, compute exact shingle-set
-    Jaccard, keep pairs >= threshold."""
-    cand = cand.join(
-        shingled.select(F.col("id").alias("id_a"), F.col("shingles").alias("sh_a")),
-        "id_a",
-    ).join(
-        shingled.select(F.col("id").alias("id_b"), F.col("shingles").alias("sh_b")),
-        "id_b",
+        .join(
+            shingled.select(F.col("id").alias("id_a"), F.col("shingles").alias("sh_a")),
+            "id_a",
+        )
+        .join(
+            shingled.select(F.col("id").alias("id_b"), F.col("shingles").alias("sh_b")),
+            "id_b",
+        )
     )
     sa = F.array_distinct("sh_a")
     sb = F.array_distinct("sh_b")
@@ -207,17 +180,12 @@ def _star_round(edges: DataFrame) -> DataFrame:
     )
 
 
-def connected_components(
-    pairs: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_iter: int = 12,
-) -> DataFrame:
+def connected_components(pairs: DataFrame) -> DataFrame:
     """Duplicate-cluster resolution: connected components over a
-    near-dup pair list -> (doc_id, component_id), component_id = min doc
-    id in the component. The stage a dedup pipeline runs AFTER
-    MinHash pair generation, so "A~B, B~C" collapses to one
-    keeper even when A~C was never emitted.
+    near-dup pair list (id_a, id_b) -> (doc_id, component_id),
+    component_id = min doc id in the component. The stage a dedup
+    pipeline runs AFTER MinHash pair generation, so "A~B, B~C" collapses
+    to one keeper even when A~C was never emitted.
 
     Ids may be any orderable type (numeric doc ids or url strings —
     the CLI curation frame keys on url); component_id is the minimum
@@ -235,15 +203,16 @@ def connected_components(
     row, and no array-typed column ever crosses an Exchange
     (plan-asserted in tests/test_plan_shapes.py). The edge frame is
     localCheckpoint-ed per round — iterative plans otherwise grow the
-    lineage/codegen DAG linearly in rounds. Convergence = fixpoint of
-    the edge multiset (checked via count + order-insensitive hash sum,
-    one tiny aggregate job per round); raises if max_iter rounds do not
-    converge (12 rounds cover chains of ~2^12 docs).
+    lineage/codegen DAG linearly in rounds. The checkpoints are lazy:
+    each round's convergence aggregate (count + order-insensitive hash
+    sum of the edge multiset) is the one job that materializes that
+    round's edges, so a round costs one Spark job. Raises if MAX_ROUNDS
+    rounds do not converge.
     """
     e = pairs.select(
-        F.col(src).alias("u"), F.col(dst).alias("v")
+        F.col("id_a").alias("u"), F.col("id_b").alias("v")
     ).where("u IS NOT NULL AND v IS NOT NULL AND u != v")
-    edges = e.distinct().localCheckpoint(eager=True)
+    edges = e.distinct().localCheckpoint(eager=False)
     # Node set derived from the CHECKPOINTED frame: deriving it from the
     # pre-checkpoint lineage would re-run the entire upstream
     # pair-generation DAG (LSH banding + verify) a second time when the
@@ -262,15 +231,15 @@ def connected_components(
         return (row["n"], row["h"])
 
     sig = _sig(edges)
-    for _ in range(max_iter):
-        edges = _star_round(edges).localCheckpoint(eager=True)
+    for _ in range(MAX_ROUNDS):
+        edges = _star_round(edges).localCheckpoint(eager=False)
         new_sig = _sig(edges)
         if new_sig == sig:
             break
         sig = new_sig
     else:
         raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds"
+            f"connected_components did not converge in {MAX_ROUNDS} rounds"
         )
 
     # At the fixpoint every edge is (member, component-min); nodes that

@@ -5,7 +5,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 
 
-def host_of(url_col: str = "url"):
-    """Host from a url (regexp — portable to the DuckDB oracle, unlike
-    parse_url)."""
-    return F.regexp_extract(F.col(url_col), r"^https?://([^/]+)", 1)
+def host_of():
+    """Host of the `url` column (regexp — portable to the DuckDB oracle,
+    unlike parse_url)."""
+    return F.regexp_extract(F.col("url"), r"^https?://([^/]+)", 1)

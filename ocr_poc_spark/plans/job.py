@@ -6,8 +6,10 @@ One physical strategy: ONE Arrow-batched mapInPandas stage runs parse +
 cascade per document (``extract_fused`` over ``extractor.extract_document``)
 — a map-only plan with zero shuffles. At 10^12 documents this scales
 linearly with executors: no exchange, no skew-sensitive key, partition
-count = input splits after an optional url-hash repartition that balances
-long-tail page sizes.
+count = input splits. An input with fewer splits than the session's
+default parallelism (one large file, say), or whose plan already
+shuffles, is first repartitioned by url hash to that parallelism, so
+every core gets work and long-tail page sizes spread evenly.
 
 Resumability (north_star: "checkpoint manifest enabling idempotent
 resume of failed partitions"): work is split into url-hash BUCKETS
@@ -42,51 +44,18 @@ from ..schemas import EXTRACTED_SCHEMA
 
 
 def _fused_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from ocr_poc_spark.extractor import ALL_FIELDS, extract_document
+    from ocr_poc_spark.extractor import extract_document
 
+    columns = [f.name for f in EXTRACTED_SCHEMA.fields]
     for pdf in batches:
         rows: list[dict] = []
         for url, payload in zip(pdf["url"], pdf["html"]):
-            try:
-                r = extract_document(
-                    url, bytes(payload) if payload is not None else b""
-                )
-            except Exception as e:
-                # extract_document already isolates parser crashes; this
-                # outer guard covers any residual kernel bug so one doc can
-                # never fail a whole task/bucket (typed contract as above).
-                from ocr_poc_spark.extractor import (
-                    INTERNAL_ERROR_MSG_PREFIX,
-                    ExtractResult,
-                )
-
-                r = ExtractResult(
-                    url=url, doc_kind=f"error/{type(e).__name__}",
-                    success=False,
-                    message=INTERNAL_ERROR_MSG_PREFIX + type(e).__name__,
-                    quality_score=0.0, confidence=0.0, raw_text="",
-                    fields={f: None for f in ALL_FIELDS}, body_text=None,
-                    n_blocks=0,
-                )
-            d = {
-                "url": r.url,
-                "doc_kind": r.doc_kind,
-                "success": r.success,
-                "message": r.message,
-                "quality_score": r.quality_score,
-                "confidence": r.confidence,
-                "raw_text": r.raw_text,
-                "body_text": r.body_text,
-                "spans": [
-                    {"field": f, "start": s, "end": e} for f, s, e in r.spans
-                ],
-                "anchors_detected": r.anchors_detected,
-                "n_blocks": r.n_blocks,
-            }
-            for f in ALL_FIELDS:
-                d[f] = r.fields.get(f)
+            r = extract_document(url, bytes(payload) if payload is not None else b"")
+            # one column per ALL_FIELDS entry (r.fields holds every one)
+            d = {**r.fields, **vars(r)}
+            d["spans"] = [{"field": f, "start": s, "end": e} for f, s, e in r.spans]
             rows.append(d)
-        yield pd.DataFrame(rows, columns=[f.name for f in EXTRACTED_SCHEMA.fields])
+        yield pd.DataFrame(rows, columns=columns)
 
 
 def extract_fused(pages: DataFrame) -> DataFrame:
@@ -138,6 +107,16 @@ def _input_fingerprint(spark: SparkSession, pages: DataFrame) -> list[list]:
     return sorted(out)
 
 
+def _has_exchange(pages: DataFrame) -> bool:
+    """Whether ``pages``' plan shuffles (a --diff-against slice, a
+    --robots join). AQE fixes such a plan's partition count only by
+    running its shuffles, which asking for the count would do once more,
+    and it may coalesce a small slice into one partition, so run_job
+    spreads such an input without asking."""
+    plan = pages._jdf.queryExecution().executedPlan()
+    return plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec"
+
+
 def run_job(
     spark: SparkSession,
     pages: DataFrame,
@@ -147,7 +126,6 @@ def run_job(
     buckets_per_pass: int | None = None,
     run_id: str | None = None,
     fail_after_passes: int | None = None,
-    repartition: int | None = None,
 ) -> dict:
     """Run (or resume) the extraction job. Returns summary stats.
 
@@ -163,7 +141,6 @@ def run_job(
     for name, value in (
         ("n_buckets", n_buckets),
         ("buckets_per_pass", buckets_per_pass),
-        ("repartition", repartition),
     ):
         if value is not None and value < 1:
             raise ValueError(f"{name} must be >= 1, got {value}")
@@ -215,10 +192,13 @@ def run_job(
     # rows it writes.
     bucket = F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int")
     bucketed = pages.withColumn("bucket", bucket)
-    # Long-tail page-size balance: spread documents uniformly by url hash
-    # (SURVEY.md §4 — explicit repartition, not a Catalyst concern).
-    if repartition:
-        bucketed = bucketed.repartition(repartition, F.xxhash64("url"))
+    # Spread documents uniformly over every core by url hash (SURVEY.md
+    # §4 — explicit repartition, not a Catalyst concern) unless the
+    # input already has a split per core; such inputs keep the map-only
+    # plan.
+    cores = spark.sparkContext.defaultParallelism
+    if _has_exchange(pages) or pages.rdd.getNumPartitions() < cores:
+        bucketed = bucketed.repartition(cores, F.xxhash64("url"))
 
     total_rows = 0
     t_start = time.monotonic()
@@ -352,7 +332,7 @@ def run_curate(
     representative body per url through one map-side-combined exchange;
     after that boilerplate_shingle_stats shuffles ids + 60-bit hashes
     only and the host cap ranks on (host, stable hash)."""
-    from ..operators.curation import boilerplate_shingle_stats, host_cap
+    from ..operators.curation import boilerplate_shingle_stats, host_rank
 
     # Unparseable URLs must not all compete for one NULL-host cap
     # bucket: fall back to the full url (each gets its own "host").
@@ -368,7 +348,7 @@ def run_curate(
         "host_rank", F.lit(None).cast("int")
     )
     if max_per_host is not None:
-        passing = host_cap(passing, max_per_host, host_col="host", filter=False)
+        passing = host_rank(passing)
         cap_ok = F.col("host_rank") <= max_per_host
     else:
         passing = passing.withColumn("host_rank", F.lit(1))

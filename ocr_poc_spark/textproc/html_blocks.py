@@ -29,7 +29,9 @@ Arrow-batched Spark UDF.
 
 from __future__ import annotations
 
+import re
 from dataclasses import dataclass
+from html import unescape
 from html.parser import HTMLParser
 
 from .scoring import block_score
@@ -190,9 +192,56 @@ class _BlockParser(HTMLParser):
         if self._link > 0:
             self._cur_link_chars += len(data)
 
-    def close(self) -> None:  # flush trailing block
-        super().close()
-        self._flush()
+
+# How HTMLParser.close() classifies a '<' after the last '>'.
+_STARTTAG_OPEN = re.compile(r"<[a-zA-Z]")
+_TAG_NAME_END = re.compile(r"[\t\n\r\f />\x00]")
+_DECL_NAME = re.compile(r"[a-zA-Z][-_.a-zA-Z0-9]*\s*")
+_MARKED_SECTIONS = {"temp", "cdata", "ignore", "include", "rcdata", "if", "else", "endif"}
+
+
+def _feed_tail(parser: _BlockParser, tail: str) -> None:
+    """Give ``tail`` (the text after the last '>') the data events
+    CPython 3.11's HTMLParser.close() gives it, in one linear pass where
+    close() rescans the buffer once per unterminated '<'. With no '>'
+    left no tag completes: each '<' starts a data chunk running to the
+    next '<', except that a tag name ending in NUL is emitted raw and a
+    ``<![`` the stdlib cannot scan stops the parse (it raises there)."""
+    if parser.cdata_elem:  # an open script/style swallows the tail
+        return
+    n, i, name_end = len(tail), 0, -1
+    while i < n:
+        if tail.startswith("<![", i):
+            m = _DECL_NAME.match(tail, i + 3)
+            name = m and m.end() < n and m.group().strip().lower()
+            if i + 3 < n and (m is None or (name and name not in _MARKED_SECTIONS)):
+                return
+        elif _STARTTAG_OPEN.match(tail, i):
+            if name_end < i + 2:  # one search per run of '<'-joined names
+                m = _TAG_NAME_END.search(tail, i + 2)
+                name_end = m.start() if m else n
+            if tail.startswith("\x00", name_end):
+                parser.handle_data(tail[i:name_end])
+                i = name_end
+                continue
+        j = tail.find("<", i + 1)
+        j = n if j < 0 else j
+        parser.handle_data(unescape(tail[i:j]))
+        i = j
+
+
+def _collect(html: str) -> _BlockParser:
+    """The stdlib parser up to the last '>', then the linear tail."""
+    cut = html.rfind(">") + 1
+    parser = _BlockParser()
+    try:
+        parser.feed(html[:cut])
+        HTMLParser.close(parser)
+        _feed_tail(parser, html[cut:])
+    except Exception:
+        pass  # html.parser rarely raises; keep whatever was collected.
+    parser._flush()
+    return parser
 
 
 def parse_html_blocks(payload: bytes) -> tuple[list[Block], str]:
@@ -200,14 +249,7 @@ def parse_html_blocks(payload: bytes) -> tuple[list[Block], str]:
     layout is 'article' if an <article> element is present else 'listing'
     (the doc_kind dispatch axis, mirroring the reference's version enum,
     /root/reference/ocr/card_version.py:3-5)."""
-    html = payload.decode("utf-8", errors="replace")
-    parser = _BlockParser()
-    try:
-        parser.feed(html)
-        parser.close()
-    except Exception:
-        # html.parser rarely raises; keep whatever was collected.
-        parser._flush()
+    parser = _collect(payload.decode("utf-8", errors="replace"))
 
     blocks: list[Block] = []
     offset = 0

@@ -3,10 +3,7 @@ shingle dedup, host caps, crawl diff and policy gates)."""
 
 import pyspark.sql.functions as F
 
-from ocr_poc_spark.operators.curation import (
-    boilerplate_shingle_stats,
-    host_cap,
-)
+from ocr_poc_spark.operators.curation import boilerplate_shingle_stats, host_rank
 
 BOILER = "we use cookies to improve your experience on this site"
 
@@ -23,7 +20,7 @@ def _docs(spark):
 
 
 def test_boilerplate_ratio_bounds_and_short_doc(spark):
-    out = {r["doc_id"]: r for r in boilerplate_shingle_stats(_docs(spark), k=5).collect()}
+    out = {r["doc_id"]: r for r in boilerplate_shingle_stats(_docs(spark)).collect()}
     assert set(out) == {1, 2, 3, 4, 5}
     # doc 4 is shorter than k: zero shingles, ratio 0, no crash.
     assert out[4]["n_shingles"] == 0 and out[4]["boiler_ratio"] == 0.0
@@ -39,19 +36,20 @@ def test_boilerplate_ratio_bounds_and_short_doc(spark):
 
 
 def test_host_cap_stable_under_partitioning(spark):
+    """The set of documents host_rank puts within a cap of 10 depends on
+    ids only, not on input partitioning."""
     docs = spark.range(0, 300).select(
         F.col("id").alias("doc_id"),
-        F.concat(F.lit("h"), (F.col("id") % 3).cast("string")).alias("source"),
+        F.concat(F.lit("h"), (F.col("id") % 3).cast("string")).alias("host"),
     )
-    capped = host_cap(docs, max_per_host=10, host_col="source")
-    per_host = {r["source"]: r["n"] for r in capped.groupBy("source").agg(F.count("*").alias("n")).collect()}
+
+    def capped(df):
+        return host_rank(df).where(F.col("host_rank") <= 10)
+
+    per_host = {r["host"]: r["n"] for r in capped(docs).groupBy("host").agg(F.count("*").alias("n")).collect()}
     assert per_host == {"h0": 10, "h1": 10, "h2": 10}
-    # The kept SET is a function of ids only, not of input partitioning.
-    a = sorted(r["doc_id"] for r in capped.collect())
-    b = sorted(
-        r["doc_id"]
-        for r in host_cap(docs.repartition(7), max_per_host=10, host_col="source").collect()
-    )
+    a = sorted(map(tuple, capped(docs).collect()))
+    b = sorted(map(tuple, capped(docs.repartition(7)).collect()))
     assert a == b
 
 
@@ -99,7 +97,7 @@ def test_null_text_docs_keep_rows(spark):
         [(1, None, "en", "s0"), (2, BOILER + " tail words here", "en", "s0")],
         "doc_id long, text string, lang string, source string",
     )
-    b = {r["doc_id"]: r for r in boilerplate_shingle_stats(docs, k=5).collect()}
+    b = {r["doc_id"]: r for r in boilerplate_shingle_stats(docs).collect()}
     assert b[1]["n_shingles"] == 0 and b[1]["boiler_ratio"] == 0.0
 
 
@@ -136,33 +134,6 @@ def test_run_curate_dup_urls_and_zero_cap(spark, tmp_path):
     res0 = run_curate(spark, out, max_boiler_ratio=0.9, max_per_host=0)
     rows0 = spark.read.parquet(res0["curation_dir"]).collect()
     assert len(rows0) == 4 and not any(r["kept"] for r in rows0)
-
-
-def test_host_cap_prefilter_identical_on_hot_host(spark):
-    """The hot-host pre-filter must not change the kept set or the
-    surviving ranks: on a fixture where one host owns 10% of all rows,
-    filter=True output == the single-window keep-list filtered to the
-    cap, at several parallelism levels."""
-    from ocr_poc_spark.operators.curation import host_cap
-
-    rows = [(i, "hot.example" if i % 10 == 0 else f"h{i % 97}.example")
-            for i in range(2000)]
-    df = spark.createDataFrame(rows, "doc_id long, source string")
-
-    ref = sorted(
-        (r["doc_id"], r["source"], r["host_rank"])
-        for r in host_cap(df.repartition(1), 7, host_col="source", filter=False)
-        .where(F.col("host_rank") <= 7)
-        .collect()
-    )
-    for p in (4, 16):
-        got = sorted(
-            (r["doc_id"], r["source"], r["host_rank"])
-            for r in host_cap(df.repartition(p), 7, host_col="source").collect()
-        )
-        assert got == ref, f"kept set differs at parallelism {p}"
-    hot_kept = [r for r in ref if r[1] == "hot.example"]
-    assert len(hot_kept) == 7  # the hot host is really capped
 
 
 def test_crawl_diff_statuses_and_changed_slice(spark):
@@ -249,7 +220,8 @@ def test_crawl_churn_stats_per_host(spark):
 def test_url_blocklist_filter_suffix_semantics(spark):
     """Exact-domain and subdomain matches are blocked; lookalike
     suffixes are not; case-insensitive; unparseable urls survive;
-    keep=False returns the complement; empty lists raise."""
+    the blocked rows are the complement of the kept ones; empty lists
+    raise."""
     import pytest
 
     from ocr_poc_spark.operators.curation import url_blocklist_filter
@@ -266,9 +238,8 @@ def test_url_blocklist_filter_suffix_semantics(spark):
     )
     kept = {r["doc_id"] for r in url_blocklist_filter(d, ["Ads.example"]).collect()}
     assert kept == {3, 4, 5}
-    blocked = {
-        r["doc_id"]
-        for r in url_blocklist_filter(d, ["ads.example"], keep=False).collect()
+    blocked = {r["doc_id"] for r in d.collect()} - {
+        r["doc_id"] for r in url_blocklist_filter(d, ["ads.example"]).collect()
     }
     assert blocked == {1, 2}
     with pytest.raises(ValueError, match="empty"):
@@ -281,8 +252,8 @@ def test_robots_filter_longest_match_semantics(spark):
     """REP longest-match subset: longer allow overrides shorter
     disallow, allow wins equal-length ties, unmatched paths and
     rule-less hosts pass, subdomains do NOT inherit a parent host's
-    rules (robots.txt is per-origin), keep=False returns the audit
-    complement."""
+    rules (robots.txt is per-origin); the blocked rows are the
+    complement of the kept ones."""
     from ocr_poc_spark.operators.crawl import robots_filter
 
     urls = [
@@ -306,8 +277,7 @@ def test_robots_filter_longest_match_semantics(spark):
     )
     kept = {r["doc_id"] for r in robots_filter(df, rules).collect()}
     assert kept == {0, 2, 3, 4, 5, 6}
-    blocked = {r["doc_id"] for r in robots_filter(df, rules, keep=False).collect()}
-    assert blocked == {1}
+    assert set(range(len(urls))) - kept == {1}
     # output schema is the input schema (helper columns dropped)
     assert robots_filter(df, rules).columns == df.columns
 

@@ -33,9 +33,10 @@ def test_session2_operators_invariant_to_input_partitioning(spark):
         F.when(F.col("doc_id") % 4 == 0, F.concat("text", F.lit(" v2")))
         .otherwise(F.col("text")).alias("text"),
     )
+    docs, new = (df.withColumnRenamed("doc_id", "url") for df in (docs, new))
     a, b, c = (
         sorted(map(tuple, crawl_diff(
-            docs.repartition(n), new.repartition(max(1, n - 2)), id_col="doc_id"
+            docs.repartition(n), new.repartition(max(1, n - 2))
         ).collect()))
         for n in (1, 7, 11)
     )

@@ -173,3 +173,32 @@ def test_binary_payload_unsupported_format():
     # PDFs are still PDFs even with binary bytes inside
     res2 = extract_document("u", b"%PDF-1.4\n\x00binary stream\n%%EOF")
     assert res2.doc_kind.startswith("pdf/")
+
+
+def test_cascade_stage_crash_is_one_typed_row(monkeypatch):
+    """An exception in a cascade stage after the parse (here
+    detect_anchors) becomes the typed error row, and the job's batch
+    function writes exactly the row the sequential kernel returns."""
+    import pandas as pd
+
+    from ocr_poc_spark import extractor
+    from ocr_poc_spark.plans.job import _fused_batches
+
+    def crash(data):
+        raise KeyError("injected stage bug")
+
+    monkeypatch.setattr(extractor, "detect_anchors", crash)
+    html = f"<html><body><article>{f'<p>{LONG}</p>' * 8}</article></body></html>".encode()
+    res = extract_document("u", html)
+    assert (res.doc_kind, res.success, res.message) == (
+        "error/KeyError", False, "internal_error: KeyError"
+    )
+    assert all(res.fields[f] is None for f in ALL_FIELDS) and res.body_text is None
+    (row,) = next(
+        _fused_batches(iter([pd.DataFrame({"url": ["u"], "html": [html]})]))
+    ).to_dict("records")
+    assert {k: row[k] for k in ("url", "doc_kind", "success", "message", "raw_text", "n_blocks")} == {
+        "url": "u", "doc_kind": res.doc_kind, "success": res.success,
+        "message": res.message, "raw_text": res.raw_text, "n_blocks": res.n_blocks,
+    }
+    assert all(row[f] is None for f in ALL_FIELDS) and row["body_text"] is None

@@ -143,6 +143,46 @@ def test_one_pass_runs_at_most_three_spark_jobs(spark, pages_df, tmp_path):
     assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 3
 
 
+def test_single_file_input_uses_every_core(spark, tmp_path, oracle_results):
+    """A one-file input scans as one partition; run_job spreads it by
+    url hash so the extract stage runs one task per core, and the rows
+    still match the sequential kernel."""
+    from conftest import N_PAGES, assert_matches_oracle
+
+    from ocr_poc_spark.fixtures import write_pages_parquet
+    from ocr_poc_spark.sources.pages import read_pages
+
+    inp = str(tmp_path / "pages.parquet")
+    write_pages_parquet(inp, N_PAGES, seed=42)
+    pages = read_pages(spark, inp)
+    assert pages.rdd.getNumPartitions() == 1
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    group = f"one-file-{tmp_path.name}"
+    sc.setJobGroup(group, "run_job over one input file")
+    try:
+        run_job(spark, pages, str(tmp_path / "out"), n_buckets=4)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # The pass writes, then aggregates the written (bucket, success)
+    # columns ("collect" jobs); the last stage before those writes.
+    stages = [
+        st.getStageInfo(s)
+        for j in st.getJobIdsForGroup(group)
+        for s in st.getJobInfo(j).stageIds
+    ]
+    extract = max(
+        (s for s in stages if not s.name.startswith("collect at")),
+        key=lambda s: s.stageId,
+    )
+    assert extract.numTasks == sc.defaultParallelism > 1
+    assert_matches_oracle(
+        spark.read.parquet(str(tmp_path / "out" / "extracted")).collect(),
+        oracle_results,
+    )
+
+
 def test_cli_kill_9_then_rerun_matches_in_process_run(spark, tmp_path):
     """SIGKILL the CLI's whole process group (its Python process, the
     Spark JVM and the Python workers) once its first bucket has
@@ -206,8 +246,6 @@ def test_cli_kill_9_then_rerun_matches_in_process_run(spark, tmp_path):
         {"n_buckets": -2},
         {"buckets_per_pass": 0},
         {"buckets_per_pass": -1},
-        {"repartition": 0},
-        {"repartition": -1},
     ],
     ids=lambda kw: "-".join(f"{k}={v}" for k, v in kw.items()),
 )
@@ -376,7 +414,7 @@ def test_cli_help_lists_only_the_three_stage_flags(capsys):
     )
     assert flags - {"--help"} == {
         "--input", "--out", "--buckets", "--buckets-per-pass", "--cpus",
-        "--repartition", "--blocklist", "--robots", "--diff-against",
+        "--blocklist", "--robots", "--diff-against",
         "--dedup", "--dedup-clusters", "--curate", "--max-boiler-ratio",
         "--host-cap",
     }
@@ -412,7 +450,7 @@ def test_incremental_diff_job_extracts_only_changed(spark, pages_df, tmp_path):
     )
     new = kept.unionByName(changed).unionByName(added)
 
-    work = changed_slice(old, new, id_col="url", content_col="html")
+    work = changed_slice(old, new, content_col="html")
     expect_urls = {r["url"] for r in changed.select("url").collect()} | {
         r["url"] for r in added.select("url").collect()
     }

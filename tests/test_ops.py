@@ -62,7 +62,7 @@ def test_connected_components_transitive_chain(spark):
 
 def test_connected_components_long_chain_converges_in_log_rounds(spark):
     """A 64-node path graph (worst diameter per edge) must converge
-    within the default max_iter=12 (large-star/small-star halves chain
+    within MAX_ROUNDS = 12 rounds (large-star/small-star halves chain
     depth per round) and produce a single component."""
     from ocr_poc_spark.operators.dedup import connected_components
 

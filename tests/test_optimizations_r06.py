@@ -23,21 +23,15 @@ def _rowset(df):
 
 
 def test_shingle_and_bands_materialize_parity(spark):
-    """materialize=True (one tokenize + one signature pass, frames
-    checkpointed) must yield the identical shingle and band frames as
-    the lazy recompute-per-reference shape."""
-    from ocr_poc_spark.operators.dedup import (
-        NUM_BANDS, NUM_MINHASHES, _shingle_and_bands,
-    )
+    """The checkpointed shingle frame minhash_lsh_pairs bands (one
+    tokenize + one signature pass) must yield the identical shingle and
+    band frames as the lazy recompute-per-reference shape."""
+    from ocr_poc_spark.operators.dedup import _bands, _shingles
 
     d = _docs(spark)
-    lazy_sh, lazy_bands = _shingle_and_bands(
-        d, "doc_id", "text", NUM_MINHASHES, NUM_BANDS, materialize=False
-    )
-    mat_sh, mat_bands = _shingle_and_bands(
-        d, "doc_id", "text", NUM_MINHASHES, NUM_BANDS, materialize=True
-    )
-    assert _rowset(mat_bands) == _rowset(lazy_bands)
+    lazy_sh = _shingles(d)
+    mat_sh = _shingles(d).localCheckpoint(eager=True)
+    assert _rowset(_bands(mat_sh).localCheckpoint(eager=True)) == _rowset(_bands(lazy_sh))
     assert sorted((r["id"], tuple(r["shingles"])) for r in mat_sh.collect()) == \
         sorted((r["id"], tuple(r["shingles"])) for r in lazy_sh.collect())
 

@@ -95,30 +95,6 @@ def test_part_profit_broadcasts_all_dims_one_exchange(spark):
     assert plan.count("Exchange hashpartitioning") == 1, plan
 
 
-def test_host_cap_filter_path_prefilters_before_host_window(spark):
-    """The filtering host_cap must bound hot hosts BEFORE the per-host
-    rank: first a window partitioned by (host, SPARK_PARTITION_ID) with a
-    local-rank filter, then the per-host window over the survivors. The
-    keep-list mode (filter=False) reports full ranks and keeps the single
-    per-host window."""
-    from ocr_poc_spark.operators.curation import host_cap
-
-    docs = spark.createDataFrame(
-        [(i, f"h{i % 3}") for i in range(30)], "doc_id long, source string"
-    )
-    plan = _plan(host_cap(docs, max_per_host=5, host_col="source"))
-    assert "SPARK_PARTITION_ID" in plan, plan
-    # two windows: local (host, pid) top-k, then global per-host rank
-    assert plan.count("Window") >= 2, plan
-    # the (host, pid) exchange precedes the host-only exchange
-    pid_ex = plan.find("SPARK_PARTITION_ID")
-    host_window = plan.rfind("Window")
-    assert pid_ex != -1 and host_window != -1
-
-    keep_list = _plan(host_cap(docs, max_per_host=5, host_col="source", filter=False))
-    assert "SPARK_PARTITION_ID" not in keep_list, keep_list
-
-
 def test_star_round_is_hub_degree_bounded(spark):
     """The connected-components star round must stay hub-degree-bounded:
     neighborhood minima via scalar min aggregates (HashAggregate with

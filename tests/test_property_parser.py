@@ -4,10 +4,13 @@ per-document entry point must be TOTAL (a raising parse becomes a typed
 failure row, never a task failure), and block invariants must hold on
 everything that parses."""
 
-from hypothesis import given, settings
+from html.parser import HTMLParser
+
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from ocr_poc_spark.extractor import extract_document, sniff_and_parse
+from ocr_poc_spark.textproc.html_blocks import _BlockParser, _collect
 from ocr_poc_spark.textproc.scoring import block_score
 
 
@@ -64,3 +67,44 @@ def test_extract_document_total(payload):
 @given(st.text(max_size=300), st.floats(min_value=0.0, max_value=1.0))
 def test_block_score_bounded(text, ld):
     assert 0.0 <= block_score(text, ld) <= 1.0
+
+
+def _stdlib_blocks(html: str):
+    """The block parser driven by the stdlib alone: feed + close."""
+    parser = _BlockParser()
+    try:
+        parser.feed(html)
+        HTMLParser.close(parser)
+    except Exception:
+        pass
+    parser._flush()
+    return parser.raw_blocks, parser.saw_article
+
+
+# Markup fragments that hit every branch of the stdlib's close(): tags
+# cut short, end tags, comments, PIs, declarations, marked sections,
+# charrefs, quotes, NUL after a tag name, script/style CDATA.
+_FRAGMENTS = [
+    "<", ">", "</", "<!--", "-->", "<?", "<!", "<![", "<![cdata[", "<![if ",
+    "<![foo ", "]]>", "<a", "<a ", "<p>", "<p", "<div>", "</div>", "</p>",
+    "<script>", "</script>", "<style>", "<article>", "<nav>", "&amp;", "&",
+    "&#62;", "&amp", " ", "x", "'", '"', "=", "/", "\x00", "\n", "<!doctype",
+    "<li>", "<b c='d'", "words",
+]
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.one_of(
+    st.lists(st.sampled_from(_FRAGMENTS), max_size=40).map("".join),
+    st.text(max_size=60),
+))
+@example("<p>x<a&amp;\x00y")
+@example("<p>x<a&amp;<b\x00y &amp; z")
+@example("<p>x<![<a ")
+@example("<p>x<![cdata <a ")
+@example("<script>x<a ")
+def test_tail_parse_matches_stdlib_parser(html):
+    """The linear tail after the last '>' gives exactly the blocks the
+    stdlib parser's own (quadratic) close() gives."""
+    parser = _collect(html)
+    assert (parser.raw_blocks, parser.saw_article) == _stdlib_blocks(html)

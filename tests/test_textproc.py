@@ -173,3 +173,26 @@ def test_html_parse_time_linear_in_nesting_depth():
 
     small, large = best_of_3(2_000), best_of_3(16_000)
     assert large / small < 20, (small, large)
+
+
+def test_html_parse_time_linear_in_unterminated_tail():
+    """Malformed tails after the last '>' ('<a ' runs, '</' runs, '<?'
+    runs) must parse in time linear in their length: the stdlib
+    parser's close() rescans the buffer once per unterminated '<', so
+    8x the input cost ~64x there (16,000 '<a ' took ~40 s). Bound 20
+    leaves slack for timer noise."""
+    import time
+
+    def best_of_3(shape, n):
+        page = b"<p>hi</p>" + shape * n
+        best = float("inf")
+        for _ in range(3):
+            t0 = time.perf_counter()
+            blocks, _ = parse_html_blocks(page)
+            best = min(best, time.perf_counter() - t0)
+        assert blocks[0].text == "hi"
+        return best
+
+    for shape in (b"<a ", b"</", b"<?"):
+        small, large = best_of_3(shape, 2_000), best_of_3(shape, 16_000)
+        assert large / small < 20, (shape, small, large)
