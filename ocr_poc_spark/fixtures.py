@@ -264,14 +264,11 @@ def gen_pages(n: int, seed: int = 42) -> list[dict]:
 
 def write_pages_parquet(path: str, n: int, seed: int = 42) -> None:
     """Write the fixture table as ONE parquet file (pyarrow; no Spark
-    needed), in 256-row row groups.
-
-    The row groups do not make the file split across cores: Spark cuts a
-    parquet file into byte ranges of ``maxSplitBytes``, which is never
-    below ``spark.sql.files.openCostInBytes`` (4 MB by default), and
-    only then snaps them to row groups. A file under 4 MB (400 fixture
-    pages take ~0.2 MB) therefore scans as ONE partition, the shape
-    run_job spreads over every core itself.
+    needed). By default Spark never cuts a file under 4 MB
+    (``openCostInBytes``) into splits, so it scans as ONE partition, the
+    shape run_job spreads over every core itself. The 256-row row groups
+    put rows in every split where ``maxPartitionBytes`` is set lower, as
+    bench.py does (with one row group, one split would get them all).
     """
     import pyarrow as pa
     import pyarrow.parquet as pq

@@ -6,10 +6,10 @@ One physical strategy: ONE Arrow-batched mapInPandas stage runs parse +
 cascade per document (``extract_fused`` over ``extractor.extract_document``)
 — a map-only plan with zero shuffles. At 10^12 documents this scales
 linearly with executors: no exchange, no skew-sensitive key, partition
-count = input splits. An input with fewer splits than the session's
-default parallelism (one large file, say), or whose plan already
-shuffles, is first repartitioned by url hash to that parallelism, so
-every core gets work and long-tail page sizes spread evenly.
+count = input splits. A map-only input with fewer splits than the
+session's default parallelism (one large file, say) is first
+repartitioned by url hash to that parallelism, so every core gets work
+and long-tail page sizes spread evenly.
 
 Resumability (north_star: "checkpoint manifest enabling idempotent
 resume of failed partitions"): work is split into url-hash BUCKETS
@@ -107,12 +107,11 @@ def _input_fingerprint(spark: SparkSession, pages: DataFrame) -> list[list]:
     return sorted(out)
 
 
-def _has_exchange(pages: DataFrame) -> bool:
+def _shuffles(pages: DataFrame) -> bool:
     """Whether ``pages``' plan shuffles (a --diff-against slice, a
     --robots join). AQE fixes such a plan's partition count only by
-    running its shuffles, which asking for the count would do once more,
-    and it may coalesce a small slice into one partition, so run_job
-    spreads such an input without asking."""
+    running its shuffles, so run_job does not ask it for one and leaves
+    it as it is."""
     plan = pages._jdf.queryExecution().executedPlan()
     return plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec"
 
@@ -192,12 +191,12 @@ def run_job(
     # rows it writes.
     bucket = F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int")
     bucketed = pages.withColumn("bucket", bucket)
-    # Spread documents uniformly over every core by url hash (SURVEY.md
-    # §4 — explicit repartition, not a Catalyst concern) unless the
-    # input already has a split per core; such inputs keep the map-only
+    # A map-only input with fewer splits than cores (one large file, say)
+    # is spread over every core by url hash (SURVEY.md §4 — explicit
+    # repartition, not a Catalyst concern); every other input keeps its
     # plan.
     cores = spark.sparkContext.defaultParallelism
-    if _has_exchange(pages) or pages.rdd.getNumPartitions() < cores:
+    if not _shuffles(pages) and pages.rdd.getNumPartitions() < cores:
         bucketed = bucketed.repartition(cores, F.xxhash64("url"))
 
     total_rows = 0

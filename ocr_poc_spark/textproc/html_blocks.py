@@ -206,7 +206,10 @@ def _feed_tail(parser: _BlockParser, tail: str) -> None:
     close() rescans the buffer once per unterminated '<'. With no '>'
     left no tag completes: each '<' starts a data chunk running to the
     next '<', except that a tag name ending in NUL is emitted raw and a
-    ``<![`` the stdlib cannot scan stops the parse (it raises there)."""
+    ``<![`` the stdlib cannot scan stops the parse (it raises there).
+    It copies 3.11's close() (the regexes above, ``cdata_elem``);
+    tests/test_property_parser.py checks it against the running
+    interpreter's feed + close, and it goes once that close() is linear."""
     if parser.cdata_elem:  # an open script/style swallows the tail
         return
     n, i, name_end = len(tail), 0, -1
