@@ -1151,7 +1151,8 @@ def oracle_sql() -> dict[str, str]:
             WHERE host_rank <= 5
         """,
         # Blocklist: same url synthesis; a doc survives unless its
-        # host equals a blocked domain or ends with '.'+domain.
+        # host (host_of's regexp) equals a blocked domain or ends with
+        # '.'+domain.
         "url_blocklist": """
             WITH docs AS (
               SELECT doc_id,
@@ -1161,7 +1162,8 @@ def oracle_sql() -> dict[str, str]:
                      END AS url
               FROM documents),
             h AS (SELECT doc_id, url,
-                         lower(regexp_extract(url, '^https?://([^/]+)', 1)) AS host
+                         lower(regexp_extract(url,
+                           '(?i)^https?://(?:[^/@?#]*@)?([^/:?#]+)', 1)) AS host
                   FROM docs)
             SELECT doc_id, url FROM h
             WHERE host = '' OR NOT EXISTS (
@@ -1197,7 +1199,7 @@ def oracle_sql() -> dict[str, str]:
             FROM o FULL OUTER JOIN n ON o.doc_id = n.doc_id
         """,
         # Churn rollup: same synthesis as crawl_diff but over
-        # 'https://<source>/doc/<id>' urls; host = regexp of the url;
+        # 'https://<source>/doc/<id>' urls; host = host_of's regexp, lower-cased;
         # counts exact, churn round-6.
         "crawl_churn": """
             WITH docs AS (
@@ -1221,7 +1223,8 @@ def oracle_sql() -> dict[str, str]:
                           WHEN o.od <> n.nd THEN 'changed'
                           ELSE 'unchanged' END AS status
               FROM o FULL OUTER JOIN n ON o.url = n.url)
-            SELECT regexp_extract(url, '^https?://([^/]+)', 1) AS host,
+            SELECT lower(regexp_extract(url,
+                     '(?i)^https?://(?:[^/@?#]*@)?([^/:?#]+)', 1)) AS host,
                    COUNT(*) AS n_urls,
                    SUM((status = 'added')::BIGINT) AS n_added,
                    SUM((status = 'changed')::BIGINT) AS n_changed,

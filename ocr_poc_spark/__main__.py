@@ -24,7 +24,7 @@ import json
 import os
 import sys
 
-from .plans.job import completed_buckets, run_curate, run_dedup, run_job
+from .plans.job import completed_buckets, run_curate, run_dedup, run_job, write_counted
 from .session import get_spark
 from .sources.pages import read_pages
 
@@ -91,7 +91,7 @@ def main(argv: list[str] | None = None) -> int:
     done = completed_buckets(args.out)
     if done:
         print(f"resuming: {len(done)} bucket(s) already committed", file=sys.stderr)
-    pages = read_pages(spark, args.input)
+    pages = snapshot = read_pages(spark, args.input)
     if args.blocklist:
         from .operators.curation import url_blocklist_filter
 
@@ -137,9 +137,8 @@ def main(argv: list[str] | None = None) -> int:
         # bulk of a rolling crawl never reaches extraction. Composes
         # with manifest resume: the filtered frame just has fewer rows
         # per bucket.
-        pages = changed_slice(
-            read_pages(spark, args.diff_against), pages, content_col="html"
-        )
+        old = read_pages(spark, args.diff_against)
+        pages = changed_slice(old, pages, content_col="html")
     summary = run_job(
         spark,
         pages,
@@ -153,18 +152,16 @@ def main(argv: list[str] | None = None) -> int:
         summary["diff_against"] = args.diff_against
         # Per-host churn rollup of the two snapshots -> <out>/crawl_churn
         # (the recrawl-scheduling signal; ids+digests only, one small
-        # table per run). Recomputed from the inputs, not the filtered
-        # frame, so it also counts deleted/unchanged urls.
+        # table per run). Taken over the unfiltered snapshots, so it also
+        # counts deleted/unchanged urls.
         from .operators.crawl import crawl_churn_stats
 
         churn_dir = os.path.join(args.out, "crawl_churn")
-        crawl_churn_stats(
-            read_pages(spark, args.diff_against),
-            read_pages(spark, args.input),
-            content_col="html",
-        ).write.mode("overwrite").parquet(churn_dir)
+        (n_hosts,) = write_counted(
+            crawl_churn_stats(old, snapshot, content_col="html"), churn_dir
+        )
         summary["crawl_churn_dir"] = churn_dir
-        summary["crawl_churn_hosts"] = spark.read.parquet(churn_dir).count()
+        summary["crawl_churn_hosts"] = n_hosts
     if args.dedup:
         summary.update(run_dedup(spark, args.out, clusters=args.dedup_clusters))
     if args.curate:

@@ -30,6 +30,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from .hoststats import host_of
+
 
 def crawl_diff(old: DataFrame, new: DataFrame, content_col: str = "text") -> DataFrame:
     """One row per url present in EITHER snapshot, with
@@ -96,13 +98,12 @@ def crawl_churn_stats(
     demoted. Returns one row per host: status counts + churn ratio
     (non-unchanged share, round 6).
 
-    The host is hoststats.host_of of the url. The groupBy key is a
-    host string over ids-only diff rows, so the whole rollup shuffles
-    ~100 bytes per url; zipfian host skew is absorbed by partial aggregation (counts
-    are associative — each input partition ships at most one row per
-    host)."""
-    from .hoststats import host_of
-
+    The host is hoststats.host_of of the url, so spellings of one host
+    ('https://A.example/x', 'https://a.example:443/y') roll up together.
+    The groupBy key is a host string over ids-only diff rows, so the
+    whole rollup shuffles ~100 bytes per url; zipfian host skew is
+    absorbed by partial aggregation (counts are associative — each input
+    partition ships at most one row per host)."""
     diff = crawl_diff(old, new, content_col=content_col)
     n_of = lambda s: F.sum((F.col("status") == s).cast("long")).alias(f"n_{s}")
     return (
@@ -141,13 +142,11 @@ def robots_filter(df: DataFrame, rules: DataFrame) -> DataFrame:
     expands or drops them upstream; implementing a partial regex
     translation here would silently mis-enforce real files.
 
-    Host matching is deliberately more liberal than hoststats.host_of:
-    scheme case-insensitive, userinfo and port stripped, authority cut
-    at [/?#] — 'HTTPS://user@A.example:8443/x' matches rules for
-    'a.example'. A compliance gate that failed OPEN on those spellings
-    would quietly crawl forbidden paths (round-5 review catch). Urls
-    with no extractable host at all are kept (nothing to match rules
-    against — the url_blocklist_filter posture, documented).
+    The host is hoststats.host_of of the url, so
+    'HTTPS://user@A.example:8443/x' matches rules for 'a.example': a
+    compliance gate that failed OPEN on such spellings would quietly
+    crawl forbidden paths. Urls with no extractable host at all are kept
+    (nothing to match rules against — the url_blocklist_filter posture).
 
     Plan / 100 TB shape: directives are grouped to ONE array row per
     host first (rules tables are bounded by #hosts x a few directives),
@@ -165,11 +164,6 @@ def robots_filter(df: DataFrame, rules: DataFrame) -> DataFrame:
             )
         ).alias("_rules")
     )
-    host = F.lower(
-        F.regexp_extract(
-            F.col("url"), r"(?i)^https?://(?:[^/@?#]*@)?([^/:?#]+)", 1
-        )
-    )
     path_raw = F.regexp_replace(F.col("url"), r"(?i)^https?://[^/?#]*", "")
     # REP matches against path (+query); a query-only url's path is '/'
     path = (
@@ -180,7 +174,7 @@ def robots_filter(df: DataFrame, rules: DataFrame) -> DataFrame:
     # Derive host+path BEFORE the join: adding them after it makes
     # Catalyst try to bind the url reference on the broadcast side
     # (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND on Spark 4.1).
-    base = df.withColumn("_h", host).withColumn("_p", path)
+    base = df.withColumn("_h", host_of()).withColumn("_p", path)
     joined = base.join(
         F.broadcast(per_host), F.col("_h") == F.col("_rh"), "left"
     )

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, Window
 from ..functions.texthash import hash60
 from ..functions.texthash import norm_words as _raw_norm_words
 from ..functions.texthash import shingle_hashes as _shingle_hashes
+from .hoststats import host_of
 
 
 def _norm_words(text_col: str):
@@ -119,20 +120,17 @@ def url_blocklist_filter(df: DataFrame, blocked_domains: list[str]) -> DataFrame
     per row with an EXISTS higher-order function (suffix match, no
     regex explosion); at the 10^6 scale prefer a broadcast join on the
     reversed-host prefix, which this deliberately does not build until
-    a corpus needs it. Case-insensitive on the host per DNS rules.
-    Unparseable urls (no host) are never blocked."""
+    a corpus needs it. The host is hoststats.host_of of the url (so
+    'HTTPS://user@Ads.example:8443/p' is blocked too); unparseable urls
+    (no host) are never blocked."""
     if not blocked_domains:
         raise ValueError("url_blocklist_filter: blocked_domains is empty")
     norm = sorted({d.strip().lower().lstrip(".") for d in blocked_domains})
     if any(not d for d in norm):
         raise ValueError("url_blocklist_filter: empty domain in blocklist")
-    from .hoststats import host_of
-
-    host = F.lower(host_of())
-    blocked_arr = F.array(*[F.lit(d) for d in norm])
-    hit = F.exists(
-        blocked_arr,
+    host = host_of()
+    blocked = F.exists(
+        F.array(*[F.lit(d) for d in norm]),
         lambda d: (host == d) | host.endswith(F.concat(F.lit("."), d)),
     )
-    blocked = (host != "") & hit
     return df.where(~blocked)

@@ -6,6 +6,10 @@ import pyspark.sql.functions as F
 
 
 def host_of():
-    """Host of the `url` column (regexp — portable to the DuckDB oracle,
-    unlike parse_url)."""
-    return F.regexp_extract(F.col("url"), r"^https?://([^/]+)", 1)
+    """Lower-cased host of the `url` column, '' when it has none: scheme
+    case-insensitive, userinfo and port stripped, cut at [/?#], so
+    'HTTPS://user@A.example:8443/x' is 'a.example' (regexp — portable to
+    the DuckDB oracle, unlike parse_url)."""
+    return F.lower(
+        F.regexp_extract(F.col("url"), r"(?i)^https?://(?:[^/@?#]*@)?([^/:?#]+)", 1)
+    )

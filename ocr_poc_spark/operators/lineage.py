@@ -3,10 +3,10 @@
 The reference keeps module-global request/success/error counters and a
 CSV metrics log (its ``api_server.py``). Here each committed bucket gets
 one lineage row with doc/ok/failed counts and the seconds of its pass:
-``partition_metrics`` counts them in one aggregate over the written
-``(bucket, success)`` columns, and the Spark driver writes the row
+``run_job`` counts them in the job that writes the extracted rows
+(``DataFrame.observe``), and the Spark driver writes the row
 (``write_lineage_row``) right before the bucket's manifest entry — no
-per-partition pass over the extracted frame.
+read-back and no per-partition pass over the extracted frame.
 """
 
 from __future__ import annotations
@@ -29,8 +29,8 @@ _FILE_SCHEMA = _FILE_SCHEMA.remove(_FILE_SCHEMA.get_field_index("bucket"))
 
 def partition_metrics(extracted: DataFrame, run_id: str) -> DataFrame:
     """extracted (with bucket + success cols) -> (run_id, bucket,
-    n_docs, n_ok), one row per bucket present. A plain aggregate, so
-    only the two columns it counts are scanned."""
+    n_docs, n_ok), one row per bucket present: the counts run_job takes
+    in its write job, as a separate aggregate to time on its own."""
     return extracted.groupBy("bucket").agg(
         F.count(F.lit(1)).alias("n_docs"), F.count_if("success").alias("n_ok")
     ).select(F.lit(run_id).alias("run_id"), "bucket", "n_docs", "n_ok")

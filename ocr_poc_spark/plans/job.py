@@ -13,15 +13,16 @@ and long-tail page sizes spread evenly.
 
 Resumability (north_star: "checkpoint manifest enabling idempotent
 resume of failed partitions"): work is split into url-hash BUCKETS
-(restartable units). A pass over pending buckets commits in this order:
-the extracted write (once, under bucket=K directories, no persist) ->
-one aggregate over the written (bucket, success) columns -> per bucket,
-from the Spark driver, its lineage row (one per bucket, not a per-partition
-pass) -> its manifest entry. A crash before a bucket's manifest entry
-leaves it pending, so the rerun replaces its extracted and lineage
-directories — same final tables (asserted by tests/test_job_resume.py).
-``meta.json`` pins ``n_buckets`` and the input files, so a resume cannot
-change either.
+(restartable units). A pass over pending buckets is one Spark job (two
+after a repartition): the extracted write under bucket=K directories,
+which also counts each bucket's docs and successes (``observe``). Then,
+per bucket, the Spark driver writes its lineage row and manifest entry.
+A crash before a bucket's manifest entry leaves it pending, so the rerun
+replaces its extracted and lineage directories — same final tables
+(asserted by tests/test_job_resume.py). ``meta.json`` pins
+``n_buckets`` and the input files, so a bucket gets the same rows on
+every task attempt and the observed counts equal the rows on disk
+(Spark applies a result stage's accumulator updates once per partition).
 The reference's analogue is the 3-retry REST policy (README_API.md:52)
 — per-request retry becomes per-bucket restart.
 """
@@ -36,9 +37,9 @@ from collections.abc import Iterator
 
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
-from ..operators.lineage import partition_metrics, write_lineage_row
+from ..operators.lineage import write_lineage_row
 from ..operators.textstats import lang_guess_expr
 from ..schemas import EXTRACTED_SCHEMA
 
@@ -123,7 +124,6 @@ def run_job(
     mode: str = "fused",
     n_buckets: int = 8,
     buckets_per_pass: int | None = None,
-    run_id: str | None = None,
     fail_after_passes: int | None = None,
 ) -> dict:
     """Run (or resume) the extraction job. Returns summary stats.
@@ -132,6 +132,9 @@ def run_job(
     still pass it.
     fail_after_passes: test hook — raise after N committed passes to
     simulate a mid-job crash for the resume test.
+
+    The per-bucket counts cost about 0.5 core-us per row at 8 buckets per
+    pass, growing with the buckets per pass (17 at 256; 4-core probe).
     """
     if mode != "fused":
         raise ValueError(mode)
@@ -143,7 +146,7 @@ def run_job(
     ):
         if value is not None and value < 1:
             raise ValueError(f"{name} must be >= 1, got {value}")
-    run_id = run_id or uuid.uuid4().hex[:12]
+    run_id = uuid.uuid4().hex[:12]
     buckets_per_pass = buckets_per_pass or n_buckets
     ext_dir = os.path.join(out_dir, "extracted")
     lin_dir = os.path.join(out_dir, "lineage")
@@ -212,21 +215,22 @@ def run_job(
         ext = ext.withColumn(
             "lang_guess", lang_guess_expr(F.coalesce("body_text", "raw_text"))
         )
-        ext.write.mode("overwrite").partitionBy("bucket").option(
+        # Each bucket's doc and success counts, taken by the write job.
+        obs, aggs = Observation(), []
+        for b in batch:
+            in_b = F.col("bucket") == b
+            aggs += [
+                F.count_if(in_b).alias(f"n_{b}"),
+                F.count_if(in_b & F.col("success")).alias(f"ok_{b}"),
+            ]
+        ext.observe(obs, *aggs).write.mode("overwrite").partitionBy("bucket").option(
             "partitionOverwriteMode", "dynamic"
         ).parquet(ext_dir)
-        written = spark.read.schema("bucket int, success boolean").parquet(ext_dir)
-        counts = {
-            r["bucket"]: r
-            for r in partition_metrics(
-                written.where(F.col("bucket").isin(batch)), run_id
-            ).collect()  # <= n_buckets rows — driver-side by design
-        }
+        counts = obs.get
         secs = time.monotonic() - t0
         for b in batch:
-            c = counts.get(b, {"n_docs": 0, "n_ok": 0})
-            _commit_bucket(out_dir, run_id, b, c["n_docs"], c["n_ok"], secs)
-            total_rows += c["n_docs"]
+            _commit_bucket(out_dir, run_id, b, counts[f"n_{b}"], counts[f"ok_{b}"], secs)
+            total_rows += counts[f"n_{b}"]
 
     return {
         "run_id": run_id,
@@ -238,6 +242,18 @@ def run_job(
         "extracted_dir": ext_dir,
         "lineage_dir": lin_dir,
     }
+
+
+def write_counted(df: DataFrame, path: str, *counts) -> list[int]:
+    """Overwrite ``path`` with ``df``; return its row count and the
+    aggregate ``counts`` as that same write job took them (``observe``:
+    no read-back job)."""
+    aggs = [F.count(F.lit(1)), *counts]
+    obs = Observation()
+    df.observe(obs, *(c.alias(f"c{i}") for i, c in enumerate(aggs))).write.mode(
+        "overwrite"
+    ).parquet(path)
+    return [obs.get[f"c{i}"] for i in range(len(aggs))]
 
 
 def _curation_docs(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -289,26 +305,20 @@ def run_dedup(
     docs = _curation_docs(spark, out_dir)
     pairs = minhash_lsh_pairs(docs, jaccard_threshold=jaccard_threshold)
     dup_dir = os.path.join(out_dir, "dup_pairs")
-    pairs.write.mode("overwrite").parquet(dup_dir)
-    # Read-backs carry the written frame's schema: no inference job.
-    written = spark.read.schema(pairs.schema).parquet(dup_dir)
-    out = {"dup_pairs": written.count(), "dup_dir": dup_dir, "dedup_method": method}
+    (n_pairs,) = write_counted(pairs, dup_dir)
+    out = {"dup_pairs": n_pairs, "dup_dir": dup_dir, "dedup_method": method}
     if clusters:
         comp_dir = os.path.join(out_dir, "dup_components")
-        comp = connected_components(written).withColumn(
-            "keeper", F.col("doc_id") == F.col("component_id")
-        )
-        comp.write.mode("overwrite").parquet(comp_dir)
-        n_docs, n_comps = spark.read.schema(comp.schema).parquet(comp_dir).agg(
-            F.count(F.lit(1)), F.count_distinct("component_id")
-        ).first()
-        out.update(
-            {
-                "dup_component_docs": n_docs,
-                "dup_components": n_comps,
-                "dup_components_dir": comp_dir,
-            }
-        )
+        # The read-back carries the written frame's schema: no inference job.
+        comp = connected_components(
+            spark.read.schema(pairs.schema).parquet(dup_dir)
+        ).withColumn("keeper", F.col("doc_id") == F.col("component_id"))
+        # A component has exactly one keeper row (its doc_id is the
+        # component_id), so keepers count components: observe rejects
+        # DISTINCT aggregates.
+        n_docs, n_comps = write_counted(comp, comp_dir, F.count_if("keeper"))
+        out.update(dup_component_docs=n_docs, dup_components=n_comps,
+                   dup_components_dir=comp_dir)
     return out
 
 
@@ -356,8 +366,5 @@ def run_curate(
         failing.withColumn("kept", F.lit(False))
     )
     cur_dir = os.path.join(out_dir, "curation")
-    cur.write.mode("overwrite").parquet(cur_dir)
-    n, n_kept = spark.read.schema(cur.schema).parquet(cur_dir).agg(
-        F.count(F.lit(1)), F.count_if("kept")
-    ).first()
+    n, n_kept = write_counted(cur, cur_dir, F.count_if("kept"))
     return {"curation_rows": n, "curation_kept": n_kept, "curation_dir": cur_dir}

@@ -188,29 +188,32 @@ def test_crawl_diff_statuses_and_changed_slice(spark):
 
 
 def test_crawl_churn_stats_per_host(spark):
-    """Status counts and churn ratio roll up per host of the url."""
+    """Status counts and churn ratio roll up per host of the url; the
+    spellings of one host (case, port, userinfo, no path) are one
+    host."""
     from ocr_poc_spark.operators.crawl import crawl_churn_stats
 
     old = spark.createDataFrame(
         [
             ("https://a.example/1", "x1"),
-            ("https://a.example/2", "x2"),
-            ("https://a.example/3", "x3"),
-            ("https://b.example/1", "y1"),
+            ("HTTPS://A.example/2", "x2"),
+            ("https://a.example:443/3", "x3"),
+            ("https://user@b.example/1", "y1"),
         ],
         "url string, text string",
     )
     new = spark.createDataFrame(
         [
             ("https://a.example/1", "x1"),       # unchanged
-            ("https://a.example/2", "x2 v2"),    # changed
+            ("HTTPS://A.example/2", "x2 v2"),    # changed
             # a/3 deleted
-            ("https://b.example/1", "y1"),       # unchanged
-            ("https://b.example/2", "y2"),       # added
+            ("https://user@b.example/1", "y1"),  # unchanged
+            ("https://b.example?p=2", "y2"),     # added
         ],
         "url string, text string",
     )
     got = {r["host"]: r for r in crawl_churn_stats(old, new).collect()}
+    assert set(got) == {"a.example", "b.example"}
     a, b = got["a.example"], got["b.example"]
     assert (a["n_urls"], a["n_added"], a["n_changed"], a["n_deleted"], a["n_unchanged"]) == (3, 0, 1, 1, 1)
     assert (b["n_urls"], b["n_added"], b["n_changed"], b["n_deleted"], b["n_unchanged"]) == (2, 1, 0, 0, 1)
@@ -218,9 +221,10 @@ def test_crawl_churn_stats_per_host(spark):
 
 
 def test_url_blocklist_filter_suffix_semantics(spark):
-    """Exact-domain and subdomain matches are blocked; lookalike
-    suffixes are not; case-insensitive; unparseable urls survive;
-    the blocked rows are the complement of the kept ones; empty lists
+    """Exact-domain and subdomain matches are blocked, however the url
+    spells the host (scheme case, userinfo, port, no path); lookalike
+    suffixes are not; case-insensitive; unparseable urls survive; the
+    blocked rows are the complement of the kept ones; empty lists
     raise."""
     import pytest
 
@@ -233,15 +237,20 @@ def test_url_blocklist_filter_suffix_semantics(spark):
             (3, "https://badads.example/p"),
             (4, "https://ok.example/p"),
             (5, "not-a-url"),
+            (6, "HTTPS://ads.example/p"),
+            (7, "https://user@ads.example/p"),
+            (8, "https://ads.example:8443/p"),
+            (9, "https://ads.example?q=1"),
+            (10, "https://ok.example/?r=https://ads.example/"),
         ],
         "doc_id long, url string",
     )
     kept = {r["doc_id"] for r in url_blocklist_filter(d, ["Ads.example"]).collect()}
-    assert kept == {3, 4, 5}
+    assert kept == {3, 4, 5, 10}
     blocked = {r["doc_id"] for r in d.collect()} - {
         r["doc_id"] for r in url_blocklist_filter(d, ["ads.example"]).collect()
     }
-    assert blocked == {1, 2}
+    assert blocked == {1, 2, 6, 7, 8, 9}
     with pytest.raises(ValueError, match="empty"):
         url_blocklist_filter(d, [])
     with pytest.raises(ValueError, match="empty domain"):
