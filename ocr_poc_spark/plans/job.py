@@ -309,7 +309,7 @@ def run_dedup(
     out = {"dup_pairs": n_pairs, "dup_dir": dup_dir, "dedup_method": method}
     if clusters:
         comp_dir = os.path.join(out_dir, "dup_components")
-        # The read-back carries the written frame's schema: no inference job.
+        # Read the written pairs with their known schema: no inference job.
         comp = connected_components(
             spark.read.schema(pairs.schema).parquet(dup_dir)
         ).withColumn("keeper", F.col("doc_id") == F.col("component_id"))
